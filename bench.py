@@ -20,6 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as contract  # noqa: E402
+from eventstreamer_spark import memo  # noqa: E402
 from eventstreamer_spark.session import get_spark  # noqa: E402
 
 
@@ -44,7 +45,9 @@ def main() -> None:
     passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
     timings: dict[str, float] = {}
     for _pass in range(passes):
+        memo_warm: list[str] = []  # the last pass's set is reported
         for name in sorted(qs):
+            memo.HITS.clear()
             t0 = time.perf_counter()
             try:
                 qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -54,6 +57,8 @@ def main() -> None:
             except Exception as e:  # a broken query should not zero the whole bench
                 print(f"bench: {name} FAILED: {e}", file=sys.stderr)
                 timings.setdefault(name, -1.0)
+            if any(not a.startswith("scan:") for a in memo.HITS):
+                memo_warm.append(name)
 
     ok = {k: v for k, v in timings.items() if v >= 0}
     # Field order is load-bearing (VERDICT r14 item 2): the driver
@@ -69,64 +74,10 @@ def main() -> None:
         "value": round(sum(ok.values()), 3),
         "n_queries": len(timings),
         "n_failed": len(timings) - len(ok),
-        # ADVICE r11: min-of-N steady-state for these CONSUMER queries is
-        # memo-warm — session memos (brute truth, residual-PQ artifacts,
-        # semdedup assignments) build on the first pass only; the OWNER
-        # queries (ann_bruteforce_topk, ivfadc_residual_topk,
-        # pq_rerank_topk/np4, semantic_dedup) pay their builds every pass.
-        "memo_warm": [
-            "pq_recall_at_k", "graded_retrieval_eval",
-            "semantic_decontamination", "corpus_build_pipeline",
-            "rrf_k_sweep",
-            # r13: both layout audits read the shared layout_tables
-            # write (built once per session by whichever runs first)
-            "zorder_pruning_audit", "bloom_file_skipping_audit",
-            # r13 residual-chain consolidation: one owner
-            # (pq_rerank_np4) pays the deepest build; these two are
-            # level-cut consumers of residual_artifacts_memo
-            "ivfadc_residual_topk", "pq_rerank_topk",
-            # r14: table write + ANALYZE memoized (cbo_tables); the
-            # steady state re-plans and re-executes the joins only
-            "stats_driven_plan_audit",
-            # r14 optimization + r15 owners-pay restore (VERDICT r14
-            # item 1): the trained ridge classifier's feats/lab
-            # checkpoints + weight vector are built once per session
-            # (classifier_artifacts_memo) for these five CONSUMERS;
-            # the owner quality_classifier_scores bypasses the memo
-            # and re-runs the full tokenize+train chain every pass
-            "stream_classifier_scores",
-            "classifier_calibration_audit", "isotonic_calibration_map",
-            "selection_pipeline", "selection_method_agreement",
-            # likewise the DSIR two-scan chain (dsir_scores_memo):
-            # owner dsir_importance_weights re-runs it every pass,
-            # these consumers read the session checkpoint
-            "gumbel_topk_resample",
-            # r14 optimization: the fusion family's shared bm25+lsh
-            # top-10 union is checkpointed once per session
-            # (retriever_lists_memo); the retriever owner queries
-            # (bm25_topk, lsh_topk) still pay their builds
-            "hybrid_rrf_fusion", "stream_rrf_fusion",
-            # r14 optimization: the BM25 serving twin consumes the
-            # session-built postings index (bm25_serving_index_memo);
-            # bm25_topk still pays its own build
-            "stream_bm25_topk",
-            # r14 optimization: the nprobe tuning table consumes the
-            # shared sqrt-k centroid memo + brute truth memo (eval
-            # tier; the training/truth owners still pay)
-            "ivf_nprobe_sweep",
-            # r14 optimization: the recall/nDCG grids consume
-            # brute_truth_memo instead of rebuilding the identical
-            # truth (ann_bruteforce_topk still pays its own build)
-            "ann_recall_at_k",
-            # r6 pairs memo, named here since r14 made it a
-            # localCheckpoint (owners minhash_lsh_neardup /
-            # simhash_neardup / embedding_neardup_prefiltered still
-            # pay their builds every pass; these five consume the
-            # checkpointed pair tables)
-            "dedup_method_agreement", "dedup_clusters",
-            "dedup_canonical_selection", "neardup_source_matrix",
-            "minhash_jaccard_calibration",
-        ],
+        # queries whose min-of-N steady state is memo-warm: they read a
+        # session artifact (other than a resolved scan) built on an
+        # earlier pass, observed from the store's hits
+        "memo_warm": memo_warm,
     }
     # The driver records only the tail of this (long) stdout line, which
     # truncates the per-query map — persist the full detail to a file so

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
-from eventstreamer_spark.memo import BoundedMemo, free_local_checkpoint, live_hit
+from eventstreamer_spark.memo import artifact
 from eventstreamer_spark.operators.ranks import finalize_report, parallel_rank
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.session import shuffle_partitions
@@ -1825,36 +1825,22 @@ def pq_search_parts(
     return e, qlut, codes
 
 
-def _free_pq_parts(
-    _key: object, val: tuple[DataFrame, DataFrame, DataFrame]
-) -> None:
-    _e, qlut, codes = val
-    free_local_checkpoint(qlut)
-    free_local_checkpoint(codes)
-
-
-_PQ_PARTS_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = (
-    BoundedMemo(maxsize=4, on_evict=_free_pq_parts)
-)
-
-
 def pq_parts_memo(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Consumer-facing (e, qlut, codes) ADC search artifacts behind a
-    per-(applicationId, sf_dir) memo (r14 optimization): the recall
+    """Consumer-facing (e, qlut, codes) ADC search artifacts, one
+    build per (applicationId, sf_dir) (r14 optimization): the recall
     GRID re-trained the full PQ chain per invocation while the
     retrieval owner queries (pq_adc_topk, ivf_pq_topk,
     pq_quantization_audit) each already pay their own builds every
     invocation — the brute_truth_memo pattern exactly (the grid is a
-    consumer of the artifact; owners never read the memo). Same
-    post-eviction invalidation contract as residual_artifacts_memo."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = live_hit(_PQ_PARTS_MEMO, key)
-    if hit is None:
-        hit = pq_search_parts(spark, sf_dir, checkpoint=True)
-        _PQ_PARTS_MEMO[key] = hit
-    return hit
+    consumer of the artifact; owners never read the store)."""
+    return artifact(
+        spark,
+        sf_dir,
+        "pq_parts",
+        lambda: pq_search_parts(spark, sf_dir, checkpoint=True),
+    )
 
 
 def _adc_rank_topk(pairs: DataFrame, k: int = PQ_TOP_K) -> DataFrame:
@@ -2522,7 +2508,7 @@ def q_pq_rerank_np4(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_exact_rerank(short, fullv)
 
 
-# Session-scoped memo of the CHECKPOINTED residual-chain artifacts for
+# Session artifact: the CHECKPOINTED residual-chain artifacts for
 # CONSUMER queries (VERDICT r11 item 1, the brute_truth_memo pattern):
 # the deepest-level (nprobe=4, probe-rank-tagged) scored pair set plus
 # the exact fullv component arrays are fixed artifacts of (corpus,
@@ -2540,28 +2526,11 @@ def q_pq_rerank_np4(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_pq_rerank_np4 (the deepest configuration, the production
 # operating point) calls ivfadc_residual_topk() directly and pays the
 # full build every invocation; q_ivfadc_residual_topk and
-# q_pq_rerank_topk consume the memo and level-cut (the
+# q_pq_rerank_topk consume the artifact and level-cut (the
 # ann_bruteforce_topk/brute_truth_memo precedent: one honest owner of
-# the artifact cost, every derived read memo-warm and declared in
-# bench.py's memo_warm). Values are eagerly localCheckpointed
-# DataFrames — rows live executor-side, only the handles on the
-# driver; eviction unpersists them (ADVICE r12).
-def _unpersist_residual(_key: object, dfs: tuple[DataFrame, ...]) -> None:
-    """Eviction hook (ADVICE r12): the memo values are EAGER
-    localCheckpoints — executor-resident storage blocks, not
-    driver rows like the centroid/LSH memos — so dropping the
-    handles on eviction would strand the blocks until JVM GC.
-    free_local_checkpoint does the real free (guarded; see
-    memo.py for the Dataset.unpersist() gotcha)."""
-    for df in dfs:
-        free_local_checkpoint(df)
-
-
-_RESIDUAL_MEMO: dict[tuple[str, str, int, bool], tuple[DataFrame, DataFrame]] = (
-    BoundedMemo(maxsize=4, on_evict=_unpersist_residual)
-)
-
-
+# the artifact cost, every derived read memo-warm). Values are eagerly
+# localCheckpointed DataFrames — rows live executor-side, only the
+# handles on the driver.
 def residual_artifacts_memo(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -2571,23 +2540,12 @@ def residual_artifacts_memo(
     and fullv is the exact (vec_id, v64) integer component arrays.
     First call per (app, sf_dir) materializes ivfadc_residual_topk's
     build behind eager localCheckpoints; later calls reuse the
-    handles. nprobe/scored_pairs sit in the key for self-description —
-    the memo only ever stores the deepest (4, True) configuration,
-    from which every shallower operating point is a row filter.
+    handles. The artifact is the deepest (nprobe=4, scored pairs)
+    configuration, from which every shallower operating point is a
+    row filter. Consumers evaluate their level cut within their own
+    invocation (the store's post-eviction contract)."""
 
-    POST-EVICTION INVALIDATION (ADVICE r13): eviction FREES the
-    checkpoint blocks, and localCheckpoint lineage is truncated — an
-    outstanding DataFrame built from an evicted entry throws
-    "checkpoint block not found" at evaluation instead of recomputing.
-    Consumers must therefore call THIS function at build time and
-    evaluate promptly (the registered queries do: each collects its
-    level cut within its own invocation), never hold derived handles
-    across later calls with new (app, sf_dir) keys (needs ≥ 4 other
-    sf_dirs in one session to bite, but the failure is silent until
-    hit)."""
-    key = (spark.sparkContext.applicationId, sf_dir, 4, True)
-    hit = live_hit(_RESIDUAL_MEMO, key)
-    if hit is None:
+    def build() -> tuple[DataFrame, DataFrame]:
         sp, fullv = ivfadc_residual_topk(
             spark,
             sf_dir,
@@ -2596,12 +2554,9 @@ def residual_artifacts_memo(
             nprobe=4,
             scored_pairs=True,
         )
-        hit = (
-            sp.localCheckpoint(eager=True),
-            fullv.localCheckpoint(eager=True),
-        )
-        _RESIDUAL_MEMO[key] = hit
-    return hit
+        return sp.localCheckpoint(eager=True), fullv.localCheckpoint(eager=True)
+
+    return artifact(spark, sf_dir, "residual_artifacts", build)
 
 
 # ---------------------------------------------------------------------------

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
-from eventstreamer_spark.memo import BoundedMemo, free_local_checkpoint, live_hit
+from eventstreamer_spark.memo import artifact
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
 
@@ -272,8 +272,8 @@ def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped memo of the SHINGLED CORPUS as an eager local
-# checkpoint, keyed on (app, sf_dir). Two reasons, both measured:
+# Session artifact: the SHINGLED CORPUS as an eager local
+# checkpoint. Two reasons, both measured:
 # (1) `explode(shingle_expr(tokens_expr(text)))` re-evaluates the
 # collapsed transform chain per OUTPUT row inside Generate (11 s vs
 # 0.5 s for the transform itself at sf0.1) — the checkpoint is the
@@ -282,37 +282,30 @@ def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # counting plan) would still shingle twice. Eager materialization once
 # per session is exactly the persist-the-shingled-corpus step the
 # ngram_jaccard_pairs docstring names as the production pattern —
-# a real 100 TB run writes this to a durable table instead. Inputs
-# are immutable parquet, so the memo cannot go stale in-session.
-_SHINGLED_CACHE: dict[tuple[str, str], DataFrame] = BoundedMemo(maxsize=8)
-
-
+# a real 100 TB run writes this to a durable table instead.
 def shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh) with distinct 3-gram shingles, eagerly
     materialized once per (app, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = live_hit(_SHINGLED_CACHE, key)
-    if hit is None:
+
+    def build() -> DataFrame:
         docs = load_table_parallel(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
-        hit = (
+        return (
             docs.select("doc_id", H.tokens_expr("text").alias("toks"))
             .select("doc_id", H.shingles_from_tokens_expr("toks").alias("sh"))
             .filter(F.size("sh") > 0)
             .localCheckpoint(eager=True)
         )
-        _SHINGLED_CACHE[key] = hit
-    return hit
+
+    return artifact(spark, sf_dir, "shingled_docs", build)
 
 
-# Session-scoped memo of the near-dup pair table, keyed on (app,
-# sf_dir) — same pattern as similarity.ivf_centroids_for. Five
+# Session artifacts: the near-dup pair tables, one per kind. Five
 # consumer queries (dedup_method_agreement, dedup_clusters,
 # dedup_canonical_selection, neardup_source_matrix,
-# minhash_jaccard_calibration — bench.py's memo_warm list) otherwise
-# each replay the full shingle → signature → band-join pipeline.
-# Inputs are immutable parquet.
+# minhash_jaccard_calibration) otherwise each replay the full
+# shingle → signature → band-join pipeline.
 #
 # r14 optimization (guide §5 driver-side work): the original memo
 # collected the rows and rebuilt a LocalRelation per consumer call —
@@ -320,34 +313,18 @@ def shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the simhash table is 411k pairs at sf0.1, and re-shipping it
 # driver → JVM cost 1.5-2.0 s per consumer invocation (measured;
 # dedup_method_agreement paid it in BOTH construction and execution).
-# The memo now holds an eagerly localCheckpointed handle instead:
-# build once per (app, sf_dir, kind), consumers scan executor-resident
-# blocks. Eviction frees the checkpoint blocks (free_local_checkpoint)
-# under the same post-eviction invalidation contract as
-# residual_artifacts_memo: consume at build time, evaluate within the
-# invocation — never hold a handle across later memo inserts.
-def _free_pairs(_key: tuple, df: DataFrame) -> None:
-    free_local_checkpoint(df)
-
-
-_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = BoundedMemo(
-    maxsize=8, on_evict=_free_pairs
-)
-
-
+# The artifact is an eagerly localCheckpointed handle instead: built
+# once per (app, sf_dir, kind), consumers scan executor-resident
+# blocks.
 def _memoized_pairs(
     spark: SparkSession, sf_dir: str, kind: str, build
 ) -> DataFrame:
-    """Generic session memo for LSH/blocking-bounded pair tables
-    (consumers only — the owning query always re-runs its pipeline):
-    first call per (app, sf_dir, kind) runs the distributed build and
-    checkpoints the result, later calls return the same handle."""
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    hit = live_hit(_PAIRS_CACHE, key)
-    if hit is None:
-        hit = build().localCheckpoint(eager=True)
-        _PAIRS_CACHE[key] = hit
-    return hit
+    """Pair-table artifact for consumers (the owning query always
+    re-runs its pipeline): first call per (app, sf_dir, kind) runs the
+    distributed build and checkpoints the result."""
+    return artifact(
+        spark, sf_dir, f"pairs:{kind}", lambda: build().localCheckpoint(eager=True)
+    )
 
 
 def minhash_pairs_for(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
 from eventstreamer_spark.functions import numeric as N
-from eventstreamer_spark.memo import BoundedMemo, free_local_checkpoint, live_hit
+from eventstreamer_spark.memo import artifact
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
 
@@ -1253,17 +1253,6 @@ def _stage_residue_chunks(spark: SparkSession, df: DataFrame, n_chunks: int, pre
     return chunk_dir, stream
 
 
-def _free_bm25_idx(_key: object, val: tuple[DataFrame, DataFrame]) -> None:
-    post, qt = val
-    free_local_checkpoint(post)
-    free_local_checkpoint(qt)
-
-
-_BM25_IDX_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = BoundedMemo(
-    maxsize=4, on_evict=_free_bm25_idx
-)
-
-
 def bm25_serving_index_memo(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -1273,19 +1262,17 @@ def bm25_serving_index_memo(
     optimization): the served index is the offline artifact of the
     deploy shape, so the serving gate consuming a session build is the
     classifier-weights precedent; the batch retrieval owner
-    (bm25_topk) never reads this memo and pays its own build every
-    invocation. Same post-eviction invalidation contract as
-    residual_artifacts_memo."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = live_hit(_BM25_IDX_MEMO, key)
-    if hit is None:
+    (bm25_topk) never reads this artifact and pays its own build every
+    invocation."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
         tf, dl, qt = bm25_parts(spark, sf_dir)
-        hit = (
+        return (
             tf.join(dl, "doc_id").localCheckpoint(eager=True),
             qt.localCheckpoint(eager=False),
         )
-        _BM25_IDX_MEMO[key] = hit
-    return hit
+
+    return artifact(spark, sf_dir, "bm25_serving_index", build)
 
 
 @query("stream_bm25_topk", oracle=_BM25_ORACLE)
@@ -1663,15 +1650,6 @@ def _retriever_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm.unionByName(ann)
 
 
-def _free_rlists(_key: object, df: DataFrame) -> None:
-    free_local_checkpoint(df)
-
-
-_RLISTS_MEMO: dict[tuple[str, str], DataFrame] = BoundedMemo(
-    maxsize=4, on_evict=_free_rlists
-)
-
-
 def retriever_lists_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``_retriever_lists`` behind a per-(applicationId, sf_dir)
     localCheckpoint (r14 optimization): the THREE fusion queries —
@@ -1681,15 +1659,13 @@ def retriever_lists_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 2·q·k-row table. One build per session now (the retrievers'
     OWNER queries, bm25_topk and lsh_topk, still pay their own builds
     every invocation — eval-tier contract); consumers fuse over the
-    checkpointed rows and are declared in bench.py's memo_warm. Same
-    post-eviction invalidation contract as residual_artifacts_memo:
-    consume at build time, evaluate within the invocation."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = live_hit(_RLISTS_MEMO, key)
-    if hit is None:
-        hit = _retriever_lists(spark, sf_dir).localCheckpoint(eager=False)
-        _RLISTS_MEMO[key] = hit
-    return hit
+    checkpointed rows."""
+    return artifact(
+        spark,
+        sf_dir,
+        "retriever_lists",
+        lambda: _retriever_lists(spark, sf_dir).localCheckpoint(eager=False),
+    )
 
 
 @query("hybrid_rrf_fusion", oracle=_rrf_oracle)

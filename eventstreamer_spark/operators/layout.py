@@ -37,7 +37,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from eventstreamer_spark.memo import BoundedMemo, free_local_checkpoint
+from eventstreamer_spark.memo import artifact, free_local_checkpoint
 from eventstreamer_spark.operators.ranks import (
     RANK_NPART,
     parallel_rank,
@@ -123,18 +123,10 @@ _ZORDER_BOXES_D = ", ".join(
 )
 
 
-def _rm_layout(_key: object, val: dict) -> None:
-    shutil.rmtree(val["root"], ignore_errors=True)
-
-
 # Written-layout paths per (applicationId, sf_dir). The write is the
 # one-time clustering job a table maintenance service runs; both layout
-# audits consume the SAME files, so the build is memoized like the
-# residual-PQ artifacts (bench.py declares the consumers memo-warm) and
-# eviction deletes the directories deterministically.
-_LAYOUT_MEMO: dict[tuple[str, str], dict] = BoundedMemo(maxsize=2, on_evict=_rm_layout)
-
-
+# audits consume the SAME files, so the build is a session artifact and
+# leaving the store deletes the directories deterministically.
 def layout_tables(spark: SparkSession, sf_dir: str) -> dict:
     """Write lineitem under BOTH physical layouts as real parquet, one
     directory per logical file: ``linear/f=K`` ordered by the write key
@@ -150,11 +142,13 @@ def layout_tables(spark: SparkSession, sf_dir: str) -> dict:
     l_linenumber), so the real parquet footers carry min/max for both
     probe dims and the point-lookup key.
 
-    Returns {"root", "linear", "zorder", "n"} from the memo."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LAYOUT_MEMO.get(key)
-    if hit is not None:
-        return hit
+    Returns {"root", "linear", "zorder", "n"}."""
+    return artifact(
+        spark, sf_dir, "layout_tables", lambda: _write_layouts(spark, sf_dir)
+    )
+
+
+def _write_layouts(spark: SparkSession, sf_dir: str) -> dict:
     digest = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     root = f"/tmp/es_layout/{spark.sparkContext.applicationId}/{digest}"
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -193,14 +187,12 @@ def layout_tables(spark: SparkSession, sf_dir: str) -> dict:
             .parquet(f"{root}/{name}")
         )
         free_local_checkpoint(ckpt)
-    hit = {
+    return {
         "root": root,
         "linear": f"{root}/linear",
         "zorder": f"{root}/zorder",
         "n": n,
     }
-    _LAYOUT_MEMO[key] = hit
-    return hit
 
 
 # ---------------------------------------------------------------------------
@@ -379,10 +371,10 @@ def q_zorder_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # Eager 2-row checkpoint (ADVICE r13): the lazy plan reads the
-    # memoized /tmp/es_layout files, which _LAYOUT_MEMO (maxsize=2)
-    # rmtree's on eviction — a handle held across two newer
-    # (app, sf_dir) keys would read deleted paths. Same lifecycle as
-    # the compaction/partition audits.
+    # /tmp/es_layout files of the layout_tables artifact, which the
+    # store rmtree's on eviction — a handle held across that eviction
+    # would read deleted paths. Same lifecycle as the
+    # compaction/partition audits.
     return report.localCheckpoint(eager=True)
 
 
@@ -592,7 +584,7 @@ def q_bloom_file_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("scan_share"),
     )
     # Eager 3-row checkpoint (ADVICE r13): see q_zorder_pruning_audit —
-    # don't hold a lazy read over _LAYOUT_MEMO-owned paths.
+    # don't hold a lazy read over store-owned paths.
     return report.localCheckpoint(eager=True)
 
 
@@ -1095,26 +1087,21 @@ def q_analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 CBO_FILTER_DATE = "2001-07-01"  # last month of the synthetic 79-month span
 
 
-def _rm_cbo(_key: object, val: dict) -> None:
-    # The in-memory catalog's DB entry is session-scoped (re-created
-    # with DROP ... CASCADE on the next build); only the files are ours
-    # to reclaim here.
-    shutil.rmtree(val["root"], ignore_errors=True)
-
-
-_CBO_MEMO: dict[tuple[str, str], dict] = BoundedMemo(maxsize=2, on_evict=_rm_cbo)
-
-
 def cbo_tables(spark: SparkSession, sf_dir: str) -> dict:
     """Write the audit's catalog tables (orders projected to key+DATE,
     lineitem to key+price) as external parquet tables and ANALYZE them
     (table + column stats) — the one-time maintenance job whose output
-    the planner consumes. Memoized per (app, sf_dir) like the layout
-    tables; eviction reclaims the files."""
+    the planner consumes. A session artifact like the layout tables;
+    leaving the store reclaims the files (the in-memory catalog's DB
+    entry is session-scoped and re-created with DROP ... CASCADE on
+    the next build)."""
+    return artifact(
+        spark, sf_dir, "cbo_tables", lambda: _write_cbo_tables(spark, sf_dir)
+    )
+
+
+def _write_cbo_tables(spark: SparkSession, sf_dir: str) -> dict:
     key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CBO_MEMO.get(key)
-    if hit is not None:
-        return hit
     tag = hashlib.md5(repr(key).encode()).hexdigest()[:8]
     db = f"es_cbo_{tag}"
     root = f"/tmp/es_cbo/{key[0]}/{tag}"
@@ -1135,9 +1122,7 @@ def cbo_tables(spark: SparkSession, sf_dir: str) -> dict:
     ):
         spark.sql(f"ANALYZE TABLE {db}.{t} COMPUTE STATISTICS")
         spark.sql(f"ANALYZE TABLE {db}.{t} COMPUTE STATISTICS FOR COLUMNS {cols}")
-    out = {"db": db, "root": root}
-    _CBO_MEMO[key] = out
-    return out
+    return {"db": db, "root": root}
 
 
 _CBO_ORACLE = f"""

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
-from eventstreamer_spark.memo import BoundedMemo, live_hit
+from eventstreamer_spark.memo import artifact
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
 
@@ -81,39 +81,34 @@ def brute_topk(e: DataFrame) -> DataFrame:
     return _ranked_topk(pairs)
 
 
-# Session-scoped memo of the CHECKPOINTED exact ground truth for
-# CONSUMER queries (the pq_recall_at_k grid — VERDICT r10 item 4, the
+# Session artifact: the CHECKPOINTED exact ground truth for CONSUMER
+# queries (the pq_recall_at_k grid — VERDICT r10 item 4, the
 # semdedup_assign_memo pattern): the truth table is a fixed artifact
 # of (corpus, QUERY_FILTER, TOP_K), identical for every recall/eval
 # grid that reads it. The OWNER, ann_bruteforce_topk, calls
 # brute_topk() directly and re-runs its own build every invocation
-# (the bench-honesty rule: memos are for consumers, never a query's
-# own build). The value is a localCheckpointed DataFrame — rows live
-# executor-side, only the handle on the driver.
-_BRUTE_MEMO: dict[tuple[str, str], DataFrame] = BoundedMemo(maxsize=4)
-
-
+# (the bench-honesty rule: artifacts are for consumers, never a
+# query's own build).
 def brute_truth_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consumer-facing exact ANN ground truth (query_id, neighbor_id,
     rank): first call per (app, sf_dir) materializes brute_topk over
     the zero-norm-dropped quantized corpus behind an eager
     localCheckpoint; later calls reuse the handle."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = live_hit(_BRUTE_MEMO, key)
-    if hit is None:
+
+    def build() -> DataFrame:
         prepared = H.with_quantized_unit(
             load_table_parallel(spark, sf_dir, "embeddings"),
             "embedding",
             "uq",
             drop_zero_norm=True,
         ).select("vec_id", "uq")
-        hit = (
+        return (
             brute_topk(prepared)
             .select("query_id", "neighbor_id", "rank")
             .localCheckpoint(eager=True)
         )
-        _BRUTE_MEMO[key] = hit
-    return hit
+
+    return artifact(spark, sf_dir, "brute_truth", build)
 
 
 @query("ann_bruteforce_topk", oracle=_BRUTE_ORACLE)
@@ -466,17 +461,6 @@ def ivf_centroids_iterated(
     return cent
 
 
-# Session-scoped memo of the converged centroid table, keyed on
-# (spark application, sf_dir, iters). The three IVF consumers
-# (ivf_centroid_assign, ivf_topk_search, ann_recall_at_k's ivf branch)
-# otherwise each replay the identical Lloyd iterations from scratch.
-# Caching the COLLECTED rows is safe and cheap: the table is k×dim —
-# driver-sized by construction (the same k rows _score_centroids
-# collects anyway) — and the inputs are immutable parquet, so the
-# memo can never go stale within an application.
-_CENT_CACHE: dict[tuple[str, str, int, str], tuple[list, object]] = BoundedMemo(maxsize=16)
-
-
 def ivf_centroids_for(
     spark: SparkSession,
     sf_dir: str,
@@ -485,22 +469,27 @@ def ivf_centroids_for(
     embq: DataFrame | None = None,
     variant: str = "label",
 ) -> DataFrame:
-    """Lloyd-iterated centroids with a session-scoped memo (see
-    _CENT_CACHE). First call per (app, sf_dir, iters, variant) runs
-    the full distributed build; later calls rebuild the k-row
-    DataFrame from the cached rows without touching the cluster.
-    ``variant`` names the seeding scheme so differently-seeded builds
-    (label seeds vs adaptive mod-⌈√n⌉ seeds) never share a cache
-    slot."""
-    key = (spark.sparkContext.applicationId, sf_dir, iters, variant)
-    hit = _CENT_CACHE.get(key)
-    if hit is None:
-        if e is None:
-            e = load_table(spark, sf_dir, "embeddings")
-        cent = ivf_centroids_iterated(e, iters=iters, embq=embq)
-        hit = (cent.collect(), cent.schema)
-        _CENT_CACHE[key] = hit
-    rows, schema = hit
+    """Lloyd-iterated centroids as a session artifact. The three IVF
+    consumers (ivf_centroid_assign, ivf_topk_search, ann_recall_at_k's
+    ivf branch) otherwise each replay the identical Lloyd iterations
+    from scratch. The artifact is the COLLECTED rows: the table is
+    k×dim — driver-sized by construction (the same k rows
+    _score_centroids collects anyway). First call per (app, sf_dir,
+    iters, variant) runs the full distributed build; later calls
+    rebuild the k-row DataFrame from the stored rows without touching
+    the cluster. ``variant`` names the seeding scheme so
+    differently-seeded builds (label seeds vs adaptive mod-⌈√n⌉ seeds)
+    never share an artifact."""
+
+    def build() -> tuple[list, object]:
+        cent = ivf_centroids_iterated(
+            load_table(spark, sf_dir, "embeddings") if e is None else e,
+            iters=iters,
+            embq=embq,
+        )
+        return cent.collect(), cent.schema
+
+    rows, schema = artifact(spark, sf_dir, f"centroids:{variant}:{iters}", build)
     return spark.createDataFrame(rows, schema)
 
 
@@ -1489,27 +1478,23 @@ def semdedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _score_centroids(embq, cent).select("vec_id", "uq", "c_label")
 
 
-# Session-scoped memo of the CHECKPOINTED assignment table for
-# CONSUMER queries (corpus_build_pipeline, semantic_decontamination) —
-# the owner, semantic_dedup, calls semdedup_assign() directly and
-# re-runs its own build every invocation (the bench-honesty rule:
-# memos are for consumers, never a query's own build). The value is a
-# localCheckpointed DataFrame, n rows executor-side — only the handle
-# lives on the driver. Mirrors the production shape where the cluster
-# assignment is a prebuilt artifact the downstream pipelines read.
-_ASSIGN_MEMO: dict[tuple[str, str], DataFrame] = BoundedMemo(maxsize=4)
-
-
+# Session artifact: the CHECKPOINTED assignment table for CONSUMER
+# queries (corpus_build_pipeline, semantic_decontamination) — the
+# owner, semantic_dedup, calls semdedup_assign() directly and re-runs
+# its own build every invocation. The value is a localCheckpointed
+# DataFrame, n rows executor-side — only the handle lives on the
+# driver. Mirrors the production shape where the cluster assignment is
+# a prebuilt artifact the downstream pipelines read.
 def semdedup_assign_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consumer-facing semdedup_assign: first call per (app, sf_dir)
     materializes the assignment behind an eager localCheckpoint;
     later calls reuse it (measured ~1.1 s/invocation at sf0.1)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = live_hit(_ASSIGN_MEMO, key)
-    if hit is None:
-        hit = semdedup_assign(spark, sf_dir).localCheckpoint(eager=True)
-        _ASSIGN_MEMO[key] = hit
-    return hit
+    return artifact(
+        spark,
+        sf_dir,
+        "semdedup_assign",
+        lambda: semdedup_assign(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def semdedup_cluster_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":

@@ -14,48 +14,39 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from eventstreamer_spark.memo import BoundedMemo
+from eventstreamer_spark import memo
 from eventstreamer_spark.session import TABLES
 
-# Resolved-scan memo (r14 optimization, guide §6 "manifest metadata"):
-# every spark.read.parquet pays a driver-side file listing + footer
-# schema read — measured 148 ms/call on this host — and the bench
-# surface issues thousands of load_table calls per window for the
-# same ten immutable files. Memoizing the RESOLVED DataFrame handle
-# per (applicationId, sf_dir, table) reuses the FileIndex + schema the
-# way a catalog table's manifest would; it caches METADATA ONLY —
-# every action on the handle still scans the parquet files (lazy
-# relation, no .cache()), so each bench invocation computes from the
-# inputs exactly as before. Values are plan handles (no executor
-# resources), so no eviction hook; 64 slots cover many sf_dirs.
+# Resolved-scan artifacts (r14 optimization, guide §6 "manifest
+# metadata"): every spark.read.parquet pays a driver-side file listing
+# + footer schema read — measured 148 ms/call — and the bench surface
+# issues thousands of load_table calls per window for the same ten
+# immutable files. Storing the RESOLVED DataFrame handle per
+# (applicationId, sf_dir, table) reuses the FileIndex + schema the way
+# a catalog table's manifest would; it caches METADATA ONLY — every
+# action on the handle still scans the parquet files (lazy relation, no
+# .cache()), so each bench invocation computes from the inputs exactly
+# as before.
 #
-# STALENESS CONTRACT (VERDICT r14 item 4): the memoized handle pins
-# the FileIndex, so an operator that WRITES to a canonical table path
+# STALENESS CONTRACT (VERDICT r14 item 4): the stored handle pins the
+# FileIndex, so an operator that WRITES to a canonical table path
 # in-session would silently keep reading the stale file list. No
 # current operator writes canonical paths (side products live under
 # /tmp/es_* keyed by applicationId) — any future writer MUST call
 # ``invalidate_scan(sf_dir, name)`` after the write, and the pin test
 # test_scan_memo_invalidates_on_write holds it to that.
-_SCAN_MEMO: dict[tuple[str, str, str], DataFrame] = BoundedMemo(maxsize=64)
-
-
 def invalidate_scan(sf_dir: str, name: str | None = None) -> None:
-    """Drop memoized resolved-scan handles for ``sf_dir`` (one table,
-    or all of its tables when ``name`` is None) so the next load_table
-    re-lists files and re-reads footers. REQUIRED after any in-session
-    write to a canonical table path — see the staleness contract on
-    _SCAN_MEMO."""
-    stale = [
-        k for k in _SCAN_MEMO if k[1] == sf_dir and (name is None or k[2] == name)
-    ]
-    for k in stale:
-        _SCAN_MEMO.pop(k, None)
+    """Drop the resolved-scan handle of table ``name`` in ``sf_dir`` —
+    or, when ``name`` is None, every artifact of ``sf_dir`` — so the
+    next load_table re-lists files and re-reads footers. REQUIRED after
+    any in-session write to a canonical table path."""
+    memo.drop(sf_dir, None if name is None else f"scan:{name}")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one canonical table. Vectorized parquet reader, lazy.
-    The resolved handle is memoized per (app, sf_dir, name) — writers
-    to a canonical path must call ``invalidate_scan`` (see _SCAN_MEMO).
+    The resolved handle is the session artifact ``scan:<name>`` —
+    writers to a canonical path must call ``invalidate_scan``.
 
     ``events.ts`` arrives either as parquet TIMESTAMP(NANOS) — which
     Spark's reader rejects, so we read nanos as epoch-long (runtime
@@ -67,10 +58,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (unix_micros, window, watermarks) sees identical values to the
     DuckDB oracle.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    hit = _SCAN_MEMO.get(key)
-    if hit is not None:
-        return hit
+    return memo.artifact(
+        spark, sf_dir, f"scan:{name}", lambda: _scan(spark, sf_dir, name)
+    )
+
+
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
@@ -80,7 +73,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif isinstance(dt, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _SCAN_MEMO[key] = df
     return df
 
 

@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.functions.casting import fmt_ts, round6
 from eventstreamer_spark.operators.windowed import tumbling_stats
-from eventstreamer_spark.memo import BoundedMemo
+from eventstreamer_spark.memo import artifact
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.sources.tables import load_events
 
@@ -52,32 +52,28 @@ def stream_events(spark: SparkSession, dir_path: str, max_files: int | None = 1)
     return reader.parquet(dir_path)
 
 
-# Session-scoped memo of the inferred events schema per sf dir: every
-# stream query pays a driver-side parquet footer read otherwise (~0.15 s,
-# twice for the dual-branch stream-stream join). Keyed on the Spark app id
-# so a new session (or test run) re-infers; the testdata within one
-# application never changes, so the memo cannot go stale.
-_EVENTS_SCHEMA_MEMO: dict[tuple[str, str], T.StructType] = {}
-
-
 def stream_events_sf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream twin of ``sources.tables.load_events`` for a
     canonical sf dir: schema-adaptive to however the driver encoded
     ``events.ts`` (TIMESTAMP(NANOS) → long via nanosAsLong, or
     TIMESTAMP(MICROS) → TIMESTAMP_NTZ), normalizing to a plain UTC
     TIMESTAMP either way. File streams need an explicit schema, so the
-    one-off batch footer read here is what infers it (memoized per
-    session + sf dir)."""
+    one-off batch footer read here is what infers it — scan metadata
+    like load_table's handles, stored as a ``scan:`` artifact, since
+    every stream query would otherwise pay the footer read (~0.15 s,
+    twice for the dual-branch stream-stream join)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    memo_key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    batch_schema = _EVENTS_SCHEMA_MEMO.get(memo_key)
-    if batch_schema is None:
-        batch_schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").schema
-        _EVENTS_SCHEMA_MEMO[memo_key] = batch_schema
+    sf_dir = sf_dir.rstrip("/")
+    batch_schema = artifact(
+        spark,
+        sf_dir,
+        "scan:events_schema",
+        lambda: spark.read.parquet(f"{sf_dir}/events.parquet").schema,
+    )
     stream = (
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", "events.parquet")  # file source needs a directory
-        .parquet(sf_dir.rstrip("/"))
+        .parquet(sf_dir)
     )
     dt = batch_schema["ts"].dataType
     if isinstance(dt, T.LongType):
@@ -177,6 +173,22 @@ def run_foreach_batch(df, fn, nodata_batches: bool = False) -> list[dict]:
     )
 
 
+def _gate_partitions() -> int:
+    """Gate shuffle partitions from $SPARK_GRAFT_GATE_PARTITIONS
+    (default 8, measured best): an int >= 1, checked before the gate
+    touches any session conf."""
+    raw = os.environ.get("SPARK_GRAFT_GATE_PARTITIONS", "8")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_GATE_PARTITIONS must be an integer >= 1, got {raw!r}"
+        )
+    return n
+
+
 def _run_gate_stream(df: DataFrame, start, nodata_batches: bool = False) -> list[dict]:
     """Shared gate-run plumbing: conf save/set/restore + fresh
     checkpoint dir + synchronous processAllAvailable, with ``start``
@@ -187,6 +199,7 @@ def _run_gate_stream(df: DataFrame, start, nodata_batches: bool = False) -> list
     import tempfile
 
     spark = df.sparkSession
+    partitions = _gate_partitions()
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     part_key = "spark.sql.shuffle.partitions"
     retain_key = "spark.sql.streaming.minBatchesToRetain"
@@ -199,7 +212,7 @@ def _run_gate_stream(df: DataFrame, start, nodata_batches: bool = False) -> list
         prov_key,
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
     )
-    spark.conf.set(part_key, os.environ.get("SPARK_GRAFT_GATE_PARTITIONS", "8"))
+    spark.conf.set(part_key, str(partitions))
     # Gate runs are one-batch and never restarted from this checkpoint, so
     # retaining the default 100 committed batches only adds checkpoint I/O.
     spark.conf.set(retain_key, "1")

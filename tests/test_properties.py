@@ -250,10 +250,10 @@ def test_connected_components_matches_union_find(spark, edges):
 
 
 def test_bounded_memo_evicts_oldest():
-    """The session memos (_PAIRS_CACHE, _CENT_CACHE, upsert dirs) are
-    FIFO-bounded: inserting past maxsize evicts the oldest key and
-    fires the eviction hook, so a long-lived service scanning many
-    sf dirs cannot leak driver memory or temp dirs."""
+    """The session-artifact store is bounded: inserting past maxsize
+    evicts the oldest key and fires the eviction hook, so a long-lived
+    service scanning many sf dirs cannot leak driver memory or temp
+    dirs."""
     from eventstreamer_spark.memo import BoundedMemo
 
     evicted = []
@@ -266,14 +266,12 @@ def test_bounded_memo_evicts_oldest():
     # re-setting an existing key must not evict
     m["k3"] = 33
     assert len(m) == 3 and m["k3"] == 33 and len(evicted) == 2
-    # the live caches are bounded instances
-    from eventstreamer_spark.operators.dedup import _PAIRS_CACHE, _SHINGLED_CACHE
-    from eventstreamer_spark.operators.similarity import _CENT_CACHE
-    from eventstreamer_spark.operators.text import _BPE_CACHE
+    # the live store is a bounded instance with the releasing hook
+    from eventstreamer_spark import memo
 
-    # (_UPSERT_CACHE was removed in r7 — ADVICE: it was write-only)
-    for cache in (_PAIRS_CACHE, _SHINGLED_CACHE, _CENT_CACHE, _BPE_CACHE):
-        assert isinstance(cache, BoundedMemo)
+    assert isinstance(memo._STORE, BoundedMemo)
+    assert memo._STORE.maxsize == memo.STORE_SIZE
+    assert memo._STORE._on_evict is memo._release
 
 
 def test_residual_artifacts_memo_builds_once(spark):
@@ -283,14 +281,11 @@ def test_residual_artifacts_memo_builds_once(spark):
     optimized plan must be a pure checkpoint scan (LogicalRDD with no
     build operators), so every consumer read is a materialized-rows
     scan, never a retrain."""
-    from eventstreamer_spark.operators.audit import (
-        _RESIDUAL_MEMO,
-        residual_artifacts_memo,
-    )
+    from eventstreamer_spark import memo
+    from eventstreamer_spark.operators.audit import residual_artifacts_memo
 
     sf_dir = "/root/testdata/sf0.001"
-    key = (spark.sparkContext.applicationId, sf_dir, 4, True)
-    _RESIDUAL_MEMO.pop(key, None)
+    memo.drop(sf_dir, "residual_artifacts")
     sp1, fv1 = residual_artifacts_memo(spark, sf_dir)
     sp2, fv2 = residual_artifacts_memo(spark, sf_dir)
     assert sp1 is sp2 and fv1 is fv2
@@ -312,16 +307,14 @@ def test_pairs_memo_checkpoints_once(spark):
     plan must be a pure checkpoint scan (LogicalRDD — no LSH rebuild,
     and no per-call applySchemaToPythonRDD re-ship of 411k simhash
     rows, the measured 1.5-2 s/consumer cost of the old row memo), and
-    the eviction hook that frees the checkpoint blocks must be wired."""
-    from eventstreamer_spark.operators.dedup import (
-        _PAIRS_CACHE,
-        _free_pairs,
-        simhash_pairs_for,
-    )
+    the store must record the handle as a checkpoint its eviction hook
+    frees."""
+    from eventstreamer_spark import memo
+    from eventstreamer_spark.operators.dedup import simhash_pairs_for
 
     sf_dir = "/root/testdata/sf0.001"
-    key = (spark.sparkContext.applicationId, sf_dir, "simhash")
-    _PAIRS_CACHE.pop(key, None)
+    key = ("pairs:simhash", spark.sparkContext.applicationId, sf_dir)
+    memo.drop(sf_dir, "pairs:simhash")
     p1 = simhash_pairs_for(spark, sf_dir)
     p2 = simhash_pairs_for(spark, sf_dir)
     assert p1 is p2
@@ -331,7 +324,7 @@ def test_pairs_memo_checkpoints_once(spark):
     # content pin, not just no-exception: an empty/corrupted checkpoint
     # would return zero pairs (ADVICE r14)
     assert p1.count() > 0
-    assert _PAIRS_CACHE._on_evict is _free_pairs
+    assert memo._STORE[key].checkpoints == (p1,)
 
 
 def test_f64_matmul_exact_at_quantization_bound():
@@ -396,38 +389,29 @@ def test_pairs_memo_handle_survives_same_invocation_inserts(spark):
     dedup_method_agreement shape) must still be able to evaluate the
     held handle — the get refreshed its recency, so the inserts evict
     other entries first."""
-    from pyspark.sql import functions as F
-
-    from eventstreamer_spark.operators.dedup import (
-        _PAIRS_CACHE,
-        simhash_pairs_for,
-    )
+    from eventstreamer_spark import memo
+    from eventstreamer_spark.operators.dedup import simhash_pairs_for
 
     sf_dir = "/root/testdata/sf0.001"
-    _PAIRS_CACHE.pop((spark.sparkContext.applicationId, sf_dir, "simhash"), None)
+    fill_dir = sf_dir + "#fill"
+    memo.drop(sf_dir, "pairs:simhash")
     h = simhash_pairs_for(spark, sf_dir)
-    # age the held entry to LRU position, then fill the memo to force
+    # age the held entry to LRU position, then fill the store to force
     # capacity evictions while the handle is live
-    fillers = []
-    for i in range(_PAIRS_CACHE.maxsize - 1):
-        f = spark.range(1).select(F.col("id")).localCheckpoint(eager=True)
-        _PAIRS_CACHE[("fill", sf_dir, str(i))] = f
-        fillers.append(f)
+    for i in range(memo.STORE_SIZE - 1):
+        memo.artifact(spark, fill_dir, f"fill:{i}", lambda: i)
     h2 = simhash_pairs_for(spark, sf_dir)  # get: refreshes recency
     assert h2 is h
-    _PAIRS_CACHE[("fill", sf_dir, "overflow-1")] = spark.range(1).localCheckpoint(
-        eager=True
-    )
-    _PAIRS_CACHE[("fill", sf_dir, "overflow-2")] = spark.range(1).localCheckpoint(
-        eager=True
-    )
+    for name in ("overflow-1", "overflow-2"):
+        memo.artifact(
+            spark, fill_dir, name, lambda: spark.range(1).localCheckpoint(eager=True)
+        )
     # the held handle must still evaluate: without LRU-on-get the
     # overflow inserts evicted it and this scan died with
     # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
     assert h.count() > 0
-    # cleanup: drop the fillers so later tests see a sane memo
-    for k in [k for k in list(_PAIRS_CACHE) if k[0] == "fill"]:
-        _PAIRS_CACHE.pop(k, None)
+    # cleanup: drop the fillers so later tests see a sane store
+    memo.drop(fill_dir)
 
 
 def test_memo_getter_rebuilds_after_out_of_band_free(spark):
@@ -435,18 +419,15 @@ def test_memo_getter_rebuilds_after_out_of_band_free(spark):
     checkpoint's blocks are freed out-of-band, the getter must treat
     the stale hit as a miss and rebuild — re-consuming after an
     eviction can never throw."""
+    from eventstreamer_spark import memo
     from eventstreamer_spark.memo import free_local_checkpoint
-    from eventstreamer_spark.operators.dedup import (
-        _PAIRS_CACHE,
-        simhash_pairs_for,
-    )
+    from eventstreamer_spark.operators.dedup import simhash_pairs_for
 
     sf_dir = "/root/testdata/sf0.001"
-    key = (spark.sparkContext.applicationId, sf_dir, "simhash")
-    _PAIRS_CACHE.pop(key, None)
+    memo.drop(sf_dir, "pairs:simhash")
     h = simhash_pairs_for(spark, sf_dir)
     n = h.count()
-    free_local_checkpoint(h)  # out-of-band: memo still holds the key
+    free_local_checkpoint(h)  # out-of-band: the store still holds the key
     h2 = simhash_pairs_for(spark, sf_dir)
     assert h2 is not h  # stale hit detected, rebuilt
     assert h2.count() == n  # and the rebuild evaluates cleanly
@@ -457,11 +438,8 @@ def test_scan_memo_invalidates_on_write(tmp_path, spark):
     so an in-session writer to a canonical table path MUST call
     invalidate_scan afterwards — this pins both the hazard (stale
     handle reuse) and the remedy."""
-    from eventstreamer_spark.sources.tables import (
-        _SCAN_MEMO,
-        invalidate_scan,
-        load_table,
-    )
+    from eventstreamer_spark import memo
+    from eventstreamer_spark.sources.tables import invalidate_scan, load_table
 
     sf_dir = str(tmp_path)
     spark.range(5).write.mode("overwrite").parquet(f"{sf_dir}/nation.parquet")
@@ -469,14 +447,14 @@ def test_scan_memo_invalidates_on_write(tmp_path, spark):
     assert d1.count() == 5
     # overwrite the canonical path in-session
     spark.range(7).write.mode("overwrite").parquet(f"{sf_dir}/nation.parquet")
-    # the hazard: the memo still returns the stale resolved handle
+    # the hazard: the store still returns the stale resolved handle
     assert load_table(spark, sf_dir, "nation") is d1
     invalidate_scan(sf_dir, "nation")
     d2 = load_table(spark, sf_dir, "nation")
     assert d2 is not d1
     assert d2.count() == 7
     invalidate_scan(sf_dir)
-    assert not any(k[1] == sf_dir for k in _SCAN_MEMO)
+    assert not any(k[2] == sf_dir for k in memo._STORE)
 
 
 def _reference_bpe(word_freqs, n_merges):
@@ -786,13 +764,12 @@ def test_residual_memo_eviction_frees_blocks(spark):
     (b) the hook actually drops the checkpointed RDD's storage (the
     measured gotcha: Dataset.unpersist() alone leaves the block), and
     (c) a capacity eviction routes through it."""
-    from eventstreamer_spark.memo import BoundedMemo
-    from eventstreamer_spark.operators.audit import (
-        _RESIDUAL_MEMO,
-        _unpersist_residual,
-    )
+    import pytest
 
-    assert _RESIDUAL_MEMO._on_evict is _unpersist_residual
+    from eventstreamer_spark import memo
+    from eventstreamer_spark.memo import BoundedMemo, _Entry, _release
+
+    assert memo._STORE._on_evict is _release
 
     sc = spark.sparkContext
 
@@ -808,46 +785,118 @@ def test_residual_memo_eviction_frees_blocks(spark):
     df = spark.range(64).selectExpr("id", "id * 2 AS y").localCheckpoint(eager=True)
     new_ids = stored_ids() - before
     assert len(new_ids) == 1, new_ids
-    m = BoundedMemo(maxsize=1, on_evict=_unpersist_residual)
-    m["a"] = (df,)
-    m["b"] = ()  # evicts "a" -> hook must free df's checkpoint block
+    m = BoundedMemo(maxsize=1, on_evict=_release)
+    m["a"] = _Entry((df,), (df,))
+    m["b"] = _Entry((), ())  # evicts "a" -> hook must free df's block
     assert not (stored_ids() & new_ids), "evicted checkpoint block still stored"
-    # guarded: junk values must not raise through an insert
-    _unpersist_residual("k", (object(),))
+    # guarded: junk values must not raise through an insert — the
+    # failed py4j free is warned, never silent
+    with pytest.warns(RuntimeWarning, match="free_local_checkpoint"):
+        _release("k", _Entry((object(),), (object(),)))
 
 
 def test_classifier_and_dsir_memos(spark):
     """r14 optimization: the ridge-classifier artifacts and the DSIR
     score table are built once per (applicationId, sf_dir) and shared
-    by their consumer queries. Pins (a) the eviction hooks are wired,
-    (b) repeat calls return the SAME handles (no rebuild), and (c) the
+    by their consumer queries. Pins (a) the store records the
+    checkpoints its eviction hook frees, (b) repeat calls return the
+    SAME handles (no rebuild), and (c) the
     memoized weight vector equals an independent direct training run —
     the memo changes WHO pays, never the values."""
     from tests.conftest import SF_DIR
 
-    from eventstreamer_spark.operators.curation import (
-        _DSIR_MEMO,
-        _free_dsir,
-        dsir_scores_memo,
-    )
+    from eventstreamer_spark import memo
+    from eventstreamer_spark.operators.curation import dsir_scores_memo
     from eventstreamer_spark.operators.quality import (
-        _QC_ART_MEMO,
         _doc_features,
-        _free_qc_artifacts,
         classifier_artifacts_memo,
         train_ridge_weights,
     )
 
-    assert _QC_ART_MEMO._on_evict is _free_qc_artifacts
-    assert _DSIR_MEMO._on_evict is _free_dsir
-
+    app = spark.sparkContext.applicationId
     feats1, lab1, w1 = classifier_artifacts_memo(spark, SF_DIR)
     feats2, lab2, w2 = classifier_artifacts_memo(spark, SF_DIR)
     assert feats1 is feats2 and lab1 is lab2 and w1 is w2
+    stored = memo._STORE[("classifier_artifacts", app, SF_DIR)].checkpoints
+    assert stored == (feats1, lab1)
 
     feats_d, lab_d = _doc_features(spark, SF_DIR)
     assert w1 == train_ridge_weights(spark, SF_DIR, feats=feats_d, lab=lab_d)
 
     d1 = dsir_scores_memo(spark, SF_DIR)
     assert dsir_scores_memo(spark, SF_DIR) is d1
+    assert memo._STORE[("dsir_scores", app, SF_DIR)].checkpoints == (d1,)
     assert d1.columns == ["doc_id", "source", "n_grams", "w_e6", "s_e6"]
+
+
+def test_checkpoint_artifacts_free_blocks_on_eviction(spark):
+    """The three consumer artifacts that hold eager localCheckpoints
+    but had no eviction hook of their own (shingled_docs,
+    brute_truth_memo, semdedup_assign_memo) must release their
+    executor blocks when they leave the store, not at JVM GC. Tracks
+    the entry's own RDD id, as test_residual_memo_eviction_frees_blocks
+    does."""
+    from tests.conftest import SF_DIR
+
+    from eventstreamer_spark import memo
+    from eventstreamer_spark.operators.dedup import shingled_docs
+    from eventstreamer_spark.operators.similarity import (
+        brute_truth_memo,
+        semdedup_assign_memo,
+    )
+
+    sc = spark.sparkContext
+
+    def stored_ids():
+        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
+
+    for name, getter in (
+        ("shingled_docs", shingled_docs),
+        ("brute_truth", brute_truth_memo),
+        ("semdedup_assign", semdedup_assign_memo),
+    ):
+        memo.drop(SF_DIR, name)
+        df = getter(spark, SF_DIR)
+        rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+        assert rdd_id in stored_ids(), name
+        memo.drop(SF_DIR, name)
+        assert rdd_id not in stored_ids(), f"{name}: evicted blocks still stored"
+
+
+def test_owners_pay_consumers_hit(spark):
+    """Owners-pay as a property: an OWNER query run twice never reads
+    its own artifact from the store (every run pays the build), while
+    a CONSUMER of the same artifact is served from it."""
+    from tests.conftest import SF_DIR
+
+    from eventstreamer_spark import memo
+    from eventstreamer_spark.operators.audit import residual_artifacts_memo
+    from eventstreamer_spark.operators.curation import dsir_scores_memo
+    from eventstreamer_spark.operators.dedup import minhash_pairs_for
+    from eventstreamer_spark.operators.quality import classifier_artifacts_memo
+    from eventstreamer_spark.operators.similarity import brute_truth_memo
+    from eventstreamer_spark.operators.text import learn_bpe_merges
+    from eventstreamer_spark.registry import REGISTRY
+
+    cases = (
+        ("quality_classifier_scores", "classifier_artifacts",
+         classifier_artifacts_memo, "classifier_calibration_audit"),
+        ("dsir_importance_weights", "dsir_scores",
+         dsir_scores_memo, "gumbel_topk_resample"),
+        ("ann_bruteforce_topk", "brute_truth", brute_truth_memo, "ann_recall_at_k"),
+        ("pq_rerank_np4", "residual_artifacts",
+         residual_artifacts_memo, "pq_rerank_topk"),
+        ("bpe_learned_merges", "bpe_merges",
+         learn_bpe_merges, "bpe_apply_segmentation"),
+        ("minhash_lsh_neardup", "pairs:minhash",
+         minhash_pairs_for, "minhash_jaccard_calibration"),
+    )
+    for owner, name, getter, consumer in cases:
+        memo.HITS.clear()
+        for _ in range(2):
+            REGISTRY[owner].fn(spark, SF_DIR).collect()
+        assert memo.HITS[name] == 0, f"owner {owner} read its artifact {name}"
+        getter(spark, SF_DIR)
+        memo.HITS.clear()
+        REGISTRY[consumer].fn(spark, SF_DIR)
+        assert memo.HITS[name] >= 1, f"consumer {consumer} rebuilt {name}"

@@ -732,3 +732,15 @@ def test_checkpoint_restart_no_loss_no_dup(spark, tmp_path):
     assert (got["avg_value"].values == closed["avg_value"].values).all()
     # the restart-spanning window carried both pre- and post-kill events
     assert got.iloc[1]["n_events"] == 2
+
+
+@pytest.mark.parametrize("raw", ["abc", "0"])
+def test_gate_partitions_env_rejected_before_conf(spark, monkeypatch, raw):
+    """A bad $SPARK_GRAFT_GATE_PARTITIONS fails at configuration time,
+    naming the variable, before the gate touches any session conf."""
+    monkeypatch.setenv("SPARK_GRAFT_GATE_PARTITIONS", raw)
+    confs = ("spark.sql.shuffle.partitions", "spark.sql.streaming.minBatchesToRetain")
+    before = [spark.conf.get(k, None) for k in confs]
+    with pytest.raises(ValueError, match="SPARK_GRAFT_GATE_PARTITIONS"):
+        run_to_memory(spark.readStream.format("rate").load(), "bad_partitions")
+    assert [spark.conf.get(k, None) for k in confs] == before
