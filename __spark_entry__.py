@@ -6,7 +6,8 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All queries live in ``eventstreamer_spark.operators.*``; importing the
-modules below populates the registry.
+modules below populates the registry, and ``queries()`` returns them
+in that registry order.
 """
 
 from __future__ import annotations
@@ -68,350 +69,11 @@ def _wrap(fn: registry.QueryFn) -> registry.QueryFn:
     return wrapped
 
 
-# Queries with a hash-green row in CORRECTNESS_r01..r04, keyed by the most
-# recent round that recorded them. The driver records the FIRST 50 entries of
-# queries() each round, so never-yet-recorded queries are ordered first and
-# already-green queries are ordered stalest-first: testdata regenerates every
-# round, so the recording window re-proves the 50 rows whose evidence is
-# oldest (VERDICT r4 item 1 — "ordering discipline keeps evidence fresh").
-_GREEN_R12 = frozenset({
-    # r01/r02
-    "activity_histogram", "ann_bruteforce_topk", "ann_lsh_topk",
-    "ann_recall_at_k", "anti_join_no_big_orders", "array_map_functions",
-    "asof_join_events_orders", "bag_set_operations", "band_range_join",
-    "bpe_token_counts", "broadcast_dim_join", "cube_lineitem",
-    "datapoint_window_eav", "datetime_functions", "dedup_clusters",
-    "distinct_pairs", "doc_fingerprints", "embedding_neardup",
-    "event_transition_matrix", "exact_dedup", "exact_percentiles",
-    "full_outer_join_nations", "funnel_analysis", "grouping_sets_events",
-    "hard_negative_mining", "ivf_centroid_assign", "ivf_topk_search",
-    "json_extraction", "json_ingest_corrupt_drop", "lang_id_confusion",
-    "latest_event_per_user", "left_outer_join_orders", "minhash_lsh_neardup",
-    "multimodal_decode_features", "multimodal_frame_sample",
-    "ngram_jaccard_neardup", "ntile_customer_balance",
-    "pivot_event_values", "pricing_summary", "repetition_detection",
-    "rollup_orders", "salted_skew_join", "scalar_functions",
-    "semi_join_big_spenders", "set_operations", "simhash_neardup",
-    "sliding_window_stats", "star_join_revenue", "string_functions",
-    "text_stats_quality", "token_frequencies", "topk_customers",
-    "topk_per_group", "trimmed_mean_stats", "tumbling_window_stats",
-    "window_analytics_extended", "window_functions_orders",
-})
-
-# r03 (all 50 rows hash-green, CORRECTNESS_r03.json)
-_GREEN_R3 = frozenset({
-    "approx_aggregates", "tfidf_top_terms", "conditional_aggregates",
-    "statistical_aggregates", "unpivot_measures", "sql_entrypoint",
-    "windowed_emit_json", "regex_functions", "pandas_udf_scalar",
-    "pandas_udf_grouped_agg", "scd2_merge_customers",
-    "benchmark_decontamination", "pii_redaction", "boilerplate_detection",
-    "cross_lingual_contamination", "curation_pipeline", "dataset_hash_split",
-    "stratified_exemplar_sample", "sequence_packing", "source_mixture_weights",
-    "mixture_resample", "document_chunking", "assembly_pipeline",
-    "user_retention_cohorts", "dow_hour_heatmap", "value_outliers_zscore",
-    "shipping_priority_topk", "nation_trade_volume", "rfm_segmentation",
-    "calendar_gap_fill", "inverted_index_topk", "bigram_conditional_probs",
-    "duplicate_span_histogram", "doc_length_histogram", "vocab_oov_coverage",
-    "neardup_source_matrix", "minhash_jaccard_calibration",
-    "embedding_norm_stats", "quality_by_source_report",
-    "cdc_changelog_compaction", "priority_share_by_year",
-    "stream_tumbling_stats", "session_windows", "stream_session_windows",
-    "stream_dedup_counts", "stream_stream_join", "stream_topk_types",
-    "stream_sliding_stats", "push_time_parity", "push_time_stream_parity",
-})
-
-# r04 (all 50 rows hash-green, CORRECTNESS_r04.json)
-_GREEN_R4 = frozenset({
-    "simhash_multiblock_neardup", "minhash_containment", "ivf_adaptive_topk",
-    "char_bigram_diversity", "multimodal_metadata_stats",
-    "multimodal_resize_stub", "user_event_entropy", "zipf_slope",
-    "csv_source_parity", "json_source_parity", "orc_source_parity",
-    "ohlc_bars", "time_weighted_avg", "fuzzy_name_matches",
-    "q4_priority_exists", "q17_small_quantity_revenue",
-    "q21_waiting_suppliers", "q22_idle_customers", "q18_large_volume_orders",
-    "q2_min_cost_supplier", "q11_important_values", "q20_dominant_suppliers",
-    "q6_forecast_revenue", "q8_market_share", "q9_profit_by_nation",
-    "q10_returned_revenue", "q12_late_priority_mix",
-    "q13_order_count_distribution", "q14_promo_revenue", "q15_top_supplier",
-    "q19_bracket_revenue", "q5_local_supplier_volume", "q7_nation_trade_flow",
-    "q16_parts_supplier_count", "embedding_quantization_error",
-    "label_centroids", "ann_filtered_topk", "centroid_distance_matrix",
-    "moving_average_revenue", "yoy_growth", "weekly_active_users",
-    "interevent_gap_stats", "decile_value_share", "gini_value_concentration",
-    "median_abs_deviation", "correlation_stats", "first_touch_attribution",
-    "tumbling_window_stats", "datapoint_window_eav", "sliding_window_stats",
-})
-
-# r05 (all 50 rows hash-green, CORRECTNESS_r05.json): the 11 round-5
-# additions + the 39 stalest r1/r2 greens the window re-proved.
-_GREEN_R5 = frozenset({
-    "embedding_neardup_prefiltered", "dedup_canonical_selection",
-    "ann_recall_fixed_probes", "multimodal_payload_dedup",
-    "json_ingest_corrupt_audit", "udtf_chunk_stats",
-    "mixture_temperature_weights", "stream_late_data_policy",
-    "stream_foreachbatch_upsert", "parquet_schema_evolution",
-    "time_hierarchy_rollup", "pricing_summary", "topk_customers",
-    "distinct_pairs", "exact_percentiles", "set_operations", "rollup_orders",
-    "cube_lineitem", "grouping_sets_events", "window_functions_orders",
-    "ntile_customer_balance", "pivot_event_values", "scalar_functions",
-    "json_extraction", "window_analytics_extended", "topk_per_group",
-    "latest_event_per_user", "event_transition_matrix", "funnel_analysis",
-    "trimmed_mean_stats", "activity_histogram", "broadcast_dim_join",
-    "star_join_revenue", "semi_join_big_spenders", "anti_join_no_big_orders",
-    "left_outer_join_orders", "band_range_join", "asof_join_events_orders",
-    "salted_skew_join", "exact_dedup", "minhash_lsh_neardup",
-    "ngram_jaccard_neardup", "simhash_neardup", "embedding_neardup",
-    "dedup_clusters", "text_stats_quality", "lang_id_confusion",
-    "doc_fingerprints", "token_frequencies", "bpe_token_counts",
-})
-
-# r06 (all 50 rows hash-green, CORRECTNESS_r06.json): the 12 round-6
-# additions + the stalest greens that window re-proved.
-_GREEN_R6 = frozenset({
-    'ann_bruteforce_topk', 'ann_lsh_topk', 'ann_recall_at_k',
-    'approx_aggregates', 'array_map_functions', 'assembly_pipeline',
-    'bag_set_operations', 'benchmark_decontamination', 'bigram_perplexity',
-    'boilerplate_detection', 'bpe_apply_segmentation', 'bpe_learned_merges',
-    'capped_session_windows', 'conditional_aggregates',
-    'cross_lingual_contamination', 'curation_pipeline', 'dataset_hash_split',
-    'datetime_functions', 'dedup_method_agreement', 'document_chunking',
-    'domain_cap_filter', 'full_outer_join_nations', 'hard_negative_mining',
-    'incremental_neardup_ingest', 'ivf_centroid_assign', 'ivf_topk_search',
-    'json_ingest_corrupt_drop', 'mixture_resample',
-    'multimodal_decode_features', 'multimodal_frame_sample',
-    'neardup_prefilter_recall', 'pandas_udf_grouped_agg', 'pandas_udf_scalar',
-    'pii_redaction', 'regex_functions', 'repetition_detection',
-    'scd2_merge_customers', 'semantic_dedup', 'sequence_packing',
-    'source_mixture_weights', 'sql_entrypoint', 'statistical_aggregates',
-    'stratified_exemplar_sample', 'stream_capped_sessions',
-    'stream_static_ingest_dedup', 'string_functions',
-    'substring_dedup_rewrite', 'tfidf_top_terms', 'unpivot_measures',
-    'windowed_emit_json',
-})
-
-# r07 (all 50 rows hash-green, CORRECTNESS_r07.json): the 20 round-7
-# additions + the stalest greens that window re-proved.
-_GREEN_R7 = frozenset({
-    'bigram_conditional_probs', 'bucketed_band_index_join',
-    'calendar_gap_fill', 'cdc_changelog_compaction', 'corpus_build_pipeline',
-    'countmin_heavy_hitters', 'datapoint_window_eav', 'doc_length_histogram',
-    'dow_hour_heatmap', 'dsir_importance_weights', 'duplicate_span_histogram',
-    'embedding_norm_stats', 'gumbel_topk_resample', 'ingest_index_maintenance',
-    'inverted_index_topk', 'minhash_jaccard_calibration',
-    'nation_trade_volume', 'neardup_source_matrix', 'pq_adc_topk',
-    'pq_quantization_audit', 'priority_share_by_year', 'push_time_parity',
-    'push_time_stream_parity', 'quality_by_source_report',
-    'quality_classifier_scores', 'rfm_segmentation',
-    'selection_method_agreement', 'selection_pipeline', 'session_windows',
-    'shipping_priority_topk', 'sliding_window_stats', 'sq8_quantization_audit',
-    'stream_classifier_scores', 'stream_countmin_topk', 'stream_dedup_counts',
-    'stream_session_windows', 'stream_sliding_stats', 'stream_stream_join',
-    'stream_topk_types', 'stream_tumbling_stats', 'token_budget_mixture',
-    'tumbling_window_stats', 'twostage_rerank_topk', 'user_retention_cohorts',
-    'value_outliers_zscore', 'vocab_growth_curve', 'vocab_oov_coverage',
-    'weighted_sample_topk', 'winnowing_candidates', 'winnowing_fingerprints',
-})
-
-# r08 (all 50 rows hash-green, CORRECTNESS_r08.json): the 8 round-8
-# additions + the stalest r4-era greens that window re-proved.
-_GREEN_R8 = frozenset({
-    'bpe_fertility_by_lang', 'paragraph_dedup', 'funnel_recall_at_k',
-    'stream_ann_topk', 'semantic_decontamination', 'cluster_balanced_sample',
-    'ivf_pq_topk', 'pq_recall_at_k', 'simhash_multiblock_neardup',
-    'char_bigram_diversity', 'minhash_containment', 'ivf_adaptive_topk',
-    'multimodal_metadata_stats', 'multimodal_resize_stub', 'zipf_slope',
-    'user_event_entropy', 'csv_source_parity', 'json_source_parity',
-    'orc_source_parity', 'ohlc_bars', 'time_weighted_avg',
-    'fuzzy_name_matches', 'q4_priority_exists', 'q17_small_quantity_revenue',
-    'q21_waiting_suppliers', 'q22_idle_customers', 'q18_large_volume_orders',
-    'q2_min_cost_supplier', 'q11_important_values', 'q20_dominant_suppliers',
-    'q6_forecast_revenue', 'q8_market_share', 'q9_profit_by_nation',
-    'q10_returned_revenue', 'q12_late_priority_mix',
-    'q13_order_count_distribution', 'q14_promo_revenue', 'q15_top_supplier',
-    'q19_bracket_revenue', 'q5_local_supplier_volume', 'q7_nation_trade_flow',
-    'q16_parts_supplier_count', 'embedding_quantization_error',
-    'label_centroids', 'ann_filtered_topk', 'centroid_distance_matrix',
-    'moving_average_revenue', 'yoy_growth', 'weekly_active_users',
-    'interevent_gap_stats',
-})
-
-# r09 (all 50 rows hash-green, CORRECTNESS_r09.json): the 17 round-9
-# additions + the stalest r4/r5-era greens that window re-proved.
-_GREEN_R9 = frozenset({
-    'activity_histogram', 'anti_join_no_big_orders', 'asof_join_events_orders',
-    'band_range_join', 'bloom_dedup_probe', 'bm25_topk', 'broadcast_dim_join',
-    'classifier_calibration_audit', 'correlation_stats', 'cube_lineitem',
-    'decile_value_share', 'distinct_pairs', 'domain_shift_matrix',
-    'event_transition_matrix', 'exact_percentiles', 'first_touch_attribution',
-    'funnel_analysis', 'gini_value_concentration', 'grouping_sets_events',
-    'isotonic_calibration_map', 'ivf_nprobe_sweep', 'ivf_staleness_audit',
-    'ivfadc_residual_topk', 'json_extraction', 'kmv_distinct_audit',
-    'latest_event_per_user', 'left_outer_join_orders', 'median_abs_deviation',
-    'mmr_diverse_topk', 'ntile_customer_balance', 'paragraph_dedup_rewrite',
-    'pivot_event_values', 'population_drift_audit', 'pricing_summary',
-    'rollup_orders', 'salted_skew_join', 'sampled_centroid_training',
-    'scalar_functions', 'semi_join_big_spenders', 'set_operations',
-    'shard_skew_audit', 'span_corruption_pairs', 'star_join_revenue',
-    'stream_bloom_probe', 'stream_drift_monitor', 'topk_customers',
-    'topk_per_group', 'trimmed_mean_stats', 'window_analytics_extended',
-    'window_functions_orders',
-})
-
-# r10 (all 50 rows hash-green, CORRECTNESS_r10.json): the 12 round-10
-# additions + the stalest greens that window re-proved.
-_GREEN_R10 = frozenset({
-    'ann_bruteforce_topk', 'ann_lsh_topk', 'ann_recall_at_k',
-    'ann_recall_fixed_probes', 'approx_aggregates', 'bpe_apply_segmentation',
-    'bpe_learned_merges', 'bpe_token_counts', 'corpus_snapshot_diff',
-    'curriculum_stage_assignment', 'data_quality_constraints',
-    'dedup_canonical_selection', 'dedup_clusters', 'dedup_savings_report',
-    'doc_fingerprints', 'domain_excess_reweight', 'embedding_anisotropy_audit',
-    'embedding_neardup', 'embedding_neardup_prefiltered', 'exact_dedup',
-    'graded_retrieval_eval', 'hard_negative_mining',
-    'incremental_neardup_ingest', 'ivf_centroid_assign', 'ivf_topk_search',
-    'json_ingest_corrupt_audit', 'lang_id_confusion', 'minhash_band_tuning',
-    'minhash_lsh_neardup', 'mixture_temperature_weights',
-    'multimodal_decode_features', 'multimodal_frame_sample',
-    'multimodal_payload_dedup', 'neardup_prefilter_recall',
-    'ngram_jaccard_neardup', 'packing_efficiency_audit',
-    'parquet_schema_evolution', 'pq_rerank_topk', 'repetition_detection',
-    'semantic_dedup', 'simhash_neardup', 'srp_angle_calibration',
-    'stream_bm25_topk', 'stream_foreachbatch_upsert', 'stream_late_data_policy',
-    'text_stats_quality', 'tfidf_top_terms', 'time_hierarchy_rollup',
-    'token_frequencies', 'udtf_chunk_stats',
-})
-
-# r11 (all 50 rows hash-green, CORRECTNESS_r11.json): the 4 round-11
-# additions + the stalest greens that window re-proved.
-_GREEN_R11 = frozenset({
-    'array_map_functions', 'assembly_pipeline', 'bag_set_operations',
-    'benchmark_decontamination', 'bigram_conditional_probs',
-    'bigram_perplexity', 'boilerplate_detection', 'bucketed_band_index_join',
-    'capped_session_windows', 'conditional_aggregates',
-    'cross_lingual_contamination', 'curation_pipeline', 'datapoint_window_eav',
-    'dataset_hash_split', 'datetime_functions', 'dedup_method_agreement',
-    'doc_length_histogram', 'document_chunking', 'domain_cap_filter',
-    'duplicate_span_histogram', 'full_outer_join_nations', 'hybrid_rrf_fusion',
-    'ingest_index_maintenance', 'inverted_index_topk',
-    'json_ingest_corrupt_drop', 'length_bucket_batching', 'mixture_resample',
-    'opq_permute_audit', 'pandas_udf_grouped_agg', 'pandas_udf_scalar',
-    'pii_redaction', 'pq_rerank_np4', 'regex_functions', 'scd2_merge_customers',
-    'sequence_packing', 'sliding_window_stats', 'source_mixture_weights',
-    'sql_entrypoint', 'statistical_aggregates', 'stratified_exemplar_sample',
-    'stream_capped_sessions', 'stream_static_ingest_dedup', 'string_functions',
-    'substring_dedup_rewrite', 'tumbling_window_stats', 'twostage_rerank_topk',
-    'unpivot_measures', 'vocab_growth_curve', 'windowed_emit_json',
-    'winnowing_fingerprints',
-})
-
-# r12 (all 50 rows hash-green, CORRECTNESS_r12.json): the 8 round-12
-# additions/changes + the stalest greens that window re-proved.
-_GREEN_R12W = frozenset({
-    'bloom_file_skipping_audit', 'bpe_fertility_by_lang',
-    'calendar_gap_fill', 'cdc_changelog_compaction',
-    'char_bigram_diversity', 'corpus_build_pipeline',
-    'countmin_heavy_hitters', 'dow_hour_heatmap', 'dsir_importance_weights',
-    'embedding_norm_stats', 'funnel_recall_at_k', 'gumbel_topk_resample',
-    'index_refresh_pipeline', 'ivf_adaptive_topk', 'minhash_containment',
-    'minhash_jaccard_calibration', 'nation_trade_volume',
-    'neardup_source_matrix', 'paragraph_dedup', 'pq_adc_topk',
-    'pq_quantization_audit', 'priority_share_by_year', 'push_time_parity',
-    'push_time_stream_parity', 'quality_by_source_report',
-    'quality_classifier_scores', 'rfm_segmentation', 'rrf_k_sweep',
-    'selection_method_agreement', 'selection_pipeline', 'session_windows',
-    'shipping_priority_topk', 'simhash_multiblock_neardup',
-    'sq8_quantization_audit', 'stream_classifier_scores',
-    'stream_countmin_topk', 'stream_dedup_counts', 'stream_rrf_fusion',
-    'stream_session_windows', 'stream_sliding_stats', 'stream_stream_join',
-    'stream_topk_types', 'stream_tumbling_stats', 'token_budget_mixture',
-    'user_retention_cohorts', 'value_outliers_zscore', 'vocab_oov_coverage',
-    'weighted_sample_topk', 'winnowing_candidates', 'zorder_pruning_audit',
-})
-
-# r13 (all 50 rows hash-green, CORRECTNESS_r13.json): the 8 round-13
-# additions/changes + the stalest greens that window re-proved.
-_GREEN_R13W = frozenset({
-    'analyze_table_stats', 'ann_filtered_topk', 'bloom_file_skipping_audit',
-    'centroid_distance_matrix', 'cluster_balanced_sample',
-    'compaction_bin_packing_audit', 'csv_source_parity',
-    'embedding_quantization_error', 'fuzzy_name_matches',
-    'interevent_gap_stats', 'ivf_pq_topk', 'ivfadc_residual_topk',
-    'json_source_parity', 'label_centroids', 'moving_average_revenue',
-    'multimodal_metadata_stats', 'multimodal_resize_stub', 'ohlc_bars',
-    'orc_source_parity', 'partition_pruning_audit', 'pq_recall_at_k',
-    'pq_rerank_topk', 'q10_returned_revenue', 'q11_important_values',
-    'q12_late_priority_mix', 'q13_order_count_distribution',
-    'q14_promo_revenue', 'q15_top_supplier', 'q16_parts_supplier_count',
-    'q17_small_quantity_revenue', 'q18_large_volume_orders',
-    'q19_bracket_revenue', 'q20_dominant_suppliers', 'q21_waiting_suppliers',
-    'q22_idle_customers', 'q2_min_cost_supplier', 'q4_priority_exists',
-    'q5_local_supplier_volume', 'q6_forecast_revenue', 'q7_nation_trade_flow',
-    'q8_market_share', 'q9_profit_by_nation', 'semantic_decontamination',
-    'stream_ann_topk', 'time_weighted_avg', 'user_event_entropy',
-    'weekly_active_users', 'yoy_growth', 'zipf_slope', 'zorder_pruning_audit',
-})
-
-# Last-recorded round per green query (later rounds overwrite earlier: e.g.
-# tumbling_window_stats was r1-recorded and re-greened r4, so it sorts r4).
-_GREEN_ROUND: dict[str, int] = {}
-for _round, _names in (
-    (1, _GREEN_R12),
-    (3, _GREEN_R3),
-    (4, _GREEN_R4),
-    (5, _GREEN_R5),
-    (6, _GREEN_R6),
-    (7, _GREEN_R7),
-    (8, _GREEN_R8),
-    (9, _GREEN_R9),
-    (10, _GREEN_R10),
-    (11, _GREEN_R11),
-    (12, _GREEN_R12W),
-    (13, _GREEN_R13W),
-):
-    for _n in _names:
-        _GREEN_ROUND[_n] = _round
-
-_RECORDED_GREEN = frozenset(_GREEN_ROUND)
-
-
-# Queries added mid-round past a full 50-slot recording window: ordered
-# after every other never-recorded query so they cannot displace one from
-# this round's window.
-_DEFER_RECORDING: tuple[str, ...] = ()
-
-# Queries whose BEHAVIOR changed this round (ADVICE r12 item 3): their
-# prior green rows no longer cover the shipped code, so they are ordered
-# with the never-recorded queries to guarantee a fresh recorded row in
-# this round's 50-slot window.
-_CHANGED_THIS_ROUND = frozenset({
-    # r14 (VERDICT r13 item 1): the six global-rank queries migrated to
-    # ranks.parallel_rank's range-exchange pattern — values identical,
-    # plans changed (no no-partition window; zipf's rank is an array
-    # position), so their prior green rows no longer cover shipped code
-    "selection_method_agreement", "length_bucket_batching",
-    "decile_value_share", "gini_value_concentration",
-    "ntile_customer_balance", "zipf_slope",
-})
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2,
-    never-driver-recorded and behaviorally-changed queries first, the
-    post-window additions next (_DEFER_RECORDING), then recorded-green
-    queries stalest-round-first so the driver's 50-row window re-proves
-    the oldest evidence."""
-    regs = registry.queries()
-    order = {n: i for i, n in enumerate(regs)}
-    recorded = _RECORDED_GREEN - _CHANGED_THIS_ROUND
-    front = [
-        n for n in regs if n not in recorded and n not in _DEFER_RECORDING
-    ]
-    green = sorted(
-        (n for n in regs if n in recorded),
-        key=lambda n: (_GREEN_ROUND[n], order[n]),
-    )
-    ordered = front + [n for n in regs if n in _DEFER_RECORDING] + green
-    return {name: _wrap(regs[name]) for name in ordered}
+    """One entry per implemented operator from SURVEY.md §2, in registry
+    (module import) order, each wrapped to ``configure`` the session
+    first."""
+    return {name: _wrap(fn) for name, fn in registry.queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -353,27 +353,6 @@ _SCALE = "1000000000000"  # 1e12
 _QSCALE = "1000000"  # 1e6 per-component grid
 
 
-def quantized_unit_expr(vec: str) -> Column:
-    """ARRAY<numeric> → ARRAY<BIGINT> unit-normalized quantized vector.
-
-    NOTE: inlines the norm aggregate into the per-element lambda —
-    correct but generates enormous codegen (seconds of Janino compile
-    per query). Prefer ``with_quantized_unit`` which stages the norm
-    as a named column.
-    """
-    nsq = (
-        f"aggregate(transform({vec}, x -> "
-        f"CAST(round(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * {_SCALE}, 0) AS BIGINT)), "
-        f"0L, (acc, v) -> acc + v)"
-    )
-    # nullif: an all-zero vector must quantize to NULLs in BOTH engines
-    # (0/0 is NaN in Spark but a CAST error in DuckDB)
-    norm = f"nullif(sqrt(({nsq}) / CAST({_SCALE} AS DOUBLE)), 0)"
-    return F.expr(
-        f"transform({vec}, x -> CAST(round(CAST(x AS DOUBLE) / ({norm}) * {_QSCALE}, 0) AS BIGINT))"
-    )
-
-
 def with_quantized_unit(
     df, vec: str, out: str, barrier_partitions: int = 32, drop_zero_norm: bool = False
 ):
@@ -436,36 +415,3 @@ def qcosine_expr(ua: str, ub: str) -> Column:
 def qcosine_duck(ua: str, ub: str) -> str:
     dot = f"list_sum(list_transform(generate_series(1, len({ua})), i -> ({ua})[i] * ({ub})[i]))"
     return f"(({dot}) / CAST({_SCALE} AS DOUBLE))"
-
-
-def cosine_expr(a: str, b: str) -> Column:
-    """Exact-deterministic cosine between two ARRAY<FLOAT> columns."""
-    dot = (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> "
-        f"CAST(round(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) * {_SCALE}, 0) AS BIGINT)), "
-        f"0L, (acc, v) -> acc + v)"
-    )
-    sq = (
-        "aggregate(transform({v}, x -> "
-        f"CAST(round(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * {_SCALE}, 0) AS BIGINT)), "
-        "0L, (acc, v) -> acc + v)"
-    )
-    na, nb = sq.format(v=a), sq.format(v=b)
-    return F.expr(
-        f"(({dot}) / CAST({_SCALE} AS DOUBLE)) / (sqrt(({na}) / CAST({_SCALE} AS DOUBLE)) * sqrt(({nb}) / CAST({_SCALE} AS DOUBLE)))"
-    )
-
-
-def cosine_duck(a: str, b: str) -> str:
-    dot = (
-        f"list_sum(list_transform(generate_series(1, len({a})), i -> "
-        f"CAST(round(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) * {_SCALE}, 0) AS BIGINT)))"
-    )
-    sq = (
-        "list_sum(list_transform({v}, x -> "
-        f"CAST(round(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * {_SCALE}, 0) AS BIGINT)))"
-    )
-    na, nb = sq.format(v=a), sq.format(v=b)
-    return (
-        f"((({dot}) / CAST({_SCALE} AS DOUBLE)) / (sqrt(({na}) / CAST({_SCALE} AS DOUBLE)) * sqrt(({nb}) / CAST({_SCALE} AS DOUBLE))))"
-    )

@@ -3,7 +3,7 @@ operators reuse across the queries of a session.
 
 Consumer queries share expensive intermediate results (checkpointed
 pair tables, trained classifier weights, collected centroid rows,
-layout directories written under /tmp, resolved parquet scans) through
+layout directories in a scratch session dir, resolved parquet scans) through
 ``artifact(spark, sf_dir, name, build)``. Owner queries — the query
 whose result IS the artifact — call the builder directly and never
 read the store, so a repeated run of an owner always pays its build.

@@ -24,6 +24,7 @@ from eventstreamer_spark.functions import hashing as H
 from eventstreamer_spark.memo import artifact
 from eventstreamer_spark.operators.ranks import finalize_report, parallel_rank
 from eventstreamer_spark.registry import query
+from eventstreamer_spark.scratch import drip_stream
 from eventstreamer_spark.session import shuffle_partitions
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
 
@@ -1226,47 +1227,17 @@ def q_stream_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-built sketch — the production shape: the stream maintains
     the cheap mergeable summary at ingest; exact audits are periodic
     batch jobs."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from eventstreamer_spark.sources.tables import load_table
     from eventstreamer_spark.streaming.pipeline import run_to_memory
 
-    chunk_dir = tempfile.mkdtemp(prefix="es_cmsstream_")
-    try:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        staging = f"{chunk_dir}/_stage"
-        docs.withColumn(
-            "bb", (F.col("doc_id") % 3).cast("int")
-        ).repartition("bb").write.mode("overwrite").partitionBy("bb").parquet(
-            staging
-        )
-        base = 1_600_000_000
-        for i in range(3):
-            parts = glob.glob(f"{staging}/bb={i}/part-*.parquet")
-            assert len(parts) == 1, parts
-            dest = f"{chunk_dir}/chunk-{i:03d}.parquet"
-            shutil.move(parts[0], dest)
-            os.utime(dest, (base + i * 60, base + i * 60))
-        shutil.rmtree(staging, ignore_errors=True)
-
-        schema = spark.read.parquet(f"{chunk_dir}/chunk-000.parquet").schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunk_dir)
-        )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    with drip_stream(spark, docs, F.col("doc_id") % 3, 3) as stream:
         occurrences = stream.select(
             F.explode(F.expr(_TOKS_S)).alias("tok")
         ).withColumn("cnt", F.lit(1).cast("long"))
         cells_stream = _cms_cells(occurrences)
         run_to_memory(cells_stream, "cms_stream_sink", mode="complete")
-        cells = spark.table("cms_stream_sink")
-        return _cms_report(_cms_tokcnt(spark, sf_dir), cells)
-    finally:
-        shutil.rmtree(chunk_dir, ignore_errors=True)
+    cells = spark.table("cms_stream_sink")
+    return _cms_report(_cms_tokcnt(spark, sf_dir), cells)
 
 
 # ---------------------------------------------------------------------------

@@ -27,12 +27,15 @@ reproduce every signature bit-for-bit.
 
 from __future__ import annotations
 
+import atexit
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
 from eventstreamer_spark.memo import artifact
 from eventstreamer_spark.registry import query
+from eventstreamer_spark.scratch import session_dir, tempdir
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
 
 # ---------------------------------------------------------------------------
@@ -1428,22 +1431,6 @@ def ingest_decisions(cand: DataFrame) -> DataFrame:
 _IDX_MAINT_BATCHES = 3
 _IDX_THRESHOLD = 0.5
 
-# Decision-log dirs outlive the query (the returned DataFrame scans
-# them); reclaimed at process exit like pipeline._UPSERT_DIRS.
-_IDX_DIRS: list[str] = []
-
-import atexit as _atexit_dedup
-
-
-@_atexit_dedup.register
-def _cleanup_index_dirs() -> None:
-    import shutil
-
-    for path in _IDX_DIRS:
-        shutil.rmtree(path, ignore_errors=True)
-    _IDX_DIRS.clear()
-
-
 def _est_sql_duck(sig_b: str = "sig_b", sig_c: str = "sig_c") -> str:
     return (
         f"round(len(list_filter(generate_series(1, {H.MINHASH_K}), "
@@ -1615,9 +1602,6 @@ def q_ingest_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT r6 item 3.""".format(
         n=_IDX_MAINT_BATCHES, thr=_IDX_THRESHOLD, ce=_IDX_COMPACT_EVERY
     )
-    import shutil
-    import tempfile
-
     est = F.round(
         F.expr(
             f"size(filter(sequence(1, {H.MINHASH_K}), "
@@ -1637,8 +1621,7 @@ def q_ingest_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("t", (F.col("doc_id") % _IDX_MAINT_BATCHES).cast("int"))
         .localCheckpoint(eager=True)
     )
-    root = tempfile.mkdtemp(prefix="es_bandindex_")
-    try:
+    with tempdir("es_bandindex_") as root:
         empty = spark.createDataFrame(
             [], "doc_id long, sig array<string>, band_key string"
         )
@@ -1747,8 +1730,6 @@ def q_ingest_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         for d_ in dec_logs[1:]:
             out = out.unionByName(d_)
         return out
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1767,12 +1748,13 @@ _BUCKETED_INDEX_BUCKETS = 16
 _BUCKETED_INDEX_TABLES: set[str] = set()
 
 
-@_atexit_dedup.register
+@atexit.register
 def _cleanup_bucketed_tables() -> None:
-    # table data lives under /tmp (external tables); dirs are reclaimed
-    # with _IDX_DIRS. DROP the catalog entries too (best-effort): with a
-    # persistent metastore (a dev derby metastore_db/) a later session
-    # would otherwise resolve the table to an already-deleted path.
+    # table data lives in session dirs (external tables), reclaimed by
+    # scratch's exit hook. DROP the catalog entries too (best-effort):
+    # with a persistent metastore (a dev derby metastore_db/) a later
+    # session would otherwise resolve the table to an already-deleted
+    # path.
     try:
         from pyspark.sql import SparkSession
 
@@ -1813,7 +1795,7 @@ def q_bucketed_band_index_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     `incremental_neardup_ingest` — shared `ingest_decisions`, shared
     oracle — so the three strategies can never diverge semantically."""
     import re as _re
-    import tempfile
+    import uuid
 
     sig = _minhash_docs(spark, sf_dir)
     bands = sig.select(
@@ -1821,8 +1803,9 @@ def q_bucketed_band_index_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("band_key").isNotNull())
     corpus = bands.filter(F.expr(_INGEST_CORPUS_PRED))
     table = "band_index_b_" + _re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_")
-    path = tempfile.mkdtemp(prefix="es_bucketed_idx_")
-    _IDX_DIRS.append(path)
+    # a fresh dir per invocation: a DataFrame returned by an earlier
+    # one still scans the previous table's files
+    path = session_dir(spark, f"bucketed_idx/{uuid.uuid4().hex}")
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     (
         corpus.write.bucketBy(_BUCKETED_INDEX_BUCKETS, "band_key")

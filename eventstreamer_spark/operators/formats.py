@@ -18,37 +18,36 @@ timestamp_micros on read.
 
 from __future__ import annotations
 
-import atexit
+import hashlib
 import os
-import shutil
-import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.registry import query
+from eventstreamer_spark.scratch import session_dir
 from eventstreamer_spark.sources.tables import load_events
 
-# One round-trip per (application, sf_dir, format): the write is part
-# of the proven path but needn't repeat per bench pass. Dirs are
-# removed at interpreter exit so repeated driver runs don't accumulate
-# copies of events under /tmp.
-_RT_CACHE: dict[tuple[str, str, str], str] = {}
 
-
-@atexit.register
-def _cleanup_roundtrip_dirs() -> None:
-    for path in _RT_CACHE.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _RT_CACHE.clear()
+def _session_copy(
+    spark: SparkSession, sf_dir: str, kind: str, write: Callable[[str], None]
+) -> str:
+    """This session's dir holding the ``kind`` copy of ``sf_dir``'s
+    events, filled by ``write(path)`` once per (application, sf_dir,
+    kind): the write is part of the proven path but needn't repeat per
+    bench pass. Readers skip the ``_done`` marker (a ``_`` name)."""
+    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    path = session_dir(spark, f"{kind}_rt/{digest}")
+    if not os.path.exists(f"{path}/_done"):
+        write(path)
+        open(f"{path}/_done", "w").close()
+    return path
 
 
 def _roundtrip_dir(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, fmt)
-    path = _RT_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        path = tempfile.mkdtemp(prefix=f"es_{fmt}_rt_")
+    def write(path: str) -> None:
         ev = load_events(spark, sf_dir).select(
             "event_id",
             F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
@@ -57,8 +56,8 @@ def _roundtrip_dir(spark: SparkSession, sf_dir: str, fmt: str) -> str:
             "value",
         )
         ev.write.mode("overwrite").format(fmt).save(path)
-        _RT_CACHE[key] = path
-    return path
+
+    return _session_copy(spark, sf_dir, fmt, write)
 
 
 _FORMAT_ORACLE = f"""
@@ -157,10 +156,7 @@ def q_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     and their sum match a SQL UNION replay). The write happens once
     per session via the round-trip cache; the read path is the proven
     surface."""
-    key = (spark.sparkContext.applicationId, sf_dir, "evolved")
-    path = _RT_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        path = tempfile.mkdtemp(prefix="es_evolved_rt_")
+    def write(path: str) -> None:
         ev = load_events(spark, sf_dir).select(
             "event_id", "event_type", "value", "user_id"
         )
@@ -173,7 +169,8 @@ def q_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
             F.col("user_id").cast("long").alias("extra"),
         ).write.mode("overwrite").parquet(f"{path}/gen=new")
-        _RT_CACHE[key] = path
+
+    path = _session_copy(spark, sf_dir, "evolved", write)
     df = spark.read.option("mergeSchema", "true").parquet(
         f"{path}/gen=old", f"{path}/gen=new"
     )

@@ -21,6 +21,7 @@ from eventstreamer_spark.functions import hashing as H
 from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.memo import artifact
 from eventstreamer_spark.registry import query
+from eventstreamer_spark.scratch import drip_stream
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
 
 _TOKS_S = H.TOKENS_SPARK.format(col="text")
@@ -1180,79 +1181,6 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAM_BM25_CHUNKS = 3
 
 
-def _stage_residue_chunks(spark: SparkSession, df: DataFrame, n_chunks: int, prefix: str):
-    """Stage a request table (int column ``bb`` in [0, n_chunks)) as
-    ONE parquet chunk file per non-empty residue class, mtimes spaced
-    so ``maxFilesPerTrigger=1`` replays residues in order — the shared
-    request-stream scaffolding of the foreachBatch serving gates.
-
-    EXACTLY one chunk file per non-empty residue (ADVICE r11/r12):
-    per-batch emission requires every request's rows in ONE
-    micro-batch. repartition('bb') makes one part per residue today,
-    but a config-sensitive writer (spark.sql.files.maxRecordsPerFile,
-    a future AQE rebalance) can split a residue across parts — in that
-    case the residue is MERGED back to one file via a coalesce(1)
-    rewrite instead of hard-failing (the old AssertionError), keeping
-    the one-batch-per-request invariant under any writer config.
-    Empty residues skip.
-
-    Returns (chunk_dir, stream); the caller owns chunk_dir cleanup.
-    """
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    chunk_dir = tempfile.mkdtemp(prefix=prefix)
-    try:
-        staging = f"{chunk_dir}/_stage"
-        df.repartition("bb").write.mode("overwrite").partitionBy("bb").parquet(
-            staging
-        )
-        base = 1_600_000_000
-        chunk_files: list[str] = []
-        for i in range(n_chunks):
-            parts = sorted(glob.glob(f"{staging}/bb={i}/part-*.parquet"))
-            if len(parts) > 1:
-                # a split residue would serve requests from partial row
-                # sets — rewrite it to one file (rare: only under
-                # maxRecordsPerFile-style writer configs)
-                merged = f"{staging}/_merge_{i}"
-                # per-write option overrides the session conf that
-                # caused the split in the first place (0 = unlimited)
-                spark.read.parquet(f"{staging}/bb={i}").coalesce(1).write.mode(
-                    "overwrite"
-                ).option("maxRecordsPerFile", 0).parquet(merged)
-                parts = sorted(glob.glob(f"{merged}/part-*.parquet"))
-                if len(parts) != 1:
-                    raise AssertionError(
-                        f"{prefix}: residue bb={i} still {len(parts)} parts "
-                        "after coalesce(1) rewrite"
-                    )
-            for part in parts:
-                dest = f"{chunk_dir}/chunk-{i:03d}.parquet"
-                shutil.move(part, dest)
-                chunk_files.append(dest)
-        shutil.rmtree(staging, ignore_errors=True)
-        if not chunk_files:
-            raise ValueError(f"{prefix}: no request rows at this scale factor")
-        for k, dest in enumerate(chunk_files):
-            os.utime(dest, (base + k * 60, base + k * 60))
-        schema = spark.read.parquet(chunk_files[0]).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunk_dir)
-        )
-    except BaseException:
-        # ownership transfers to the caller only on success — a failure
-        # here (the one-file assertion, a write error) must not leak a
-        # staged copy of the request table under /tmp
-        shutil.rmtree(chunk_dir, ignore_errors=True)
-        raise
-    return chunk_dir, stream
-
-
 def bm25_serving_index_memo(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -1303,8 +1231,6 @@ def q_stream_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches covers the whole query subset and the index is
     static, so serving and batch can never drift (the same
     stream==batch discipline as stream_ann_topk)."""
-    import shutil
-
     from eventstreamer_spark.streaming.pipeline import run_foreach_batch
 
     # the served index: postings with doc length attached, built once
@@ -1314,13 +1240,9 @@ def q_stream_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pays its own bm25_parts build every invocation)
     post, qt = bm25_serving_index_memo(spark, sf_dir)
 
-    chunk_dir, stream = _stage_residue_chunks(
-        spark,
-        qt.withColumn("bb", (F.col("query_id") % _STREAM_BM25_CHUNKS).cast("int")),
-        _STREAM_BM25_CHUNKS,
-        "es_bm25stream_",
-    )
-    try:
+    with drip_stream(
+        spark, qt, F.col("query_id") % _STREAM_BM25_CHUNKS, _STREAM_BM25_CHUNKS
+    ) as stream:
         served: list = []
         wr = Window.partitionBy("query_id").orderBy(
             F.col("score_e6").desc(), F.col("doc_id")
@@ -1357,8 +1279,6 @@ def q_stream_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("score_e6") / F.lit(1000000.0)).alias("bm25"),
             "rank",
         )
-    finally:
-        shutil.rmtree(chunk_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1743,8 +1663,6 @@ def q_stream_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches covers the whole query subset and both lists are
     static, so serving and batch can never drift (the stream==batch
     discipline; pinned row-for-row in test_stream_rrf_matches_batch)."""
-    import shutil
-
     from eventstreamer_spark.streaming.pipeline import run_foreach_batch
 
     # static retriever outputs: both verified lists materialize once,
@@ -1760,15 +1678,12 @@ def q_stream_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    chunk_dir, stream = _stage_residue_chunks(
+    with drip_stream(
         spark,
-        lists.select("query_id")
-        .distinct()
-        .withColumn("bb", (F.col("query_id") % _STREAM_RRF_CHUNKS).cast("int")),
+        lists.select("query_id").distinct(),
+        F.col("query_id") % _STREAM_RRF_CHUNKS,
         _STREAM_RRF_CHUNKS,
-        "es_rrfstream_",
-    )
-    try:
+    ) as stream:
         served: list = []
         wr = Window.partitionBy("query_id").orderBy(
             F.col("rrf_e6").desc(), F.col("doc_id")
@@ -1801,8 +1716,6 @@ def q_stream_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_lists",
             "rank",
         )
-    finally:
-        shutil.rmtree(chunk_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -44,6 +44,7 @@ from eventstreamer_spark.operators.ranks import (
     range_staged,
 )
 from eventstreamer_spark.registry import query
+from eventstreamer_spark.scratch import session_dir
 from eventstreamer_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -148,9 +149,24 @@ def layout_tables(spark: SparkSession, sf_dir: str) -> dict:
     )
 
 
+def _sf_digest(sf_dir: str) -> str:
+    return hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+
+
+def compaction_dir(spark: SparkSession, sf_dir: str) -> str:
+    """This session's dir of compaction_bin_packing_audit's two tables
+    (``fragmented``, ``compacted``)."""
+    return session_dir(spark, f"compact/{_sf_digest(sf_dir)}")
+
+
+def partition_dir(spark: SparkSession, sf_dir: str) -> str:
+    """This session's month-partitioned orders table of
+    partition_pruning_audit."""
+    return session_dir(spark, f"partition/{_sf_digest(sf_dir)}")
+
+
 def _write_layouts(spark: SparkSession, sf_dir: str) -> dict:
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    root = f"/tmp/es_layout/{spark.sparkContext.applicationId}/{digest}"
+    root = session_dir(spark, f"layout/{_sf_digest(sf_dir)}")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_linenumber"
     )
@@ -371,7 +387,7 @@ def q_zorder_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # Eager 2-row checkpoint (ADVICE r13): the lazy plan reads the
-    # /tmp/es_layout files of the layout_tables artifact, which the
+    # session-dir files of the layout_tables artifact, which the
     # store rmtree's on eviction — a handle held across that eviction
     # would read deleted paths. Same lifecycle as the
     # compaction/partition audits.
@@ -673,8 +689,7 @@ def q_compaction_bin_packing_audit(spark: SparkSession, sf_dir: str) -> DataFram
     on what is actually on disk. Exactness: all counts int64; the
     offset packing rule is integer arithmetic identical in both
     engines; avg floor-1e6."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    root = f"/tmp/es_compact/{spark.sparkContext.applicationId}/{digest}"
+    root = compaction_dir(spark, sf_dir)
     frag_path, bin_path = f"{root}/fragmented", f"{root}/compacted"
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -863,8 +878,7 @@ def q_partition_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats still open every file. Exactness: month keys are integer
     arithmetic on year/month; range constants are precomputed
     integers; counts int64; shares floor-1e6."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = f"/tmp/es_partition/{spark.sparkContext.applicationId}/{digest}/orders"
+    path = partition_dir(spark, sf_dir)
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1104,10 +1118,12 @@ def _write_cbo_tables(spark: SparkSession, sf_dir: str) -> dict:
     key = (spark.sparkContext.applicationId, sf_dir)
     tag = hashlib.md5(repr(key).encode()).hexdigest()[:8]
     db = f"es_cbo_{tag}"
-    root = f"/tmp/es_cbo/{key[0]}/{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = session_dir(spark, f"cbo/{tag}")
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    spark.sql(f"CREATE DATABASE {db}")
+    shutil.rmtree(root, ignore_errors=True)
+    # LOCATION keeps the database dir out of the working directory's
+    # spark-warehouse/
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{root}'")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_orderdate").cast("date").alias("o_orderdate")
     )

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from eventstreamer_spark.functions import hashing as H
 from eventstreamer_spark.memo import artifact
 from eventstreamer_spark.registry import query
+from eventstreamer_spark.scratch import drip_stream
 from eventstreamer_spark.session import shuffle_partitions
 from eventstreamer_spark.sources.tables import load_table_parallel
 
@@ -432,11 +433,6 @@ def q_stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights, same scores — so the offline and online paths can never
     drift. Micro-batch boundaries cannot change results (stateless
     per-row map)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from eventstreamer_spark.sources.tables import load_table
     from eventstreamer_spark.streaming.pipeline import run_to_memory
 
@@ -459,28 +455,10 @@ def q_stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"d -> size(filter({toks}, x -> x = d)))))"
     )
 
-    chunk_dir = tempfile.mkdtemp(prefix="es_qcstream_")
-    try:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        staging = f"{chunk_dir}/_stage"
-        docs.withColumn(
-            "b", (F.col("doc_id") % _STREAM_QC_CHUNKS).cast("int")
-        ).repartition("b").write.mode("overwrite").partitionBy("b").parquet(staging)
-        base = 1_600_000_000
-        for i in range(_STREAM_QC_CHUNKS):
-            parts = glob.glob(f"{staging}/b={i}/part-*.parquet")
-            assert len(parts) == 1, parts
-            dest = f"{chunk_dir}/chunk-{i:03d}.parquet"
-            shutil.move(parts[0], dest)
-            os.utime(dest, (base + i * 60, base + i * 60))
-        shutil.rmtree(staging, ignore_errors=True)
-
-        schema = spark.read.parquet(f"{chunk_dir}/chunk-000.parquet").schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunk_dir)
-        )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    with drip_stream(
+        spark, docs, F.col("doc_id") % _STREAM_QC_CHUNKS, _STREAM_QC_CHUNKS
+    ) as stream:
         scored = (
             stream.withColumn("st", F.expr(stats_expr))
             .withColumn("score_e6", F.expr(score_expr))
@@ -500,9 +478,7 @@ def q_stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         run_to_memory(scored, "qc_stream_sink", mode="append")
-        return spark.table("qc_stream_sink")
-    finally:
-        shutil.rmtree(chunk_dir, ignore_errors=True)
+    return spark.table("qc_stream_sink")
 
 
 # ---------------------------------------------------------------------------

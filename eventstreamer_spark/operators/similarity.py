@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from eventstreamer_spark.functions import hashing as H
 from eventstreamer_spark.memo import artifact
 from eventstreamer_spark.registry import query
+from eventstreamer_spark.scratch import drip_stream
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
 
 TOP_K = 10
@@ -1908,11 +1909,6 @@ def q_stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the three micro-batches covers the whole query subset and the
     index is static, so serving and batch can never drift (the same
     stream==batch discipline as stream_classifier_scores)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from eventstreamer_spark.streaming.pipeline import run_to_memory
 
     prepared = (
@@ -1927,44 +1923,9 @@ def q_stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries_df = prepared.filter(F.expr(QUERY_FILTER))
 
-    chunk_dir = tempfile.mkdtemp(prefix="es_annstream_")
-    try:
-        staging = f"{chunk_dir}/_stage"
-        queries_df.withColumn(
-            "bb", (F.col("vec_id") % _STREAM_ANN_CHUNKS).cast("int")
-        ).repartition("bb").write.mode("overwrite").partitionBy("bb").parquet(
-            staging
-        )
-        # Tolerate 0..n part files per residue class (ADVICE r8: an
-        # empty vec_id%K class at a small scale factor, or a writer
-        # emitting several parts, must degrade gracefully, not crash):
-        # every part becomes its own chunk file; an empty residue
-        # simply contributes no chunk. mtimes stay strictly increasing
-        # in (residue, part) order so the file-source replay order is
-        # deterministic.
-        base = 1_600_000_000
-        chunk_files: list[str] = []
-        for i in range(_STREAM_ANN_CHUNKS):
-            for j, part in enumerate(
-                sorted(glob.glob(f"{staging}/bb={i}/part-*.parquet"))
-            ):
-                dest = f"{chunk_dir}/chunk-{i:03d}-{j:02d}.parquet"
-                shutil.move(part, dest)
-                chunk_files.append(dest)
-        shutil.rmtree(staging, ignore_errors=True)
-        if not chunk_files:
-            raise ValueError(
-                "stream_ann_topk: no query vectors at this scale factor"
-            )
-        for k, dest in enumerate(chunk_files):
-            os.utime(dest, (base + k * 60, base + k * 60))
-
-        schema = spark.read.parquet(chunk_files[0]).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunk_dir)
-        )
+    with drip_stream(
+        spark, queries_df, F.col("vec_id") % _STREAM_ANN_CHUNKS, _STREAM_ANN_CHUNKS
+    ) as stream:
         probes = stream.select(
             F.col("vec_id").alias("query_id"),
             F.col("uq").alias("q_uq"),
@@ -1985,14 +1946,12 @@ def q_stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.collect_list("c").alias("cands")
         )
         run_to_memory(gathered, "ann_stream_sink", mode="complete")
-        t = spark.table("ann_stream_sink")
-        exploded = t.select("query_id", F.explode("cands").alias("c")).select(
-            "query_id", F.col("c.neighbor_id").alias("neighbor_id"),
-            F.col("c.cosine").alias("cosine"),
-        )
-        return _ranked_topk(exploded)
-    finally:
-        shutil.rmtree(chunk_dir, ignore_errors=True)
+    t = spark.table("ann_stream_sink")
+    exploded = t.select("query_id", F.explode("cands").alias("c")).select(
+        "query_id", F.col("c.neighbor_id").alias("neighbor_id"),
+        F.col("c.cosine").alias("cosine"),
+    )
+    return _ranked_topk(exploded)
 
 
 # ---------------------------------------------------------------------------

@@ -20,6 +20,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
+# The dir holding the eventstreamer_spark package: Python workers import
+# operator modules (Arrow UDF bodies pickle by reference), so it must be
+# on their path whatever the driver's working directory is.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = (
     "region",
     "nation",
@@ -73,8 +78,16 @@ def configure(spark: SparkSession) -> SparkSession:
 
     The verification driver hands us *its* SparkSession; event-time
     string formatting and Arrow transfer must behave identically there,
-    so every config that can be set post-startup is (re)applied here.
+    so every config that can be set post-startup is (re)applied here,
+    and the package's parent dir is appended to the Python workers'
+    ``PYTHONPATH`` (kept after any entry already there).
     """
+    env = spark.sparkContext.environment
+    worker_path = env.get("PYTHONPATH")
+    if not worker_path:
+        env["PYTHONPATH"] = _PACKAGE_PARENT
+    elif _PACKAGE_PARENT not in worker_path.split(os.pathsep):
+        env["PYTHONPATH"] = worker_path + os.pathsep + _PACKAGE_PARENT
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -88,8 +101,6 @@ def configure(spark: SparkSession) -> SparkSession:
     # on a fixed heap raises it instead of raising the heap (the same
     # sizing any real deployment does; the x100 replica runs at the
     # DEFAULT heap with 256 partitions where 8 OOMs).
-    import os
-
     override = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     spark.conf.set(
         "spark.sql.shuffle.partitions",

@@ -31,8 +31,8 @@ from eventstreamer_spark.session import TABLES
 # STALENESS CONTRACT (VERDICT r14 item 4): the stored handle pins the
 # FileIndex, so an operator that WRITES to a canonical table path
 # in-session would silently keep reading the stale file list. No
-# current operator writes canonical paths (side products live under
-# /tmp/es_* keyed by applicationId) — any future writer MUST call
+# current operator writes canonical paths (side products live in
+# scratch.session_dir, keyed by applicationId) — any future writer MUST call
 # ``invalidate_scan(sf_dir, name)`` after the write, and the pin test
 # test_scan_memo_invalidates_on_write holds it to that.
 def invalidate_scan(sf_dir: str, name: str | None = None) -> None:

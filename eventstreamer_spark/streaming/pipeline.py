@@ -19,14 +19,13 @@ wrong (SURVEY.md §2.1 "streaming extras"):
   Stopwatch/LogMetric (O17, DispatcherFunction.cs:27,37,47-49).
 
 For deterministic tests the stream source is the same parquet data
-split into chunk files consumed with ``maxFilesPerTrigger=1`` —
+dripped one chunk file per micro-batch (``scratch.drip_stream``) —
 real deployments swap in the Kafka/EventHubs source string; nothing
 else changes.
 """
 
 from __future__ import annotations
 
-import atexit as _atexit
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +37,7 @@ from eventstreamer_spark.functions.casting import fmt_ts, round6
 from eventstreamer_spark.operators.windowed import tumbling_stats
 from eventstreamer_spark.memo import artifact
 from eventstreamer_spark.registry import query
+from eventstreamer_spark.scratch import drip_stream, session_dir, tempdir
 from eventstreamer_spark.sources.tables import load_events
 
 EVENTS_DDL = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -721,14 +721,11 @@ def late_policy_stream(stream: DataFrame) -> DataFrame:
     )
 
 
-def write_late_chunks(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """Write the four deterministic micro-batch chunk files (mtime
-    staggered so the file source replays them in order). One
-    partitioned write job produces all four files (a per-chunk
-    coalesce(1) loop costs four scans of the events table)."""
-    import glob
-    import shutil
-
+def run_late_policy(spark: SparkSession, sf_dir: str, sink: str) -> list[dict]:
+    """Drip the events table as four deterministic micro-batches (0:
+    first tick, 1: tail, 2: stragglers, 3: the rest) through the
+    append-mode watermark aggregate, return the progress metrics.
+    The result lands in the ``sink`` memory table."""
     straggler = (F.col("event_id") % LATE_SPAN_S < LATE_TICK_S) & (
         F.col("event_id") % 7 == LATE_RESIDUE
     )
@@ -740,45 +737,12 @@ def write_late_chunks(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
         .otherwise(F.lit(3))
     )
     events = load_events(spark, sf_dir).select(
-        "event_id",
-        "user_id",
-        "value",
-        F.expr(_TS_C_SPARK).alias("ts"),
-        batch.alias("b"),
+        "event_id", "user_id", "value", F.expr(_TS_C_SPARK).alias("ts")
     )
-    staging = f"{out_dir}/_stage"
-    events.repartition("b").write.mode("overwrite").partitionBy("b").parquet(staging)
-    base = 1_600_000_000
-    for i in range(4):
-        parts = glob.glob(f"{staging}/b={i}/part-*.parquet")
-        assert len(parts) == 1, parts
-        dest = f"{out_dir}/chunk-{i:03d}.parquet"
-        shutil.move(parts[0], dest)
-        os.utime(dest, (base + i * 60, base + i * 60))
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-def run_late_policy(spark: SparkSession, sf_dir: str, sink: str) -> list[dict]:
-    """Chunk the events table, replay it as four micro-batches through
-    the append-mode watermark aggregate, return the progress metrics.
-    The result lands in the ``sink`` memory table."""
-    import shutil
-    import tempfile
-
-    chunk_dir = tempfile.mkdtemp(prefix="es_late_chunks_")
-    try:
-        write_late_chunks(spark, sf_dir, chunk_dir)
-        schema = spark.read.parquet(f"{chunk_dir}/chunk-000.parquet").schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunk_dir)
-        )
+    with drip_stream(spark, events, batch, 4) as stream:
         return run_to_memory(
             late_policy_stream(stream), sink, mode="append", nodata_batches=True
         )
-    finally:
-        shutil.rmtree(chunk_dir, ignore_errors=True)
 
 
 @query("stream_late_data_policy", oracle=_STREAM_LATE_ORACLE)
@@ -889,26 +853,6 @@ def upsert_version_step(
                 shutil.rmtree(f"{target_root}/{stale}", ignore_errors=True)
 
 
-# Finished upsert targets: the final per-user table stays ON DISK and
-# is returned as a plain parquet scan — no driver materialization.
-# Deliberately NOT memoized: every invocation re-runs the stream
-# (bench/scale timings must measure the merge, not a cache hit).
-# Deleting a dir early would break a still-held DataFrame from an
-# earlier invocation, so every created dir is tracked in _UPSERT_DIRS
-# and reclaimed only at process exit — disk growth is bounded by the
-# session, like formats._RT_CACHE.
-_UPSERT_DIRS: list[str] = []
-
-
-@_atexit.register
-def _cleanup_upsert_dirs() -> None:
-    import shutil
-
-    for path in _UPSERT_DIRS:
-        shutil.rmtree(path, ignore_errors=True)
-    _UPSERT_DIRS.clear()
-
-
 @query("stream_foreachbatch_upsert", oracle=_UPSERT_ORACLE)
 def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exactly-once SINK pattern executed for real: a three-batch
@@ -926,65 +870,39 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped, duplicated, or mis-ordered rows across the three deltas,
     the hash check fails. Merge work per batch is keys-only (user_id
     grain), never the event history — the state a 100 TB deployment
-    would keep in a keyed store."""
-    import glob
-    import shutil
-    import tempfile
+    would keep in a keyed store.
+
+    The final per-user table stays on disk in a session dir and is
+    returned as a plain parquet scan, with no driver materialization.
+    It is deliberately not an artifact: every invocation re-runs the
+    stream (bench/scale timings measure the merge, not a cache hit),
+    and each gets its own dir, since overwriting one would break a
+    DataFrame still held from an earlier invocation."""
+    import uuid
 
     from eventstreamer_spark.session import configure
 
     configure(spark)
-    chunk_dir = tempfile.mkdtemp(prefix="es_upsert_chunks_")
-    target_root = tempfile.mkdtemp(prefix="es_upsert_target_")
-    try:
-        events = load_events(spark, sf_dir).select(
-            "event_id", "ts", "user_id", "event_type", "value"
+    events = load_events(spark, sf_dir).select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    with tempdir("es_upsert_target_") as target_root, drip_stream(
+        spark, events, F.col("event_id") % 3, 3
+    ) as stream:
+        run_foreach_batch(
+            stream,
+            lambda batch_df, batch_id: upsert_version_step(
+                spark, target_root, batch_df, batch_id
+            ),
         )
-        staging = f"{chunk_dir}/_stage"
-        events.withColumn("b", (F.col("event_id") % 3).cast("int")).repartition(
-            "b"
-        ).write.mode("overwrite").partitionBy("b").parquet(staging)
-        base = 1_600_000_000
-        for i in range(3):
-            parts = glob.glob(f"{staging}/b={i}/part-*.parquet")
-            assert len(parts) == 1, parts
-            dest = f"{chunk_dir}/chunk-{i:03d}.parquet"
-            shutil.move(parts[0], dest)
-            os.utime(dest, (base + i * 60, base + i * 60))
-        shutil.rmtree(staging, ignore_errors=True)
-
-        def upsert(batch_df: DataFrame, batch_id: int) -> None:
-            upsert_version_step(spark, target_root, batch_df, batch_id)
-
-        schema = spark.read.parquet(f"{chunk_dir}/chunk-000.parquet").schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunk_dir)
-        )
-        ckpt = tempfile.mkdtemp(prefix="es_upsert_ckpt_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None)
-        q = (
-            stream.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
         last = max(
             int(v[1:]) for v in os.listdir(target_root) if v.startswith("v")
         )
-        final_dir = tempfile.mkdtemp(prefix="es_upsert_final_")
-        _UPSERT_DIRS.append(final_dir)
+        final_dir = session_dir(spark, f"upsert/{uuid.uuid4().hex}")
         spark.read.parquet(f"{target_root}/v{last}").drop("k").write.mode(
             "overwrite"
         ).parquet(final_dir)
-        return spark.read.parquet(final_dir)
-    finally:
-        shutil.rmtree(chunk_dir, ignore_errors=True)
-        shutil.rmtree(target_root, ignore_errors=True)
+    return spark.read.parquet(final_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1020,10 +938,6 @@ def q_stream_static_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpointed index. At 100 TB the static side is a
     band-key-bucketed index table, making that per-batch join
     co-located; the stream side stays one crawl batch wide."""
-    import glob
-    import shutil
-    import tempfile
-
     from eventstreamer_spark.functions import hashing as H
     from eventstreamer_spark.operators.dedup import (
         _INGEST_BATCH_PRED,
@@ -1033,6 +947,7 @@ def q_stream_static_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_minhash_sig,
     )
     from eventstreamer_spark.session import configure
+    from eventstreamer_spark.sources.tables import load_table
 
     configure(spark)
     bands_all = _minhash_docs(spark, sf_dir).select(
@@ -1050,32 +965,10 @@ def q_stream_static_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # the static, pre-built index side
     )
 
-    chunk_dir = tempfile.mkdtemp(prefix="es_ssingest_")
-    try:
-        from eventstreamer_spark.sources.tables import load_table
-
-        batch_docs = load_table(spark, sf_dir, "documents").filter(
-            F.expr(_INGEST_BATCH_PRED)
-        )
-        staging = f"{chunk_dir}/_stage"
-        batch_docs.withColumn("b", (F.col("doc_id") % 3).cast("int")).repartition(
-            "b"
-        ).write.mode("overwrite").partitionBy("b").parquet(staging)
-        base = 1_600_000_000
-        for i in range(3):
-            parts = glob.glob(f"{staging}/b={i}/part-*.parquet")
-            assert len(parts) == 1, parts
-            dest = f"{chunk_dir}/chunk-{i:03d}.parquet"
-            shutil.move(parts[0], dest)
-            os.utime(dest, (base + i * 60, base + i * 60))
-        shutil.rmtree(staging, ignore_errors=True)
-
-        schema = spark.read.parquet(f"{chunk_dir}/chunk-000.parquet").schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunk_dir)
-        )
+    batch_docs = load_table(spark, sf_dir, "documents").filter(
+        F.expr(_INGEST_BATCH_PRED)
+    )
+    with drip_stream(spark, batch_docs, F.col("doc_id") % 3, 3) as stream:
         # the batch twin's own signature chain on the stream side
         stream_bands = (
             with_minhash_sig(stream.select("doc_id", "text"))
@@ -1098,30 +991,28 @@ def q_stream_static_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         decided = ingest_decisions(cand)
         run_to_memory(decided, "ss_ingest_sink", mode="update")
-        # one emission per doc (a doc's rows never split across chunks);
-        # if that invariant ever broke, keep the most-complete emission
-        # under a fully deterministic order (no arbitrary ties)
-        from pyspark.sql import Window as W
+    # one emission per doc (a doc's rows never split across chunks);
+    # if that invariant ever broke, keep the most-complete emission
+    # under a fully deterministic order (no arbitrary ties)
+    from pyspark.sql import Window as W
 
-        t = spark.table("ss_ingest_sink")
-        return (
-            t.withColumn(
-                "rn",
-                F.row_number().over(
-                    W.partitionBy("new_doc").orderBy(
-                        F.col("n_matches").desc(),
-                        F.col("best_jaccard").desc(),
-                        F.coalesce(
-                            F.col("first_match"), F.lit(2**62).cast("long")
-                        ).asc(),
-                    )
-                ),
-            )
-            .filter(F.col("rn") == 1)
-            .drop("rn")
+    t = spark.table("ss_ingest_sink")
+    return (
+        t.withColumn(
+            "rn",
+            F.row_number().over(
+                W.partitionBy("new_doc").orderBy(
+                    F.col("n_matches").desc(),
+                    F.col("best_jaccard").desc(),
+                    F.coalesce(
+                        F.col("first_match"), F.lit(2**62).cast("long")
+                    ).asc(),
+                )
+            ),
         )
-    finally:
-        shutil.rmtree(chunk_dir, ignore_errors=True)
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1155,10 +1046,6 @@ def q_stream_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch state is the doc-grain bool_and aggregation only (no
     cross-batch state at all: the filter is immutable during serving;
     compaction-time refresh is the delta-index recipe)."""
-    import glob
-    import shutil
-    import tempfile
-
     from eventstreamer_spark.operators.dedup import (
         BLOOM_BITS_PER_KEY,
         _bloom_positions,
@@ -1200,27 +1087,7 @@ def q_stream_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    chunk_dir = tempfile.mkdtemp(prefix="es_bloomstream_")
-    try:
-        staging = f"{chunk_dir}/_stage"
-        batch.withColumn("b", (F.col("batch_id") % 3).cast("int")).repartition(
-            "b"
-        ).write.mode("overwrite").partitionBy("b").parquet(staging)
-        base = 1_600_000_000
-        for i in range(3):
-            parts = sorted(glob.glob(f"{staging}/b={i}/part-*.parquet"))
-            for j, p in enumerate(parts):  # tolerate 0..n parts per residue
-                dest = f"{chunk_dir}/chunk-{i:03d}-{j:02d}.parquet"
-                shutil.move(p, dest)
-                os.utime(dest, (base + i * 60, base + i * 60))
-        shutil.rmtree(staging, ignore_errors=True)
-
-        schema = spark.read.parquet(chunk_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunk_dir)
-        )
+    with drip_stream(spark, batch, F.col("batch_id") % 3, 3) as stream:
         sdig = stream.select(
             "batch_id", F.md5(F.col("text").cast("binary")).alias("digest")
         )
@@ -1245,26 +1112,24 @@ def q_stream_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         run_to_memory(probed, "bloom_probe_sink", mode="update")
-        t = spark.table("bloom_probe_sink")
-        # a doc's position rows live in one chunk, so one final emission
-        # per key; if a partial ever re-emitted, the bool_and can only
-        # tighten — keep the conservative (false-first) row
-        from pyspark.sql import Window as W
+    t = spark.table("bloom_probe_sink")
+    # a doc's position rows live in one chunk, so one final emission
+    # per key; if a partial ever re-emitted, the bool_and can only
+    # tighten — keep the conservative (false-first) row
+    from pyspark.sql import Window as W
 
-        return (
-            t.withColumn(
-                "rn",
-                F.row_number().over(
-                    W.partitionBy("batch_id", "is_dup").orderBy(
-                        F.col("bloom_hit").asc()
-                    )
-                ),
-            )
-            .filter(F.col("rn") == 1)
-            .drop("rn")
+    return (
+        t.withColumn(
+            "rn",
+            F.row_number().over(
+                W.partitionBy("batch_id", "is_dup").orderBy(
+                    F.col("bloom_hit").asc()
+                )
+            ),
         )
-    finally:
-        shutil.rmtree(chunk_dir, ignore_errors=True)
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1332,10 +1197,6 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     State story: unlike the sessionization streams there is no
     watermark here because the aggregation key space is constant
     (chunk, bin) — state cannot grow with data, only with bins."""
-    import glob
-    import shutil
-    import tempfile
-
     from eventstreamer_spark.operators.audit import _PSI_BINS, _psi_bin
     from eventstreamer_spark.operators.audit import _TOKS_S as _TS
     from eventstreamer_spark.session import configure
@@ -1357,83 +1218,61 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "bin", (F.expr("doc_id DIV 2") % 3).cast("long").alias("chunk")
     )
 
-    chunk_dir = tempfile.mkdtemp(prefix="es_drift_")
-    try:
-        staging = f"{chunk_dir}/_stage"
-        cur_docs.withColumn("b", F.col("chunk").cast("int")).repartition(
-            "b"
-        ).write.mode("overwrite").partitionBy("b").parquet(staging)
-        base = 1_600_000_000
-        for i in range(3):
-            parts = sorted(glob.glob(f"{staging}/b={i}/part-*.parquet"))
-            for j, p in enumerate(parts):
-                dest = f"{chunk_dir}/chunk-{i:03d}-{j:02d}.parquet"
-                shutil.move(p, dest)
-                os.utime(dest, (base + i * 60, base + i * 60))
-        shutil.rmtree(staging, ignore_errors=True)
-
-        schema = spark.read.parquet(chunk_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunk_dir)
-        )
+    with drip_stream(spark, cur_docs, F.col("chunk"), 3) as stream:
         counts = stream.groupBy("chunk", "bin").agg(
             F.count(F.lit(1)).cast("long").alias("n_cur")
         )
         run_to_memory(counts, "drift_sink", mode="update")
-        t = spark.table("drift_sink")
-        # one emission per (chunk, bin) — a chunk lives in one trigger;
-        # keep the max defensively (counts only ever grow within a key)
-        cur = t.groupBy("chunk", "bin").agg(F.max("n_cur").alias("n_cur"))
+    t = spark.table("drift_sink")
+    # one emission per (chunk, bin) — a chunk lives in one trigger;
+    # keep the max defensively (counts only ever grow within a key)
+    cur = t.groupBy("chunk", "bin").agg(F.max("n_cur").alias("n_cur"))
 
-        tref = ref.agg(F.sum("n_ref").cast("long").alias("t_ref"))
-        tcur = cur.groupBy("chunk").agg(F.sum("n_cur").cast("long").alias("t_cur"))
-        # the chunk domain is static (3 residues) — building the spine
-        # from ranges avoids a self-join back into the sink lineage
-        # (which trips Spark's conflicting-attribute check); chunks
-        # with no docs fall out at the inner tcur join
-        spine = (
-            spark.range(3)
-            .select(F.col("id").cast("long").alias("chunk"))
-            .crossJoin(
-                F.broadcast(
-                    spark.range(_PSI_BINS).select(
-                        F.col("id").cast("long").alias("bin")
-                    )
+    tref = ref.agg(F.sum("n_ref").cast("long").alias("t_ref"))
+    tcur = cur.groupBy("chunk").agg(F.sum("n_cur").cast("long").alias("t_cur"))
+    # the chunk domain is static (3 residues) — building the spine
+    # from ranges avoids a self-join back into the sink lineage
+    # (which trips Spark's conflicting-attribute check); chunks
+    # with no docs fall out at the inner tcur join
+    spine = (
+        spark.range(3)
+        .select(F.col("id").cast("long").alias("chunk"))
+        .crossJoin(
+            F.broadcast(
+                spark.range(_PSI_BINS).select(
+                    F.col("id").cast("long").alias("bin")
                 )
             )
         )
-        terms = (
-            spine.join(F.broadcast(ref), "bin", "left")
-            .join(cur, ["chunk", "bin"], "left")
-            .join(F.broadcast(tcur), "chunk")
-            .crossJoin(F.broadcast(tref))
-            .select(
-                "chunk",
-                "t_cur",
-                (
-                    (F.coalesce("n_ref", F.lit(0)) + F.lit(1.0))
-                    / (F.col("t_ref") + F.lit(float(_PSI_BINS)))
-                ).alias("p_ref"),
-                (
-                    (F.coalesce("n_cur", F.lit(0)) + F.lit(1.0))
-                    / (F.col("t_cur") + F.lit(float(_PSI_BINS)))
-                ).alias("p_cur"),
-            )
-        )
-        return terms.groupBy("chunk", "t_cur").agg(
+    )
+    terms = (
+        spine.join(F.broadcast(ref), "bin", "left")
+        .join(cur, ["chunk", "bin"], "left")
+        .join(F.broadcast(tcur), "chunk")
+        .crossJoin(F.broadcast(tref))
+        .select(
+            "chunk",
+            "t_cur",
             (
-                F.sum(
-                    F.round(
-                        (F.col("p_cur") - F.col("p_ref"))
-                        * F.log(F.col("p_cur") / F.col("p_ref"))
-                        * 1000000000,
-                        0,
-                    ).cast("long")
+                (F.coalesce("n_ref", F.lit(0)) + F.lit(1.0))
+                / (F.col("t_ref") + F.lit(float(_PSI_BINS)))
+            ).alias("p_ref"),
+            (
+                (F.coalesce("n_cur", F.lit(0)) + F.lit(1.0))
+                / (F.col("t_cur") + F.lit(float(_PSI_BINS)))
+            ).alias("p_cur"),
+        )
+    )
+    return terms.groupBy("chunk", "t_cur").agg(
+        (
+            F.sum(
+                F.round(
+                    (F.col("p_cur") - F.col("p_ref"))
+                    * F.log(F.col("p_cur") / F.col("p_ref"))
+                    * 1000000000,
+                    0,
                 ).cast("long")
-                / 1000000000.0
-            ).alias("psi")
-        ).select("chunk", F.col("t_cur").alias("n_docs"), "psi")
-    finally:
-        shutil.rmtree(chunk_dir, ignore_errors=True)
+            ).cast("long")
+            / 1000000000.0
+        ).alias("psi")
+    ).select("chunk", F.col("t_cur").alias("n_docs"), "psi")

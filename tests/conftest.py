@@ -57,3 +57,35 @@ def assert_matches_oracle(spark_df, duck_con, sql, float_tol=1e-9):
                 )
             else:
                 assert a == b, f"col {c} row {i}: spark={a!r} oracle={b!r}"
+
+
+def run_driver_child(body: str, cwd, env_updates=None, timeout=900):
+    """Run ``body`` in a fresh Python process the way an external driver
+    would: the repo on ``sys.path`` (not on ``PYTHONPATH``), a plain
+    local[2] session bound to ``spark``, the working directory ``cwd``.
+    Returns the CompletedProcess; its stdout is the body's prints."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    root = str(Path(__file__).resolve().parent.parent)
+    code = (
+        f"import sys\nsys.path.insert(0, {root!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        'spark = SparkSession.builder.master("local[2]")'
+        '.config("spark.ui.enabled", "false").getOrCreate()\n'
+        'spark.sparkContext.setLogLevel("ERROR")\n'
+        + textwrap.dedent(body)
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(env_updates or {})
+    return subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=str(cwd),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=timeout,
+    )

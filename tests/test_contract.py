@@ -36,3 +36,36 @@ def test_query_matches_oracle(spark, duck, name):
 def test_rows_only_queries_run(spark, name):
     df = QUERIES[name](spark, SF_DIR)
     assert df.limit(1).count() >= 0
+
+
+def test_queries_come_in_registry_order():
+    from eventstreamer_spark import registry
+
+    assert list(contract.queries()) == list(registry.queries())
+
+
+def test_wrapped_query_resets_session_timezone(spark):
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        QUERIES["tumbling_window_stats"](spark, SF_DIR)
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_executors_import_engine_from_any_cwd():
+    """A driver whose working directory is not the repo: Python workers
+    still import the engine (configure puts the package on their path),
+    so a mapInPandas query runs."""
+    from tests.conftest import run_driver_child
+
+    body = f"""
+    import __spark_entry__ as contract
+    rows = contract.queries()["push_time_parity"](spark, {SF_DIR!r}).collect()
+    print("rows", len(rows))
+    """
+    proc = run_driver_child(body, "/tmp")
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert int(proc.stdout.split()[-1]) > 0

@@ -2131,12 +2131,9 @@ def test_compaction_bin_packing_report(spark):
     # the scheduler consequence, measured on the real files: reading
     # the compacted table plans no MORE scan tasks than the fragmented
     # one (Spark's FilePartition packing pays per-file open cost)
-    import hashlib
+    from eventstreamer_spark.operators.layout import compaction_dir
 
-    root = (
-        f"/tmp/es_compact/{spark.sparkContext.applicationId}/"
-        f"{hashlib.md5(SF_DIR.encode()).hexdigest()[:10]}"
-    )
+    root = compaction_dir(spark, SF_DIR)
     frag_tasks = spark.read.parquet(f"{root}/fragmented").rdd.getNumPartitions()
     comp_tasks = spark.read.parquet(f"{root}/compacted").rdd.getNumPartitions()
     assert comp_tasks <= frag_tasks
@@ -2166,10 +2163,9 @@ def test_partition_pruning_executed(spark):
     every file — the audit's whole lesson. Report invariants: matching
     rows never exceed read rows, amplification >= 1, unaligned ranges
     spill (amplification > 1 for the month-grain range)."""
-    import hashlib
-
     from eventstreamer_spark.operators.layout import (
         _PRANGES,
+        partition_dir,
         q_partition_pruning_audit,
     )
 
@@ -2182,10 +2178,7 @@ def test_partition_pruning_executed(spark):
         assert r.read_amplification >= 1.0
     assert rows["one_month"].read_amplification > 1.0  # unaligned spill
 
-    path = (
-        f"/tmp/es_partition/{spark.sparkContext.applicationId}/"
-        f"{hashlib.md5(SF_DIR.encode()).hexdigest()[:10]}/orders"
-    )
+    path = partition_dir(spark, SF_DIR)
     name, lo, hi, ol, oh = _PRANGES[0]
     pruned = spark.read.parquet(path).filter(
         (F.col("om") >= ol) & (F.col("om") <= oh)

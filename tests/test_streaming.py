@@ -624,39 +624,55 @@ def test_stream_countmin_cells_match_batch(spark):
     assert len(batch_cells) > 0
 
 
-def test_stage_residue_chunks_merges_split_residues(spark, tmp_path):
-    """ADVICE r12: a writer config that splits one residue across part
+def test_stage_residue_chunks_merges_split_residues(spark):
+    """ADVICE r12: a writer config that splits one bucket across part
     files (spark.sql.files.maxRecordsPerFile) must not hard-fail the
-    serving gates — the residue is coalesce(1)-rewritten to one chunk
-    so every request still arrives in ONE micro-batch."""
-    import glob
-    import shutil
-
-    from eventstreamer_spark.operators.indexing import _stage_residue_chunks
+    drip replay — scratch.drip_stream coalesce(1)-rewrites the bucket
+    to one chunk, so every bucket still arrives as ONE micro-batch."""
+    from eventstreamer_spark.scratch import drip_stream
+    from eventstreamer_spark.streaming.pipeline import run_foreach_batch
 
     df = spark.createDataFrame(
-        [(i, i % 3, f"p{i}") for i in range(30)], "rid int, bb int, payload string"
+        [(i, f"p{i}") for i in range(30)], "rid int, payload string"
     )
+    batches: list[list[int]] = []
     spark.conf.set("spark.sql.files.maxRecordsPerFile", "4")
     try:
-        chunk_dir, stream = _stage_residue_chunks(
-            spark, df, 3, prefix="es_test_residue_"
-        )
+        with drip_stream(spark, df, F.col("rid") % 3, 3) as stream:
+            run_foreach_batch(
+                stream,
+                lambda b, _id: batches.append(sorted(r.rid for r in b.collect())),
+            )
     finally:
         spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    # one bucket per micro-batch, complete, in bucket order
+    assert batches == [list(range(k, 30, 3)) for k in range(3)]
+
+
+# The drip gates whose staging asserted one part file per bucket.
+_SPLIT_WRITER_GATES = [
+    "stream_late_data_policy",
+    "stream_foreachbatch_upsert",
+    "stream_static_ingest_dedup",
+    "stream_countmin_topk",
+    "stream_classifier_scores",
+]
+
+
+@pytest.mark.parametrize("name", _SPLIT_WRITER_GATES)
+def test_drip_gates_match_oracle_under_split_writer(spark, duck, name):
+    """With a writer that splits every bucket into 4-row files, each
+    drip gate still replays one micro-batch per bucket and matches its
+    DuckDB oracle."""
+    import __spark_entry__ as contract
+    from tests.conftest import assert_matches_oracle
+
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "4")
     try:
-        chunks = sorted(glob.glob(f"{chunk_dir}/chunk-*.parquet"))
-        assert len(chunks) == 3, chunks
-        total = 0
-        for c in chunks:
-            rows = spark.read.parquet(c).collect()
-            # one residue class per chunk, complete
-            assert len({r.rid % 3 for r in rows}) == 1
-            total += len(rows)
-        assert total == 30
-        assert stream.isStreaming
+        df = contract.queries()[name](spark, SF_DIR)
+        assert_matches_oracle(df, duck, contract.oracle_sql()[name])
     finally:
-        shutil.rmtree(chunk_dir, ignore_errors=True)
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
 
 
 def test_checkpoint_restart_no_loss_no_dup(spark, tmp_path):

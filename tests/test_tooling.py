@@ -1,0 +1,74 @@
+"""The dev scripts stay wired to the engine: every ``eventstreamer_spark``
+name that ``bench.py`` and ``scripts/*.py`` import, or read off an
+imported engine module, must resolve. No Spark session is started."""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import types
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parent.parent
+TOOLS = [ROOT / "bench.py", *sorted((ROOT / "scripts").glob("*.py"))]
+
+
+def _engine_names(tree: ast.AST) -> tuple[list[tuple[str, str | None]], dict[str, str]]:
+    """([(module, imported name or None)], {local alias: module path})
+    for every import of the engine package in ``tree``."""
+    refs: list[tuple[str, str | None]] = []
+    aliases: dict[str, str] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] == "eventstreamer_spark":
+                    refs.append((a.name, None))
+                    if a.asname:
+                        aliases[a.asname] = a.name
+        elif isinstance(node, ast.ImportFrom) and node.level == 0 and node.module:
+            if node.module.split(".")[0] == "eventstreamer_spark":
+                for a in node.names:
+                    refs.append((node.module, a.name))
+                    aliases[a.asname or a.name] = f"{node.module}.{a.name}"
+    return refs, aliases
+
+
+def _resolve(path: str) -> object:
+    """Import ``path`` as a module, or as an attribute of its parent."""
+    try:
+        return importlib.import_module(path)
+    except ModuleNotFoundError:
+        parent, _, name = path.rpartition(".")
+        return getattr(importlib.import_module(parent), name)
+
+
+@pytest.mark.parametrize("tool", TOOLS, ids=lambda p: p.name)
+def test_tool_engine_imports_resolve(tool):
+    tree = ast.parse(tool.read_text(), filename=str(tool))
+    refs, aliases = _engine_names(tree)
+    missing = []
+    for module, name in refs:
+        try:
+            _resolve(module if name is None else f"{module}.{name}")
+        except (ImportError, AttributeError):
+            missing.append(module if name is None else f"{module}.{name}")
+    # attributes read off an imported engine module (``P.run_to_memory``)
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.ctx, ast.Load)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in aliases
+        ):
+            target = _resolve(aliases[node.value.id])
+            if isinstance(target, types.ModuleType) and not hasattr(target, node.attr):
+                missing.append(f"{aliases[node.value.id]}.{node.attr}")
+    assert not missing, f"{tool.name}: unresolved engine names {missing}"
+
+
+def test_tools_are_scanned():
+    # the scan above must see the tools' engine imports at all
+    refs, _ = _engine_names(ast.parse((ROOT / "bench.py").read_text()))
+    assert ("eventstreamer_spark", "memo") in refs
