@@ -45,7 +45,8 @@ class BoundedMemo(dict):
         on_evict: Callable[[Any, Any], None] | None = None,
     ) -> None:
         super().__init__()
-        assert maxsize >= 1
+        if maxsize < 1:
+            raise ValueError(f"maxsize must be >= 1, got {maxsize}")
         self.maxsize = maxsize
         self._on_evict = on_evict
 

@@ -37,21 +37,21 @@ DispatcherFunction.cs:35); this is Tier B scale machinery.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.memo import free_local_checkpoint
+from eventstreamer_spark.session import env_int
 
 # Cap on range partitions for the parallel exact rank; env-overridable
-# for production clusters (the session.py SPARK_GRAFT_* pattern). The
+# for production clusters (an int >= 1, read by session.env_int). The
 # per-query count is SIZE-ADAPTIVE below (VERDICT r14 item 5): a fixed
 # 32 paid ~32 near-empty range-sampler+window tasks on the 15k–150k-row
 # report inputs at sf0.1, while one partition per ~16 MB of estimated
 # input keeps the same RangePartitioning plan shape and scales back up
 # with the data.
-RANK_NPART = int(os.environ.get("SPARK_GRAFT_RANK_MAX_PARTITIONS", "32"))
+RANK_NPART = env_int("SPARK_GRAFT_RANK_MAX_PARTITIONS", 32)
 _RANK_BYTES_PER_PART = 16 << 20
 
 

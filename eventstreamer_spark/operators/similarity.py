@@ -235,6 +235,17 @@ def _assemble_centroids(comp: DataFrame) -> DataFrame:
 _BLAS_PINNED = False
 
 
+def _mapped_openblas() -> set[str]:
+    """Paths of every OpenBLAS shared object mapped into this process."""
+    libs = set()
+    with open("/proc/self/maps") as f:
+        for line in f:
+            part = line.rsplit(" ", 1)[-1].strip()
+            if "openblas" in part.lower() and ".so" in part:
+                libs.add(part)
+    return libs
+
+
 def _blas_single_thread() -> None:
     """Pin the in-process BLAS to ONE thread (idempotent, per worker).
 
@@ -245,29 +256,24 @@ def _blas_single_thread() -> None:
     0.6 s single-threaded (vs 3.4 s for the old non-BLAS int64 path).
     Env vars only work if set before the worker's numpy import, which
     an externally-launched driver does not guarantee — so this pins
-    the already-loaded library directly via its control symbol.
+    every already-loaded copy directly via its control symbol, and
+    latches only once a pin succeeded.
     Best-effort: failure leaves the default threading (the old
     behavior), never raises."""
     global _BLAS_PINNED
     if _BLAS_PINNED:
         return
-    _BLAS_PINNED = True
     try:
         import ctypes
 
-        libs = set()
-        with open("/proc/self/maps") as f:
-            for line in f:
-                part = line.rsplit(" ", 1)[-1].strip()
-                if "openblas" in part.lower() and ".so" in part:
-                    libs.add(part)
-        for lib in libs:
+        for lib in _mapped_openblas():
             h = ctypes.CDLL(lib)
             for sym in ("openblas_set_num_threads64_", "openblas_set_num_threads"):
                 fn = getattr(h, sym, None)
                 if fn is not None:
                     fn(1)
-                    return
+                    _BLAS_PINNED = True
+                    break
     except Exception:
         pass
 

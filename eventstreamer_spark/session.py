@@ -39,6 +39,22 @@ TABLES = (
 )
 
 
+def env_int(name: str, default: int) -> int:
+    """``$name`` as an integer >= 1, or ``default`` when it is unset.
+    Any other value raises ValueError naming the variable, so a bad
+    knob fails at configuration time, not mid-query."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(f"{name} must be an integer >= 1, got {raw!r}")
+    return n
+
+
 def get_spark(app_name: str = "eventstreamer-spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
@@ -47,7 +63,7 @@ def get_spark(app_name: str = "eventstreamer-spark", cpus: int | None = None) ->
     sizing at any data volume).
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = env_int("SPARK_GRAFT_CPUS", 32)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -36,8 +36,10 @@ from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.functions.casting import fmt_ts, round6
 from eventstreamer_spark.operators.windowed import tumbling_stats
 from eventstreamer_spark.memo import artifact
+from eventstreamer_spark.obs import note_triggers
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.scratch import drip_stream, session_dir, tempdir
+from eventstreamer_spark.session import env_int
 from eventstreamer_spark.sources.tables import load_events
 
 EVENTS_DDL = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -173,22 +175,6 @@ def run_foreach_batch(df, fn, nodata_batches: bool = False) -> list[dict]:
     )
 
 
-def _gate_partitions() -> int:
-    """Gate shuffle partitions from $SPARK_GRAFT_GATE_PARTITIONS
-    (default 8, measured best): an int >= 1, checked before the gate
-    touches any session conf."""
-    raw = os.environ.get("SPARK_GRAFT_GATE_PARTITIONS", "8")
-    try:
-        n = int(raw)
-    except ValueError:
-        n = 0
-    if n < 1:
-        raise ValueError(
-            f"SPARK_GRAFT_GATE_PARTITIONS must be an integer >= 1, got {raw!r}"
-        )
-    return n
-
-
 def _run_gate_stream(df: DataFrame, start, nodata_batches: bool = False) -> list[dict]:
     """Shared gate-run plumbing: conf save/set/restore + fresh
     checkpoint dir + synchronous processAllAvailable, with ``start``
@@ -199,7 +185,8 @@ def _run_gate_stream(df: DataFrame, start, nodata_batches: bool = False) -> list
     import tempfile
 
     spark = df.sparkSession
-    partitions = _gate_partitions()
+    # default 8, measured best; checked before any session conf is touched
+    partitions = env_int("SPARK_GRAFT_GATE_PARTITIONS", 8)
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     part_key = "spark.sql.shuffle.partitions"
     retain_key = "spark.sql.streaming.minBatchesToRetain"
@@ -255,6 +242,7 @@ def _run_gate_stream(df: DataFrame, start, nodata_batches: bool = False) -> list
         else:
             spark.conf.set(nodata_key, prev_nodata)
         spark.conf.set(part_key, prev_part)
+    note_triggers(progresses)
     return progresses
 
 

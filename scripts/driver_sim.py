@@ -1,23 +1,22 @@
 """Simulate the verification driver: plain SparkSession (non-UTC tz),
 entry() smoke, then every queries() entry vs its oracle_sql() in
-DuckDB at sf0.01. Exact-match compare (floats must be identical after
-in-query rounding). Usage:
+DuckDB at sf0.01, compared by ``obs.frame_diff`` (floats within 1e-12,
+everything else exact). Usage:
     python scripts/driver_sim.py [sf_dir] [--only name1,name2]
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession
 
-from eventstreamer_spark.session import TABLES
+from eventstreamer_spark.obs import frame_diff, run_query
+from eventstreamer_spark.session import TABLES, env_int
 
 
 def main() -> int:
@@ -33,7 +32,7 @@ def main() -> int:
     # misconfiguration at x100 working sets, exactly like an 8-core
     # 1 GiB executor on a real cluster. Cores-per-memory is the FIRST
     # sizing knob a deployment turns; DRIVER_SIM_MEM is the second.
-    cores = os.environ.get("DRIVER_SIM_CORES", "8")
+    cores = env_int("DRIVER_SIM_CORES", 8)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName("driver-sim")
@@ -54,7 +53,8 @@ def main() -> int:
 
     if only is None:
         rows = c.entry(spark).collect()
-        assert len(rows) > 0, "entry() returned no rows"
+        if not rows:
+            raise RuntimeError("entry() returned no rows")
         print(f"entry: {len(rows)} rows OK")
 
     con = duckdb.connect()
@@ -64,48 +64,30 @@ def main() -> int:
     qs, osql = c.queries(), c.oracle_sql()
     if only is not None:
         unknown = only - set(qs)
-        assert not unknown, f"unknown queries: {unknown}"
+        if unknown:
+            raise SystemExit(f"unknown queries: {sorted(unknown)}")
         qs = {n: f for n, f in qs.items() if n in only}
     failed = []
     for name in sorted(qs):
-        t0 = time.perf_counter()
-        try:
-            sp = qs[name](spark, sf).toPandas()
-        except Exception as e:
-            print(f"FAIL {name}: spark error {e}")
+        rec = run_query(spark, name, qs[name], sf, action=lambda df: df.toPandas())
+        if rec.error is not None:
+            print(f"FAIL {name}: spark error {rec.error}")
             failed.append(name)
             continue
+        sp = rec.result
         if name not in osql:
-            print(f"ok   {name}: rows-only, {len(sp)} rows ({time.perf_counter()-t0:.1f}s)")
+            print(f"ok   {name}: rows-only, {len(sp)} rows ({rec.total_s:.1f}s)")
             continue
-        du = con.execute(osql[name]).fetchdf()
-        cols = sorted(sp.columns)
-        if cols != sorted(du.columns):
-            print(f"FAIL {name}: schema spark={cols} oracle={sorted(du.columns)}")
+        try:
+            mism, _ = frame_diff(sp, con.execute(osql[name]).fetchdf())
+        except ValueError as e:
+            print(f"FAIL {name}: {e}")
             failed.append(name)
             continue
-        if len(sp) != len(du):
-            print(f"FAIL {name}: rows spark={len(sp)} oracle={len(du)}")
-            failed.append(name)
-            continue
-        sp = sp[cols].sort_values(cols, ignore_index=True)
-        du = du[cols].sort_values(cols, ignore_index=True)
-        mism = 0
-        for cn in cols:
-            for a, b in zip(sp[cn].tolist(), du[cn].tolist()):
-                if isinstance(a, float) and isinstance(b, float):
-                    if not (
-                        a == b
-                        or (math.isnan(a) and math.isnan(b))
-                        or math.isclose(a, b, rel_tol=1e-12, abs_tol=1e-12)
-                    ):
-                        mism += 1
-                elif str(a) != str(b):
-                    mism += 1
         status = "ok  " if mism == 0 else "FAIL"
         if mism:
             failed.append(name)
-        print(f"{status} {name}: rows={len(sp)} mismatches={mism} ({time.perf_counter()-t0:.1f}s)")
+        print(f"{status} {name}: rows={len(sp)} mismatches={mism} ({rec.total_s:.1f}s)")
 
     print(f"\n{len(qs) - len(failed)}/{len(qs)} queries pass")
     return 1 if failed else 0

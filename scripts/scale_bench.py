@@ -26,11 +26,11 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as contract
+from eventstreamer_spark.obs import run_query
 from eventstreamer_spark.session import get_spark
 
 FACTORS: dict[int, str] = {
@@ -199,15 +199,12 @@ def main() -> int:
             best = None
             failed = False
             for _ in range(passes):
-                t0 = time.perf_counter()
-                try:
-                    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                except Exception as e:
-                    print(f"x{factor} {name} FAILED: {e}", file=sys.stderr)
+                run = run_query(spark, name, qs[name], sf_dir)
+                if run.error is not None:
+                    print(f"x{factor} {name} FAILED: {run.error}", file=sys.stderr)
                     failed = True
                     break
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
+                best = run.total_s if best is None else min(best, run.total_s)
             if failed:
                 # Explicit failure marker — never a fake timing (ADVICE r4).
                 rec["t"][str(factor)] = {"failed": True}

@@ -2,11 +2,10 @@
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pytest
 
+from eventstreamer_spark.obs import frame_diff
 from eventstreamer_spark.session import TABLES, get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -30,33 +29,11 @@ def duck():
     con.close()
 
 
-def assert_matches_oracle(spark_df, duck_con, sql, float_tol=1e-9):
-    """Replicate the driver's check: row count + schema names + values.
-
-    Columns are compared sorted by name; rows sorted by all columns.
-    Floats compare with a tolerance locally (the driver hashes with its
-    own tolerance; we round in-query so exact equality is the norm).
-    """
-    sp = spark_df.toPandas()
-    du = duck_con.execute(sql).fetchdf()
-    assert sorted(sp.columns) == sorted(du.columns), (
-        f"schema mismatch: spark={sorted(sp.columns)} oracle={sorted(du.columns)}"
-    )
-    cols = sorted(sp.columns)
-    sp = sp[cols].sort_values(cols, ignore_index=True)
-    du = du[cols].sort_values(cols, ignore_index=True)
-    assert len(sp) == len(du), f"row count mismatch: spark={len(sp)} oracle={len(du)}"
-    for c in cols:
-        sv, dv = sp[c].tolist(), du[c].tolist()
-        for i, (a, b) in enumerate(zip(sv, dv)):
-            if isinstance(a, float) and isinstance(b, float):
-                if math.isnan(a) and math.isnan(b):
-                    continue
-                assert math.isclose(a, b, rel_tol=float_tol, abs_tol=float_tol), (
-                    f"col {c} row {i}: spark={a!r} oracle={b!r}"
-                )
-            else:
-                assert a == b, f"col {c} row {i}: spark={a!r} oracle={b!r}"
+def assert_matches_oracle(spark_df, duck_con, sql):
+    """Compare a Spark result with its DuckDB oracle via ``obs.frame_diff``:
+    schema names, row count, then every cell (floats within 1e-12)."""
+    mism, first = frame_diff(spark_df.toPandas(), duck_con.execute(sql).fetchdf())
+    assert mism == 0, f"{mism} mismatched cells, first {first}"
 
 
 def run_driver_child(body: str, cwd, env_updates=None, timeout=900):

@@ -1,0 +1,98 @@
+"""The run ledger (``obs.run_query``) and the oracle comparator
+(``obs.frame_diff``)."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pandas as pd
+import pytest
+
+from eventstreamer_spark import obs
+from eventstreamer_spark.streaming.pipeline import q_stream_tumbling_stats
+from tests.conftest import SF_DIR
+
+ROOT = Path(__file__).resolve().parent.parent
+
+
+def _group(spark):
+    return spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+
+
+def test_run_record_fields(spark):
+    rec = obs.run_query(spark, "noop_range", lambda s, _: s.range(100), SF_DIR)
+    assert rec.error is None and rec.result is None
+    assert rec.construct_jobs == 0 and rec.execute_jobs >= 1 and rec.stages >= 1
+    assert rec.triggers == [] and rec.total_s == rec.construct_s + rec.execute_s > 0
+    assert _group(spark) is None
+
+    gate = obs.run_query(spark, "stream_tumbling_stats", q_stream_tumbling_stats, SF_DIR)
+    assert gate.error is None and gate.triggers
+    for t in gate.triggers:
+        assert t["durationMs"]["triggerExecution"] >= 0
+        assert t["stateCommitMs"] >= 0
+    assert obs._TRIGGERS is None  # nothing is kept outside a run
+
+    def broken(s, _):
+        raise RuntimeError("no such table")
+
+    bad = obs.run_query(spark, "broken", broken, SF_DIR)
+    assert bad.error == "no such table" and bad.execute_s == 0
+    assert bad.construct_jobs == bad.execute_jobs == bad.stages == 0
+    assert _group(spark) is None and obs._TRIGGERS is None
+
+
+@pytest.mark.parametrize(
+    "got, want, n",
+    [
+        ([1], [1.0], 1),  # int vs float: equal values, different strings
+        ([0.5], [0.5 + 1e-10], 1),  # beyond the 1e-12 tolerance
+        ([0.5], [0.5 + 1e-13], 0),
+        ([float("nan")], [float("nan")], 0),
+        ([None], [None], 0),
+        (["a", "b"], ["b", "c"], 2),  # rows sorted before comparing
+    ],
+)
+def test_frame_diff(got, want, n):
+    mism, first = obs.frame_diff(pd.DataFrame({"x": got}), pd.DataFrame({"x": want}))
+    assert mism == n
+    assert (first is None) == (n == 0)
+
+
+def test_frame_diff_rejects_shape():
+    with pytest.raises(ValueError, match="schema"):
+        obs.frame_diff(pd.DataFrame({"x": [1]}), pd.DataFrame({"y": [1]}))
+    with pytest.raises(ValueError, match="rows"):
+        obs.frame_diff(pd.DataFrame({"x": [1]}), pd.DataFrame({"x": [1, 2]}))
+
+
+def test_bench_only_writes_layers(tmp_path):
+    detail = tmp_path / "detail.json"
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_SF_DIR": SF_DIR,
+        "SPARK_GRAFT_BENCH_DETAIL": str(detail),
+        "SPARK_GRAFT_BENCH_PASSES": "1",
+        "SPARK_GRAFT_CPUS": "2",
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    out = subprocess.run(
+        [sys.executable, str(ROOT / "bench.py"), "--only", "q18_large_volume_orders"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    lines = [json.loads(ln) for ln in out.stdout.splitlines() if ln.startswith("{")]
+    assert len(lines) == 1
+    assert list(lines[0]) == [
+        "metric", "unit", "queries", "sf", "value", "n_queries", "n_failed", "memo_warm",
+    ]
+    assert list(lines[0]["queries"]) == ["q18_large_volume_orders"]
+    layer = json.loads(detail.read_text())["layers"]["q18_large_volume_orders"]
+    assert set(layer) == {
+        "construct_s", "execute_s", "construct_jobs", "execute_jobs", "stages", "triggers",
+    }
+    assert layer["execute_jobs"] >= 1 and layer["stages"] >= 1

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -348,6 +349,73 @@ def test_f64_matmul_exact_at_quantization_bound():
         # every f64 cell IS its int64 twin (not merely close)
         assert np.array_equal(fast, exact.astype("float64"))
         assert np.array_equal(np.rint(fast).astype("int64"), exact)
+
+
+def _openblas_threads(lib: str, set_to: int | None = None) -> int:
+    """The thread count of the OpenBLAS copy at ``lib``, after setting it
+    to ``set_to`` when given."""
+    import ctypes
+
+    h = ctypes.CDLL(lib)
+    suffix = "64_" if hasattr(h, "openblas_get_num_threads64_") else ""
+    if set_to is not None:
+        getattr(h, f"openblas_set_num_threads{suffix}")(set_to)
+    return getattr(h, f"openblas_get_num_threads{suffix}")()
+
+
+def test_blas_pin_covers_every_copy(monkeypatch, tmp_path):
+    """Every mapped OpenBLAS copy is pinned to one thread, not only the
+    first one found, and the latch is set only once a pin succeeded."""
+    import ctypes
+    import shutil
+
+    import numpy  # noqa: F401 — maps numpy's OpenBLAS
+
+    from eventstreamer_spark.operators import similarity as S
+
+    monkeypatch.setattr(S, "_BLAS_PINNED", False)
+    monkeypatch.setattr(S, "_mapped_openblas", set)
+    S._blas_single_thread()
+    assert S._BLAS_PINNED is False  # no library found: nothing latched
+    monkeypatch.undo()
+
+    # a second copy of the library, mapped under another path
+    found = S._mapped_openblas()
+    second = shutil.copy(min(found), tmp_path / "libopenblas_second.so")
+    ctypes.CDLL(second)
+    libs = S._mapped_openblas()
+    assert len(libs) == len(found) + 1
+    before = {lib: _openblas_threads(lib) for lib in libs}
+    monkeypatch.setattr(S, "_BLAS_PINNED", False)
+    try:
+        for lib in libs:
+            _openblas_threads(lib, set_to=2)
+        S._blas_single_thread()
+        assert S._BLAS_PINNED is True
+        assert {lib: _openblas_threads(lib) for lib in libs} == dict.fromkeys(libs, 1)
+    finally:
+        for lib, n in before.items():  # leave this process's BLAS as found
+            _openblas_threads(lib, set_to=n)
+
+
+@pytest.mark.parametrize(
+    "raw, want",
+    [(None, 7), ("3", 3), ("abc", None), ("0", None), ("-3", None), ("", None)],
+)
+def test_env_int(monkeypatch, raw, want):
+    """session.env_int: unset gives the default; anything but an integer
+    >= 1 raises ValueError naming the variable."""
+    from eventstreamer_spark.session import env_int
+
+    if raw is None:
+        monkeypatch.delenv("SPARK_GRAFT_RANK_MAX_PARTITIONS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_RANK_MAX_PARTITIONS", raw)
+    if want is None:
+        with pytest.raises(ValueError, match="SPARK_GRAFT_RANK_MAX_PARTITIONS"):
+            env_int("SPARK_GRAFT_RANK_MAX_PARTITIONS", 7)
+    else:
+        assert env_int("SPARK_GRAFT_RANK_MAX_PARTITIONS", 7) == want
 
 
 def test_bounded_memo_lru_get_refresh():

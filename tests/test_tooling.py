@@ -71,4 +71,4 @@ def test_tool_engine_imports_resolve(tool):
 def test_tools_are_scanned():
     # the scan above must see the tools' engine imports at all
     refs, _ = _engine_names(ast.parse((ROOT / "bench.py").read_text()))
-    assert ("eventstreamer_spark", "memo") in refs
+    assert ("eventstreamer_spark", "obs") in refs
