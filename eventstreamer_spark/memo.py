@@ -7,18 +7,29 @@ layout directories in a scratch session dir, resolved parquet scans) through
 ``artifact(spark, sf_dir, name, build)``. Owner queries — the query
 whose result IS the artifact — call the builder directly and never
 read the store, so a repeated run of an owner always pays its build.
+
+Every local checkpoint the engine makes goes through ``checkpoint``,
+which hands it to the innermost active owner: an ``artifact`` build
+(the store entry keeps it) or an ``owned`` block such as
+``obs.run_query`` (freed when the block exits). With no owner — the
+plain driver path — release is left to Spark's ContextCleaner.
 """
 
 from __future__ import annotations
 
+import contextlib
 import shutil
 from collections import Counter
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any, NamedTuple
 
-from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame
 
 _MISSING = object()
+# The active checkpoint owners, innermost last: each is the list of the
+# checkpoints made inside it. Process-global, like obs._TRIGGERS, so
+# driver threads started inside an owner register with it too.
+_OWNERS: list[list[DataFrame]] = []
 
 
 class BoundedMemo(dict):
@@ -174,27 +185,50 @@ def free_local_checkpoint(df: Any) -> None:
             pass
 
 
-def _is_local_checkpoint(value: Any) -> bool:
-    """True for a DataFrame whose plan is a localCheckpoint's RDD scan
-    (eager or lazy) — the members whose blocks the store must free."""
-    if not hasattr(value, "_jdf"):
-        return False
+def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)``, registered with the innermost
+    active owner. The one place the engine makes a local checkpoint;
+    chains end in ``.transform(checkpoint)``."""
+    ck = df.localCheckpoint(eager=eager)
+    if _OWNERS:
+        _OWNERS[-1].append(ck)
+    return ck
+
+
+def _free(checkpoints: Iterable[DataFrame]) -> None:
+    for df in checkpoints:
+        free_local_checkpoint(df)
+
+
+@contextlib.contextmanager
+def _owner() -> Iterator[list[DataFrame]]:
+    """The checkpoints made inside the block; freed if it raises."""
+    made: list[DataFrame] = []
+    _OWNERS.append(made)
     try:
-        return bool(
-            value._jdf.queryExecution().analyzed().rdd().isLocallyCheckpointed()
-        )
-    except Py4JError:  # the analyzed plan is not an RDD scan
-        return False
+        yield made
+    except BaseException:
+        _free(made)
+        raise
+    finally:
+        _OWNERS.pop()
+
+
+@contextlib.contextmanager
+def owned() -> Iterator[None]:
+    """Free every checkpoint made inside the block when it exits."""
+    with _owner() as made:
+        yield
+    _free(made)
 
 
 class _Entry(NamedTuple):
     value: Any
-    checkpoints: tuple  # the value's local-checkpoint DataFrame members
+    checkpoints: tuple  # every checkpoint its build made
 
 
 def _release(_key: Any, entry: _Entry) -> None:
-    for df in entry.checkpoints:
-        free_local_checkpoint(df)
+    _free(entry.checkpoints)
     if isinstance(entry.value, dict) and "root" in entry.value:
         shutil.rmtree(entry.value["root"], ignore_errors=True)
 
@@ -212,11 +246,13 @@ def artifact(spark: Any, sf_dir: str, name: str, build: Callable[[], Any]) -> An
     beyond the session and directory goes into ``name`` (e.g.
     ``f"pairs:{kind}"``, ``f"scan:{table}"``).
 
-    Values are a DataFrame, a tuple (DataFrame members are inspected),
-    driver-side rows, or a dict whose ``"root"`` is a directory the
-    builder created. Whenever an entry leaves the store — LRU eviction
-    at STORE_SIZE, ``drop``, a liveness miss — its local-checkpoint
-    members are freed (free_local_checkpoint) and its root is removed.
+    Values are a DataFrame, a tuple, driver-side rows, or a dict whose
+    ``"root"`` is a directory the builder created. The entry owns every
+    ``checkpoint`` its build made: whenever it leaves the store — LRU
+    eviction at STORE_SIZE, ``drop``, a liveness miss — they are freed
+    and its root is removed. A value with no DataFrame member (rows,
+    paths) reads none of them later, so they are freed as soon as
+    ``build()`` returns; a build that raises frees them too.
 
     POST-EVICTION INVALIDATION: a localCheckpoint has no lineage, so a
     handle derived from an evicted entry dies with
@@ -234,9 +270,13 @@ def artifact(spark: Any, sf_dir: str, name: str, build: Callable[[], Any]) -> An
             HITS[name] += 1
             return entry.value
         _STORE.pop(key)
-    value = build()
+    with _owner() as made:
+        value = build()
     members = value if isinstance(value, tuple) else (value,)
-    _STORE[key] = _Entry(value, tuple(m for m in members if _is_local_checkpoint(m)))
+    if not any(isinstance(m, DataFrame) for m in members):
+        _free(made)
+        made = []
+    _STORE[key] = _Entry(value, tuple(made))
     return value
 
 

@@ -59,8 +59,10 @@ def run_query(
 ) -> RunRecord:
     """Run ``action(fn(spark, sf_dir))`` once, each phase under its own
     job group, and read the groups' jobs from the public statusTracker
-    after the timed window. A failure is caught into ``error``; the job
-    group is cleared on every exit path."""
+    after the timed window. The run owns the checkpoints the query
+    makes outside an artifact build and frees them after ``action``.
+    A failure is caught into ``error``; the job group is cleared on
+    every exit path."""
     global _TRIGGERS
     sc = spark.sparkContext
     group = f"obs-{next(_SEQ)}-{name}"
@@ -68,18 +70,19 @@ def run_query(
     memo.HITS.clear()
     _TRIGGERS = rec.triggers
     try:
-        sc.setJobGroup(f"{group}:construct", f"{name} construct")
-        t0 = time.perf_counter()
-        try:
-            df = fn(spark, sf_dir)
-        finally:
-            rec.construct_s = time.perf_counter() - t0
-        sc.setJobGroup(f"{group}:execute", f"{name} execute")
-        t0 = time.perf_counter()
-        try:
-            rec.result = action(df)
-        finally:
-            rec.execute_s = time.perf_counter() - t0
+        with memo.owned():
+            sc.setJobGroup(f"{group}:construct", f"{name} construct")
+            t0 = time.perf_counter()
+            try:
+                df = fn(spark, sf_dir)
+            finally:
+                rec.construct_s = time.perf_counter() - t0
+            sc.setJobGroup(f"{group}:execute", f"{name} execute")
+            t0 = time.perf_counter()
+            try:
+                rec.result = action(df)
+            finally:
+                rec.execute_s = time.perf_counter() - t0
     except Exception as e:
         rec.error = str(e) or type(e).__name__
     finally:

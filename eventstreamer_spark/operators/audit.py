@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
-from eventstreamer_spark.memo import artifact
-from eventstreamer_spark.operators.ranks import finalize_report, parallel_rank
+from eventstreamer_spark.memo import artifact, checkpoint
+from eventstreamer_spark.operators.ranks import parallel_rank
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.scratch import drip_stream
 from eventstreamer_spark.session import shuffle_partitions
@@ -369,7 +369,7 @@ def q_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.doc_id").alias("doc_b"),
         )
         .distinct()
-        .localCheckpoint(eager=False)  # feeds pair union + per-config counts
+        .transform(checkpoint)  # feeds pair union + per-config counts
     )
     sh = (
         load_table_parallel(spark, sf_dir, "documents")
@@ -516,7 +516,7 @@ def q_srp_angle_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (
         H.with_quantized_unit(e, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq", H.srp_bucket_expr("embedding").alias("bucket"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     q = b.filter(F.expr(_SRP_CAL_QFILTER)).select(
         F.col("vec_id").alias("query_id"),
@@ -948,10 +948,9 @@ def q_selection_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded offset collect, no single-task window anywhere. The
     rank unstack is one (doc_id)-keyed aggregate; n and k land as
     driver literals (k = max(1, floor(0.25·n)), the same IEEE double
-    floor the oracle computes); the 3-row report is eagerly
-    checkpointed and the corpus-sized rank checkpoint frees
-    immediately. Everything upstream of the rank is the shared
-    linear-scaling scoring chains."""
+    floor the oracle computes); the report has 3 rows. Everything
+    upstream of the rank is the shared linear-scaling scoring
+    chains."""
     from eventstreamer_spark.operators.curation import dsir_doc_scores
     from eventstreamer_spark.operators.quality import (
         classifier_artifacts_memo,
@@ -975,7 +974,7 @@ def q_selection_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "stack(3, 'c', s_clf, 'd', s_dsir, 'q', q10) AS (m, s)",
     )
-    ranked, n3, ck = parallel_rank(
+    ranked, n3 = parallel_rank(
         spark,
         stacked,
         [F.col("m"), F.col("s").desc(), F.col("doc_id")],
@@ -1032,7 +1031,7 @@ def q_selection_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n") * (F.col("n") * F.col("n") - F.lit(1).cast("long")),
         F.lit(0).cast("long"),
     )
-    report = pairs.select(
+    return pairs.select(
         "method_a",
         "method_b",
         "n",
@@ -1054,7 +1053,6 @@ def q_selection_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(1000000.0)
         ).alias("topq_overlap"),
     )
-    return finalize_report(report, ck)
 
 
 # ---------------------------------------------------------------------------
@@ -1206,7 +1204,7 @@ def q_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     a global sort."""
     # checkpoint: the exact aggregate feeds BOTH the sketch build and
     # the top-k probe side — one corpus tokenize, not two.
-    tokcnt = _cms_tokcnt(spark, sf_dir).localCheckpoint(eager=False)
+    tokcnt = _cms_tokcnt(spark, sf_dir).transform(checkpoint)
     return _cms_report(tokcnt, _cms_cells(tokcnt))
 
 
@@ -1556,7 +1554,7 @@ def pq_build(
             ).alias("v_arr")
         )
         .repartition(shuffle_partitions(spark), "vec_id")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     m1, a2 = _pq_train(sub, pqv)
     return e, pqv, m1, a2
@@ -1747,7 +1745,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     build's own exact int64 L2 sums; ranking ties break on
     neighbor_id; the oracle replays the shared _pq_parts chain
     verbatim."""
-    _, qlut, codes = pq_search_parts(spark, sf_dir, checkpoint=False)
+    _, qlut, codes = pq_search_parts(spark, sf_dir, pinned=False)
     return _adc_rank_topk(
         F.broadcast(qlut)
         .join(codes, F.col("query_id") != F.col("vec_id"))
@@ -1756,12 +1754,12 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pq_search_parts(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
+    spark: SparkSession, sf_dir: str, pinned: bool = True
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(embeddings, qlut, codes): the ADC search-side artifacts from
     the shared PQ build — per-query LUT rows (query_id, sl) for the
     ADC_QUERY_FILTER subset and gathered per-vector code arrays
-    (vec_id, cvec). ``checkpoint=True`` for multi-consumer callers
+    (vec_id, cvec). ``pinned=True`` for multi-consumer callers
     (the recall audit reads both twice); single-scan callers pass
     False — materializing a once-read table is pure overhead."""
     e, pqv, m1, a2 = pq_build(spark, sf_dir)
@@ -1790,9 +1788,9 @@ def pq_search_parts(
             "transform(array_sort(collect_list(struct(s, c))), e -> e.c)"
         ).alias("cvec")
     )
-    if checkpoint:
-        qlut = qlut.localCheckpoint(eager=False)
-        codes = codes.localCheckpoint(eager=False)
+    if pinned:
+        qlut = checkpoint(qlut)
+        codes = checkpoint(codes)
     return e, qlut, codes
 
 
@@ -1810,7 +1808,7 @@ def pq_parts_memo(
         spark,
         sf_dir,
         "pq_parts",
-        lambda: pq_search_parts(spark, sf_dir, checkpoint=True),
+        lambda: pq_search_parts(spark, sf_dir, pinned=True),
     )
 
 
@@ -1924,21 +1922,19 @@ def ivf_pq_topk(
         parts
         if parts is not None
         # standalone: each artifact is read exactly once — no checkpoint
-        else pq_search_parts(spark, sf_dir, checkpoint=False)
+        else pq_search_parts(spark, sf_dir, pinned=False)
     )
     embq = (
         H.with_quantized_unit(e, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     # adaptive ⌈√n⌉ cells (memoized, shared with ivf_adaptive_topk and
     # SemDeDup) — see the seed-choice note above _IVFPQ_ORACLE
     k = int(math.ceil(math.sqrt(e.count())))
     seeded = e.withColumn("label", F.col("vec_id") % F.lit(k))
     cent = ivf_centroids_for(spark, sf_dir, e=seeded, embq=embq, variant=f"sqrt-k{k}")
-    scored = _score_centroids(embq, cent, max_rank=_IVF_NPROBE).localCheckpoint(
-        eager=False
-    )
+    scored = checkpoint(_score_centroids(embq, cent, max_rank=_IVF_NPROBE))
     assigned = scored.filter(F.col("rn") == 1).select("vec_id", "c_label")
     probes = scored.filter(
         F.expr(ADC_QUERY_FILTER) & (F.col("rn") <= _IVF_NPROBE)
@@ -2100,14 +2096,14 @@ FROM riranked WHERE rank <= {PQ_TOP_K}
 def ivfadc_residual_topk(
     spark: SparkSession,
     sf_dir: str,
-    checkpoint: bool = False,
+    pinned: bool = False,
     k: int = PQ_TOP_K,
     with_fullv: bool = False,
     nprobe: int = _IVF_NPROBE,
     scored_pairs: bool = False,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Residual-encoded IVFADC search; see q_ivfadc_residual_topk for
-    semantics. ``checkpoint=True`` hides the build behind lazy
+    semantics. ``pinned=True`` hides the build behind lazy
     localCheckpoints so a composing consumer's plan (the recall audit)
     stays Generate-free and never replays the build. ``k`` widens the
     per-query cut for shortlist consumers; ``with_fullv=True`` also
@@ -2133,16 +2129,14 @@ def ivfadc_residual_topk(
     embq = (
         H.with_quantized_unit(e, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     kcells = int(math.ceil(math.sqrt(e.count())))
     seeded = e.withColumn("label", F.col("vec_id") % F.lit(kcells))
     cent = ivf_centroids_for(
         spark, sf_dir, e=seeded, embq=embq, variant=f"sqrt-k{kcells}"
     )
-    scored = _score_centroids(embq, cent, max_rank=nprobe).localCheckpoint(
-        eager=False
-    )
+    scored = checkpoint(_score_centroids(embq, cent, max_rank=nprobe))
     assigned = scored.filter(F.col("rn") == 1).select("vec_id", "c_label")
     probes = scored.filter(
         F.expr(ADC_QUERY_FILTER) & (F.col("rn") <= nprobe)
@@ -2172,7 +2166,7 @@ def ivfadc_residual_topk(
         .join(F.broadcast(cent6), ["c_label", "s", "p"])
         .select("vec_id", "s", "p", (F.col("v6") - F.col("c6")).alias("v6"))
         # feeds the seed means, the refit means and the rqv gather
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     # repartition before the checkpoint: AQE would coalesce the
     # aggregate to ~1 partition and serialize the interpreted
@@ -2185,7 +2179,7 @@ def ivfadc_residual_topk(
             ).alias("v_arr")
         )
         .repartition(shuffle_partitions(spark), "vec_id")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     m1r, a2r = _pq_train(rsub, rqv)
     rcb1 = pq_codebook(m1r)
@@ -2228,9 +2222,9 @@ def ivfadc_residual_topk(
             "transform(array_sort(collect_list(struct(s, c))), e -> e.c)"
         ).alias("cvec")
     )
-    if checkpoint:
-        qclut = qclut.localCheckpoint(eager=False)
-        rcodes = rcodes.localCheckpoint(eager=False)
+    if pinned:
+        qclut = checkpoint(qclut)
+        rcodes = checkpoint(rcodes)
     cell_codes = assigned.join(rcodes, "vec_id")
     cand = (
         F.broadcast(probes)
@@ -2266,8 +2260,8 @@ def ivfadc_residual_topk(
             "transform(array_sort(collect_list(struct(s, p, v6))), e -> e.v6)"
         ).alias("v64")
     )
-    if checkpoint:
-        fullv = fullv.localCheckpoint(eager=False)
+    if pinned:
+        fullv = checkpoint(fullv)
     return top, fullv
 
 
@@ -2520,12 +2514,12 @@ def residual_artifacts_memo(
         sp, fullv = ivfadc_residual_topk(
             spark,
             sf_dir,
-            checkpoint=True,
+            pinned=True,
             with_fullv=True,
             nprobe=4,
             scored_pairs=True,
         )
-        return sp.localCheckpoint(eager=True), fullv.localCheckpoint(eager=True)
+        return checkpoint(sp, eager=True), checkpoint(fullv, eager=True)
 
     return artifact(spark, sf_dir, "residual_artifacts", build)
 
@@ -2704,7 +2698,7 @@ def q_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     short2 = level_cut(
         sp.filter(F.col("probe_rn") <= _IVF_NPROBE), RERANK_M
-    ).localCheckpoint(eager=False)  # coarse row + np2 rerank
+    ).transform(checkpoint)  # coarse row + np2 rerank
     ivfadc = short2.filter(F.col("rank") <= PQ_TOP_K)
     rerank = _pq_exact_rerank(short2, fullv)
     rerank4 = _pq_exact_rerank(level_cut(sp, RERANK_M), fullv)
@@ -2905,7 +2899,7 @@ def q_opq_permute_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "v6"
             ),
         )
-        .localCheckpoint(eager=False)  # keys + both layout trains
+        .transform(checkpoint)  # keys + both layout trains
     )
     dmean = sub0.groupBy("i0").agg(
         F.expr("CAST(floor(sum(v6) * 1.0 / count(*) + 0.5) AS BIGINT)").alias("m6")
@@ -2914,7 +2908,7 @@ def q_opq_permute_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         sub0.join(F.broadcast(dmean), "i0")
         .groupBy("i0")
         .agg(F.sum(F.abs(F.col("v6") - F.col("m6"))).cast("long").alias("mad_sum"))
-        .localCheckpoint(eager=False)  # both allocation tables
+        .transform(checkpoint)  # both allocation tables
     )
     wk = Window.orderBy(F.col("mad_sum").desc(), F.col("i0"))
     balloc = dkey.withColumn("rn", F.row_number().over(wk) - F.lit(1)).select(
@@ -2931,7 +2925,7 @@ def q_opq_permute_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def layout_row(name: str, alloc: DataFrame) -> DataFrame:
-        alloc = alloc.localCheckpoint(eager=False)  # train join + spread
+        alloc = checkpoint(alloc)  # train join + spread
         sub = sub0.join(F.broadcast(alloc), "i0").select("vec_id", "s", "p", "v6")
         pqv = (
             sub.groupBy("vec_id", "s")
@@ -2941,7 +2935,7 @@ def q_opq_permute_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("v_arr")
             )
             .repartition(shuffle_partitions(spark), "vec_id")
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
         m1, a2 = _pq_train(sub, pqv)
         rec = (

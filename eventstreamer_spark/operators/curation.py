@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
-from eventstreamer_spark.memo import artifact
+from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.operators.dedup import ngram_jaccard_pairs
 from eventstreamer_spark.operators.text import q_text_stats_quality
 from eventstreamer_spark.registry import query
@@ -459,9 +459,9 @@ def q_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (not inside substring_cover) because the r15 cap restructure
     # below gives it TWO consumers: the proxy-length rank and the
     # survivor text rebuild.
-    cover = substring_cover(tk).localCheckpoint(eager=True)
+    cover = substring_cover(tk).transform(checkpoint, eager=True)
 
-    capped = capped_survivors(d, tk, cover).localCheckpoint(eager=True)
+    capped = capped_survivors(d, tk, cover).transform(checkpoint, eager=True)
 
     # consumer-side session memo (owner semantic_dedup re-runs its own)
     assign = semdedup_assign_memo(spark, sf_dir)
@@ -472,7 +472,7 @@ def q_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         semdedup_cluster_pairs, "c_label int, vec_a long, vec_b long, cosine double"
     )
     sdrop = pairs.select(F.col("vec_b").alias("doc_id")).distinct()
-    semkept = capped.join(sdrop, "doc_id", "left_anti").localCheckpoint(eager=True)
+    semkept = capped.join(sdrop, "doc_id", "left_anti").transform(checkpoint, eager=True)
 
     # repartition before the retrain: AQE coalesces the small
     # anti-join output to ~1 partition, which would serialize the
@@ -780,7 +780,7 @@ def dsir_scores_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "dsir_scores",
-        lambda: dsir_doc_scores(spark, sf_dir).localCheckpoint(eager=False),
+        lambda: dsir_doc_scores(spark, sf_dir).transform(checkpoint),
     )
 
 
@@ -962,7 +962,7 @@ def q_selection_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .select("doc_id", "source")
-        .localCheckpoint(eager=False)  # read by the gate join AND the funnel count
+        .transform(checkpoint)  # read by the gate join AND the funnel count
     )
     feats, _lab, wts = classifier_artifacts_memo(spark, sf_dir)
     clf = ridge_scores(spark, sf_dir, wts, feats=feats)

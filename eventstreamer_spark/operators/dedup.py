@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
-from eventstreamer_spark.memo import artifact
+from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.scratch import session_dir, tempdir
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
@@ -298,7 +298,7 @@ def shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.select("doc_id", H.tokens_expr("text").alias("toks"))
             .select("doc_id", H.shingles_from_tokens_expr("toks").alias("sh"))
             .filter(F.size("sh") > 0)
-            .localCheckpoint(eager=True)
+            .transform(checkpoint, eager=True)
         )
 
     return artifact(spark, sf_dir, "shingled_docs", build)
@@ -326,7 +326,7 @@ def _memoized_pairs(
     re-runs its pipeline): first call per (app, sf_dir, kind) runs the
     distributed build and checkpoints the result."""
     return artifact(
-        spark, sf_dir, f"pairs:{kind}", lambda: build().localCheckpoint(eager=True)
+        spark, sf_dir, f"pairs:{kind}", lambda: build().transform(checkpoint, eager=True)
     )
 
 
@@ -407,7 +407,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """
     d = docs.select("doc_id", H.tokens_expr("text").alias("toks")).select(
         "doc_id", H.shingles_from_tokens_expr("toks").alias("sh")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     inv_all = d.select("doc_id", F.explode_outer("sh").alias("shingle")).filter(
         F.col("shingle").isNotNull()  # explode_outer: see minhash note
     )
@@ -564,7 +564,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "simhash",
             F.expr("CAST(conv(simhash, 2, 10) AS BIGINT)").alias("sim_int"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     # explode_outer + isNotNull: plain explode triggers
     # InferFiltersFromGenerate re-inlining (see minhash note)
@@ -634,7 +634,7 @@ def q_simhash_multiblock_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "simhash",
             F.expr("CAST(conv(simhash, 2, 10) AS BIGINT)").alias("sim_int"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     keyed = sims.select(
         "doc_id",
@@ -836,7 +836,7 @@ def embedding_prefiltered_pairs(
     e = (
         H.with_quantized_unit(raw, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq", H.srp_band_buckets_expr("uq").alias("bands"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     keyed = e.select(
         "vec_id", F.posexplode("bands").alias("band", "bits")
@@ -1062,11 +1062,9 @@ def connected_components(
     sym = (
         edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionAll(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
-    labels = vertices.select("doc_id", F.col("doc_id").alias("comp")).localCheckpoint(
-        eager=False
-    )
+    labels = checkpoint(vertices.select("doc_id", F.col("doc_id").alias("comp")))
     for _ in range(max_iters):
         cand = (
             sym.join(labels.withColumnRenamed("doc_id", "src"), "src")
@@ -1085,7 +1083,7 @@ def connected_components(
                 "comp",
             )
             .select("doc_id", F.col("pcomp").alias("comp"))
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
         converged = (
             jumped.withColumnRenamed("comp", "comp_new")
@@ -1619,7 +1617,7 @@ def q_ingest_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("band_key").isNotNull())
         .withColumn("t", (F.col("doc_id") % _IDX_MAINT_BATCHES).cast("int"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint, eager=True)
     )
     with tempdir("es_bandindex_") as root:
         empty = spark.createDataFrame(
@@ -1718,7 +1716,7 @@ def q_ingest_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             # must both be eager or straggler task completions outlive
             # the truncated lineage (benign-but-noisy accumulator
             # ERRORs from the DAGScheduler).
-            dec_m = dec.localCheckpoint(eager=True)
+            dec_m = checkpoint(dec, eager=True)
             dec_logs.append(dec_m)
             accepted_bands = batch.join(
                 dec_m.filter(F.col("decision") == "ingest").select("doc_id"),
@@ -1998,7 +1996,7 @@ def _para_blocks(docs: DataFrame) -> DataFrame:
             "ptoks",
         )
         # the rewrite reads this twice (flag chain + text rebuild)
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
 
 
@@ -2012,7 +2010,7 @@ def _para_flags(blocks: DataFrame) -> DataFrame:
         .select("doc_id", "pk", "ptoks", F.expr("md5(array_join(ptoks, ' '))").alias("h"))
         # feeds the exact digest aggregate, the signature pass and the
         # per-paragraph flag join — one block explode, three consumers
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     firsts = paras.groupBy("h").agg(F.min("pk").alias("first_pk"))
     sigs = paras.select(

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
 from eventstreamer_spark.functions import numeric as N
-from eventstreamer_spark.memo import artifact
+from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.scratch import drip_stream
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
@@ -457,7 +457,7 @@ def substring_cover(tk: DataFrame) -> DataFrame:
         # for the corpus_build rew+cap stage). The checkpoint is
         # O(corpus token positions): shuffle-sized, the same order as
         # the distinct/join shuffles it feeds.
-        .localCheckpoint(eager=True)
+        .transform(checkpoint, eager=True)
     )
     freq = (
         occ.select("doc_id", "span")
@@ -948,7 +948,7 @@ def q_domain_shift_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ebg = (
         bg.groupBy("source", "prefix", "next_token")
         .agg(F.count(F.lit(1)).cast("long").alias("n_occ"))
-        .localCheckpoint(eager=False)  # model AND eval sides read it
+        .transform(checkpoint)  # model AND eval sides read it
     )
     cab = ebg.select(
         F.col("source").alias("ts"), "prefix", "next_token",
@@ -1101,7 +1101,7 @@ def bm25_parts(
         # EAGER: feeds df, query terms, AND the postings join — the lazy
         # variant re-entered the tokenize+explode+agg chain per consumer
         # (the same lazy-ckpt pattern measured losing in corpus_build)
-        .localCheckpoint(eager=True)
+        .transform(checkpoint, eager=True)
     )
     # dlen == sum of term frequencies, so doc lengths come from the
     # checkpointed postings — the corpus never tokenizes a second time.
@@ -1196,8 +1196,8 @@ def bm25_serving_index_memo(
     def build() -> tuple[DataFrame, DataFrame]:
         tf, dl, qt = bm25_parts(spark, sf_dir)
         return (
-            tf.join(dl, "doc_id").localCheckpoint(eager=True),
-            qt.localCheckpoint(eager=False),
+            tf.join(dl, "doc_id").transform(checkpoint, eager=True),
+            checkpoint(qt),
         )
 
     return artifact(spark, sf_dir, "bm25_serving_index", build)
@@ -1405,18 +1405,18 @@ def q_domain_excess_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p"),
         )
         .select("source", "p.prefix", "p.next_token")
-        .localCheckpoint(eager=False)  # bigram + vocab branches
+        .transform(checkpoint)  # bigram + vocab branches
     )
     ebg = (
         ev.filter(F.col("next_token").isNotNull())
         .groupBy("source", "prefix", "next_token")
         .agg(F.count(F.lit(1)).cast("long").alias("n_occ"))
-        .localCheckpoint(eager=False)  # global + self + scoring sides
+        .transform(checkpoint)  # global + self + scoring sides
     )
     sw = (
         ev.select("source", F.col("prefix").alias("word"))
         .distinct()
-        .localCheckpoint(eager=False)  # per-source + global vocab
+        .transform(checkpoint)  # per-source + global vocab
     )
     gab = ebg.groupBy("prefix", "next_token").agg(
         F.sum("n_occ").cast("long").alias("cab")
@@ -1584,7 +1584,7 @@ def retriever_lists_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "retriever_lists",
-        lambda: _retriever_lists(spark, sf_dir).localCheckpoint(eager=False),
+        lambda: _retriever_lists(spark, sf_dir).transform(checkpoint),
     )
 
 
@@ -1675,7 +1675,7 @@ def q_stream_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.expr(f"element_at({lits}, CAST(rank AS INT))").alias("rrf_g"),
         )
-        .localCheckpoint(eager=True)
+        .transform(checkpoint, eager=True)
     )
 
     with drip_stream(
@@ -1848,7 +1848,7 @@ def q_rrf_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         # feeds every Lloyd scoring pass AND the probe/assign pass —
         # without the checkpoint a centroid-memo miss re-quantizes the
         # corpus once per iteration (the q_ivf_topk_search contract)
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     ivf = ivf_topk(
         raw,
@@ -1858,7 +1858,7 @@ def q_rrf_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists = (
         retriever_lists_memo(spark, sf_dir)
         .unionByName(ivf)
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     lev = spark.createDataFrame([(k,) for k in RRF_K_LEVELS], "rrf_k int")
     case = _rrf_k_case(
@@ -1883,7 +1883,7 @@ def q_rrf_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("rrf_k", "query_id", "doc_id", "n_lists")
         # bounded (|K|·q·k rows); read twice — per-K report + the
         # K=60 baseline for the set-delta column
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     base = top.filter(F.col("rrf_k") == 60).select(
         "query_id", "doc_id", F.lit(1).cast("long").alias("in_base")

@@ -37,7 +37,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from eventstreamer_spark.memo import artifact, free_local_checkpoint
+from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.operators.ranks import (
     RANK_NPART,
     parallel_rank,
@@ -60,7 +60,7 @@ LAYOUT_NPART = RANK_NPART  # range partitions for the parallel exact rank
 def _range_staged(df: DataFrame, order_cols: list[str]) -> DataFrame:
     """The rank's exchange stage (see ranks.range_staged), kept under
     its layout name so the plan test can pin the RangePartitioning
-    shape (the eager checkpoint in parallel_ntile collapses it to a
+    shape (the checkpoint in parallel_ntile collapses it to a
     LogicalRDD in the downstream plan)."""
     return range_staged(df, order_cols)
 
@@ -71,7 +71,7 @@ def parallel_ntile(
     order_cols: list[str],
     n_buckets: int,
     bucket_col: str = "f",
-) -> tuple[DataFrame, int, DataFrame]:
+) -> tuple[DataFrame, int]:
     """Exact ntile(``n_buckets``) over a total order with NO
     no-partition window: bucket == ``(row_number() OVER (ORDER BY
     order_cols) - 1) * n_buckets DIV n`` — the formula value oracles
@@ -80,14 +80,13 @@ def parallel_ntile(
     (range exchange + per-partition ``_pid`` windows + bounded
     ≤ RANK_NPART-row offset collect).
 
-    Returns (bucketed_df, n_rows, checkpoint_handle); the caller frees
-    the checkpoint via ``free_local_checkpoint`` once consumed.
+    Returns (bucketed_df, n_rows).
     """
-    ranked, n, d = parallel_rank(spark, df, order_cols)
+    ranked, n = parallel_rank(spark, df, order_cols)
     bucketed = ranked.withColumn(
         bucket_col, F.expr(f"CAST(((_rank - 1) * {n_buckets}) DIV {n} AS INT)")
     ).drop("_rank")
-    return bucketed, n, d
+    return bucketed, n
 
 
 # ---------------------------------------------------------------------------
@@ -191,7 +190,7 @@ def _write_layouts(spark: SparkSession, sf_dir: str) -> dict:
         ("linear", ["l_orderkey", "l_linenumber"]),
         ("zorder", ["morton", "l_orderkey", "l_linenumber"]),
     ):
-        bucketed, n, ckpt = parallel_ntile(spark, base, order, ZORDER_FILES)
+        bucketed, n = parallel_ntile(spark, base, order, ZORDER_FILES)
         (
             bucketed.select(
                 "f", "qx", "qy", "l_partkey", "l_orderkey", "l_linenumber", "morton"
@@ -202,7 +201,6 @@ def _write_layouts(spark: SparkSession, sf_dir: str) -> dict:
             .partitionBy("f")
             .parquet(f"{root}/{name}")
         )
-        free_local_checkpoint(ckpt)
     return {
         "root": root,
         "linear": f"{root}/linear",
@@ -391,7 +389,7 @@ def q_zorder_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # store rmtree's on eviction — a handle held across that eviction
     # would read deleted paths. Same lifecycle as the
     # compaction/partition audits.
-    return report.localCheckpoint(eager=True)
+    return checkpoint(report, eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -601,7 +599,7 @@ def q_bloom_file_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Eager 3-row checkpoint (ADVICE r13): see q_zorder_pruning_audit —
     # don't hold a lazy read over store-owned paths.
-    return report.localCheckpoint(eager=True)
+    return checkpoint(report, eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -772,7 +770,7 @@ def q_compaction_bin_packing_audit(spark: SparkSession, sf_dir: str) -> DataFram
     )
     # 2-row report, eagerly checkpointed: the result must not lazily
     # depend on paths a later invocation overwrites in place.
-    return report.localCheckpoint(eager=True)
+    return checkpoint(report, eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -961,7 +959,7 @@ def q_partition_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 4-row report, eagerly checkpointed: the result must not lazily
     # depend on paths a later invocation overwrites in place.
-    return report.localCheckpoint(eager=True)
+    return checkpoint(report, eager=True)
 
 
 # ---------------------------------------------------------------------------

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
-from eventstreamer_spark.memo import artifact
+from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.scratch import drip_stream
 from eventstreamer_spark.session import shuffle_partitions
@@ -226,7 +226,7 @@ def _doc_features(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
         docs.select("doc_id", F.explode(H.tokens_expr("text")).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     stats = tokcnt.groupBy("doc_id").agg(
         F.sum("cnt").cast("long").alias("n_toks"),
@@ -236,7 +236,7 @@ def _doc_features(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
         docs.select("doc_id")
         .join(stats, "doc_id", "left")
         .select("doc_id", F.expr(_LABEL_CASE).cast("int").alias("y"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     feat = (
         tokcnt.groupBy("doc_id", F.expr(_BUCKET_SPARK).alias("b"))
@@ -256,7 +256,7 @@ def _doc_features(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
         feat.groupBy("doc_id")
         .agg(F.collect_list(F.struct("b", "x")).alias("fs"))
         .repartition(shuffle_partitions(spark), "doc_id")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     return feats, lab
 
@@ -674,7 +674,7 @@ def q_isotonic_calibration_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("sn"),
             F.sum("y").cast("long").alias("sy"),
         )
-        .localCheckpoint(eager=False)  # <= B rows; feeds 3 tiny consumers
+        .transform(checkpoint)  # <= B rows; feeds 3 tiny consumers
     )
     a = binagg.select(F.col("bin").alias("i"))
     b = binagg.select(F.col("bin").alias("j"))

@@ -13,8 +13,8 @@ can migrate to the same proven plan:
   1. ``repartitionByRange`` on the order columns — the distributed
      sort exchange; partition i's rows all precede partition i+1's by
      the range-partitioner contract.
-  2. ONE eager ``localCheckpoint`` to pin partition ids between the
-     two passes (range boundary sampling is not re-run).
+  2. ONE ``memo.checkpoint`` to pin partition ids between the two
+     passes (range boundary sampling is not re-run).
   3. A BOUNDED (≤ RANK_NPART-row) per-partition count collect for the
      prefix offsets — the only driver-side collect, 32 rows max.
   4. Per-partition ``row_number`` windows (parallel, every windowspec
@@ -24,10 +24,10 @@ The exact SQL ``ntile(k)`` bucket (first ``n mod k`` buckets one row
 larger) is then a pure expression of the global rank (``ntile_expr``),
 so migrated queries keep their ntile-based DuckDB oracles unchanged.
 
-Lifecycle: ``parallel_rank`` returns the checkpoint handle; query-tier
-callers shrink to their few-row report, eagerly checkpoint it with
-``finalize_report`` and free the corpus-sized intermediate — the same
-small-report pattern as the layout audits (ADVICE r12/r13).
+Lifecycle: the rank checkpoint belongs to the caller's checkpoint
+owner (memo.checkpoint): an artifact build or a ``run_query`` frees
+it; on the plain driver path Spark's ContextCleaner does. Query-tier
+callers return their few-row report lazily.
 
 No reference parity: avodovnik/eventstreamer has no ranking operator
 at all (its only ordering is a per-batch in-memory OrderBy,
@@ -41,7 +41,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from eventstreamer_spark.memo import free_local_checkpoint
+from eventstreamer_spark.memo import checkpoint
 from eventstreamer_spark.session import env_int
 
 # Cap on range partitions for the parallel exact rank; env-overridable
@@ -77,7 +77,7 @@ def _as_cols(order: list[str | Column]) -> list[Column]:
 
 def range_staged(df: DataFrame, order: list[str | Column]) -> DataFrame:
     """The rank's exchange stage, factored out so plan tests can pin
-    the RangePartitioning shape (the eager checkpoint in parallel_rank
+    the RangePartitioning shape (the checkpoint in parallel_rank
     collapses it to a LogicalRDD in the downstream plan). ``order``
     entries may carry sort direction (``F.col(x).desc()``)."""
     cols = _as_cols(order)
@@ -91,16 +91,14 @@ def parallel_rank(
     df: DataFrame,
     order: list[str | Column],
     rank_col: str = "_rank",
-) -> tuple[DataFrame, int, DataFrame]:
+) -> tuple[DataFrame, int]:
     """Exact global ``row_number() OVER (ORDER BY order)`` (1-based,
     in ``rank_col``) with NO no-partition window, computed in parallel
     via range exchange + per-partition windows + a bounded
     (≤ RANK_NPART)-row offset collect. ``order`` must be a total order
     (unique tie-break) or ranks are nondeterministic.
 
-    Returns (ranked_df, n_rows, checkpoint_handle); the caller frees
-    the checkpoint via ``free_local_checkpoint`` once consumed
-    (``finalize_report`` bundles that for small-report queries).
+    Returns (ranked_df, n_rows).
     """
     # LAZY checkpoint: the counts collect right below is the first
     # action, so it materializes the range exchange AND persists the
@@ -109,14 +107,13 @@ def parallel_rank(
     # optimization guide §2.4 "remove shuffles/passes outright").
     # Partition ids are pinned identically either way: the boundary
     # sampling runs once, in whichever job first computes the RDD.
-    d = range_staged(df, order).localCheckpoint(eager=False)
+    d = checkpoint(range_staged(df, order))
     counts = {
         r["_pid"]: r["cnt"]
         for r in d.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
     n = sum(counts.values())
     if n == 0:
-        free_local_checkpoint(d)
         raise ValueError("parallel_rank: empty input")
     offs, acc = [], 0
     for pid in sorted(counts):
@@ -129,7 +126,7 @@ def parallel_rank(
         .withColumn(rank_col, F.row_number().over(w).cast("long") + F.col("_off"))
         .drop("_pid", "_off")
     )
-    return ranked, n, d
+    return ranked, n
 
 
 def ntile_expr(rank_col: str, n: int, k: int) -> Column:
@@ -146,14 +143,3 @@ def ntile_expr(rank_col: str, n: int, k: int) -> Column:
         f" THEN ({rank_col} - 1) DIV {q + 1}"
         f" ELSE {m} + ({rank_col} - 1 - {m * (q + 1)}) DIV {q} END + 1"
     )
-
-
-def finalize_report(report: DataFrame, *intermediates: DataFrame) -> DataFrame:
-    """Eagerly checkpoint a FEW-ROW report, then free the corpus-sized
-    rank checkpoints it consumed — the layout-audit small-report
-    lifecycle (the returned handle is rows-scale tiny and independent
-    of the freed blocks, so callers can collect it any time later)."""
-    out = report.localCheckpoint(eager=True)
-    for d in intermediates:
-        free_local_checkpoint(d)
-    return out

@@ -19,11 +19,7 @@ from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.functions.casting import fmt_ts
-from eventstreamer_spark.operators.ranks import (
-    finalize_report,
-    ntile_expr,
-    parallel_rank,
-)
+from eventstreamer_spark.operators.ranks import ntile_expr, parallel_rank
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.sources.tables import load_events, load_table
 
@@ -432,14 +428,13 @@ def q_ntile_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort (migrated r14, VERDICT r13 item 1): parallel_rank's range
     exchange + _pid-partitioned windows assign the exact global rank,
     ntile_expr recovers SQL ntile(4)'s first-m-buckets-larger split
-    bit-identically (oracle unchanged), and the 4-row report is
-    eagerly checkpointed so the rank checkpoint frees immediately."""
+    bit-identically (oracle unchanged) in a 4-row report."""
     c = load_table(spark, sf_dir, "customer")
     c2 = c.select(
         "c_acctbal", F.round(F.col("c_acctbal"), 2).alias("bal2"), "c_custkey"
     )
-    ranked, n, ck = parallel_rank(spark, c2, ["bal2", "c_custkey"])
-    report = (
+    ranked, n = parallel_rank(spark, c2, ["bal2", "c_custkey"])
+    return (
         ranked.select(
             "c_acctbal", ntile_expr("_rank", n, 4).cast("long").alias("bucket")
         )
@@ -450,7 +445,6 @@ def q_ntile_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("c_acctbal"), 6).alias("max_bal"),
         )
     )
-    return finalize_report(report, ck)
 
 
 # ---------------------------------------------------------------------------

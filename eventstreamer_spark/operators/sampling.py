@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
-from eventstreamer_spark.operators.ranks import finalize_report, parallel_rank
+from eventstreamer_spark.memo import checkpoint
+from eventstreamer_spark.operators.ranks import parallel_rank
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
 
@@ -858,7 +859,7 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     embq = (
         H.with_quantized_unit(e, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     cent = ivf_centroids_for(spark, sf_dir, e=seeded, embq=embq, variant=f"sqrt-k{k}")
     asg = _score_centroids(embq, cent).select("vec_id", "c_label", "cosine")
@@ -1065,8 +1066,7 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a driver literal from the same bounded offset collect. The
     4-config fanout multiplies doc-COUNT rows (id + int), never text;
     per-batch stats aggregate at (cfg, bucket, batch) grain with
-    map-side combine, the final table is 4 rows and is eagerly
-    checkpointed so the rank checkpoint frees immediately.
+    map-side combine, the final table is 4 rows.
     Exactness: integer token counts, rank*k DIV n bucket split,
     md5-ordered in-bucket shuffle (bit-identical in both engines),
     DIV-based batch grouping, integer pad sums, 1e-6 floor-rounded
@@ -1075,7 +1075,7 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = d.select(
         "doc_id", F.size(H.tokens_expr("text")).cast("long").alias("n_tokens")
     )
-    ranked, n, ck = parallel_rank(spark, sized, ["n_tokens", "doc_id"])
+    ranked, n = parallel_rank(spark, sized, ["n_tokens", "doc_id"])
     cfgs = "array({})".format(", ".join(str(k) for k in _LB_CONFIGS))
     cfg = ranked.select(
         "doc_id",
@@ -1093,7 +1093,7 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.max("n_tokens") * F.count(F.lit(1))).cast("long").alias("padded_toks"),
         F.sum("n_tokens").cast("long").alias("toks"),
     )
-    report = per_batch.groupBy("k").agg(
+    return per_batch.groupBy("k").agg(
         F.count(F.lit(1)).cast("long").alias("n_batches"),
         F.sum("toks").cast("long").alias("total_tokens"),
         (F.sum("padded_toks") - F.sum("toks")).cast("long").alias("pad_tokens"),
@@ -1113,4 +1113,3 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pad_tokens",
         "pad_share",
     )
-    return finalize_report(report, ck)

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
-from eventstreamer_spark.memo import artifact
+from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.scratch import drip_stream
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
@@ -106,7 +106,7 @@ def brute_truth_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             brute_topk(prepared)
             .select("query_id", "neighbor_id", "rank")
-            .localCheckpoint(eager=True)
+            .transform(checkpoint, eager=True)
         )
 
     return artifact(spark, sf_dir, "brute_truth", build)
@@ -445,7 +445,7 @@ def ivf_centroids_iterated(
         embq = (
             H.with_quantized_unit(e, "embedding", "uq")
             .select("vec_id", "uq")
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
     # The iteration table: embq's exact row set (filters/samples the
     # caller applied stay binding) joined back to the raw components —
@@ -454,7 +454,7 @@ def ivf_centroids_iterated(
     itbl = (
         embq.select("vec_id", "uq")
         .join(e.select("vec_id", F.expr(_V6_ARR_S).alias("v6")), "vec_id")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     mean_c = (
         F.floor(
@@ -583,7 +583,7 @@ def q_ivf_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     embq = (
         H.with_quantized_unit(e, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     cent = ivf_centroids_for(spark, sf_dir, e=e, embq=embq)
     best = _score_centroids(embq, cent).join(e.select("vec_id", "label"), "vec_id")
@@ -669,7 +669,7 @@ def q_ivf_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         H.with_quantized_unit(e, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq")
         # feeds the centroid iterations AND the final probe/assign pass
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     return ivf_topk(e, embq, cent=ivf_centroids_for(spark, sf_dir, e=e, embq=embq))
 
@@ -681,7 +681,7 @@ def ivf_topk(e: DataFrame, embq: DataFrame, cent: DataFrame | None = None) -> Da
     an already-built (e.g. memoized) centroid table."""
     if cent is None:
         cent = ivf_centroids_iterated(e, embq=embq)
-    scored = _score_centroids(embq, cent, max_rank=NPROBE).localCheckpoint(eager=False)
+    scored = _score_centroids(embq, cent, max_rank=NPROBE).transform(checkpoint)
     assigned = scored.filter(F.col("rn") == 1).select("vec_id", "uq", "c_label")
     probes = scored.filter(F.expr(QUERY_FILTER) & (F.col("rn") <= NPROBE)).select(
         F.col("vec_id").alias("query_id"), F.col("uq").alias("q_uq"), "c_label"
@@ -811,7 +811,7 @@ def q_graded_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepared = (
         H.with_quantized_unit(raw, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq", H.srp_bucket_expr("embedding").alias("bucket"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     # the exact truth comes from the consumer-side session artifact
     # (r14 optimization — built from the IDENTICAL prepared expression;
@@ -942,7 +942,7 @@ def q_ivf_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     embq = (
         H.with_quantized_unit(e, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     cent = ivf_centroids_for(
         spark, sf_dir, e=seeded, embq=embq, variant=f"sqrt-k{k}"
@@ -1043,7 +1043,7 @@ def q_sampled_centroid_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     embq_all = (
         H.with_quantized_unit(e, "embedding", "uq")
         .select("vec_id", "uq")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     k = int(math.ceil(math.sqrt(embq_all.count())))
     embq = embq_all.filter(F.expr("uq[0] IS NOT NULL"))
@@ -1171,7 +1171,7 @@ def q_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepared = (
         H.with_quantized_unit(raw, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq", H.srp_bucket_expr("embedding").alias("bucket"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     # the exact truth comes from the consumer-side session artifact
     # (r14 optimization — built from the IDENTICAL prepared expression;
@@ -1307,7 +1307,7 @@ def q_ann_recall_fixed_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepared = (
         H.with_quantized_unit(raw, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq", H.srp_bucket_expr("embedding").alias("bucket"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     probes = (
         prepared.orderBy(
@@ -1319,7 +1319,7 @@ def q_ann_recall_fixed_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("uq").alias("q_uq"),
             F.col("bucket").alias("q_bucket"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     brute = (
         _ranked_topk(
@@ -1332,7 +1332,7 @@ def q_ann_recall_fixed_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .select("query_id", "neighbor_id", "rank")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     lsh = _ranked_topk(
         F.broadcast(
@@ -1477,7 +1477,7 @@ def semdedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     embq = (
         H.with_quantized_unit(e, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     cent = ivf_centroids_for(
         spark, sf_dir, e=seeded, embq=embq, variant=f"sqrt-k{k}"
@@ -1500,7 +1500,7 @@ def semdedup_assign_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "semdedup_assign",
-        lambda: semdedup_assign(spark, sf_dir).localCheckpoint(eager=True),
+        lambda: semdedup_assign(spark, sf_dir).transform(checkpoint, eager=True),
     )
 
 
@@ -1834,12 +1834,12 @@ def q_funnel_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepared = (
         H.with_quantized_unit(raw, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     brute = (
         brute_topk(prepared)
         .select("query_id", "neighbor_id", "rank")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     total = brute.agg(
         F.count(F.lit(1)).alias("total"),
@@ -1925,7 +1925,7 @@ def q_stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             drop_zero_norm=True,
         )
         .select("vec_id", "uq", H.srp_bucket_expr("embedding").alias("bucket"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     queries_df = prepared.filter(F.expr(QUERY_FILTER))
 
@@ -2248,7 +2248,7 @@ def _staleness_parts(
     embq_all = (
         H.with_quantized_unit(e, "embedding", "uq")
         .select("vec_id", "uq")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     kf = int(math.ceil(math.sqrt(embq_all.count())))  # one k for both variants
     embq_full = embq_all.filter(F.expr("uq[0] IS NOT NULL"))
@@ -2347,9 +2347,7 @@ def q_ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cent_stale, n_cells_stale = f_stale.result()
         cent_fresh, n_cells_fresh = f_fresh.result()
-    truth = brute_topk(embq_full).select("query_id", "neighbor_id").localCheckpoint(
-        eager=False
-    )
+    truth = checkpoint(brute_topk(embq_full).select("query_id", "neighbor_id"))
 
     # ONE assembly job: both searches union under a variant tag, ONE
     # truth join grouped by variant, and the shared n_truth rides a
@@ -2482,7 +2480,7 @@ def q_index_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = (
         brute_topk(embq_full)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
 
     def hits_of(cent: DataFrame) -> int:
@@ -2625,7 +2623,7 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     embq_all = (
         H.with_quantized_unit(e, "embedding", "uq")
         .select("vec_id", "uq")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     kf = int(math.ceil(math.sqrt(embq_all.count())))
     embq = embq_all.filter(F.expr("uq[0] IS NOT NULL"))
@@ -2642,9 +2640,7 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         embq=embq,
         variant=f"sqrt-k{kf}",
     )
-    scored = _score_centroids(embq, cent, max_rank=max(_SWEEP_LEVELS)).localCheckpoint(
-        eager=False
-    )
+    scored = checkpoint(_score_centroids(embq, cent, max_rank=max(_SWEEP_LEVELS)))
     asg = scored.filter(F.col("rn") == 1).select("vec_id", "uq", "c_label")
     prb = scored.filter(
         F.expr(QUERY_FILTER) & (F.col("rn") <= max(_SWEEP_LEVELS))
@@ -2663,7 +2659,7 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("neighbor_id"),
             F.round(H.qcosine_expr("q_uq", "uq"), 5).alias("cosine"),
         )
-        .localCheckpoint(eager=False)  # four sweep levels re-read it
+        .transform(checkpoint)  # four sweep levels re-read it
     )
     lv = spark.createDataFrame([(p,) for p in _SWEEP_LEVELS], "nprobe long")
     leveled = cand.join(F.broadcast(lv), F.col("probe_rn") <= F.col("nprobe"))

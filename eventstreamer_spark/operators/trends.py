@@ -28,11 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from eventstreamer_spark.operators.ranks import (
-    finalize_report,
-    ntile_expr,
-    parallel_rank,
-)
+from eventstreamer_spark.operators.ranks import ntile_expr, parallel_rank
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.sources.tables import load_events, load_table
 
@@ -266,14 +262,13 @@ def q_decile_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     no row ever passes through a single-task sort — with the exact
     SQL ntile(10) split recovered from the global rank by ntile_expr,
     so the oracle is unchanged. The grand total is a broadcast 1-row
-    crossJoin (bounded-stats pattern), the share divides two exact
-    int64 sums, and the 10-row report is eagerly checkpointed so the
-    corpus-sized rank checkpoint frees immediately."""
+    crossJoin (bounded-stats pattern) and the share divides two exact
+    int64 sums."""
     ev = load_events(spark, sf_dir)
     tv = ev.groupBy("user_id").agg(
         F.sum(F.round(F.col("value") * 1000000, 0).cast("long")).alias("units")
     )
-    ranked, n, ck = parallel_rank(
+    ranked, n = parallel_rank(
         spark, tv, [F.col("units").desc(), F.col("user_id")]
     )
     per = (
@@ -285,7 +280,7 @@ def q_decile_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tot = per.agg(F.sum("decile_units").alias("tot"))
-    report = per.crossJoin(F.broadcast(tot)).select(
+    return per.crossJoin(F.broadcast(tot)).select(
         "decile",
         "n_users",
         (F.col("decile_units") / 1000000.0).alias("decile_value"),
@@ -293,7 +288,6 @@ def q_decile_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("decile_units").cast("double") / F.col("tot").cast("double"), 6
         ).alias("value_share"),
     )
-    return finalize_report(report, ck)
 
 
 # ---------------------------------------------------------------------------
@@ -336,13 +330,12 @@ def q_gini_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (found by the first-ever scale run of this query, r14). Per-row
     products stay ≤ 10²⁵ (i ≤ 10¹³ users, units ≤ 10¹⁸), inside the
     decimal(37,0) product type. The one float expression is written
-    identically on both engines, and the 1-row report is eagerly
-    checkpointed so the rank checkpoint frees immediately."""
+    identically on both engines."""
     ev = load_events(spark, sf_dir)
     tv = ev.groupBy("user_id").agg(
         F.sum(F.round(F.col("value") * 1000000, 0).cast("long")).alias("units")
     )
-    ranked, _, ck = parallel_rank(
+    ranked, _ = parallel_rank(
         spark, tv, [F.col("units").asc(), F.col("user_id").asc()], rank_col="i"
     )
     n = F.count(F.lit(1))
@@ -350,7 +343,7 @@ def q_gini_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     siu = F.sum(
         F.col("i").cast("decimal(18,0)") * F.col("units").cast("decimal(18,0)")
     )
-    report = ranked.agg(
+    return ranked.agg(
         n.alias("n_users"),
         (su / 1000000.0).alias("total_value"),
         F.round(
@@ -362,7 +355,6 @@ def q_gini_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("gini"),
     )
-    return finalize_report(report, ck)
 
 
 # ---------------------------------------------------------------------------

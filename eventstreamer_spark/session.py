@@ -98,15 +98,6 @@ def configure(spark: SparkSession) -> SparkSession:
     and the package's parent dir is appended to the Python workers'
     ``PYTHONPATH`` (kept after any entry already there).
     """
-    env = spark.sparkContext.environment
-    worker_path = env.get("PYTHONPATH")
-    if not worker_path:
-        env["PYTHONPATH"] = _PACKAGE_PARENT
-    elif _PACKAGE_PARENT not in worker_path.split(os.pathsep):
-        env["PYTHONPATH"] = worker_path + os.pathsep + _PACKAGE_PARENT
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
     # Size shuffle/state partitions to the actual parallelism: batch
     # queries are insulated by AQE coalescing either way, but a
     # streaming query pins its state-store partition count from this
@@ -116,18 +107,29 @@ def configure(spark: SparkSession) -> SparkSession:
     # knob that sizes per-task hash-agg/join state, so a scaled-up run
     # on a fixed heap raises it instead of raising the heap (the same
     # sizing any real deployment does; the x100 replica runs at the
-    # DEFAULT heap with 256 partitions where 8 OOMs).
-    override = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        override or str(max(spark.sparkContext.defaultParallelism, 8)),
+    # DEFAULT heap with 256 partitions where 8 OOMs). Read before any
+    # conf is set, so a bad value changes nothing.
+    partitions = env_int(
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+        max(spark.sparkContext.defaultParallelism, 8),
     )
+    env = spark.sparkContext.environment
+    worker_path = env.get("PYTHONPATH")
+    if not worker_path:
+        env["PYTHONPATH"] = _PACKAGE_PARENT
+    elif _PACKAGE_PARENT not in worker_path.split(os.pathsep):
+        env["PYTHONPATH"] = worker_path + os.pathsep + _PACKAGE_PARENT
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     # Input-split sizing, the map-side twin of the shuffle knob: a
     # single large parquet read as 128 MB splits hands each task a
     # ~100k+-doc partial hash-agg map, which is what actually OOMs a
     # small-heap session at x100 (AGGREGATE_OUT_OF_MEMORY in codegen
     # stage 1, before any shuffle). Smaller splits = smaller per-task
-    # partial maps, same total work.
+    # partial maps, same total work. A byte string ("16m"), so Spark
+    # itself rejects a bad value here (INVALID_CONF_VALUE).
     split = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
     if split:
         spark.conf.set("spark.sql.files.maxPartitionBytes", split)

@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.functions.casting import fmt_ts, round6
 from eventstreamer_spark.operators.windowed import tumbling_stats
-from eventstreamer_spark.memo import artifact
+from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.obs import note_triggers
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.scratch import drip_stream, session_dir, tempdir
@@ -122,11 +122,11 @@ def run_to_memory(
     (HDFSBacked) provider with a modest partition count: opening and
     checkpointing 32+ RocksDB instances per stateful stage dominates a
     one-batch query (measured 12.7s → 2.4s on stream_dedup_counts at
-    sf0.1). The checkpoint goes to a FRESH tmpfs dir (/dev/shm) per
-    call, removed on exit — measured neutral on a warm page cache vs
-    /tmp, kept for hygiene (no commit-log litter) and for hosts where
-    /tmp is real disk. A fresh dir per call is load-bearing: reusing
-    one would resume the previous run's offsets/state.
+    sf0.1). The checkpoint goes to a FRESH ``scratch.tempdir`` per
+    call, removed on exit (a tmpfs dir under /dev/shm measured neutral
+    against /tmp on a warm page cache). A fresh dir per call is
+    load-bearing: reusing one would resume the previous run's
+    offsets/state.
     Long-lived production streams keep the session defaults (RocksDB +
     durable checkpoint dir, session.py) — the only combination that
     survives state larger than memory or a driver crash. All confs are
@@ -176,72 +176,63 @@ def run_foreach_batch(df, fn, nodata_batches: bool = False) -> list[dict]:
 
 
 def _run_gate_stream(df: DataFrame, start, nodata_batches: bool = False) -> list[dict]:
-    """Shared gate-run plumbing: conf save/set/restore + fresh
-    checkpoint dir + synchronous processAllAvailable, with ``start``
-    receiving (writeStream, checkpoint_dir) and returning the started
+    """Shared gate-run plumbing: set the gate confs below for the run,
+    checkpoint to a fresh ``scratch.tempdir``, run synchronously to
+    processAllAvailable, then restore (or unset) each conf. ``start``
+    receives (writeStream, checkpoint_dir) and returns the started
     query. See run_to_memory's docstring for the measured rationale of
     every conf choice."""
-    import shutil
-    import tempfile
-
     spark = df.sparkSession
     # default 8, measured best; checked before any session conf is touched
     partitions = env_int("SPARK_GRAFT_GATE_PARTITIONS", 8)
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    part_key = "spark.sql.shuffle.partitions"
-    retain_key = "spark.sql.streaming.minBatchesToRetain"
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_prov = spark.conf.get(prov_key, None)
-    prev_part = spark.conf.get(part_key)
-    prev_retain = spark.conf.get(retain_key, None)
-    prev_nodata = spark.conf.get(nodata_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(part_key, str(partitions))
-    # Gate runs are one-batch and never restarted from this checkpoint, so
-    # retaining the default 100 committed batches only adds checkpoint I/O.
-    spark.conf.set(retain_key, "1")
-    # After the single data batch, the engine schedules an extra NO-DATA
-    # micro-batch to advance the watermark and evict closed state. The
-    # gate queries read COMPLETE/UPDATE-mode sinks (full state re-emitted
-    # with the data batch) or an eagerly-emitting inner interval join, so
-    # that extra batch changes nothing they return — measured -25% on the
-    # 7-query stream slice (11.7 s → 8.8 s) with hash-identical results.
-    # Production/append pipelines that rely on watermark-driven finalized
-    # emission keep the default (session confs untouched outside here);
-    # multi-batch append gates pass nodata_batches=True for the same
-    # reason — the final no-data batch is what emits windows closed by
-    # the last data batch's watermark advance.
-    spark.conf.set(nodata_key, "true" if nodata_batches else "false")
-    ckpt_root = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    ckpt = tempfile.mkdtemp(prefix="es_ckpt_", dir=ckpt_root)
+    gate_confs = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+        ),
+        "spark.sql.shuffle.partitions": str(partitions),
+        # Gate runs are one-batch and never restarted from this checkpoint,
+        # so retaining the default 100 committed batches only adds
+        # checkpoint I/O.
+        "spark.sql.streaming.minBatchesToRetain": "1",
+        # After the single data batch, the engine schedules an extra
+        # NO-DATA micro-batch to advance the watermark and evict closed
+        # state. The gate queries read COMPLETE/UPDATE-mode sinks (full
+        # state re-emitted with the data batch) or an eagerly-emitting
+        # inner interval join, so that extra batch changes nothing they
+        # return — measured -25% on the 7-query stream slice (11.7 s →
+        # 8.8 s) with hash-identical results. Production/append pipelines
+        # that rely on watermark-driven finalized emission keep the
+        # default (session confs untouched outside here); multi-batch
+        # append gates pass nodata_batches=True for the same reason — the
+        # final no-data batch is what emits windows closed by the last
+        # data batch's watermark advance.
+        "spark.sql.streaming.noDataMicroBatches.enabled": (
+            "true" if nodata_batches else "false"
+        ),
+    }
+    prev = {key: spark.conf.get(key, None) for key in gate_confs}
+    for key, value in gate_confs.items():
+        spark.conf.set(key, value)
     q = None
     progresses: list[dict] = []
     try:
-        q = start(df.writeStream, ckpt)
-        q.processAllAvailable()
-        # Captured before stop: per-batch state metrics (rows dropped by
-        # watermark, state row counts) for tests that pin eviction.
-        progresses = [p for p in (q.recentProgress or []) if p is not None]
+        with tempdir("es_ckpt_") as ckpt:
+            try:
+                q = start(df.writeStream, ckpt)
+                q.processAllAvailable()
+                # Captured before stop: per-batch state metrics (rows
+                # dropped by watermark, state row counts) for tests that
+                # pin eviction.
+                progresses = [p for p in (q.recentProgress or []) if p is not None]
+            finally:
+                if q is not None:
+                    q.stop()
     finally:
-        if q is not None:
-            q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-        if prev_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev_prov)
-        if prev_retain is None:
-            spark.conf.unset(retain_key)
-        else:
-            spark.conf.set(retain_key, prev_retain)
-        if prev_nodata is None:
-            spark.conf.unset(nodata_key)
-        else:
-            spark.conf.set(nodata_key, prev_nodata)
-        spark.conf.set(part_key, prev_part)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
     note_triggers(progresses)
     return progresses
 
@@ -950,7 +941,7 @@ def q_stream_static_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sig").alias("sig_c"),
             "band_key",
         )
-        .localCheckpoint(eager=True)  # the static, pre-built index side
+        .transform(checkpoint, eager=True)  # the static, pre-built index side
     )
 
     batch_docs = load_table(spark, sf_dir, "documents").filter(
@@ -1056,12 +1047,12 @@ def q_stream_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("w")
         .agg(F.sum("mb").alias("bits"))
-        .localCheckpoint(eager=True)  # the resident filter artifact
+        .transform(checkpoint, eager=True)  # the resident filter artifact
     )
     cdig = (
         corpus.distinct()
         .withColumn("is_dup_", F.lit(True))
-        .localCheckpoint(eager=True)  # audit-tier truth side only
+        .transform(checkpoint, eager=True)  # audit-tier truth side only
     )
 
     batch = (
@@ -1200,7 +1191,7 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         binned.filter(F.col("doc_id") % 2 == 0)
         .groupBy("bin")
         .agg(F.count(F.lit(1)).cast("long").alias("n_ref"))
-        .localCheckpoint(eager=True)  # the static reference profile
+        .transform(checkpoint, eager=True)  # the static reference profile
     )
     cur_docs = binned.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id", "bin", (F.expr("doc_id DIV 2") % 3).cast("long").alias("chunk")

@@ -46,6 +46,87 @@ def test_run_record_fields(spark):
     assert _group(spark) is None and obs._TRIGGERS is None
 
 
+def test_run_query_frees_its_checkpoints(spark):
+    """A checkpoint the query makes outside an artifact build belongs
+    to the run and is unpersisted once the action has run."""
+    from eventstreamer_spark import memo
+
+    made = []
+
+    def fn(s, _):
+        made.append(memo.checkpoint(s.range(10)))
+        return made[0].selectExpr("id + 1 AS x")
+
+    rec = obs.run_query(spark, "owned", fn, SF_DIR, action=lambda df: df.count())
+    assert rec.error is None and rec.result == 10
+    assert not memo.checkpoint_alive(made[0]) and memo._OWNERS == []
+
+
+def test_run_query_owns_driver_thread_checkpoints(spark):
+    """Driver threads started inside a run (ivf_staleness_audit trains
+    two Lloyd builds on two) register with the run's owner: with more
+    threads than cores and a short switch interval, no checkpoint is
+    lost, and the run frees every one."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from eventstreamer_spark import memo
+
+    made, owned = [], []
+
+    def fn(s, _):
+        def five(i):
+            return [memo.checkpoint(s.range(i + 1)) for _ in range(5)]
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            with ThreadPoolExecutor(max_workers=8) as pool:
+                for f in [pool.submit(five, i) for i in range(8)]:
+                    made.extend(f.result(timeout=120))
+        finally:
+            sys.setswitchinterval(interval)
+        owned.extend(memo._OWNERS[-1])
+        return s.range(1)
+
+    rec = obs.run_query(spark, "threads", fn, SF_DIR)
+    assert rec.error is None and len(made) == 40
+    assert {id(df) for df in owned} == {id(df) for df in made}
+    assert not any(map(memo.checkpoint_alive, made))
+
+
+def test_run_query_leaves_only_store_held_checkpoints(spark):
+    """After a run_query loop, the only new persistent RDDs are the
+    checkpoints the artifact store holds: every other checkpoint the
+    queries made was freed by its run."""
+    import __spark_entry__ as contract
+    from eventstreamer_spark import memo
+
+    qs = contract.queries()
+    sc = spark.sparkContext
+
+    def persistent():
+        return {int(i) for i in sc._jsc.getPersistentRDDs().keySet()}
+
+    def held():
+        return {
+            df._jdf.queryExecution().analyzed().rdd().id()
+            for entry in memo._STORE.values()
+            for df in entry.checkpoints
+        }
+
+    before, held_before = persistent(), held()
+    for name in (
+        "gini_value_concentration",
+        "ntile_customer_balance",
+        "quality_classifier_scores",
+        "pq_recall_at_k",
+    ):
+        rec = obs.run_query(spark, name, qs[name], SF_DIR)
+        assert rec.error is None, (name, rec.error)
+    assert persistent() - before == held() - held_before
+
+
 @pytest.mark.parametrize(
     "got, want, n",
     [

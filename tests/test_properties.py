@@ -301,22 +301,39 @@ def test_residual_artifacts_memo_builds_once(spark):
     assert sp1.count() > 0 and fv1.count() > 0
 
 
-def test_pairs_memo_checkpoints_once(spark):
+def _record_checkpoints(m, spark) -> list:
+    """Patch DataFrame.localCheckpoint through the monkeypatch context
+    ``m`` to record every checkpoint made while it is active."""
+    cls = type(spark.range(1))
+    made = []
+    local_checkpoint = cls.localCheckpoint
+
+    def recorded(df, eager=True):
+        made.append(local_checkpoint(df, eager))
+        return made[-1]
+
+    m.setattr(cls, "localCheckpoint", recorded)
+    return made
+
+
+def test_pairs_memo_checkpoints_once(spark, monkeypatch):
     """The near-dup pair memo (r14 optimization) holds eagerly
     localCheckpointed handles, not collected rows: the second call per
     (app, sf_dir, kind) must return the SAME handle, its optimized
     plan must be a pure checkpoint scan (LogicalRDD — no LSH rebuild,
     and no per-call applySchemaToPythonRDD re-ship of 411k simhash
     rows, the measured 1.5-2 s/consumer cost of the old row memo), and
-    the store must record the handle as a checkpoint its eviction hook
-    frees."""
+    the store must record the build's checkpoints, the handle among
+    them, as the ones its eviction hook frees."""
     from eventstreamer_spark import memo
     from eventstreamer_spark.operators.dedup import simhash_pairs_for
 
     sf_dir = "/root/testdata/sf0.001"
     key = ("pairs:simhash", spark.sparkContext.applicationId, sf_dir)
     memo.drop(sf_dir, "pairs:simhash")
-    p1 = simhash_pairs_for(spark, sf_dir)
+    with monkeypatch.context() as m:
+        made = _record_checkpoints(m, spark)
+        p1 = simhash_pairs_for(spark, sf_dir)
     p2 = simhash_pairs_for(spark, sf_dir)
     assert p1 is p2
     plan = p1._jdf.queryExecution().optimizedPlan().toString()
@@ -325,7 +342,7 @@ def test_pairs_memo_checkpoints_once(spark):
     # content pin, not just no-exception: an empty/corrupted checkpoint
     # would return zero pairs (ADVICE r14)
     assert p1.count() > 0
-    assert memo._STORE[key].checkpoints == (p1,)
+    assert memo._STORE[key].checkpoints == tuple(made) and p1 in made
 
 
 def test_f64_matmul_exact_at_quantization_bound():
@@ -416,6 +433,42 @@ def test_env_int(monkeypatch, raw, want):
             env_int("SPARK_GRAFT_RANK_MAX_PARTITIONS", 7)
     else:
         assert env_int("SPARK_GRAFT_RANK_MAX_PARTITIONS", 7) == want
+
+
+@pytest.mark.parametrize("raw", ["abc", "0", ""])
+def test_shuffle_partitions_env_rejected_before_conf(spark, monkeypatch, raw):
+    """A bad $SPARK_GRAFT_SHUFFLE_PARTITIONS fails in configure(),
+    naming the variable, before any session conf is set."""
+    from eventstreamer_spark.session import configure
+
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raw)
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE_PARTITIONS"):
+            configure(spark)
+        assert spark.conf.get("spark.sql.session.timeZone") == "America/New_York"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_max_partition_bytes_env_is_a_byte_string(spark, monkeypatch):
+    """$SPARK_GRAFT_MAX_PARTITION_BYTES stays a byte string: Spark takes
+    "16m" and rejects "abc" itself when configure() sets it."""
+    from pyspark.errors import IllegalArgumentException
+
+    from eventstreamer_spark.session import configure
+
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    try:
+        monkeypatch.setenv("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m")
+        configure(spark)
+        assert spark.conf.get(key) == "16m"
+        monkeypatch.setenv("SPARK_GRAFT_MAX_PARTITION_BYTES", "abc")
+        with pytest.raises(IllegalArgumentException, match="INVALID_CONF_VALUE"):
+            configure(spark)
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_bounded_memo_lru_get_refresh():
@@ -863,12 +916,12 @@ def test_residual_memo_eviction_frees_blocks(spark):
         _release("k", _Entry((object(),), (object(),)))
 
 
-def test_classifier_and_dsir_memos(spark):
+def test_classifier_and_dsir_memos(spark, monkeypatch):
     """r14 optimization: the ridge-classifier artifacts and the DSIR
     score table are built once per (applicationId, sf_dir) and shared
-    by their consumer queries. Pins (a) the store records the
-    checkpoints its eviction hook frees, (b) repeat calls return the
-    SAME handles (no rebuild), and (c) the
+    by their consumer queries. Pins (a) the store records exactly the
+    checkpoints the build made, which its eviction hook frees, (b)
+    repeat calls return the SAME handles (no rebuild), and (c) the
     memoized weight vector equals an independent direct training run —
     the memo changes WHO pays, never the values."""
     from tests.conftest import SF_DIR
@@ -882,11 +935,14 @@ def test_classifier_and_dsir_memos(spark):
     )
 
     app = spark.sparkContext.applicationId
-    feats1, lab1, w1 = classifier_artifacts_memo(spark, SF_DIR)
+    memo.drop(SF_DIR, "classifier_artifacts")
+    with monkeypatch.context() as m:
+        made = _record_checkpoints(m, spark)
+        feats1, lab1, w1 = classifier_artifacts_memo(spark, SF_DIR)
     feats2, lab2, w2 = classifier_artifacts_memo(spark, SF_DIR)
     assert feats1 is feats2 and lab1 is lab2 and w1 is w2
     stored = memo._STORE[("classifier_artifacts", app, SF_DIR)].checkpoints
-    assert stored == (feats1, lab1)
+    assert stored == tuple(made) and feats1 in stored and lab1 in stored
 
     feats_d, lab_d = _doc_features(spark, SF_DIR)
     assert w1 == train_ridge_weights(spark, SF_DIR, feats=feats_d, lab=lab_d)
@@ -895,6 +951,82 @@ def test_classifier_and_dsir_memos(spark):
     assert dsir_scores_memo(spark, SF_DIR) is d1
     assert memo._STORE[("dsir_scores", app, SF_DIR)].checkpoints == (d1,)
     assert d1.columns == ["doc_id", "source", "n_grams", "w_e6", "s_e6"]
+
+
+def _owner_case(spark):
+    """A store key of its own for the checkpoint-owner tests."""
+    from tests.conftest import SF_DIR
+
+    return SF_DIR + "#owner", spark.sparkContext.applicationId
+
+
+def test_artifact_build_owns_its_checkpoints(spark):
+    """Every checkpoint a DataFrame-valued build makes belongs to the
+    store entry: it stays resident after the build, is checked on
+    each hit, and is freed when the entry leaves the store."""
+    from eventstreamer_spark import memo
+
+    sf_dir, app = _owner_case(spark)
+    made = []
+
+    def build():
+        made.append(memo.checkpoint(spark.range(8), eager=True))
+        made.append(memo.checkpoint(made[0].selectExpr("id * 2 AS y")))
+        return made[1].select("y")
+
+    value = memo.artifact(spark, sf_dir, "df", build)
+    assert memo._STORE[("df", app, sf_dir)].checkpoints == tuple(made)
+    assert memo.artifact(spark, sf_dir, "df", build) is value
+    assert value.count() == 8 and all(map(memo.checkpoint_alive, made))
+    memo.drop(sf_dir)
+    assert not any(map(memo.checkpoint_alive, made))
+
+
+def test_rows_build_frees_its_checkpoints(spark):
+    """A value with no DataFrame member never reads its build's
+    checkpoints again: they are freed as soon as the build returns."""
+    from eventstreamer_spark import memo
+
+    sf_dir, app = _owner_case(spark)
+    made = []
+
+    def build():
+        made.append(memo.checkpoint(spark.range(8), eager=True))
+        return made[0].collect(), "rows"
+
+    rows, _ = memo.artifact(spark, sf_dir, "rows", build)
+    assert len(rows) == 8
+    assert memo._STORE[("rows", app, sf_dir)].checkpoints == ()
+    assert not memo.checkpoint_alive(made[0])
+    memo.drop(sf_dir)
+
+
+def test_raising_build_frees_its_checkpoints(spark):
+    from eventstreamer_spark import memo
+
+    sf_dir, app = _owner_case(spark)
+    made = []
+
+    def build():
+        made.append(memo.checkpoint(spark.range(8), eager=True))
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        memo.artifact(spark, sf_dir, "raises", build)
+    assert ("raises", app, sf_dir) not in memo._STORE
+    assert not memo.checkpoint_alive(made[0]) and memo._OWNERS == []
+
+
+def test_checkpoint_without_owner_is_left_alone(spark):
+    """The plain driver path has no owner: nothing registers the
+    checkpoint, so its release stays with Spark's ContextCleaner."""
+    from eventstreamer_spark import memo
+    from eventstreamer_spark.memo import free_local_checkpoint
+
+    assert memo._OWNERS == []
+    ck = memo.checkpoint(spark.range(8), eager=True)
+    assert memo._OWNERS == [] and memo.checkpoint_alive(ck)
+    free_local_checkpoint(ck)
 
 
 def test_checkpoint_artifacts_free_blocks_on_eviction(spark):

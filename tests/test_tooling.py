@@ -1,6 +1,8 @@
 """The dev scripts stay wired to the engine: every ``eventstreamer_spark``
 name that ``bench.py`` and ``scripts/*.py`` import, or read off an
-imported engine module, must resolve. No Spark session is started."""
+imported engine module, must resolve. The engine itself makes and
+frees local checkpoints only through ``memo``. No Spark session is
+started."""
 
 from __future__ import annotations
 
@@ -13,6 +15,7 @@ import pytest
 
 ROOT = Path(__file__).resolve().parent.parent
 TOOLS = [ROOT / "bench.py", *sorted((ROOT / "scripts").glob("*.py"))]
+ENGINE = ROOT / "eventstreamer_spark"
 
 
 def _engine_names(tree: ast.AST) -> tuple[list[tuple[str, str | None]], dict[str, str]]:
@@ -72,3 +75,23 @@ def test_tools_are_scanned():
     # the scan above must see the tools' engine imports at all
     refs, _ = _engine_names(ast.parse((ROOT / "bench.py").read_text()))
     assert ("eventstreamer_spark", "obs") in refs
+
+
+def test_checkpoints_only_through_memo():
+    """No engine module outside memo.py calls ``.localCheckpoint(`` or
+    names ``free_local_checkpoint``: every checkpoint goes through
+    ``memo.checkpoint``, which hands it to its one owner."""
+    found = []
+    for path in sorted(ENGINE.rglob("*.py")):
+        if path == ENGINE / "memo.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            name = (
+                node.attr if isinstance(node, ast.Attribute)
+                else node.id if isinstance(node, ast.Name)
+                else node.name if isinstance(node, ast.alias)
+                else None
+            )
+            if name in ("localCheckpoint", "free_local_checkpoint"):
+                found.append(f"{path.relative_to(ROOT)}:{node.lineno}: {name}")
+    assert not found, found
