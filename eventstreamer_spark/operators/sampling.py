@@ -236,9 +236,9 @@ def q_packing_efficiency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: sequence_packing's plan exactly — one shuffle on the
     shard key, one window running sum, one aggregate. Straddle tests
-    are integer division (`DIV`/`//`, never float-divide-then-cast —
-    the binning trap noted in SURVEY §8f); shares floor-round at 1e-6
-    from exact integer numerators."""
+    are integer division (`DIV`/`//`, never float-divide-then-cast:
+    DuckDB's CAST(double AS BIGINT) rounds where Spark's truncates);
+    shares floor-round at 1e-6 from exact integer numerators."""
     d = load_table(spark, sf_dir, "documents")
     sized = d.select(
         "lang", "doc_id", F.size(H.tokens_expr("text")).cast("long").alias("n_tokens")

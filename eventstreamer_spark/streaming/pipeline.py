@@ -465,38 +465,30 @@ FROM events a JOIN events b
 """
 
 
-@query("stream_stream_join", oracle=_STREAM_JOIN_ORACLE)
-def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join with an event-time bound: every pair
-    of same-user events at most one hour apart, executed as a REAL
-    dual-stream join (two readStream branches, both watermarked, an
-    interval condition) in append mode. With all input processed the
-    emitted matches equal the batch join — the oracle.
+def stream_join_pairs(a_events: DataFrame, b_events: DataFrame) -> DataFrame:
+    """Every pair of same-user events at most one hour apart, as a
+    stream-stream inner join of two watermarked branches.
 
     The time bound is what makes this scale: each side's state
     retains only rows younger than (watermark − bound), so state is
-    O(events/hour × #users in flight), not O(stream length). An
+    O(events/hour × #users in flight), not O(stream length) —
+    test_stream_join_state_is_evicted pins the eviction on this exact
+    condition. (Spark logs a StreamingJoinHelper error while it tries
+    to derive a constraint from the ``a_event_id < b_event_id``
+    conjunct; eviction from the time bound is unaffected.) An
     unbounded-condition stream join would be rejected by Spark for
     exactly that reason. Both sides shuffle on user_id once; the
-    interval predicate is evaluated inside the joined partitions.
-    """
-    from eventstreamer_spark.session import configure
+    interval predicate is evaluated inside the joined partitions."""
 
-    configure(spark)
+    def branch(events: DataFrame, prefix: str) -> DataFrame:
+        return events.select(
+            F.col("event_id").alias(f"{prefix}_event_id"),
+            F.col("ts").alias(f"{prefix}_ts"),
+            F.col("user_id").alias(f"{prefix}_uid"),
+        ).withWatermark(f"{prefix}_ts", "1 hour")
 
-    def branch(prefix: str) -> DataFrame:
-        return (
-            stream_events_sf(spark, sf_dir)
-            .select(
-                F.col("event_id").alias(f"{prefix}_event_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-                F.col("user_id").alias(f"{prefix}_uid"),
-            )
-            .withWatermark(f"{prefix}_ts", "1 hour")
-        )
-
-    a, b = branch("a"), branch("b")
-    joined = a.join(
+    a, b = branch(a_events, "a"), branch(b_events, "b")
+    return a.join(
         b,
         (a.a_uid == b.b_uid)
         & (a.a_event_id < b.b_event_id)
@@ -509,6 +501,19 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         fmt_ts(F.col("a_ts")).alias("a_ts"),
         fmt_ts(F.col("b_ts")).alias("b_ts"),
     )
+
+
+@query("stream_stream_join", oracle=_STREAM_JOIN_ORACLE)
+def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream inner join with an event-time bound
+    (``stream_join_pairs``), executed as a REAL dual-stream join (two
+    readStream branches, both watermarked, an interval condition) in
+    append mode. With all input processed the emitted matches equal
+    the batch join — the oracle."""
+    from eventstreamer_spark.session import configure
+
+    configure(spark)
+    joined = stream_join_pairs(stream_events_sf(spark, sf_dir), stream_events_sf(spark, sf_dir))
     run_to_memory(joined, "stream_join_sink", mode="append")
     return spark.table("stream_join_sink")
 

@@ -19,35 +19,32 @@ Reference semantics (DispatcherFunction.cs:66-162, SURVEY.md §7):
   its key's anchor chain.
 
 Because the anchor chain is a per-key left-to-right recurrence, this
-cannot be one SQL pass — it is exactly the shape for
-``applyInPandas`` (batch) / ``applyInPandasWithState`` (stream): one
-shuffle on key, then a linear walk per key with O(1) state.
+cannot be one SQL pass — it is exactly the shape for ``mapInPandas``
+(batch) / ``applyInPandasWithState`` (stream): one shuffle on key,
+then a walk per key. Each recurrence here (the anchor chain and the
+capped sessionizer) has ONE step function that folds a sorted chunk
+of a key's rows into an O(1) carried state: the batch form steps from
+``None`` and flushes the tail, the stream form steps from the state
+store. The anchor chain's state is ``(anchor, n, sum_micro,
+first_eid, first_etype)`` — everything ``_emit`` reads of a window.
 
-The pure-Python reference model (``anchor_windows_py``) doubles as
-the test oracle; the driver records a rows-only check for the Spark
-query (genuinely non-SQL-expressible — SURVEY.md §5).
+The pure-Python reference model (``anchor_windows_py``) and the
+recursive-CTE oracles are the independent references the step
+functions are tested against.
 
-API note: Spark 4's ``transformWithStateInPandas`` is the successor
-stateful API (typed ValueState/ListState + timers, the natural TTL
-fit). Its Python driver worker requires ``google.protobuf``, which is
-not importable in this environment (verified: the TWS runner crashes
-with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE on import), so
-the operator ships on ``applyInPandasWithState`` — same state shape
-(anchor value + row buffer), same timer semantics via
-``EventTimeTimeout`` — which runs and is tested everywhere.
-Vendoring was re-examined and closed (round 4): a full-disk search
-finds no protobuf runtime anywhere (only typeshed stubs and Spark's
-JVM-side jars), installs are prohibited, and pyspark's generated
-``*_pb2`` modules need the real wire-format runtime — a shim would
-mean reimplementing protobuf. The substitute is permanent for this
-environment; on a stock cluster (protobuf ships with every Spark 4
-distro's Python env) the operator body ports to TWS unchanged.
+API note: Spark 4's ``transformWithStateInPandas`` (typed state +
+timers) would fit the TTL flush more directly, but its Python worker
+needs the ``google.protobuf`` runtime; ``applyInPandasWithState`` with
+``EventTimeTimeout`` needs nothing beyond pyspark, and the step
+functions port to either unchanged.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
+from functools import partial
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -103,55 +100,88 @@ def _emit(anchor: int, buf: list[tuple[int, int, str, float]]) -> dict:
     }
 
 
-def _per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized anchor walk. The recurrence only re-anchors once per
-    window, so instead of a per-row Python loop we jump window-to-window
-    with ``np.searchsorted`` (O(windows * log rows)) and aggregate each
-    window slice with ``np.add.reduceat``. Window boundaries, counts and
-    first-event picks are exactly ``anchor_windows_py``; avg_value sums
-    micro-unit int64s (exact in any order), so it equals the model's
-    ``_emit`` bit-for-bit — pinned by
-    test_push_time_vectorized_matches_model."""
-    import numpy as np
-
-    if len(pdf) == 0:
-        return pd.DataFrame(
-            {
-                "key": pd.Series(dtype=object),
-                "anchor_ts": pd.Series(dtype="int64"),
-                "n_events": pd.Series(dtype="int64"),
-                "avg_value": pd.Series(dtype="float64"),
-                "first_event_id": pd.Series(dtype="int64"),
-                "first_event_type": pd.Series(dtype=object),
-            }
-        )
-    pdf = pdf.sort_values(["ts_us", "event_id"], kind="mergesort")
+def _columns(pdf: pd.DataFrame) -> tuple:
+    """One key's rows in walk order (ts, event_id), as the arrays the
+    step reads: ts_us, event_id, event_type and the value in micro-units
+    (int64 sums are exact in any order — see _emit)."""
     ts = pdf["ts_us"].to_numpy(np.int64)
-    n = len(ts)
-    starts: list[int] = []
-    idx = 0
-    while idx < n:
+    eid = pdf["event_id"].to_numpy(np.int64)
+    order = np.lexsort((eid, ts))  # stable: (ts, event_id) ties keep arrival order
+    return (
+        ts[order],
+        eid[order],
+        pdf["event_type"].to_numpy(object)[order],
+        np.floor(pdf["value"].to_numpy(np.float64)[order] * 1000000.0 + 0.5).astype(np.int64),
+    )
+
+
+def anchor_step(
+    state: tuple | None, ts, eid, etype, qv
+) -> tuple[list[np.ndarray], tuple | None]:
+    """One step of the anchor recurrence over a chunk of ONE key's rows
+    (``_columns`` order), from carried state ``(anchor, n, sum_micro,
+    first_eid, first_etype)`` or ``None``. Returns the windows the chunk
+    closes, as the five columns of that state, plus the new state (the
+    open window). The batch form steps once from ``None`` and emits the
+    tail; the stream form steps from the state store every micro-batch.
+
+    Rows with ``ts < anchor + WINDOW_US`` join the carried window,
+    including rows older than the anchor that arrive in a later
+    micro-batch (each event still lands in exactly one window). From
+    the first row past it the walk jumps window-to-window with
+    ``np.searchsorted`` (O(windows · log rows)) and sums each window
+    with ``np.add.reduceat``. Folding any chunking through this step
+    equals ``anchor_windows_py`` exactly (pinned by
+    test_push_time_stream_chunking_invariant)."""
+    idx = 0 if state is None else int(np.searchsorted(ts, state[0] + WINDOW_US))
+    head, starts = idx, []
+    while idx < len(ts):
         starts.append(idx)
-        idx = int(np.searchsorted(ts, ts[idx] + WINDOW_US, side="left"))
+        idx = int(np.searchsorted(ts, ts[idx] + WINDOW_US))
     s = np.array(starts, dtype=np.int64)
-    # micro-unit int64 sums: exact, order-free (see _emit)
-    qv = np.floor(pdf["value"].to_numpy(np.float64) * 1000000.0 + 0.5).astype(np.int64)
-    sums = np.add.reduceat(qv, s)
-    counts = np.diff(np.append(s, n))
+    wins = [
+        ts[s],
+        np.diff(np.append(s, len(ts))),
+        np.add.reduceat(qv, s),
+        eid[s],
+        etype[s],
+    ]
+    if state is not None:
+        anchor, n, total, first_eid, first_etype = state
+        carried = (anchor, n + head, total + int(qv[:head].sum()), first_eid, first_etype)
+        wins = [np.concatenate([[c], w]) for c, w in zip(carried, wins)]
+    if not len(wins[0]):
+        return wins, None
+    return [w[:-1] for w in wins], tuple(w[-1:].tolist()[0] for w in wins)
+
+
+def _windows(key: str, wins) -> pd.DataFrame:
+    """OUT_SCHEMA rows for windows given as the five state columns; the
+    mean is ``_emit``'s, from the micro-unit sum."""
+    anchor, n, total, first_eid, first_etype = (np.asarray(w) for w in wins)
     return pd.DataFrame(
         {
-            "key": pdf["key"].iloc[0],
-            "anchor_ts": ts[s],
-            "n_events": counts,
-            "avg_value": np.floor(sums / counts + 0.5) / 1000000.0,
-            "first_event_id": pdf["event_id"].to_numpy(np.int64)[s],
-            "first_event_type": pdf["event_type"].to_numpy()[s],
+            "key": key,
+            "anchor_ts": anchor.astype(np.int64),
+            "n_events": n.astype(np.int64),
+            "avg_value": np.floor(total / n + 0.5) / 1000000.0,
+            "first_event_id": first_eid.astype(np.int64),
+            "first_event_type": first_etype.astype(object),
         }
     )
 
 
-def _whole_partition(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Run the anchor walk for every key in a key-co-located partition.
+def _per_key(key: str, pdf: pd.DataFrame) -> pd.DataFrame:
+    """Batch form: step from ``None``, then emit the open tail too."""
+    closed, tail = anchor_step(None, *_columns(pdf))
+    if tail is not None:
+        closed = [np.append(w, t) for w, t in zip(closed, tail)]
+    return _windows(key, closed)
+
+
+def _by_key(per_key, pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Run ``per_key(key, rows)`` for every key in a key-co-located
+    partition — the one partition driver of both batch recurrences.
 
     One Python/Arrow round-trip per *partition* instead of per *group*:
     with many small keys (1500 keys ~ 60 rows each at sf0.1),
@@ -164,8 +194,8 @@ def _whole_partition(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     if not chunks:
         return
     pdf = pd.concat(chunks, ignore_index=True)
-    for _, g in pdf.groupby("key", sort=False):
-        yield _per_key(g)
+    for key, g in pdf.groupby("key", sort=False):
+        yield per_key(key, g)
 
 
 def push_time_windows(events: DataFrame, num_partitions: int = 32) -> DataFrame:
@@ -182,7 +212,7 @@ def push_time_windows(events: DataFrame, num_partitions: int = 32) -> DataFrame:
         "value",
     )
     return prepared.repartition(num_partitions, "key").mapInPandas(
-        _whole_partition, OUT_SCHEMA
+        partial(_by_key, _per_key), OUT_SCHEMA
     )
 
 
@@ -237,37 +267,11 @@ def q_push_time_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 IDLE_TTL_US = 86_400_000_000  # 1 day, the reference's start-key TTL (cs:78)
 
 
-def advance_anchor_chain(
-    anchor: int | None,
-    buf: list[tuple[int, int, str, float]],
-    rows: list[tuple[int, int, str, float]],
-) -> tuple[list[dict], int | None, list[tuple[int, int, str, float]]]:
-    """One micro-batch step of the anchor recurrence: fold ``rows``
-    (sorted by ts, event_id) into carried state ``(anchor, buf)``,
-    returning (closed-window records, new anchor, new buffer).
-
-    Pure by design so the streaming operator's core is property-
-    testable: folding any chunking of an input through this function
-    yields the same closed windows as the batch model — micro-batch
-    boundaries cannot change results (pinned by
-    test_push_time_stream_chunking_invariant)."""
-    out: list[dict] = []
-    for ts, eid, etype, val in rows:
-        ts = int(ts)
-        if anchor is None:
-            anchor = ts
-        elif ts - anchor >= WINDOW_US:
-            out.append(_emit(anchor, buf))
-            buf = []
-            anchor = ts
-        buf.append((ts, int(eid), etype, float(val)))
-    return out, anchor, buf
-
-
 def push_time_stream(events: DataFrame, timeout: str = "NoTimeout") -> DataFrame:
-    """Streaming form of the same operator: per-key state holds
-    (anchor, buffer) across micro-batches; closed windows emit as
-    they are pushed past, the open tail stays in state.
+    """Streaming form of the same operator: per-key state holds the
+    open window's ``(anchor, n, sum_micro, first_eid, first_etype)``
+    across micro-batches; each micro-batch is one ``anchor_step`` from
+    it, closed windows emit as they are pushed past.
 
     State TTL parity — and the fix for the reference's key leak
     (issue #9, README.md:79): with ``timeout="EventTimeTimeout"``, a
@@ -283,41 +287,18 @@ def push_time_stream(events: DataFrame, timeout: str = "NoTimeout") -> DataFrame
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        cols = [
-            "key",
-            "anchor_ts",
-            "n_events",
-            "avg_value",
-            "first_event_id",
-            "first_event_type",
-        ]
         if use_ttl and state.hasTimedOut:
-            anchor, buf = state.get if state.exists else (None, [])
-            out = [{"key": key[0], **_emit(int(anchor), list(buf))}] if buf else []
+            tail = tuple(state.get)
             state.remove()
-            yield pd.DataFrame(out, columns=cols)
+            yield _windows(key[0], [[v] for v in tail])
             return
-
-        anchor, buf = state.get if state.exists else (None, [])
-        buf = list(buf)
-        rows = []
-        for pdf in pdfs:
-            rows.extend(
-                zip(
-                    pdf["ts_us"].astype("int64"),
-                    pdf["event_id"].astype("int64"),
-                    pdf["event_type"],
-                    pdf["value"].astype("float64"),
-                )
-            )
-        rows.sort(key=lambda r: (r[0], r[1]))
-        closed, anchor, buf = advance_anchor_chain(anchor, buf, rows)
-        out = [{"key": key[0], **rec} for rec in closed]
-        state.update((anchor, buf))
-        if use_ttl and anchor is not None:
+        carried = tuple(state.get) if state.exists else None
+        closed, tail = anchor_step(carried, *_columns(pd.concat(pdfs, ignore_index=True)))
+        state.update(tail)
+        if use_ttl:
             # flush+reclaim once the watermark passes anchor + TTL
-            state.setTimeoutTimestamp((anchor + IDLE_TTL_US) // 1000)
-        yield pd.DataFrame(out, columns=cols)
+            state.setTimeoutTimestamp((tail[0] + IDLE_TTL_US) // 1000)
+        yield _windows(key[0], closed)
 
     prepared = events.select(
         F.col("user_id").cast("string").alias("key"),
@@ -330,7 +311,7 @@ def push_time_stream(events: DataFrame, timeout: str = "NoTimeout") -> DataFrame
     if use_ttl:  # EventTimeTimeout requires a watermarked input
         prepared = prepared.withWatermark("ts", "1 second")
     state_schema = (
-        "anchor long, buf array<struct<ts:long,eid:long,etype:string,val:double>>"
+        "anchor long, n long, sum_micro long, first_eid long, first_etype string"
     )
     return prepared.groupBy("key").applyInPandasWithState(
         fn, OUT_SCHEMA, state_schema, "append", timeout
@@ -378,12 +359,12 @@ FROM wins WHERE anchor_ts < tail_anchor
 def q_push_time_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's data-driven windows as a REAL stateful
     streaming execution: applyInPandasWithState over a readStream
-    source, append mode — per-key (anchor, buffer) state lives across
-    micro-batches, closed windows emit as they are pushed past, each
-    key's open tail stays in state. The oracle replays the anchor
-    recurrence and drops every key's final window, so the live
-    streaming output is hash-checked — not just rows-counted —
-    against an independent engine."""
+    source, append mode — per-key open-window state (anchor, count,
+    micro-unit sum, first event) lives across micro-batches, closed
+    windows emit as they are pushed past, each key's open tail stays
+    in state. The oracle replays the anchor recurrence and drops every
+    key's final window, so the live streaming output is hash-checked —
+    not just rows-counted — against an independent engine."""
     from eventstreamer_spark.session import configure
     from eventstreamer_spark.streaming.pipeline import run_to_memory, stream_events_sf
 
@@ -413,53 +394,81 @@ SESSION_GAP_US = 12 * 3600 * 1_000_000  # inactivity break: 12 h
 SESSION_CAP_US = 48 * 3600 * 1_000_000  # duration break: 48 h
 
 
-def _capped_sessions_per_key(g: "pd.DataFrame") -> "pd.DataFrame":
-    import numpy as np
+def advance_capped_chain(
+    state: tuple | None,
+    rows: Iterable[tuple[int, float]],
+) -> tuple[list[dict], tuple | None]:
+    """One step of the capped-session recurrence, shared by the batch
+    and stream forms: fold (ts_us, value) rows — sorted by event time —
+    into carried state ``(sess_start, prev_ts, last_ts, n, vsum_e6)`` —
+    a session's first event IS its start, so no separate first_ts —
+    returning (closed-session records, new state). Pure, so chunking
+    invariance is property-testable exactly like the anchor chain.
 
-    g = g.sort_values(["ts_us", "event_id"])
-    ts = g["ts_us"].to_numpy(dtype="int64")
-    vals = g["value"].to_numpy(dtype="float64")
-    key = g["key"].iloc[0]
-    rows = []
-    sess_start = prev = last_ts = None
-    n = 0
-    vsum = 0  # micro-scaled int sum (order-free exactness)
-    for i in range(len(ts)):
-        t = int(ts[i])
-        if sess_start is None:
-            sess_start = t
-        elif t - prev > SESSION_GAP_US or t - sess_start >= SESSION_CAP_US:
-            # a session's first event IS its start, so duration is
-            # last - sess_start (no separate first_ts to carry)
-            rows.append((key, sess_start, n, last_ts - sess_start, vsum))
-            sess_start = t
-            n = 0
-            vsum = 0
-        last_ts = prev = t
+    Cross-micro-batch ordering: a row whose ts precedes the carried
+    prev_ts arrived LATE (its position in the walk is already folded
+    into closed sessions) — it is DROPPED rather than allowed to
+    silently corrupt session boundaries; production would route it to
+    a dead-letter audit like json_ingest_corrupt_audit. Within a
+    batch the caller sorts, so drops only occur on genuine
+    cross-batch disorder (the file-replay harness is in-order, so the
+    oracle sees none)."""
+    import math
+
+    out: list[dict] = []
+    if state is None:
+        sess = prev = last = None
+        n = vsum = 0
+    else:
+        sess, prev, last, n, vsum = state
+    for ts, val in rows:
+        ts = int(ts)
+        if prev is not None and ts < prev:
+            continue  # late arrival from an already-walked position
+        if sess is None:
+            sess = ts
+        elif ts - prev > SESSION_GAP_US or ts - sess >= SESSION_CAP_US:
+            out.append(_session(sess, last, n, vsum))
+            sess, n, vsum = ts, 0, 0
+        last = prev = ts
         n += 1
-        vsum += int(np.floor(vals[i] * 1_000_000 + 0.5))
-    if n:
-        rows.append((key, sess_start, n, last_ts - sess_start, vsum))
-    out = pd.DataFrame(
-        rows, columns=["key", "session_start_us", "n_events", "duration_us", "vsum"]
-    )
-    out["sum_value"] = out.pop("vsum") / 1_000_000.0
-    return out
+        vsum += int(math.floor(val * 1_000_000 + 0.5))
+    new_state = None if sess is None else (sess, prev, last, n, vsum)
+    return out, new_state
+
+
+def _session(sess: int, last: int, n: int, vsum: int) -> dict:
+    # a session's first event IS its start, so duration is last - sess
+    return {
+        "session_start_us": int(sess),
+        "n_events": int(n),
+        "duration_us": int(last - sess),
+        "sum_value": vsum / 1_000_000.0,
+    }
+
+
+def _capped_rows(pdf: pd.DataFrame) -> Iterator[tuple[int, float]]:
+    """One key's (ts_us, value) rows in event-time order. Ties on ts
+    need no further order: boundaries read only ts, and the micro-unit
+    sum is order-free."""
+    pdf = pdf.sort_values("ts_us", kind="mergesort")
+    return zip(pdf["ts_us"].tolist(), pdf["value"].tolist())
 
 
 CAPPED_SCHEMA = (
     "key string, session_start_us long, n_events long, duration_us long, "
     "sum_value double"
 )
+_CAPPED_COLS = ["key", "session_start_us", "n_events", "duration_us", "sum_value"]
 
 
-def _capped_whole_partition(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    chunks = list(pdfs)
-    if not chunks:
-        return
-    pdf = pd.concat(chunks, ignore_index=True)
-    for _, g in pdf.groupby("key", sort=False):
-        yield _capped_sessions_per_key(g)
+def _capped_per_key(key: str, pdf: pd.DataFrame) -> pd.DataFrame:
+    """Batch form: step from ``None``, then flush the open session."""
+    closed, tail = advance_capped_chain(None, _capped_rows(pdf))
+    if tail is not None:
+        sess, _, last, n, vsum = tail
+        closed.append(_session(sess, last, n, vsum))
+    return pd.DataFrame([{"key": key, **r} for r in closed], columns=_CAPPED_COLS)
 
 
 _CAPPED_ORACLE = f"""
@@ -498,80 +507,28 @@ def q_capped_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     previous break decisions, a left-to-right recurrence).
 
     Same plan as the push-time walk: ONE hash shuffle co-locates each
-    key, then a linear per-key scan inside `mapInPandas` (Arrow
-    per-partition, not per-group). Value sums accumulate as
-    micro-scaled int64 so the result is bit-identical to the
-    recursive-CTE oracle in any execution order. At 100 TB the
-    repartition width is the memory knob and per-key state is one
-    cursor — the streaming twin of this rule is an
-    applyInPandasWithState carry of (sess_start, prev_ts), exactly
-    like push_time_stream's (anchor, buffer)."""
+    key, then per key one `advance_capped_chain` step from `None` inside
+    `mapInPandas` (Arrow per-partition, not per-group) and a flush of
+    the open session. Value sums accumulate as micro-scaled int64 so
+    the result is bit-identical to the recursive-CTE oracle in any
+    execution order. At 100 TB the repartition width is the memory knob
+    and per-key state is five scalars — `capped_session_stream` steps
+    the same function from its state store."""
     prepared = load_events(spark, sf_dir).select(
         F.col("user_id").cast("string").alias("key"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "event_id",
         "value",
     )
     from eventstreamer_spark.session import shuffle_partitions
 
     return prepared.repartition(shuffle_partitions(spark), "key").mapInPandas(
-        _capped_whole_partition, CAPPED_SCHEMA
+        partial(_by_key, _capped_per_key), CAPPED_SCHEMA
     )
 
 
 # ---------------------------------------------------------------------------
 # Streaming form of the capped sessionizer (applyInPandasWithState)
 # ---------------------------------------------------------------------------
-
-
-def advance_capped_chain(
-    state: tuple | None,
-    rows: list[tuple[int, float]],
-) -> tuple[list[dict], tuple | None]:
-    """One micro-batch step of the capped-session recurrence: fold
-    (ts_us, value) rows — sorted by event time — into carried state
-    ``(sess_start, prev_ts, last_ts, n, vsum_e6)`` — a session's first
-    event IS its start, so no separate first_ts — returning
-    (closed-session records, new state). Pure, so chunking invariance
-    is property-testable exactly like the anchor chain.
-
-    Cross-micro-batch ordering: a row whose ts precedes the carried
-    prev_ts arrived LATE (its position in the walk is already folded
-    into closed sessions) — it is DROPPED rather than allowed to
-    silently corrupt session boundaries; production would route it to
-    a dead-letter audit like json_ingest_corrupt_audit. Within a
-    batch the caller sorts, so drops only occur on genuine
-    cross-batch disorder (the file-replay harness is in-order, so the
-    oracle sees none)."""
-    import math
-
-    out: list[dict] = []
-    if state is None:
-        sess = prev = last = None
-        n = vsum = 0
-    else:
-        sess, prev, last, n, vsum = state
-    for ts, val in rows:
-        ts = int(ts)
-        if prev is not None and ts < prev:
-            continue  # late arrival from an already-walked position
-        if sess is None:
-            sess = ts
-        elif ts - prev > SESSION_GAP_US or ts - sess >= SESSION_CAP_US:
-            out.append(
-                {
-                    "session_start_us": int(sess),
-                    "n_events": int(n),
-                    "duration_us": int(last - sess),
-                    "sum_value": vsum / 1_000_000.0,
-                }
-            )
-            sess, n, vsum = ts, 0, 0
-        last = prev = ts
-        n += 1
-        vsum += int(math.floor(val * 1_000_000 + 0.5))
-    new_state = None if sess is None else (sess, prev, last, n, vsum)
-    return out, new_state
 
 
 def capped_session_stream(events: DataFrame) -> DataFrame:
@@ -584,19 +541,12 @@ def capped_session_stream(events: DataFrame) -> DataFrame:
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        cols = ["key", "session_start_us", "n_events", "duration_us", "sum_value"]
-        st = tuple(state.get) if state.exists else None
-        rows = []
-        for pdf in pdfs:
-            rows.extend(
-                zip(pdf["ts_us"].astype("int64"), pdf["value"].astype("float64"))
-            )
-        rows.sort(key=lambda r: r[0])
-        closed, st = advance_capped_chain(st, rows)
-        if st is not None:
-            state.update(st)
-        out = [{"key": key[0], **rec} for rec in closed]
-        yield pd.DataFrame(out, columns=cols)
+        carried = tuple(state.get) if state.exists else None
+        rows = _capped_rows(pd.concat(pdfs, ignore_index=True))
+        closed, tail = advance_capped_chain(carried, rows)
+        if tail is not None:
+            state.update(tail)
+        yield pd.DataFrame([{"key": key[0], **r} for r in closed], columns=_CAPPED_COLS)
 
     prepared = events.select(
         F.col("user_id").cast("string").alias("key"),

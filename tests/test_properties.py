@@ -122,52 +122,96 @@ def test_safe_double_nan_inf_parity(spark):
 
 
 # ---------------------------------------------------------------------------
-# vectorized anchor walk == python model (bit-exact)
+# push-time step (anchor_step) == python model under ANY micro-batch chunking
 # ---------------------------------------------------------------------------
 
 
-# ---------------------------------------------------------------------------
-# streaming fold == batch model under ANY micro-batch chunking
-# ---------------------------------------------------------------------------
+def _fold_push_time(chunks):
+    """Fold chunks of one key's (ts_us, event_id, event_type, value)
+    rows through the shared step, as the stream form does; return the
+    closed windows (records) and every carried state in order."""
+    import pandas as pd
+
+    from eventstreamer_spark.streaming.stateful import _columns, _windows, anchor_step
+
+    state, closed, states = None, [], []
+    for chunk in chunks:
+        pdf = pd.DataFrame(
+            chunk, columns=["ts_us", "event_id", "event_type", "value"]
+        ).astype({"ts_us": "int64", "event_id": "int64", "value": "float64"})
+        wins, state = anchor_step(state, *_columns(pdf))
+        closed.extend(_windows("k", wins).drop(columns="key").to_dict("records"))
+        states.append(state)
+    return closed, states
 
 
-@given(events, st.lists(st.integers(min_value=0, max_value=200), max_size=6))
-@settings(max_examples=300, deadline=None)
-def test_push_time_stream_chunking_invariant(rows, cut_points):
-    """Folding the event sequence through the streaming core
-    (advance_anchor_chain) in ANY chunking yields exactly the batch
-    model's windows: the closed windows stream out, and flushing the
-    final (anchor, buffer) state equals the batch model's tail —
-    micro-batch boundaries cannot change results."""
-    from eventstreamer_spark.streaming.stateful import advance_anchor_chain
-
-    rows = sorted(set(rows))
+def _chunked(rows, cut_points):
     cuts = sorted({c for c in cut_points if c < len(rows)})
     chunks, prev = [], 0
     for c in cuts + [len(rows)]:
         chunks.append(rows[prev:c])
         prev = c
+    return chunks
 
-    anchor, buf, streamed = None, [], []
-    for chunk in chunks:
-        closed, anchor, buf = advance_anchor_chain(anchor, buf, chunk)
-        streamed.extend(closed)
-    if buf:  # flush the open tail, as the batch model does
-        from eventstreamer_spark.streaming.stateful import _emit
 
-        streamed.append(_emit(anchor, buf))
+@given(events, st.lists(st.integers(min_value=0, max_value=200), max_size=6))
+@settings(max_examples=300, deadline=None)
+def test_push_time_stream_chunking_invariant(rows, cut_points):
+    """Folding the event sequence through the shared step (anchor_step)
+    in ANY chunking yields exactly the batch model's windows: the
+    closed windows stream out, and flushing the final carried state
+    equals the batch model's tail — micro-batch boundaries cannot
+    change results."""
+    from eventstreamer_spark.streaming.stateful import _windows
 
+    rows = sorted(set(rows))
+    streamed, states = _fold_push_time(_chunked(rows, cut_points))
+    if states[-1] is not None:  # flush the open tail, as the batch form does
+        tail = _windows("k", [[v] for v in states[-1]])
+        streamed.extend(tail.drop(columns="key").to_dict("records"))
     assert streamed == anchor_windows_py(rows)
+
+
+@given(events, st.lists(st.integers(min_value=0, max_value=200), max_size=6))
+@settings(max_examples=200, deadline=None)
+def test_push_time_state_is_five_scalars(rows, cut_points):
+    """The carried state is always None or the five scalars (anchor, n,
+    sum_micro, first_eid, first_etype) — never the window's rows —
+    also when chunks arrive out of event-time order, and every folded
+    row is counted exactly once (closed windows + the open one)."""
+    rows = list(dict.fromkeys(rows))  # arrival order: chunks unsorted w.r.t. each other
+    chunks = [sorted(c) for c in _chunked(rows, cut_points)]
+    closed, states = _fold_push_time(chunks)
+    for state in states:
+        assert state is None or (
+            len(state) == 5
+            and all(type(v) is int for v in state[:4])
+            and type(state[4]) is str
+        ), state
+    open_n = states[-1][1] if states[-1] is not None else 0
+    assert sum(w["n_events"] for w in closed) + open_n == len(rows)
+
+
+def test_push_time_late_row_joins_open_window():
+    """Cross-chunk late row: chunks [0 s] [1.5 s] [0.5 s] close the 0 s
+    window with its one event, and the 0.5 s straggler joins the window
+    open at 1.5 s (it is < anchor + 1 s), which then holds two."""
+    us = 1_000_000
+    closed, states = _fold_push_time(
+        [[(0, 1, "a", 1.0)], [(int(1.5 * us), 2, "b", 2.0)], [(int(0.5 * us), 3, "c", 4.0)]]
+    )
+    assert [(w["anchor_ts"], w["n_events"]) for w in closed] == [(0, 1)]
+    assert states[-1] == (int(1.5 * us), 2, 6_000_000, 2, "b")
 
 
 @given(events)
 @settings(max_examples=300, deadline=None)
 def test_push_time_vectorized_matches_model(rows):
-    """`stateful._per_key` (searchsorted jumps + reduceat sums) must
-    match `anchor_windows_py` exactly on structure (boundaries, counts,
-    first-event picks) and to float tolerance on avg_value (numpy's
-    pairwise sum vs the model's running sum differ by ≤ ulps), including
-    duplicate timestamps, empty input, and the open-tail window."""
+    """The batch form (`stateful._per_key`: one step from None plus the
+    tail) equals `anchor_windows_py` exactly — boundaries, counts,
+    first-event picks and avg_value (micro-unit int sums make the mean
+    order-free), including duplicate timestamps, empty input, and the
+    open-tail window."""
     import pandas as pd
 
     from eventstreamer_spark.streaming.stateful import _per_key
@@ -176,20 +220,9 @@ def test_push_time_vectorized_matches_model(rows):
     pdf = pd.DataFrame(
         rows, columns=["ts_us", "event_id", "event_type", "value"]
     ).astype({"ts_us": "int64", "event_id": "int64", "value": "float64"})
-    pdf["key"] = "k"
-    got = _per_key(pdf)
-    exp = anchor_windows_py(rows)
-    assert len(got) == len(exp)
-    for i, r in enumerate(exp):
-        assert got["anchor_ts"].iloc[i] == r["anchor_ts"]
-        assert got["n_events"].iloc[i] == r["n_events"]
-        # reordered float sums agree to ulps *of the input scale*; with
-        # cancellation the result can be tiny while the error floor stays
-        # proportional to the largest addend
-        scale = max(1.0, max(abs(x[3]) for x in rows))
-        assert abs(got["avg_value"].iloc[i] - r["avg_value"]) <= 1e-9 * scale
-        assert got["first_event_id"].iloc[i] == r["first_event_id"]
-        assert got["first_event_type"].iloc[i] == r["first_event_type"]
+    got = _per_key("k", pdf)
+    assert (got["key"] == "k").all()
+    assert got.drop(columns="key").to_dict("records") == anchor_windows_py(rows)
 
 
 # ---------------------------------------------------------------------------

@@ -270,6 +270,36 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
     assert got == [(1, 1, 101)]  # the 90s-late right event is outside the bound
 
 
+def test_stream_join_state_is_evicted(spark, tmp_path):
+    """stream_stream_join's own condition (stream_join_pairs) keeps
+    bounded state: over four micro-batches two hours apart, each side's
+    rows leave the join state once the watermark passes the one-hour
+    bound, despite the ``a_event_id < b_event_id`` conjunct Spark cannot
+    derive a constraint from — and exactly the four same-batch pairs
+    are emitted."""
+    from eventstreamer_spark.streaming.pipeline import stream_join_pairs
+
+    chunks = [
+        [_ev(2 * h + 1, f"2024-01-01 0{2 * h}:00:00"), _ev(2 * h + 2, f"2024-01-01 0{2 * h}:00:10")]
+        for h in range(4)
+    ]
+    path = _write_chunks(spark, str(tmp_path), chunks)
+    progress = run_to_memory(
+        stream_join_pairs(stream_events(spark, path), stream_events(spark, path)),
+        "ss_join_evict",
+        mode="append",
+    )
+    got = sorted((r.a_event_id, r.b_event_id) for r in spark.table("ss_join_evict").collect())
+    assert got == [(1, 2), (3, 4), (5, 6), (7, 8)]
+    ops = [p["stateOperators"][0] for p in progress if p.get("stateOperators")]
+    assert len(ops) == 4
+    assert sum(op["numRowsRemoved"] for op in ops) > 0
+    # 4 rows enter per batch (2 per side), yet the state stops growing:
+    # it holds only what the last batches can still match
+    assert [op["numRowsUpdated"] for op in ops] == [4, 4, 4, 4]
+    assert ops[-1]["numRowsTotal"] <= ops[-2]["numRowsTotal"] < 16
+
+
 def test_push_time_ttl_flushes_and_reclaims_idle_keys(spark, tmp_path):
     """The reference leaks idle per-key state forever (issue #9,
     README.md:79); the EventTimeTimeout variant must flush the open
