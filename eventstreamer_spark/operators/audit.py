@@ -1225,17 +1225,21 @@ def q_stream_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-built sketch — the production shape: the stream maintains
     the cheap mergeable summary at ingest; exact audits are periodic
     batch jobs."""
-    from eventstreamer_spark.streaming.pipeline import run_to_memory
+    return _cms_report(_cms_tokcnt(spark, sf_dir), _cms_stream_cells(spark, sf_dir))
+
+
+def _cms_stream_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cell table as the complete-mode state of a 3-micro-batch
+    stream of raw token occurrences."""
+    from eventstreamer_spark.streaming.pipeline import run_stream
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     with drip_stream(spark, docs, F.col("doc_id") % 3, 3) as stream:
         occurrences = stream.select(
             F.explode(F.expr(_TOKS_S)).alias("tok")
         ).withColumn("cnt", F.lit(1).cast("long"))
-        cells_stream = _cms_cells(occurrences)
-        run_to_memory(cells_stream, "cms_stream_sink", mode="complete")
-    cells = spark.table("cms_stream_sink")
-    return _cms_report(_cms_tokcnt(spark, sf_dir), cells)
+        cells, _ = run_stream(_cms_cells(occurrences), "complete")
+    return cells
 
 
 # ---------------------------------------------------------------------------

@@ -1231,7 +1231,7 @@ def q_stream_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches covers the whole query subset and the index is
     static, so serving and batch can never drift (the same
     stream==batch discipline as stream_ann_topk)."""
-    from eventstreamer_spark.streaming.pipeline import run_foreach_batch
+    from eventstreamer_spark.streaming.pipeline import run_stream
 
     # the served index: postings with doc length attached, built once
     # per session (r14 optimization — the serving twin consumes the
@@ -1269,7 +1269,7 @@ def q_stream_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).filter(F.col("rank") <= BM25_TOP)
             served.extend(topk.collect())
 
-        run_foreach_batch(stream, serve)
+        run_stream(stream, foreach=serve)
         out = spark.createDataFrame(
             served, "query_id long, doc_id long, score_e6 long, rank long"
         )
@@ -1663,7 +1663,7 @@ def q_stream_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches covers the whole query subset and both lists are
     static, so serving and batch can never drift (the stream==batch
     discipline; pinned row-for-row in test_stream_rrf_matches_batch)."""
-    from eventstreamer_spark.streaming.pipeline import run_foreach_batch
+    from eventstreamer_spark.streaming.pipeline import run_stream
 
     # static retriever outputs: both verified lists materialize once,
     # discount applied at build time so batches only sum and rank
@@ -1704,7 +1704,7 @@ def q_stream_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).filter(F.col("rank") <= BM25_TOP)
             served.extend(topk.collect())
 
-        run_foreach_batch(stream, serve)
+        run_stream(stream, foreach=serve)
         out = spark.createDataFrame(
             served,
             "query_id long, doc_id long, rrf_e6 long, n_lists long, rank long",

@@ -434,7 +434,7 @@ def q_stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift. Micro-batch boundaries cannot change results (stateless
     per-row map)."""
     from eventstreamer_spark.sources.tables import load_table
-    from eventstreamer_spark.streaming.pipeline import run_to_memory
+    from eventstreamer_spark.streaming.pipeline import run_stream
 
     _feats, _lab, w = classifier_artifacts_memo(spark, sf_dir)
     w_lits = ", ".join(f"{int(v)}L" for v in w)
@@ -477,8 +477,8 @@ def q_stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("predicted"),
             )
         )
-        run_to_memory(scored, "qc_stream_sink", mode="append")
-    return spark.table("qc_stream_sink")
+        sink, _ = run_stream(scored)
+    return sink
 
 
 # ---------------------------------------------------------------------------

@@ -42,16 +42,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.memo import checkpoint
-from eventstreamer_spark.session import env_int
 
-# Cap on range partitions for the parallel exact rank; env-overridable
-# for production clusters (an int >= 1, read by session.env_int). The
-# per-query count is SIZE-ADAPTIVE below (VERDICT r14 item 5): a fixed
-# 32 paid ~32 near-empty range-sampler+window tasks on the 15k–150k-row
-# report inputs at sf0.1, while one partition per ~16 MB of estimated
-# input keeps the same RangePartitioning plan shape and scales back up
-# with the data.
-RANK_NPART = env_int("SPARK_GRAFT_RANK_MAX_PARTITIONS", 32)
+# Cap on range partitions for the parallel exact rank. The per-query
+# count is SIZE-ADAPTIVE below (VERDICT r14 item 5): a fixed 32 paid
+# ~32 near-empty range-sampler+window tasks on the 15k–150k-row report
+# inputs at sf0.1, while one partition per ~16 MB of estimated input
+# keeps the same RangePartitioning plan shape and scales back up with
+# the data.
+RANK_NPART = 32
 _RANK_BYTES_PER_PART = 16 << 20
 
 

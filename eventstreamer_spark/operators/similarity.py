@@ -1915,7 +1915,7 @@ def q_stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the three micro-batches covers the whole query subset and the
     index is static, so serving and batch can never drift (the same
     stream==batch discipline as stream_classifier_scores)."""
-    from eventstreamer_spark.streaming.pipeline import run_to_memory
+    from eventstreamer_spark.streaming.pipeline import run_stream
 
     prepared = (
         H.with_quantized_unit(
@@ -1951,8 +1951,7 @@ def q_stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         gathered = cand.groupBy("query_id").agg(
             F.collect_list("c").alias("cands")
         )
-        run_to_memory(gathered, "ann_stream_sink", mode="complete")
-    t = spark.table("ann_stream_sink")
+        t, _ = run_stream(gathered, "complete")
     exploded = t.select("query_id", F.explode("cands").alias("c")).select(
         "query_id", F.col("c.neighbor_id").alias("neighbor_id"),
         F.col("c.cosine").alias("cosine"),

@@ -256,9 +256,13 @@ def q_sliding_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (DispatcherFunction.cs:87); sliding windows are Tier B streaming
     surface (SURVEY.md §2.1 'Streaming extras').
     """
-    ev = load_events(spark, sf_dir)
+    return sliding_stats(load_events(spark, sf_dir))
+
+
+def sliding_stats(events: DataFrame) -> DataFrame:
+    """Per-type stats over 2 s windows hopping by 1 s."""
     return (
-        ev.groupBy("event_type", F.window("ts", "2 seconds", "1 second").alias("w"))
+        events.groupBy("event_type", F.window("ts", "2 seconds", "1 second").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             N.mean6_spark(F.col("value")).alias("avg_value"),

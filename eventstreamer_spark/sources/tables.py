@@ -47,16 +47,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one canonical table. Vectorized parquet reader, lazy.
     The resolved handle is the session artifact ``scan:<name>`` —
     writers to a canonical path must call ``invalidate_scan``.
-
-    ``events.ts`` arrives either as parquet TIMESTAMP(NANOS) — which
-    Spark's reader rejects, so we read nanos as epoch-long (runtime
-    conf) and truncate to microseconds, same as DuckDB — or as
-    TIMESTAMP(MICROS) with isAdjustedToUTC=false, which Spark surfaces
-    as TIMESTAMP_NTZ. Either way the column normalizes to a plain
-    session-TZ TIMESTAMP (the session is pinned to UTC by
-    session.configure), so every downstream instant function
-    (unix_micros, window, watermarks) sees identical values to the
-    DuckDB oracle.
+    ``events.ts`` is normalized by ``events_ts``.
     """
     return memo.artifact(
         spark, sf_dir, f"scan:{name}", lambda: _scan(spark, sf_dir, name)
@@ -66,14 +57,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        dt = df.schema["ts"].dataType
-        if isinstance(dt, T.LongType):
-            # integer division: float division of epoch-nanos loses µs precision
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(dt, T.TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return events_ts(df) if name == "events" else df
+
+
+def events_ts(events: DataFrame) -> DataFrame:
+    """``events.ts`` as a plain session-TZ TIMESTAMP, batch or stream.
+
+    The column arrives either as parquet TIMESTAMP(NANOS) — which
+    Spark's reader rejects, so the readers set
+    ``spark.sql.legacy.parquet.nanosAsLong`` and it is truncated here
+    to microseconds, same as DuckDB — or as TIMESTAMP(MICROS) with
+    isAdjustedToUTC=false, which Spark surfaces as TIMESTAMP_NTZ.
+    Either way every downstream instant function (unix_micros, window,
+    watermarks) then sees the DuckDB oracle's values (the session is
+    pinned to UTC by session.configure)."""
+    dt = events.schema["ts"].dataType
+    if isinstance(dt, T.LongType):
+        # integer division: float division of epoch-nanos loses µs precision
+        return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(dt, T.TimestampNTZType):
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

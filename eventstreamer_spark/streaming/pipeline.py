@@ -27,39 +27,34 @@ else changes.
 from __future__ import annotations
 
 import os
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from eventstreamer_spark.functions import numeric as N
-from eventstreamer_spark.functions.casting import fmt_ts, round6
-from eventstreamer_spark.operators.windowed import tumbling_stats
+from eventstreamer_spark.functions.casting import fmt_ts
+from eventstreamer_spark.operators.windowed import sliding_stats, tumbling_stats
 from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.obs import note_triggers
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.scratch import drip_stream, session_dir, tempdir
-from eventstreamer_spark.session import env_int
-from eventstreamer_spark.sources.tables import load_events
+from eventstreamer_spark.sources.tables import events_ts, load_events
 
 EVENTS_DDL = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
 
-def stream_events(spark: SparkSession, dir_path: str, max_files: int | None = 1) -> DataFrame:
-    """File-source stream of event chunk files (deterministic dev twin
-    of the Event Hub source, O1)."""
-    reader = spark.readStream.schema(EVENTS_DDL)
-    if max_files is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files)
-    return reader.parquet(dir_path)
+def stream_events(spark: SparkSession, dir_path: str) -> DataFrame:
+    """File-source stream of event chunk files, one file per micro-batch
+    (deterministic dev twin of the Event Hub source, O1)."""
+    return spark.readStream.schema(EVENTS_DDL).option("maxFilesPerTrigger", 1).parquet(dir_path)
 
 
 def stream_events_sf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream twin of ``sources.tables.load_events`` for a
-    canonical sf dir: schema-adaptive to however the driver encoded
-    ``events.ts`` (TIMESTAMP(NANOS) → long via nanosAsLong, or
-    TIMESTAMP(MICROS) → TIMESTAMP_NTZ), normalizing to a plain UTC
-    TIMESTAMP either way. File streams need an explicit schema, so the
+    canonical sf dir, with ``events.ts`` normalized by the same
+    ``events_ts``. File streams need an explicit schema, so the
     one-off batch footer read here is what infers it — scan metadata
     like load_table's handles, stored as a ``scan:`` artifact, since
     every stream query would otherwise pay the footer read (~0.15 s,
@@ -72,140 +67,87 @@ def stream_events_sf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "scan:events_schema",
         lambda: spark.read.parquet(f"{sf_dir}/events.parquet").schema,
     )
-    stream = (
+    return events_ts(
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", "events.parquet")  # file source needs a directory
         .parquet(sf_dir)
     )
-    dt = batch_schema["ts"].dataType
-    if isinstance(dt, T.LongType):
-        # integer division: float division of epoch-nanos loses µs precision
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def windowed_stream(events: DataFrame, window: str = "1 second", watermark: str = "10 seconds") -> DataFrame:
-    """The flagship aggregation under a watermark: state for a window
-    is dropped once the watermark passes its end — bounded state at
-    any scale; late events beyond the bound are dropped instead of
-    corrupting closed windows (intentional divergence from the
-    reference, which has no lateness policy)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(
-            F.col("user_id").cast("string").alias("key"),
-            F.window("ts", window).alias("w"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            N.mean6_spark(F.col("value")).alias("avg_value"),
-            N.sumk_spark(F.col("value"), 1000000).alias("sum_value"),
-        )
-        .select(
-            "key",
-            fmt_ts(F.col("w.start")).alias("window_start"),
-            "n_events",
-            "avg_value",
-            "sum_value",
-        )
+def windowed_stream(events: DataFrame) -> DataFrame:
+    """The flagship aggregation (``tumbling_stats``) under a 10 s
+    watermark: state for a window is dropped once the watermark passes
+    its end — bounded state at any scale; late events beyond the bound
+    are dropped instead of corrupting closed windows (intentional
+    divergence from the reference, which has no lateness policy).
+    Catalyst prunes the aggregates the selected columns do not read,
+    so the state holds only the count and the micro-unit sum."""
+    return tumbling_stats(events.withWatermark("ts", "10 seconds")).select(
+        "key", "window_start", "n_events", "avg_value", "sum_value"
     )
 
 
-def run_to_memory(
-    df: DataFrame, name: str, mode: str = "update", nodata_batches: bool = False
-) -> list[dict]:
-    """Drive a streaming frame to completion against a memory sink
-    (synchronous: processAllAvailable then stop).
+def run_stream(
+    df: DataFrame,
+    mode: str = "append",
+    *,
+    foreach: Callable[[DataFrame, int], None] | None = None,
+    nodata_batches: bool = False,
+) -> tuple[DataFrame | None, list[dict]]:
+    """Run a gate stream to completion (processAllAvailable, then stop)
+    and return ``(sink, progress)``: ``sink`` is the memory sink's rows
+    as a DataFrame, or ``None`` when each micro-batch goes to
+    ``foreach(batch_df, batch_id)`` instead (serving-shaped streams
+    whose unit of work is the request batch, not a cross-batch key);
+    ``progress`` is the micro-batches' progress reports, captured
+    before the stop (state row counts, rows dropped by watermark).
+    The memory sink's temp view is dropped before returning, so its
+    rows live exactly as long as ``sink``.
 
-    Gate/test executions are short-lived and their keyed state is
-    bounded by the test corpus, so state goes to the in-memory
-    (HDFSBacked) provider with a modest partition count: opening and
-    checkpointing 32+ RocksDB instances per stateful stage dominates a
-    one-batch query (measured 12.7s → 2.4s on stream_dedup_counts at
-    sf0.1). The checkpoint goes to a FRESH ``scratch.tempdir`` per
-    call, removed on exit (a tmpfs dir under /dev/shm measured neutral
-    against /tmp on a warm page cache). A fresh dir per call is
-    load-bearing: reusing one would resume the previous run's
-    offsets/state.
-    Long-lived production streams keep the session defaults (RocksDB +
-    durable checkpoint dir, session.py) — the only combination that
-    survives state larger than memory or a driver crash. All confs are
-    restored and the checkpoint dir removed on exit.
+    Gate runs are short-lived and their keyed state is bounded by the
+    test corpus, so for the run the confs below are set (and restored,
+    or unset, on every exit path): the in-memory (HDFSBacked) state
+    provider with 8 partitions — opening and checkpointing 32+ RocksDB
+    instances per stateful stage dominated a one-batch query (measured
+    12.7 s → 2.4 s on stream_dedup_counts at sf0.1), and 8 partitions
+    beat 4 (43.4 s vs 45.7 s over the 18 gates). Long-lived
+    production streams keep the session defaults (RocksDB + a durable
+    checkpoint dir, session.py). The checkpoint goes to a FRESH
+    ``scratch.tempdir`` per run, removed on exit: reusing one would
+    resume the previous run's offsets and state.
 
-    Measured warm floor (round 4, sf0.1): ~1.0 s per one-batch gate
-    query, of which the micro-batch itself (source listing + batch
-    plan + state commit + sink) is ~0.4-0.6 s and the memory-sink
-    read-back ~0.3-0.4 s. Knobs probed and found neutral at this
-    scale: availableNow vs processAllAvailable, 4 vs 8 shuffle
-    partitions. What did move the needle: the per-sf-dir schema memo
-    (saves a driver footer read per query, two for the dual-branch
-    join) and minBatchesToRetain=1 below. The residual cost is the
-    streaming engine's per-query machinery, not plan shape — batch
-    twins of the same aggregations run in 0.2-0.8 s.
-    """
-    return _run_gate_stream(
-        df,
-        lambda ws, ckpt: (
-            ws.outputMode(mode)
-            .format("memory")
-            .option("checkpointLocation", ckpt)
-            .queryName(name)
-            .start()
-        ),
-        nodata_batches=nodata_batches,
-    )
-
-
-def run_foreach_batch(df, fn, nodata_batches: bool = False) -> list[dict]:
-    """run_to_memory's per-batch-emission twin: drive a streaming frame
-    to completion through ``foreachBatch(fn)`` under the same gate conf
-    discipline (in-memory state provider, fresh tmpfs checkpoint,
-    minBatchesToRetain=1 — see run_to_memory). For serving-shaped
-    streams whose unit of work is the REQUEST (a micro-batch), not a
-    cross-batch key: ``fn(batch_df, batch_id)`` scores/ranks/emits each
-    batch and the stream holds NO aggregation state between triggers —
-    the artifact the scale harness measures is then the same per-batch
-    contract production runs."""
-    return _run_gate_stream(
-        df,
-        lambda ws, ckpt: (
-            ws.foreachBatch(fn).option("checkpointLocation", ckpt).start()
-        ),
-        nodata_batches=nodata_batches,
-    )
-
-
-def _run_gate_stream(df: DataFrame, start, nodata_batches: bool = False) -> list[dict]:
-    """Shared gate-run plumbing: set the gate confs below for the run,
-    checkpoint to a fresh ``scratch.tempdir``, run synchronously to
-    processAllAvailable, then restore (or unset) each conf. ``start``
-    receives (writeStream, checkpoint_dir) and returns the started
-    query. See run_to_memory's docstring for the measured rationale of
-    every conf choice."""
+    Measured warm floor (sf0.1): ~1.0 s per one-batch gate, of which the
+    micro-batch itself (source listing + plan + state commit + sink) is
+    ~0.4-0.6 s. Neutral at this scale: availableNow vs
+    processAllAvailable, a tmpfs checkpoint dir. The residual cost is
+    the streaming engine's per-query machinery, not plan shape — batch
+    twins of the same aggregations run in 0.2-0.8 s."""
     spark = df.sparkSession
-    # default 8, measured best; checked before any session conf is touched
-    partitions = env_int("SPARK_GRAFT_GATE_PARTITIONS", 8)
+    name = f"es_sink_{uuid.uuid4().hex}"
+    writer = df.writeStream.outputMode(mode)
+    if foreach is None:
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(foreach)
     gate_confs = {
         "spark.sql.streaming.stateStore.providerClass": (
             "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
         ),
-        "spark.sql.shuffle.partitions": str(partitions),
-        # Gate runs are one-batch and never restarted from this checkpoint,
-        # so retaining the default 100 committed batches only adds
+        "spark.sql.shuffle.partitions": "8",
+        # Gate runs are never restarted from this checkpoint, so
+        # retaining the default 100 committed batches only adds
         # checkpoint I/O.
         "spark.sql.streaming.minBatchesToRetain": "1",
-        # After the single data batch, the engine schedules an extra
+        # After the last data batch, the engine schedules an extra
         # NO-DATA micro-batch to advance the watermark and evict closed
-        # state. The gate queries read COMPLETE/UPDATE-mode sinks (full
-        # state re-emitted with the data batch) or an eagerly-emitting
-        # inner interval join, so that extra batch changes nothing they
-        # return — measured -25% on the 7-query stream slice (11.7 s →
-        # 8.8 s) with hash-identical results. Production/append pipelines
-        # that rely on watermark-driven finalized emission keep the
-        # default (session confs untouched outside here); multi-batch
-        # append gates pass nodata_batches=True for the same reason — the
-        # final no-data batch is what emits windows closed by the last
-        # data batch's watermark advance.
+        # state. The one-batch gates read COMPLETE/UPDATE-mode sinks
+        # (full state re-emitted with the data batch) or an eagerly
+        # emitting inner interval join, so that batch changes nothing
+        # they return — measured -25% on the 7-query stream slice
+        # (11.7 s → 8.8 s) with hash-identical results. Multi-batch
+        # append gates pass nodata_batches=True: the final no-data batch
+        # is what emits windows closed by the last data batch's
+        # watermark advance.
         "spark.sql.streaming.noDataMicroBatches.enabled": (
             "true" if nodata_batches else "false"
         ),
@@ -213,28 +155,27 @@ def _run_gate_stream(df: DataFrame, start, nodata_batches: bool = False) -> list
     prev = {key: spark.conf.get(key, None) for key in gate_confs}
     for key, value in gate_confs.items():
         spark.conf.set(key, value)
-    q = None
-    progresses: list[dict] = []
+    q = sink = None
     try:
         with tempdir("es_ckpt_") as ckpt:
             try:
-                q = start(df.writeStream, ckpt)
+                q = writer.option("checkpointLocation", ckpt).start()
                 q.processAllAvailable()
-                # Captured before stop: per-batch state metrics (rows
-                # dropped by watermark, state row counts) for tests that
-                # pin eviction.
-                progresses = [p for p in (q.recentProgress or []) if p is not None]
+                progress = [p for p in (q.recentProgress or []) if p is not None]
+                if foreach is None:
+                    sink = spark.table(name)
             finally:
                 if q is not None:
                     q.stop()
+                spark.catalog.dropTempView(name)
     finally:
         for key, value in prev.items():
             if value is None:
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, value)
-    note_triggers(progresses)
-    return progresses
+    note_triggers(progress)
+    return sink, progress
 
 
 _STREAM_TUMBLING_ORACLE = f"""
@@ -256,30 +197,8 @@ def q_stream_tumbling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     result equal the batch twin — Spark's unification guarantee,
     checked against the same SQL oracle.
     """
-    from eventstreamer_spark.session import configure
-
-    configure(spark)
-    stream = stream_events_sf(spark, sf_dir)
-    agg = (
-        stream.groupBy(
-            F.col("user_id").cast("string").alias("key"),
-            F.window("ts", "1 second").alias("w"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            N.mean6_spark(F.col("value")).alias("avg_value"),
-            N.sumk_spark(F.col("value"), 1000000).alias("sum_value"),
-        )
-        .select(
-            "key",
-            fmt_ts(F.col("w.start")).alias("window_start"),
-            "n_events",
-            "avg_value",
-            "sum_value",
-        )
-    )
-    run_to_memory(agg, "stream_tumbling_stats_sink", mode="complete")
-    return spark.table("stream_tumbling_stats_sink")
+    sink, _ = run_stream(windowed_stream(stream_events_sf(spark, sf_dir)), "complete")
+    return sink
 
 
 _SESSION_ORACLE = """
@@ -313,9 +232,13 @@ def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data, not the epoch grid. ``session_window`` works identically
     in batch and streaming; the oracle is the classic lag/gap-cumsum
     sessionization."""
-    ev = load_events(spark, sf_dir)
+    return session_stats(load_events(spark, sf_dir))
+
+
+def session_stats(events: DataFrame) -> DataFrame:
+    """Per-user 30-minute-gap sessions: start, end, count, value sum."""
     return (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
+        events.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             N.sumk_spark(F.col("value"), 10000).alias("total_value"),
@@ -362,27 +285,10 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     and evicts once the watermark passes a session's close — the
     stateful operator the reference's "push time forward" loop
     approximates. The result equals the batch sessionization oracle
-    (the lag/gap-cumsum form)."""
-    from eventstreamer_spark.session import configure
-
-    configure(spark)
-    stream = stream_events_sf(spark, sf_dir)
-    agg = (
-        stream.withWatermark("ts", "10 seconds")
-        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            N.sumk_spark(F.col("value"), 10000).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            fmt_ts(F.col("w.start")).alias("session_start"),
-            "n_events",
-            "total_value",
-        )
-    )
-    run_to_memory(agg, "stream_session_sink", mode="complete")
-    return spark.table("stream_session_sink")
+    (the lag/gap-cumsum form), which has no session end."""
+    stream = stream_events_sf(spark, sf_dir).withWatermark("ts", "10 seconds")
+    sink, _ = run_stream(session_stats(stream).drop("session_end"), "complete")
+    return sink
 
 
 def observed_windowed_stream(events: DataFrame) -> DataFrame:
@@ -429,24 +335,22 @@ def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id; the aggregation re-shuffles on event_type: same two
     exchanges a batch dedup-then-agg pays.
     """
-    from eventstreamer_spark.session import configure
-
-    configure(spark)
     stream = stream_events_sf(spark, sf_dir)
     dup_stream = stream.union(stream.filter(F.col("event_id") % 3 == 0))
     deduped = (
         dup_stream.withWatermark("ts", "10 seconds")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    agg = (
-        deduped.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            N.sumk_spark(F.col("value"), 10000).alias("total_value"),
-        )
+    sink, _ = run_stream(type_totals(deduped), "complete")
+    return sink
+
+
+def type_totals(events: DataFrame) -> DataFrame:
+    """Per event type: event count and value sum (4-decimal exact)."""
+    return events.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        N.sumk_spark(F.col("value"), 10000).alias("total_value"),
     )
-    run_to_memory(agg, "stream_dedup_sink", mode="complete")
-    return spark.table("stream_dedup_sink")
 
 
 # ---------------------------------------------------------------------------
@@ -510,12 +414,9 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     readStream branches, both watermarked, an interval condition) in
     append mode. With all input processed the emitted matches equal
     the batch join — the oracle."""
-    from eventstreamer_spark.session import configure
-
-    configure(spark)
     joined = stream_join_pairs(stream_events_sf(spark, sf_dir), stream_events_sf(spark, sf_dir))
-    run_to_memory(joined, "stream_join_sink", mode="append")
-    return spark.table("stream_join_sink")
+    sink, _ = run_stream(joined)
+    return sink
 
 
 # ---------------------------------------------------------------------------
@@ -540,21 +441,13 @@ def q_stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorting legal on an unbounded stream (the sort runs over the
     bounded aggregate state each trigger, never over raw events).
     With all input processed the result equals the batch top-5."""
-    from eventstreamer_spark.session import configure
-
-    configure(spark)
-    stream = stream_events_sf(spark, sf_dir)
-    agg = (
-        stream.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            N.sumk_spark(F.col("value"), 10000).alias("total_value"),
-        )
+    top = (
+        type_totals(stream_events_sf(spark, sf_dir))
         .orderBy(F.col("n_events").desc(), "event_type")
         .limit(5)
     )
-    run_to_memory(agg, "stream_topk_sink", mode="complete")
-    return spark.table("stream_topk_sink")
+    sink, _ = run_stream(top, "complete")
+    return sink
 
 
 _STREAM_SLIDING_ORACLE = f"""
@@ -579,27 +472,12 @@ def q_stream_sliding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     two windows' state; with all input processed, complete mode equals
     the batch twin (sliding_window_stats) and the same SQL oracle.
     State per key is (types × windows-in-flight), watermark-bounded in
-    the production path.
+    the production path. The oracle has no min/max columns; Catalyst
+    prunes their aggregates from the state.
     """
-    from eventstreamer_spark.session import configure
-
-    configure(spark)
     stream = stream_events_sf(spark, sf_dir)
-    agg = (
-        stream.groupBy("event_type", F.window("ts", "2 seconds", "1 second").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            N.mean6_spark(F.col("value")).alias("avg_value"),
-        )
-        .select(
-            "event_type",
-            fmt_ts(F.col("w.start")).alias("window_start"),
-            "n_events",
-            "avg_value",
-        )
-    )
-    run_to_memory(agg, "stream_sliding_sink", mode="complete")
-    return spark.table("stream_sliding_sink")
+    sink, _ = run_stream(sliding_stats(stream).drop("min_value", "max_value"), "complete")
+    return sink
 
 
 # ---------------------------------------------------------------------------
@@ -683,33 +561,20 @@ GROUP BY 1, 2
 
 
 def late_policy_stream(stream: DataFrame) -> DataFrame:
-    """Watermarked 1 s tumbling aggregate in APPEND mode — the form
-    whose output existence depends on watermark advancement (a window
-    emits exactly once, when the watermark passes its end)."""
-    return (
-        stream.withWatermark("ts", f"{LATE_DELAY_S} seconds")
-        .groupBy(
-            F.col("user_id").cast("string").alias("key"),
-            F.window("ts", "1 second").alias("w"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            N.mean6_spark(F.col("value")).alias("avg_value"),
-        )
-        .select(
-            "key",
-            fmt_ts(F.col("w.start")).alias("window_start"),
-            "n_events",
-            "avg_value",
-        )
+    """Watermarked 1 s tumbling aggregate (``tumbling_stats``) in
+    APPEND mode — the form whose output existence depends on watermark
+    advancement (a window emits exactly once, when the watermark
+    passes its end)."""
+    return tumbling_stats(stream.withWatermark("ts", f"{LATE_DELAY_S} seconds")).select(
+        "key", "window_start", "n_events", "avg_value"
     )
 
 
-def run_late_policy(spark: SparkSession, sf_dir: str, sink: str) -> list[dict]:
+def run_late_policy(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[dict]]:
     """Drip the events table as four deterministic micro-batches (0:
     first tick, 1: tail, 2: stragglers, 3: the rest) through the
-    append-mode watermark aggregate, return the progress metrics.
-    The result lands in the ``sink`` memory table."""
+    append-mode watermark aggregate; return ``run_stream``'s (sink,
+    progress)."""
     straggler = (F.col("event_id") % LATE_SPAN_S < LATE_TICK_S) & (
         F.col("event_id") % 7 == LATE_RESIDUE
     )
@@ -721,12 +586,10 @@ def run_late_policy(spark: SparkSession, sf_dir: str, sink: str) -> list[dict]:
         .otherwise(F.lit(3))
     )
     events = load_events(spark, sf_dir).select(
-        "event_id", "user_id", "value", F.expr(_TS_C_SPARK).alias("ts")
+        "event_id", "user_id", "event_type", "value", F.expr(_TS_C_SPARK).alias("ts")
     )
     with drip_stream(spark, events, batch, 4) as stream:
-        return run_to_memory(
-            late_policy_stream(stream), sink, mode="append", nodata_batches=True
-        )
+        return run_stream(late_policy_stream(stream), nodata_batches=True)
 
 
 @query("stream_late_data_policy", oracle=_STREAM_LATE_ORACLE)
@@ -739,11 +602,8 @@ def q_stream_late_data_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay of the watermark arithmetic. The eviction metric
     (numRowsDroppedByWatermark > 0) is pinned by
     tests/test_streaming.py::test_late_data_policy_drops_and_merges."""
-    from eventstreamer_spark.session import configure
-
-    configure(spark)
-    run_late_policy(spark, sf_dir, "stream_late_sink")
-    return spark.table("stream_late_sink")
+    sink, _ = run_late_policy(spark, sf_dir)
+    return sink
 
 
 # ---------------------------------------------------------------------------
@@ -862,20 +722,15 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream (bench/scale timings measure the merge, not a cache hit),
     and each gets its own dir, since overwriting one would break a
     DataFrame still held from an earlier invocation."""
-    import uuid
-
-    from eventstreamer_spark.session import configure
-
-    configure(spark)
     events = load_events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
     with tempdir("es_upsert_target_") as target_root, drip_stream(
         spark, events, F.col("event_id") % 3, 3
     ) as stream:
-        run_foreach_batch(
+        run_stream(
             stream,
-            lambda batch_df, batch_id: upsert_version_step(
+            foreach=lambda batch_df, batch_id: upsert_version_step(
                 spark, target_root, batch_df, batch_id
             ),
         )
@@ -930,10 +785,8 @@ def q_stream_static_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ingest_decisions,
         with_minhash_sig,
     )
-    from eventstreamer_spark.session import configure
     from eventstreamer_spark.sources.tables import load_table
 
-    configure(spark)
     bands_all = _minhash_docs(spark, sf_dir).select(
         "doc_id",
         "sig",
@@ -973,14 +826,12 @@ def q_stream_static_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("new_doc", "corpus_doc", "sig_b", "sig_c")
             .dropDuplicates(["new_doc", "corpus_doc"])
         )
-        decided = ingest_decisions(cand)
-        run_to_memory(decided, "ss_ingest_sink", mode="update")
+        t, _ = run_stream(ingest_decisions(cand), "update")
     # one emission per doc (a doc's rows never split across chunks);
     # if that invariant ever broke, keep the most-complete emission
     # under a fully deterministic order (no arbitrary ties)
     from pyspark.sql import Window as W
 
-    t = spark.table("ss_ingest_sink")
     return (
         t.withColumn(
             "rn",
@@ -1034,10 +885,8 @@ def q_stream_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         BLOOM_BITS_PER_KEY,
         _bloom_positions,
     )
-    from eventstreamer_spark.session import configure
     from eventstreamer_spark.sources.tables import load_table
 
-    configure(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     m = BLOOM_BITS_PER_KEY * docs.count()  # sizes the static filter
     corpus = docs.select(F.md5(F.col("text").cast("binary")).alias("digest"))
@@ -1095,8 +944,7 @@ def q_stream_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("bloom_hit")
             )
         )
-        run_to_memory(probed, "bloom_probe_sink", mode="update")
-    t = spark.table("bloom_probe_sink")
+        t, _ = run_stream(probed, "update")
     # a doc's position rows live in one chunk, so one final emission
     # per key; if a partial ever re-emitted, the bool_and can only
     # tighten — keep the conservative (false-first) row
@@ -1183,10 +1031,8 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (chunk, bin) — state cannot grow with data, only with bins."""
     from eventstreamer_spark.operators.audit import _PSI_BINS, _psi_bin
     from eventstreamer_spark.operators.audit import _TOKS_S as _TS
-    from eventstreamer_spark.session import configure
     from eventstreamer_spark.sources.tables import load_table
 
-    configure(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     binned = docs.select(
         "doc_id",
@@ -1206,8 +1052,7 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts = stream.groupBy("chunk", "bin").agg(
             F.count(F.lit(1)).cast("long").alias("n_cur")
         )
-        run_to_memory(counts, "drift_sink", mode="update")
-    t = spark.table("drift_sink")
+        t, _ = run_stream(counts, "update")
     # one emission per (chunk, bin) — a chunk lives in one trigger;
     # keep the max defensively (counts only ever grow within a key)
     cur = t.groupBy("chunk", "bin").agg(F.max("n_cur").alias("n_cur"))

@@ -50,7 +50,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.registry import query
+from eventstreamer_spark.session import shuffle_partitions
 from eventstreamer_spark.sources.tables import load_events
+from eventstreamer_spark.streaming.pipeline import run_stream, stream_events_sf
 
 WINDOW_US = 1_000_000  # 1 second of event time, as in DispatcherFunction.cs:87
 
@@ -198,22 +200,26 @@ def _by_key(per_key, pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield per_key(key, g)
 
 
-def push_time_windows(events: DataFrame, num_partitions: int = 32) -> DataFrame:
-    """Batch form: one hash shuffle on key to co-locate each key's rows,
-    then the linear anchor walk per key inside ``mapInPandas``. The time
-    sort that the reference does per micro-batch (cs:35, O6) happens per
-    key inside the worker."""
+def _walk_keys(events: DataFrame, cols: tuple[str, ...], per_key, schema: str) -> DataFrame:
+    """The one batch plan of both recurrences: select (key, ts_us,
+    *cols), one hash shuffle on key to the session's shuffle width,
+    then ``per_key(key, rows)`` for every key inside ``mapInPandas``."""
     prepared = events.select(
         F.col("user_id").cast("string").alias("key"),
         # cast: file sources may surface TIMESTAMP_NTZ, which unix_micros rejects
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "event_id",
-        "event_type",
-        "value",
+        *cols,
     )
-    return prepared.repartition(num_partitions, "key").mapInPandas(
-        partial(_by_key, _per_key), OUT_SCHEMA
-    )
+    width = shuffle_partitions(events.sparkSession)
+    return prepared.repartition(width, "key").mapInPandas(partial(_by_key, per_key), schema)
+
+
+def push_time_windows(events: DataFrame) -> DataFrame:
+    """Batch form: one hash shuffle on key to co-locate each key's rows,
+    then the linear anchor walk per key inside ``mapInPandas``. The time
+    sort that the reference does per micro-batch (cs:35, O6) happens per
+    key inside the worker."""
+    return _walk_keys(events, ("event_id", "event_type", "value"), _per_key, OUT_SCHEMA)
 
 
 # The anchor chain is a per-key left-to-right recurrence — not one
@@ -365,18 +371,11 @@ def q_push_time_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     in state. The oracle replays the anchor recurrence and drops every
     key's final window, so the live streaming output is hash-checked —
     not just rows-counted — against an independent engine."""
-    from eventstreamer_spark.session import configure
-    from eventstreamer_spark.streaming.pipeline import run_to_memory, stream_events_sf
-
-    configure(spark)
     stream = stream_events_sf(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    out = push_time_stream(stream)
-    run_to_memory(out, "push_stream_parity_sink", mode="append")
-    return spark.table("push_stream_parity_sink").withColumn(
-        "avg_value", F.round(F.col("avg_value"), 6)
-    )
+    sink, _ = run_stream(push_time_stream(stream))
+    return sink.withColumn("avg_value", F.round(F.col("avg_value"), 6))
 
 
 # ---------------------------------------------------------------------------
@@ -400,13 +399,13 @@ def advance_capped_chain(
 ) -> tuple[list[dict], tuple | None]:
     """One step of the capped-session recurrence, shared by the batch
     and stream forms: fold (ts_us, value) rows — sorted by event time —
-    into carried state ``(sess_start, prev_ts, last_ts, n, vsum_e6)`` —
-    a session's first event IS its start, so no separate first_ts —
+    into carried state ``(sess_start, last_ts, n, vsum_e6)`` — a
+    session's first event IS its start, so no separate first_ts —
     returning (closed-session records, new state). Pure, so chunking
     invariance is property-testable exactly like the anchor chain.
 
     Cross-micro-batch ordering: a row whose ts precedes the carried
-    prev_ts arrived LATE (its position in the walk is already folded
+    last_ts arrived LATE (its position in the walk is already folded
     into closed sessions) — it is DROPPED rather than allowed to
     silently corrupt session boundaries; production would route it to
     a dead-letter audit like json_ingest_corrupt_audit. Within a
@@ -416,25 +415,20 @@ def advance_capped_chain(
     import math
 
     out: list[dict] = []
-    if state is None:
-        sess = prev = last = None
-        n = vsum = 0
-    else:
-        sess, prev, last, n, vsum = state
+    sess, last, n, vsum = (None, None, 0, 0) if state is None else state
     for ts, val in rows:
         ts = int(ts)
-        if prev is not None and ts < prev:
+        if last is not None and ts < last:
             continue  # late arrival from an already-walked position
         if sess is None:
             sess = ts
-        elif ts - prev > SESSION_GAP_US or ts - sess >= SESSION_CAP_US:
+        elif ts - last > SESSION_GAP_US or ts - sess >= SESSION_CAP_US:
             out.append(_session(sess, last, n, vsum))
             sess, n, vsum = ts, 0, 0
-        last = prev = ts
+        last = ts
         n += 1
         vsum += int(math.floor(val * 1_000_000 + 0.5))
-    new_state = None if sess is None else (sess, prev, last, n, vsum)
-    return out, new_state
+    return out, None if sess is None else (sess, last, n, vsum)
 
 
 def _session(sess: int, last: int, n: int, vsum: int) -> dict:
@@ -466,8 +460,7 @@ def _capped_per_key(key: str, pdf: pd.DataFrame) -> pd.DataFrame:
     """Batch form: step from ``None``, then flush the open session."""
     closed, tail = advance_capped_chain(None, _capped_rows(pdf))
     if tail is not None:
-        sess, _, last, n, vsum = tail
-        closed.append(_session(sess, last, n, vsum))
+        closed.append(_session(*tail))
     return pd.DataFrame([{"key": key, **r} for r in closed], columns=_CAPPED_COLS)
 
 
@@ -512,18 +505,9 @@ def q_capped_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the open session. Value sums accumulate as micro-scaled int64 so
     the result is bit-identical to the recursive-CTE oracle in any
     execution order. At 100 TB the repartition width is the memory knob
-    and per-key state is five scalars — `capped_session_stream` steps
+    and per-key state is four scalars — `capped_session_stream` steps
     the same function from its state store."""
-    prepared = load_events(spark, sf_dir).select(
-        F.col("user_id").cast("string").alias("key"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "value",
-    )
-    from eventstreamer_spark.session import shuffle_partitions
-
-    return prepared.repartition(shuffle_partitions(spark), "key").mapInPandas(
-        partial(_by_key, _capped_per_key), CAPPED_SCHEMA
-    )
+    return _walk_keys(load_events(spark, sf_dir), ("value",), _capped_per_key, CAPPED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -553,7 +537,7 @@ def capped_session_stream(events: DataFrame) -> DataFrame:
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         "value",
     )
-    state_schema = "sess long, prev long, last long, n long, vsum long"
+    state_schema = "sess long, last long, n long, vsum long"
     return prepared.groupBy("key").applyInPandasWithState(
         fn, CAPPED_SCHEMA, state_schema, "append", "NoTimeout"
     )
@@ -595,18 +579,13 @@ FROM sess WHERE session_start_us < tail_start
 def q_stream_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capped-duration sessionization as a REAL stateful streaming
     execution (applyInPandasWithState, append mode): per-key state
-    carries (sess_start, prev, last, n, Σvalue·1e6) across
+    carries (sess_start, last, n, Σvalue·1e6) across
     micro-batches; the gap (12 h) and cap (48 h) rules close sessions
     live, each key's open tail stays in state. The oracle replays the
     same recurrence and drops every key's final session, so the live
     streaming output hash-checks against an independent engine — the
     push_time_stream_parity pattern applied to the one session rule
     `session_window` cannot express."""
-    from eventstreamer_spark.session import configure
-    from eventstreamer_spark.streaming.pipeline import run_to_memory, stream_events_sf
-
-    configure(spark)
     stream = stream_events_sf(spark, sf_dir).select("ts", "user_id", "value")
-    out = capped_session_stream(stream)
-    run_to_memory(out, "capped_sessions_sink", mode="append")
-    return spark.table("capped_sessions_sink")
+    sink, _ = run_stream(capped_session_stream(stream))
+    return sink

@@ -458,14 +458,14 @@ def test_env_int(monkeypatch, raw, want):
     from eventstreamer_spark.session import env_int
 
     if raw is None:
-        monkeypatch.delenv("SPARK_GRAFT_RANK_MAX_PARTITIONS", raising=False)
+        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
     else:
-        monkeypatch.setenv("SPARK_GRAFT_RANK_MAX_PARTITIONS", raw)
+        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raw)
     if want is None:
-        with pytest.raises(ValueError, match="SPARK_GRAFT_RANK_MAX_PARTITIONS"):
-            env_int("SPARK_GRAFT_RANK_MAX_PARTITIONS", 7)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE_PARTITIONS"):
+            env_int("SPARK_GRAFT_SHUFFLE_PARTITIONS", 7)
     else:
-        assert env_int("SPARK_GRAFT_RANK_MAX_PARTITIONS", 7) == want
+        assert env_int("SPARK_GRAFT_SHUFFLE_PARTITIONS", 7) == want
 
 
 @pytest.mark.parametrize("raw", ["abc", "0", ""])
@@ -744,7 +744,7 @@ def test_capped_session_chunking_invariant(rows, cut_points):
         closed, state = advance_capped_chain(state, chunk)
         streamed.extend(closed)
     if state is not None:  # flush the open tail
-        sess, prev_ts, last, n, vsum = state
+        sess, last, n, vsum = state
         streamed.append(
             {
                 "session_start_us": sess,

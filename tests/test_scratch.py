@@ -37,13 +37,13 @@ def test_drip_stream_skips_empty_buckets(spark):
     """Bucket 1 has no rows: the replay is buckets 0 and 2, in order,
     one micro-batch each."""
     from eventstreamer_spark.scratch import drip_stream
-    from eventstreamer_spark.streaming.pipeline import run_foreach_batch
+    from eventstreamer_spark.streaming.pipeline import run_stream
 
     df = spark.createDataFrame([(i,) for i in range(12)], "rid int")
     batches: list[list[int]] = []
     with drip_stream(spark, df, (F.col("rid") % 2) * 2, 3) as stream:
-        run_foreach_batch(
-            stream, lambda b, _id: batches.append(sorted(r.rid for r in b.collect()))
+        run_stream(
+            stream, foreach=lambda b, _id: batches.append(sorted(r.rid for r in b.collect()))
         )
     assert batches == [list(range(0, 12, 2)), list(range(1, 12, 2))]
 

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from eventstreamer_spark.sources.tables import load_events
 from eventstreamer_spark.streaming.pipeline import (
     observed_windowed_stream,
-    run_to_memory,
+    run_stream,
     stream_events,
     windowed_stream,
 )
@@ -117,8 +117,8 @@ def test_streaming_matches_batch_twin(spark, tmp_path):
     ]
     path = _write_chunks(spark, str(tmp_path), chunks)
 
-    run_to_memory(windowed_stream(stream_events(spark, path)), "stream_vs_batch", mode="update")
-    got = spark.table("stream_vs_batch").toPandas()
+    sink, _ = run_stream(windowed_stream(stream_events(spark, path)), "update")
+    got = sink.toPandas()
     # update mode can emit a window several times; last emission wins
     got = got.sort_values(["key", "window_start", "n_events"]).groupby(
         ["key", "window_start"], as_index=False
@@ -183,9 +183,8 @@ def test_push_time_stream_matches_batch_closed_windows(spark, tmp_path):
     ]
     path = _write_chunks(spark, str(tmp_path), chunks)
     stream = stream_events(spark, path).select("event_id", "ts", "user_id", "event_type", "value")
-    out = push_time_stream(stream)
-    run_to_memory(out, "push_stream", mode="append")
-    got = spark.table("push_stream").toPandas().sort_values("anchor_ts", ignore_index=True)
+    sink, _ = run_stream(push_time_stream(stream))
+    got = sink.toPandas().sort_values("anchor_ts", ignore_index=True)
 
     batch = (
         push_time_windows(spark.read.parquet(path))
@@ -252,10 +251,8 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
         .select("r_uid", "r_ts", "r_event_id")
         .withWatermark("r_ts", "10 seconds")
     )
-    run_to_memory(join_expr(ls, rs), "ss_join", mode="append")
-    got = sorted(
-        (r.l_uid, r.l_event_id, r.r_event_id) for r in spark.table("ss_join").collect()
-    )
+    sink, _ = run_stream(join_expr(ls, rs))
+    got = sorted((r.l_uid, r.l_event_id, r.r_event_id) for r in sink.collect())
 
     lb = (
         spark.read.parquet(lpath)
@@ -284,12 +281,10 @@ def test_stream_join_state_is_evicted(spark, tmp_path):
         for h in range(4)
     ]
     path = _write_chunks(spark, str(tmp_path), chunks)
-    progress = run_to_memory(
-        stream_join_pairs(stream_events(spark, path), stream_events(spark, path)),
-        "ss_join_evict",
-        mode="append",
+    sink, progress = run_stream(
+        stream_join_pairs(stream_events(spark, path), stream_events(spark, path))
     )
-    got = sorted((r.a_event_id, r.b_event_id) for r in spark.table("ss_join_evict").collect())
+    got = sorted((r.a_event_id, r.b_event_id) for r in sink.collect())
     assert got == [(1, 2), (3, 4), (5, 6), (7, 8)]
     ops = [p["stateOperators"][0] for p in progress if p.get("stateOperators")]
     assert len(ops) == 4
@@ -362,8 +357,8 @@ def test_late_data_policy_drops_and_merges(spark):
         run_late_policy,
     )
 
-    progress = run_late_policy(spark, SF_DIR, "late_gate_test_sink")
-    streamed = spark.table("late_gate_test_sink").toPandas()
+    sink, progress = run_late_policy(spark, SF_DIR)
+    streamed = sink.toPandas()
 
     dropped = [
         so.get("numRowsDroppedByWatermark")
@@ -635,16 +630,14 @@ def test_stream_countmin_cells_match_batch(spark):
 
     from eventstreamer_spark.operators.audit import (
         _cms_cells,
+        _cms_stream_cells,
         _cms_tokcnt,
-        q_stream_countmin_topk,
     )
     from tests.conftest import SF_DIR
 
-    # run the streaming query once: it leaves the complete-mode cell
-    # table in the cms_stream_sink memory sink
-    q_stream_countmin_topk(spark, SF_DIR).collect()
+    # the complete-mode cell table stream_countmin_topk probes
     stream_cells = {
-        (r.i, r.b): r.c for r in spark.table("cms_stream_sink").collect()
+        (r.i, r.b): r.c for r in _cms_stream_cells(spark, SF_DIR).collect()
     }
     batch_cells = {
         (r.i, r.b): r.c
@@ -660,8 +653,6 @@ def test_stage_residue_chunks_merges_split_residues(spark):
     drip replay — scratch.drip_stream coalesce(1)-rewrites the bucket
     to one chunk, so every bucket still arrives as ONE micro-batch."""
     from eventstreamer_spark.scratch import drip_stream
-    from eventstreamer_spark.streaming.pipeline import run_foreach_batch
-
     df = spark.createDataFrame(
         [(i, f"p{i}") for i in range(30)], "rid int, payload string"
     )
@@ -669,9 +660,9 @@ def test_stage_residue_chunks_merges_split_residues(spark):
     spark.conf.set("spark.sql.files.maxRecordsPerFile", "4")
     try:
         with drip_stream(spark, df, F.col("rid") % 3, 3) as stream:
-            run_foreach_batch(
+            run_stream(
                 stream,
-                lambda b, _id: batches.append(sorted(r.rid for r in b.collect())),
+                foreach=lambda b, _id: batches.append(sorted(r.rid for r in b.collect())),
             )
     finally:
         spark.conf.unset("spark.sql.files.maxRecordsPerFile")
@@ -780,13 +771,31 @@ def test_checkpoint_restart_no_loss_no_dup(spark, tmp_path):
     assert got.iloc[1]["n_events"] == 2
 
 
-@pytest.mark.parametrize("raw", ["abc", "0"])
-def test_gate_partitions_env_rejected_before_conf(spark, monkeypatch, raw):
-    """A bad $SPARK_GRAFT_GATE_PARTITIONS fails at configuration time,
-    naming the variable, before the gate touches any session conf."""
-    monkeypatch.setenv("SPARK_GRAFT_GATE_PARTITIONS", raw)
-    confs = ("spark.sql.shuffle.partitions", "spark.sql.streaming.minBatchesToRetain")
+def test_run_stream_failure_leaves_nothing_behind(spark, tmp_path):
+    """When a micro-batch fails (a raising foreach function, a raising
+    expression into the memory sink), run_stream re-raises and leaves
+    no active stream and no temp view, with every gate conf restored
+    (or still unset)."""
+    from pyspark.errors import StreamingQueryException
+
+    confs = (
+        "spark.sql.streaming.stateStore.providerClass",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.minBatchesToRetain",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
     before = [spark.conf.get(k, None) for k in confs]
-    with pytest.raises(ValueError, match="SPARK_GRAFT_GATE_PARTITIONS"):
-        run_to_memory(spark.readStream.format("rate").load(), "bad_partitions")
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    path = _write_chunks(spark, str(tmp_path), [[_ev(1, "2024-01-01 00:00:00")]])
+
+    def fail(batch_df, batch_id):
+        raise RuntimeError("foreach failed")
+
+    with pytest.raises(StreamingQueryException, match="foreach failed"):
+        run_stream(stream_events(spark, path), foreach=fail)
+    failing = stream_events(spark, path).select(F.raise_error(F.lit("sink failed")))
+    with pytest.raises(StreamingQueryException, match="sink failed"):
+        run_stream(failing)
+    assert spark.streams.active == []
+    assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == views
     assert [spark.conf.get(k, None) for k in confs] == before

@@ -1,7 +1,8 @@
 """The dev scripts stay wired to the engine: every ``eventstreamer_spark``
 name that ``bench.py`` and ``scripts/*.py`` import, or read off an
 imported engine module, must resolve. The engine itself makes and
-frees local checkpoints only through ``memo``. No Spark session is
+frees local checkpoints only through ``memo``, and starts gate streams
+only through ``streaming.pipeline.run_stream``. No Spark session is
 started."""
 
 from __future__ import annotations
@@ -57,7 +58,7 @@ def test_tool_engine_imports_resolve(tool):
             _resolve(module if name is None else f"{module}.{name}")
         except (ImportError, AttributeError):
             missing.append(module if name is None else f"{module}.{name}")
-    # attributes read off an imported engine module (``P.run_to_memory``)
+    # attributes read off an imported engine module (``P.run_stream``)
     for node in ast.walk(tree):
         if (
             isinstance(node, ast.Attribute)
@@ -94,4 +95,36 @@ def test_checkpoints_only_through_memo():
             )
             if name in ("localCheckpoint", "free_local_checkpoint"):
                 found.append(f"{path.relative_to(ROOT)}:{node.lineno}: {name}")
+    assert not found, found
+
+
+def test_streams_start_only_in_the_runner():
+    """``.writeStream`` appears in the engine only inside
+    ``streaming.pipeline.run_stream`` (the one gate-stream runner) and
+    in ``sources/connectors.py`` (the production sinks), and no engine
+    module outside ``session.py`` calls ``configure(`` — the driver
+    contract configures the session before every query."""
+    found = []
+    for path in sorted(ENGINE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        runner = [
+            node for node in ast.walk(tree)
+            if isinstance(node, ast.FunctionDef) and node.name == "run_stream"
+        ]
+        inside = {id(n) for r in runner for n in ast.walk(r)}
+        for node in ast.walk(tree):
+            where = f"{path.relative_to(ROOT)}:{getattr(node, 'lineno', 0)}"
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "writeStream"
+                and path != ENGINE / "sources" / "connectors.py"
+                and not (path == ENGINE / "streaming" / "pipeline.py" and id(node) in inside)
+            ):
+                found.append(f"{where}: .writeStream")
+            if (
+                isinstance(node, ast.Call)
+                and (getattr(node.func, "id", None) or getattr(node.func, "attr", None)) == "configure"
+                and path != ENGINE / "session.py"
+            ):
+                found.append(f"{where}: configure(")
     assert not found, found
