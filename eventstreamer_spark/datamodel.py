@@ -93,6 +93,12 @@ def explode_payload(df: DataFrame, names_col: str = "names", values_col: str = "
     return df.withColumn("m", pair).select("*", F.col("m.name").alias("m_name"), F.col("m.value").alias("m_value")).drop("m")
 
 
+# The payload field names ``events_as_datapoints`` emits, in array
+# order: fixed when the plan is built, so per-field aggregates can be
+# spelled out column by column instead of exploding the payload.
+PAYLOAD_NAMES = ("value", "k")
+
+
 def events_as_datapoints(events: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """Adapt the driver's ``events`` table to the DataPoint envelope.
 
@@ -109,7 +115,7 @@ def events_as_datapoints(events: DataFrame, extra_cols: tuple[str, ...] = ()) ->
         F.concat(F.lit("dev-"), (F.col("user_id") % 10).cast("string")).alias("device_id"),
         F.col("user_id").cast("string").alias("session_id"),
         F.col("event_type").alias("sensor_type"),
-        F.array(F.lit("value"), F.lit("k")).alias("names"),
+        F.array(*[F.lit(n) for n in PAYLOAD_NAMES]).alias("names"),
         F.array(
             F.col("value").cast("string"),
             F.get_json_object(F.col("props"), "$.k"),

@@ -36,24 +36,24 @@ RATIO6_DUCK = (
 SUMK_DUCK = "sum(CAST(round({v} * {s}, 0) AS BIGINT)) / {s}.0"
 
 
+def scaled_sum(v, scale: int) -> F.Column:
+    """Sum of ``v`` in integer 1/scale units (each value rounded), as int64."""
+    return F.sum(F.round(v * F.lit(float(scale)), 0).cast("long"))
+
+
+def scaled_mean(total, n, scale: int) -> F.Column:
+    """MEANK_DUCK's finalization of a ``scaled_sum`` over ``n`` rows."""
+    return F.floor(total * F.lit(1.0) / n + F.lit(0.5)) / F.lit(float(scale))
+
+
 def sumk_spark(v, scale: int) -> F.Column:
     """Spark twin of SUMK_DUCK."""
-    return F.sum(F.round(v * F.lit(float(scale)), 0).cast("long")) / F.lit(
-        float(scale)
-    )
+    return scaled_sum(v, scale) / F.lit(float(scale))
 
 
 def meank_spark(v, scale: int) -> F.Column:
     """Spark twin of MEANK_DUCK (identical int64 partial sums)."""
-    return (
-        F.floor(
-            F.sum(F.round(v * F.lit(float(scale)), 0).cast("long"))
-            * F.lit(1.0)
-            / F.count(F.lit(1))
-            + F.lit(0.5)
-        )
-        / F.lit(float(scale))
-    )
+    return scaled_mean(scaled_sum(v, scale), F.count(F.lit(1)), scale)
 
 
 def mean6_spark(v) -> F.Column:

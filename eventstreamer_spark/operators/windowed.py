@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from eventstreamer_spark.datamodel import events_as_datapoints, explode_payload, with_key
+from eventstreamer_spark.datamodel import PAYLOAD_NAMES, events_as_datapoints, explode_payload, with_key
 from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.functions.casting import fmt_ts, round6, safe_double
 from eventstreamer_spark.registry import query
@@ -178,46 +178,38 @@ def windowed_emit_json(events: DataFrame, window: str = "1 second") -> DataFrame
     DuckDB oracle (coverage.py) rebuilds the identical JSON by string
     concatenation and the query hash-checks like any other.
 
-    Plan shape: ONE scan — the first-event carry rides the SAME
-    two-level aggregation that builds the value map (min of
-    struct(timestamp, event_id, device_id) per (key, window, field),
-    then min across fields: every field of a window sees the same
-    events, so the per-field minima agree and the cross-field min IS
-    the window's first event). No join, no second pass; both
-    aggregates are map-side combinable.
+    Plan shape: ONE scan, ONE (key, window) aggregate, no explode: the
+    payload fields are fixed (``datamodel.PAYLOAD_NAMES``), so it sums
+    each in micro-units beside the event count and the first event,
+    ``min(struct(timestamp, event_id, device_id))``. Every event gives
+    each field once and ``safe_double`` is never null, so the count is
+    each field's ``meank_spark`` denominator. In a stream that is one
+    state store per partition, not two chained ones.
     """
     dp = with_key(events_as_datapoints(events, extra_cols=("event_id",)))
-    eav = explode_payload(dp)
-    per_field = eav.groupBy(
-        "key", F.window("timestamp", window).alias("w"), "m_name"
-    ).agg(
-        N.mean6_spark(safe_double(F.col("m_value"))).alias("avg_value"),
+    agg = dp.groupBy("key", F.window("timestamp", window).alias("w")).agg(
+        F.count(F.lit(1)).alias("n"),
         F.min(F.struct("timestamp", "event_id", "device_id")).alias("fe"),
+        *[N.scaled_sum(safe_double(F.col("values")[i]), 1000000).alias(f"sum_{name}") for i, name in enumerate(PAYLOAD_NAMES)],
     )
-    return (
-        per_field.groupBy("key", "w")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct("m_name", F.format_string("%.6f", F.col("avg_value")))
-                    )
-                )
-            ).alias("allvalues"),
-            F.min("fe").alias("fe"),
-        )
-        .select(
-            "key",
-            F.to_json(
-                F.struct(
-                    fmt_ts(F.col("fe.timestamp")).alias("ts"),
-                    F.col("fe.device_id").alias("deviceid"),
-                    F.split(F.col("key"), ":").getItem(0).alias("sessionid"),
-                    F.lit("").alias("sessionstart"),
-                    F.col("allvalues"),
-                )
-            ).alias("json"),
-        )
+    allvalues = F.create_map(
+        *[
+            part
+            for name in sorted(PAYLOAD_NAMES)  # to_json writes map keys in insertion order
+            for part in (F.lit(name), F.format_string("%.6f", N.scaled_mean(F.col(f"sum_{name}"), F.col("n"), 1000000)))
+        ]
+    )
+    return agg.select(
+        "key",
+        F.to_json(
+            F.struct(
+                fmt_ts(F.col("fe.timestamp")).alias("ts"),
+                F.col("fe.device_id").alias("deviceid"),
+                F.split(F.col("key"), ":").getItem(0).alias("sessionid"),
+                F.lit("").alias("sessionstart"),
+                allvalues.alias("allvalues"),
+            )
+        ).alias("json"),
     )
 
 

@@ -96,7 +96,11 @@ def configure(spark: SparkSession) -> SparkSession:
     string formatting and Arrow transfer must behave identically there,
     so every config that can be set post-startup is (re)applied here,
     and the package's parent dir is appended to the Python workers'
-    ``PYTHONPATH`` (kept after any entry already there).
+    ``PYTHONPATH`` (kept after any entry already there). Workers also
+    get ``PYTHONSAFEPATH=1``: they run as ``python -m`` in the driver's
+    working directory, which would otherwise come first on their path,
+    so a directory holding another ``eventstreamer_spark`` would shadow
+    this one. Both apply to Python workers started after ``configure``.
     """
     # Size shuffle/state partitions to the actual parallelism: batch
     # queries are insulated by AQE coalescing either way, but a
@@ -119,6 +123,7 @@ def configure(spark: SparkSession) -> SparkSession:
         env["PYTHONPATH"] = _PACKAGE_PARENT
     elif _PACKAGE_PARENT not in worker_path.split(os.pathsep):
         env["PYTHONPATH"] = worker_path + os.pathsep + _PACKAGE_PARENT
+    env["PYTHONSAFEPATH"] = "1"
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -59,7 +59,7 @@ HEADLINERS = [
     ("zorder_pruning_audit", "REAL layout read-back (r13): 64-file footer stats; broadcast 4-box probe + matching replay"),
     ("compaction_bin_packing_audit", "two real partitioned writes; packing planned on the 96-row fragment-stats table"),
     ("partition_pruning_audit", "real month-partitioned write; per-month aggregates + broadcast 4-range joins"),
-    ("windowed_emit_json", "first-event carry rides the two-level aggregation: one scan, no join"),
+    ("windowed_emit_json", "one (key, window) aggregate: per-field micro-unit sums + first-event min, no explode, no join"),
     ("decile_value_share", "r14 parallel_rank: range exchange + _pid windows + broadcast grand total; no one-task exchange"),
     ("selection_method_agreement", "r14 stacked rank: ONE range exchange ranks all three methods; per-method rank = global - offset"),
     ("stats_driven_plan_audit", "ANALYZE consumer: the report rows carry the measured SMJ->BHJ decision (plans read pre-AQE in-query)"),

@@ -6,6 +6,8 @@ keeping it green is the project invariant.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 import __spark_entry__ as contract
@@ -69,3 +71,29 @@ def test_executors_import_engine_from_any_cwd():
     proc = run_driver_child(body, "/tmp")
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert int(proc.stdout.split()[-1]) > 0
+
+
+def test_executors_ignore_engine_decoy_in_cwd(tmp_path):
+    """A driver whose working directory holds another
+    ``eventstreamer_spark``: its Python workers still import this
+    checkout's package, not the decoy."""
+    from tests.conftest import run_driver_child
+
+    (tmp_path / "eventstreamer_spark").mkdir()
+    (tmp_path / "eventstreamer_spark" / "__init__.py").write_text("")
+    body = """
+    from pyspark.sql import functions as F
+    from eventstreamer_spark.session import configure
+    configure(spark)
+
+    @F.udf("string")
+    def engine_file(_):
+        import eventstreamer_spark
+        return eventstreamer_spark.__file__
+
+    print(spark.range(1).select(engine_file("id")).first()[0])
+    """
+    proc = run_driver_child(body, tmp_path)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    expected = Path(__file__).resolve().parent.parent / "eventstreamer_spark" / "__init__.py"
+    assert proc.stdout.split()[-1] == str(expected)

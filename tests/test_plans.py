@@ -245,12 +245,13 @@ def test_approx_aggregates_sketches_unmixed_with_distinct(spark):
 
 
 def test_emit_json_single_key_shuffle(spark):
-    """The reference output record: EAV aggregate + map assembly ride
-    one (key, window) partitioning — no extra exchange for to_json."""
+    """The reference output record: per-field sums, first event and
+    map assembly ride one (key, window) partitioning — no extra
+    exchange for to_json."""
     from eventstreamer_spark.operators.coverage import q_windowed_emit_json
 
     df = q_windowed_emit_json(spark, SF_DIR)
-    assert count_exchanges(df) <= 2  # (key, window, m_name) agg + (key, window) roll-up
+    assert count_exchanges(df) == 1  # the (key, window) aggregate, no explode
     assert "EvalPython" not in physical_plan(df)  # JSON emit stays JVM-side
 
 

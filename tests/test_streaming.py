@@ -135,6 +135,43 @@ def test_streaming_matches_batch_twin(spark, tmp_path):
     )
 
 
+def test_emit_json_stream_matches_batch_one_state_store(spark, tmp_path):
+    """The paper's query as a watermarked append stream: every closed
+    window emits the batch function's exact row, and the whole query
+    keeps ONE stateful operator (a single StateStoreSave per trigger).
+    A window spans two micro-batches; a far-later sentinel event in
+    the last file closes the rest, and its own window stays open."""
+    from eventstreamer_spark.operators.windowed import windowed_emit_json
+
+    def ev(eid, ts, uid, value, props):
+        return (eid, dt.datetime.fromisoformat(ts), uid, "click", value, props)
+
+    chunks = [
+        [
+            ev(1, "2024-01-01 00:00:00.100", 1, 10.1234564, '{"k": 7}'),
+            ev(2, "2024-01-01 00:00:00.900", 1, 3.5, '{"k": 7}'),
+            ev(3, "2024-01-01 00:00:00.500", 2, 1.0, '{"k": "x"}'),
+            ev(4, "2024-01-01 00:00:01.200", 1, 2.25, '{"k": 7}'),
+        ],
+        [
+            ev(5, "2024-01-01 00:00:01.500", 1, 4.0, '{"k": 7}'),
+            ev(6, "2024-01-01 00:00:01.700", 2, 1e-7, "{}"),
+        ],
+        [ev(7, "2024-01-01 00:00:02.300", 2, 5.5, '{"k": 1.25}')],
+        [ev(8, "2024-01-01 00:01:00.000", 99, 0.0, '{"k": 1}')],
+    ]
+    path = _write_chunks(spark, str(tmp_path), chunks)
+    stream = stream_events(spark, path).withWatermark("ts", "0 seconds")
+    sink, progress = run_stream(windowed_emit_json(stream), nodata_batches=True)
+    got = sorted(tuple(r) for r in sink.collect())
+
+    batch = windowed_emit_json(spark.read.parquet(path))
+    exp = sorted(tuple(r) for r in batch.collect() if not r.key.startswith("99:"))
+    assert got == exp and len(exp) == 5
+    stateful = [p for p in progress if p.get("stateOperators")]
+    assert stateful and all(len(p["stateOperators"]) == 1 for p in stateful)
+
+
 def test_watermark_drops_late_event(spark, tmp_path):
     """An event arriving after the watermark passed its window must be
     dropped (the reference would silently corrupt the old window —
