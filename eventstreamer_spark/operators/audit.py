@@ -937,20 +937,20 @@ def q_selection_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak"; comparisons between pairs remain apples-to-apples
     because every ranking uses the identical rule (ADVICE r7).
 
-    Scale shape (migrated r14, VERDICT r13 item 1): ONE parallel_rank
-    pass ranks all three methods — the scored join stacks to
-    (doc_id, method, score) long form and range-exchanges on
-    (method, score DESC, doc_id); methods partition the composite
-    order cleanly and every doc carries all three scores, so the
-    per-method rank is EXACTLY global_rank − method_offset·n (offsets
-    0/n/2n in the methods' lexicographic order) — three distributed
-    sorts' worth of ranks for one exchange, one checkpoint, one
-    bounded offset collect, no single-task window anywhere. The
-    rank unstack is one (doc_id)-keyed aggregate; n and k land as
-    driver literals (k = max(1, floor(0.25·n)), the same IEEE double
-    floor the oracle computes); the report has 3 rows. Everything
-    upstream of the rank is the shared linear-scaling scoring
-    chains."""
+    Scale shape: ONE parallel_rank pass ranks all three methods — the
+    scored join stacks to (doc_id, method, score) long form and
+    range-exchanges on (method, score DESC, doc_id); methods partition
+    the composite order cleanly and every doc carries all three
+    scores, so the per-method rank is EXACTLY global_rank −
+    method_offset·n (offsets 0/n/2n in the methods' lexicographic
+    order, n = _n / 3) — three distributed sorts' worth of ranks for
+    one exchange, no single-task window and no driver round trip. The
+    rank unstack is one (doc_id)-keyed aggregate that carries n, and
+    k = max(1, floor(0.25·n)) is the same IEEE double floor the
+    oracle computes; the report has 3 rows. Everything upstream of
+    the rank is the shared linear-scaling scoring chains, checkpointed
+    once as the stacked input: the range exchange's boundary sample
+    and its map stage would otherwise each re-run them."""
     from eventstreamer_spark.operators.curation import dsir_doc_scores
     from eventstreamer_spark.operators.quality import (
         classifier_artifacts_memo,
@@ -973,50 +973,41 @@ def q_selection_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     stacked = j.selectExpr(
         "doc_id",
         "stack(3, 'c', s_clf, 'd', s_dsir, 'q', q10) AS (m, s)",
+    ).transform(checkpoint)
+    ranked = parallel_rank(
+        stacked, [F.col("m"), F.col("s").desc(), F.col("doc_id")], rank_col="gr"
     )
-    ranked, n3 = parallel_rank(
-        spark,
-        stacked,
-        [F.col("m"), F.col("s").desc(), F.col("doc_id")],
-        rank_col="gr",
-    )
-    n = n3 // 3
-    k = max(1, math.floor(n * SELECTION_TOPQ_FRAC))
     # methods sort 'c' < 'd' < 'q' in the composite order; each has
     # exactly n rows (inner joins), so per-method rank = gr − offset
+    n = F.expr("_n DIV 3")
     r = ranked.withColumn(
         "r",
         F.col("gr")
-        - F.when(F.col("m") == "c", F.lit(0))
-        .when(F.col("m") == "d", F.lit(n))
-        .otherwise(F.lit(2 * n))
-        .cast("long"),
+        - F.when(F.col("m") == "c", F.lit(0)).when(F.col("m") == "d", n).otherwise(2 * n),
     )
     rk = r.groupBy("doc_id").agg(
         F.max(F.when(F.col("m") == "d", F.col("r"))).alias("r_d"),
         F.max(F.when(F.col("m") == "c", F.col("r"))).alias("r_c"),
         F.max(F.when(F.col("m") == "q", F.col("r"))).alias("r_q"),
+        F.max(n).alias("n"),
     )
+    k = F.greatest(F.lit(1), F.floor(F.col("n") * F.lit(SELECTION_TOPQ_FRAC)))
 
     def d2(a, b):
         return F.sum((F.col(a) - F.col(b)) * (F.col(a) - F.col(b))).cast("long")
 
     def ov(a, b):
-        return F.sum(
-            ((F.col(a) <= F.lit(k)) & (F.col(b) <= F.lit(k))).cast("long")
-        ).cast("long")
+        return F.sum(((F.col(a) <= k) & (F.col(b) <= k)).cast("long")).cast("long")
 
-    ag = (
-        rk.agg(
-            d2("r_d", "r_c").alias("sd2_dc"),
-            d2("r_d", "r_q").alias("sd2_dq"),
-            d2("r_c", "r_q").alias("sd2_cq"),
-            ov("r_d", "r_c").alias("ov_dc"),
-            ov("r_d", "r_q").alias("ov_dq"),
-            ov("r_c", "r_q").alias("ov_cq"),
-        )
-        .withColumn("n", F.lit(n).cast("long"))
-        .withColumn("k", F.lit(k).cast("long"))
+    ag = rk.agg(
+        d2("r_d", "r_c").alias("sd2_dc"),
+        d2("r_d", "r_q").alias("sd2_dq"),
+        d2("r_c", "r_q").alias("sd2_cq"),
+        ov("r_d", "r_c").alias("ov_dc"),
+        ov("r_d", "r_q").alias("ov_dq"),
+        ov("r_c", "r_q").alias("ov_cq"),
+        F.max("n").alias("n"),
+        F.max(k).cast("long").alias("k"),
     )
     pairs = ag.selectExpr(
         "n",

@@ -329,9 +329,10 @@ FROM tmix CROSS JOIN tot
 
 def capped_survivors(d: DataFrame, tk: DataFrame, cover: DataFrame) -> DataFrame:
     """The corpus-build per-domain cap stage, pre-checkpoint — factored
-    out (the ranks.range_staged precedent) so the plan test and
-    plans/r15 dumps can pin its shape, which the downstream eager
-    checkpoint otherwise hides behind a LogicalRDD.
+    out so the plan test (and the plan dumps kept at
+    ``827931b:plans/r15/corpus_build_capstage_{before,after}.txt``) can
+    pin its shape, which the downstream eager checkpoint otherwise
+    hides behind a LogicalRDD.
 
     Per-domain cap via LENGTH-ONLY PROXY + broadcast threshold
     (VERDICT r14 item 4, guide §8 "decide with small rows, move big

@@ -7,8 +7,9 @@ global ranking window — the repo's only single-task shape — and never
 touched a real file. This module does the production write instead:
 
   1. ``parallel_ntile`` assigns every row its EXACT global rank bucket
-     with a range exchange + per-partition windows + a bounded
-     (#partitions)-row offset collect — no no-partition window anywhere.
+     from ``ranks.parallel_rank``'s one lazy plan (range exchange, sort
+     within partitions, broadcast partition offsets) — no no-partition
+     window anywhere.
   2. ``layout_tables`` writes both layouts as REAL parquet, one
      directory per logical file (``repartitionByRange`` on the file id
      + ``sortWithinPartitions`` — the write shape the old docstrings
@@ -38,11 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.memo import artifact, checkpoint
-from eventstreamer_spark.operators.ranks import (
-    RANK_NPART,
-    parallel_rank,
-    range_staged,
-)
+from eventstreamer_spark.operators.ranks import parallel_rank
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.scratch import session_dir
 from eventstreamer_spark.sources.tables import load_table
@@ -50,43 +47,20 @@ from eventstreamer_spark.sources.tables import load_table
 # ---------------------------------------------------------------------------
 # Parallel exact global rank (the writer's clustering, without one task)
 # ---------------------------------------------------------------------------
-# Round 14: the primitive moved to operators/ranks.py (parallel_rank) so
-# the remaining global-rank queries could migrate to the same shape
-# (VERDICT r13 item 1); this module keeps the layout-write bucket form.
-
-LAYOUT_NPART = RANK_NPART  # range partitions for the parallel exact rank
-
-
-def _range_staged(df: DataFrame, order_cols: list[str]) -> DataFrame:
-    """The rank's exchange stage (see ranks.range_staged), kept under
-    its layout name so the plan test can pin the RangePartitioning
-    shape (the checkpoint in parallel_ntile collapses it to a
-    LogicalRDD in the downstream plan)."""
-    return range_staged(df, order_cols)
 
 
 def parallel_ntile(
-    spark: SparkSession,
-    df: DataFrame,
-    order_cols: list[str],
-    n_buckets: int,
-    bucket_col: str = "f",
-) -> tuple[DataFrame, int]:
+    df: DataFrame, order_cols: list[str], n_buckets: int, bucket_col: str = "f"
+) -> DataFrame:
     """Exact ntile(``n_buckets``) over a total order with NO
     no-partition window: bucket == ``(row_number() OVER (ORDER BY
     order_cols) - 1) * n_buckets DIV n`` — the formula value oracles
     replay (NOT SQL ntile's first-m-buckets-larger split; that form is
-    ranks.ntile_expr) — computed in parallel by ranks.parallel_rank
-    (range exchange + per-partition ``_pid`` windows + bounded
-    ≤ RANK_NPART-row offset collect).
-
-    Returns (bucketed_df, n_rows).
-    """
-    ranked, n = parallel_rank(spark, df, order_cols)
-    bucketed = ranked.withColumn(
-        bucket_col, F.expr(f"CAST(((_rank - 1) * {n_buckets}) DIV {n} AS INT)")
-    ).drop("_rank")
-    return bucketed, n
+    ranks.ntile_expr) — from ranks.parallel_rank's rank and row count
+    columns, in the same lazy plan."""
+    return parallel_rank(df, order_cols).withColumn(
+        bucket_col, F.expr(f"CAST(((_rank - 1) * {n_buckets}) DIV _n AS INT)")
+    ).drop("_rank", "_n")
 
 
 # ---------------------------------------------------------------------------
@@ -134,7 +108,7 @@ def layout_tables(spark: SparkSession, sf_dir: str) -> dict:
     interleave of the quantized (l_orderkey, l_partkey) coordinates.
 
     Write shape (pinned by test_layout_write_shape): exact-ntile file
-    ids from ``parallel_ntile`` (range exchange + parallel windows),
+    ids from ``parallel_ntile`` (range exchange, no driver round trip),
     then ``repartitionByRange(ZORDER_FILES, f)`` +
     ``sortWithinPartitions(f, <cluster order>)`` + ``partitionBy(f)``
     — a fully parallel one-time O(n log n) layout job; every 2-D scan
@@ -142,7 +116,7 @@ def layout_tables(spark: SparkSession, sf_dir: str) -> dict:
     l_linenumber), so the real parquet footers carry min/max for both
     probe dims and the point-lookup key.
 
-    Returns {"root", "linear", "zorder", "n"}."""
+    Returns {"root", "linear", "zorder"}."""
     return artifact(
         spark, sf_dir, "layout_tables", lambda: _write_layouts(spark, sf_dir)
     )
@@ -185,14 +159,13 @@ def _write_layouts(spark: SparkSession, sf_dir: str) -> dict:
         )
         .withColumn("morton", F.expr(_MORTON_S))
     )
-    n = 0
     for name, order in (
         ("linear", ["l_orderkey", "l_linenumber"]),
         ("zorder", ["morton", "l_orderkey", "l_linenumber"]),
     ):
-        bucketed, n = parallel_ntile(spark, base, order, ZORDER_FILES)
         (
-            bucketed.select(
+            parallel_ntile(base, order, ZORDER_FILES)
+            .select(
                 "f", "qx", "qy", "l_partkey", "l_orderkey", "l_linenumber", "morton"
             )
             .repartitionByRange(ZORDER_FILES, "f")
@@ -201,12 +174,7 @@ def _write_layouts(spark: SparkSession, sf_dir: str) -> dict:
             .partitionBy("f")
             .parquet(f"{root}/{name}")
         )
-    return {
-        "root": root,
-        "linear": f"{root}/linear",
-        "zorder": f"{root}/zorder",
-        "n": n,
-    }
+    return {"root": root, "linear": f"{root}/linear", "zorder": f"{root}/zorder"}
 
 
 # ---------------------------------------------------------------------------

@@ -3,31 +3,33 @@ no-partition ranking windows.
 
 A ``row_number() OVER (ORDER BY ...)`` with no PARTITION BY plans as
 ``Exchange SinglePartition`` — every input row serializes through ONE
-task, the classic 100×-scale killer. Round 13 retired that shape from
-the layout audits with ``parallel_ntile`` (operators/layout.py); this
-module factors the primitive out so the remaining global-rank queries
-(VERDICT r13 item 1: selection_method_agreement, length_bucket_batching,
-decile_value_share, gini_value_concentration, ntile_customer_balance)
-can migrate to the same proven plan:
+task, the classic 100×-scale killer. ``parallel_rank`` computes the
+same rank as one lazy plan, with no driver round trip:
 
-  1. ``repartitionByRange`` on the order columns — the distributed
-     sort exchange; partition i's rows all precede partition i+1's by
-     the range-partitioner contract.
-  2. ONE ``memo.checkpoint`` to pin partition ids between the two
-     passes (range boundary sampling is not re-run).
-  3. A BOUNDED (≤ RANK_NPART-row) per-partition count collect for the
-     prefix offsets — the only driver-side collect, 32 rows max.
-  4. Per-partition ``row_number`` windows (parallel, every windowspec
-     ``_pid``-partitioned) plus the broadcast offset.
+  1. ``repartitionByRange`` on the order columns, then on every other
+     column — the distributed sort exchange; partition i's rows all
+     precede partition i+1's by the range-partitioner contract. The
+     order is total, so the trailing columns change no rank; they only
+     keep column pruning from narrowing the count side below the
+     exchange, so both sides plan the same exchange and Spark evaluates
+     it once (the count side reads it as a ``ReusedExchange``) — one
+     range-boundary sample for both. This relies on
+     ``spark.sql.exchange.reuse=true``, which ``session.get_spark`` and
+     ``session.configure`` set: two evaluations would sample their
+     boundaries with different seeds and return wrong ranks silently.
+  2. ``sortWithinPartitions`` on the order and
+     ``monotonically_increasing_id``: the id's high bits are the
+     partition id, its low 33 bits the row's index in the partition.
+  3. One global aggregate over the exchange counts, for each of the
+     ≤ RANK_NPART partitions, the rows of all partitions before it —
+     the partition's rank offset — and the row count ``_n``; its
+     ≤ RANK_NPART rows are broadcast-joined to the rows on the
+     partition id.
 
 The exact SQL ``ntile(k)`` bucket (first ``n mod k`` buckets one row
-larger) is then a pure expression of the global rank (``ntile_expr``),
-so migrated queries keep their ntile-based DuckDB oracles unchanged.
-
-Lifecycle: the rank checkpoint belongs to the caller's checkpoint
-owner (memo.checkpoint): an artifact build or a ``run_query`` frees
-it; on the plain driver path Spark's ContextCleaner does. Query-tier
-callers return their few-row report lazily.
+larger) is then a pure expression of the global rank and ``_n``
+(``ntile_expr``), so migrated queries keep their ntile-based DuckDB
+oracles unchanged.
 
 No reference parity: avodovnik/eventstreamer has no ranking operator
 at all (its only ordering is a per-batch in-memory OrderBy,
@@ -38,19 +40,19 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from eventstreamer_spark.memo import checkpoint
 
 # Cap on range partitions for the parallel exact rank. The per-query
 # count is SIZE-ADAPTIVE below (VERDICT r14 item 5): a fixed 32 paid
-# ~32 near-empty range-sampler+window tasks on the 15k–150k-row report
+# ~32 near-empty range-sampler tasks on the 15k–150k-row report
 # inputs at sf0.1, while one partition per ~16 MB of estimated input
 # keeps the same RangePartitioning plan shape and scales back up with
 # the data.
 RANK_NPART = 32
 _RANK_BYTES_PER_PART = 16 << 20
+# monotonically_increasing_id: partition id << 33 | row index
+_ID_BITS = 33
 
 
 def rank_npart(df: DataFrame) -> int:
@@ -69,75 +71,52 @@ def rank_npart(df: DataFrame) -> int:
     return max(2, min(RANK_NPART, n))
 
 
-def _as_cols(order: list[str | Column]) -> list[Column]:
-    return [F.col(c) if isinstance(c, str) else c for c in order]
-
-
-def range_staged(df: DataFrame, order: list[str | Column]) -> DataFrame:
-    """The rank's exchange stage, factored out so plan tests can pin
-    the RangePartitioning shape (the checkpoint in parallel_rank
-    collapses it to a LogicalRDD in the downstream plan). ``order``
-    entries may carry sort direction (``F.col(x).desc()``)."""
-    cols = _as_cols(order)
-    return df.repartitionByRange(rank_npart(df), *cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-
-
 def parallel_rank(
-    spark: SparkSession,
-    df: DataFrame,
-    order: list[str | Column],
-    rank_col: str = "_rank",
-) -> tuple[DataFrame, int]:
+    df: DataFrame, order: list[str | Column], rank_col: str = "_rank"
+) -> DataFrame:
     """Exact global ``row_number() OVER (ORDER BY order)`` (1-based,
-    in ``rank_col``) with NO no-partition window, computed in parallel
-    via range exchange + per-partition windows + a bounded
-    (≤ RANK_NPART)-row offset collect. ``order`` must be a total order
-    (unique tie-break) or ranks are nondeterministic.
-
-    Returns (ranked_df, n_rows).
-    """
-    # LAZY checkpoint: the counts collect right below is the first
-    # action, so it materializes the range exchange AND persists the
-    # blocks in the SAME job — the eager form paid a separate
-    # materialization pass first (one full extra scan per rank,
-    # optimization guide §2.4 "remove shuffles/passes outright").
-    # Partition ids are pinned identically either way: the boundary
-    # sampling runs once, in whichever job first computes the RDD.
-    d = checkpoint(range_staged(df, order))
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in d.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    n = sum(counts.values())
-    if n == 0:
-        raise ValueError("parallel_rank: empty input")
-    offs, acc = [], 0
-    for pid in sorted(counts):
-        offs.append((pid, acc))
-        acc += counts[pid]
-    off = spark.createDataFrame(offs, "_pid INT, _off BIGINT")
-    w = Window.partitionBy("_pid").orderBy(*_as_cols(order))
-    ranked = (
-        d.join(F.broadcast(off), "_pid")
-        .withColumn(rank_col, F.row_number().over(w).cast("long") + F.col("_off"))
-        .drop("_pid", "_off")
+    bigint, in ``rank_col``) plus the input's row count in ``_n``,
+    with NO no-partition window and no driver-side job. ``order``
+    entries may carry sort direction (``F.col(x).desc()``) and must
+    form a total order (unique tie-break) or ranks are
+    nondeterministic. Every input column joins the range key, so every
+    one must be orderable (no map or variant column) and each goes into
+    the boundary sample collected on the driver: project the input down
+    to the columns the caller needs before ranking."""
+    cols = [F.col(c) if isinstance(c, str) else c for c in order]
+    npart = rank_npart(df)
+    staged = df.repartitionByRange(npart, *cols, *df.columns)
+    # one global aggregate: per partition i, the rows of partitions < i
+    pid = F.col("_pid")
+    before = staged.select(F.spark_partition_id().alias("_pid")).agg(
+        F.array(*[F.count(F.when(pid < i, 1)) for i in range(npart)]).alias("_b"),
+        F.count(F.lit(1)).alias("_n"),
     )
-    return ranked, n
+    offsets = before.select(F.posexplode("_b").alias("_pid", "_off"), "_n")
+    rows = staged.sortWithinPartitions(*cols).withColumn(
+        "_id", F.monotonically_increasing_id()
+    )
+    return (
+        rows.withColumn("_pid", F.shiftright("_id", _ID_BITS).cast("int"))
+        .join(F.broadcast(offsets), "_pid")
+        .withColumn(
+            rank_col,
+            F.col("_off") + F.col("_id").bitwiseAND((1 << _ID_BITS) - 1) + 1,
+        )
+        .drop("_pid", "_id", "_off")
+    )
 
 
-def ntile_expr(rank_col: str, n: int, k: int) -> Column:
-    """SQL ``ntile(k)`` as a pure expression of the exact global rank:
-    with q = n DIV k and m = n MOD k, the first m buckets hold q+1
-    rows, the rest q — bit-identical to the ntile the DuckDB oracles
-    run, so migrated queries keep their oracle SQL unchanged. ``n``
-    comes from parallel_rank's bounded count collect (a driver int)."""
-    q, m = divmod(n, k)
-    if m == 0:
-        return F.expr(f"(({rank_col} - 1) DIV {q}) + 1")
+def ntile_expr(rank_col: str, k: int) -> Column:
+    """SQL ``ntile(k)`` as a pure expression of the exact global rank
+    and parallel_rank's row-count column ``_n``: with q = n DIV k and
+    m = n MOD k, the first m buckets hold q+1 rows, the rest q —
+    bit-identical to the ntile the DuckDB oracles run, so migrated
+    queries keep their oracle SQL unchanged. When n < k (q = 0) every rank falls in the first
+    branch, so the ELSE division never runs."""
+    big = f"(_n % {k}) * (_n DIV {k} + 1)"  # rows in the m larger buckets
     return F.expr(
-        f"CASE WHEN {rank_col} <= {m * (q + 1)}"
-        f" THEN ({rank_col} - 1) DIV {q + 1}"
-        f" ELSE {m} + ({rank_col} - 1 - {m * (q + 1)}) DIV {q} END + 1"
+        f"CASE WHEN {rank_col} <= {big}"
+        f" THEN ({rank_col} - 1) DIV (_n DIV {k} + 1)"
+        f" ELSE _n % {k} + ({rank_col} - 1 - {big}) DIV (_n DIV {k}) END + 1"
     )

@@ -425,18 +425,18 @@ GROUP BY bucket
 @query("ntile_customer_balance", oracle=_NTILE_ORACLE)
 def q_ntile_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global ntile over all customers, computed with NO single-task
-    sort (migrated r14, VERDICT r13 item 1): parallel_rank's range
-    exchange + _pid-partitioned windows assign the exact global rank,
-    ntile_expr recovers SQL ntile(4)'s first-m-buckets-larger split
-    bit-identically (oracle unchanged) in a 4-row report."""
+    sort: parallel_rank's one lazy plan (range exchange, sort within
+    partitions, broadcast partition offsets) assigns the exact global
+    rank, ntile_expr recovers SQL ntile(4)'s first-m-buckets-larger
+    split bit-identically (oracle unchanged) in a 4-row report."""
     c = load_table(spark, sf_dir, "customer")
     c2 = c.select(
         "c_acctbal", F.round(F.col("c_acctbal"), 2).alias("bal2"), "c_custkey"
     )
-    ranked, n = parallel_rank(spark, c2, ["bal2", "c_custkey"])
+    ranked = parallel_rank(c2, ["bal2", "c_custkey"])
     return (
         ranked.select(
-            "c_acctbal", ntile_expr("_rank", n, 4).cast("long").alias("bucket")
+            "c_acctbal", ntile_expr("_rank", 4).cast("long").alias("bucket")
         )
         .groupBy("bucket")
         .agg(

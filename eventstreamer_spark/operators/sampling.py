@@ -1059,11 +1059,10 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade a training pipeline reads against
     packing_efficiency_audit's pack-then-slice losses.
 
-    Scale shape (migrated r14, VERDICT r13 item 1): ONE tokenize/count
-    pass; the global length rank is parallel_rank's range exchange +
-    _pid-partitioned windows — the production range-partitioner write
-    shape, exact, with no single-task sort; the global count n lands
-    as a driver literal from the same bounded offset collect. The
+    Scale shape: ONE tokenize/count pass; the global length rank is
+    parallel_rank's one lazy plan — the production range-partitioner
+    write shape, exact, with no single-task sort; the global count n
+    is its ``_n`` column, from the same broadcast partition offsets. The
     4-config fanout multiplies doc-COUNT rows (id + int), never text;
     per-batch stats aggregate at (cfg, bucket, batch) grain with
     map-side combine, the final table is 4 rows.
@@ -1075,14 +1074,15 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = d.select(
         "doc_id", F.size(H.tokens_expr("text")).cast("long").alias("n_tokens")
     )
-    ranked, n = parallel_rank(spark, sized, ["n_tokens", "doc_id"])
+    ranked = parallel_rank(sized, ["n_tokens", "doc_id"])
     cfgs = "array({})".format(", ".join(str(k) for k in _LB_CONFIGS))
     cfg = ranked.select(
         "doc_id",
         "n_tokens",
         F.explode(F.expr(cfgs)).alias("k"),
         (F.col("_rank") - F.lit(1)).cast("long").alias("rn"),
-    ).withColumn("bucket", F.expr(f"(rn * k) DIV {n}").cast("long"))
+        "_n",
+    ).withColumn("bucket", F.expr("(rn * k) DIV _n").cast("long"))
     wb = Window.partitionBy("k", "bucket").orderBy(
         F.expr("md5(CAST(doc_id AS STRING))"), "doc_id"
     )

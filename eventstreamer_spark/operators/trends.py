@@ -257,29 +257,28 @@ def q_decile_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     (micro-unit int sums; user_id breaks ties so the decile split is
     deterministic), then each decile's share of the grand total.
 
-    Scale shape (migrated r14, VERDICT r13 item 1): the global ntile
-    is parallel_rank's range exchange + _pid-partitioned windows —
-    no row ever passes through a single-task sort — with the exact
-    SQL ntile(10) split recovered from the global rank by ntile_expr,
-    so the oracle is unchanged. The grand total is a broadcast 1-row
-    crossJoin (bounded-stats pattern) and the share divides two exact
-    int64 sums."""
+    Scale shape: the global ntile is parallel_rank's one lazy plan
+    (range exchange, sort within partitions, broadcast partition
+    offsets) — no row ever passes through a single-task sort — with
+    the exact SQL ntile(10) split recovered from the global rank and
+    its row-count column by ntile_expr, so the oracle is unchanged.
+    The grand total is a broadcast 1-row crossJoin (bounded-stats
+    pattern) summed straight from the per-user totals, so the rank
+    chain runs once, and the share divides two exact int64 sums."""
     ev = load_events(spark, sf_dir)
     tv = ev.groupBy("user_id").agg(
         F.sum(F.round(F.col("value") * 1000000, 0).cast("long")).alias("units")
     )
-    ranked, n = parallel_rank(
-        spark, tv, [F.col("units").desc(), F.col("user_id")]
-    )
+    ranked = parallel_rank(tv, [F.col("units").desc(), F.col("user_id")])
     per = (
-        ranked.withColumn("decile", ntile_expr("_rank", n, 10))
+        ranked.withColumn("decile", ntile_expr("_rank", 10))
         .groupBy(F.col("decile").cast("int").alias("decile"))
         .agg(
             F.count(F.lit(1)).alias("n_users"),
             F.sum("units").alias("decile_units"),
         )
     )
-    tot = per.agg(F.sum("decile_units").alias("tot"))
+    tot = tv.agg(F.sum("units").alias("tot"))
     return per.crossJoin(F.broadcast(tot)).select(
         "decile",
         "n_users",
@@ -320,11 +319,11 @@ def q_gini_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank formula G = (2·Σi·xᵢ − (n+1)·Σxᵢ) / (n·Σxᵢ) over ascending
     exact totals (user_id tie-break ⇒ deterministic ranks).
 
-    Scale shape (migrated r14, VERDICT r13 item 1): the exact global
-    rank i comes from parallel_rank (range exchange, _pid-partitioned
-    windows, bounded offset collect) — no single-task sort at any
-    corpus size. The rank-weighted sum Σi·units is quadratic in
-    magnitude (max_i × total_units), so it accumulates in
+    Scale shape: the exact global rank i comes from parallel_rank's
+    one lazy plan (range exchange, sort within partitions, broadcast
+    partition offsets) — no single-task sort at any corpus size. The
+    rank-weighted sum Σi·units is quadratic in magnitude
+    (max_i × total_units), so it accumulates in
     decimal(38,0) — exact to 10³⁸, matching DuckDB's silent
     BIGINT→HUGEINT sum promotion; int64 overflows it at x100
     (found by the first-ever scale run of this query, r14). Per-row
@@ -335,8 +334,8 @@ def q_gini_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     tv = ev.groupBy("user_id").agg(
         F.sum(F.round(F.col("value") * 1000000, 0).cast("long")).alias("units")
     )
-    ranked, _ = parallel_rank(
-        spark, tv, [F.col("units").asc(), F.col("user_id").asc()], rank_col="i"
+    ranked = parallel_rank(
+        tv, [F.col("units").asc(), F.col("user_id").asc()], rank_col="i"
     )
     n = F.count(F.lit(1))
     su = F.sum("units")

@@ -71,6 +71,8 @@ def get_spark(app_name: str = "eventstreamer-spark", cpus: int | None = None) ->
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # ranks.parallel_rank's two sides must read ONE range exchange
+        .config("spark.sql.exchange.reuse", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
@@ -127,6 +129,10 @@ def configure(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    # ranks.parallel_rank's rows and offsets read one range exchange only
+    # through exchange reuse; two evaluations would sample different
+    # range boundaries and return wrong ranks without an error
+    spark.conf.set("spark.sql.exchange.reuse", "true")
     spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     # Input-split sizing, the map-side twin of the shuffle knob: a
     # single large parquet read as 128 MB splits hands each task a

@@ -60,7 +60,7 @@ HEADLINERS = [
     ("compaction_bin_packing_audit", "two real partitioned writes; packing planned on the 96-row fragment-stats table"),
     ("partition_pruning_audit", "real month-partitioned write; per-month aggregates + broadcast 4-range joins"),
     ("windowed_emit_json", "one (key, window) aggregate: per-field micro-unit sums + first-event min, no explode, no join"),
-    ("decile_value_share", "r14 parallel_rank: range exchange + _pid windows + broadcast grand total; no one-task exchange"),
+    ("decile_value_share", "parallel_rank: range exchange + broadcast partition offsets (AQE runs the offsets side's copy of the range exchange as a ReusedExchange) + broadcast grand total summed from the per-user aggregate (its hash exchange reused), so the rank chain runs once; no one-task sort"),
     ("selection_method_agreement", "r14 stacked rank: ONE range exchange ranks all three methods; per-method rank = global - offset"),
     ("stats_driven_plan_audit", "ANALYZE consumer: the report rows carry the measured SMJ->BHJ decision (plans read pre-AQE in-query)"),
 ]

@@ -592,10 +592,10 @@ def test_gap_stats_two_shuffles(spark):
 
 def test_decile_share_ntile_over_user_totals(spark):
     """r14 migration: the rank input is per-user totals (parallel_rank
-    over the tv aggregate — structural, the call site passes tv), the
-    report shape is the eager small-report checkpoint, and the values
-    carry the decile invariants. The _pid-partitioned window shape is
-    pinned in test_global_rank_windows_partitioned."""
+    over the tv aggregate — structural, the call site passes tv), and
+    the values carry the decile invariants. The rank's plan shape is
+    pinned in test_rank_is_one_lazy_plan and
+    test_global_rank_windows_partitioned."""
     from eventstreamer_spark.operators.trends import q_decile_value_share
 
     df = q_decile_value_share(spark, SF_DIR)
@@ -1972,9 +1972,9 @@ def _scan_output_rows(df):
 
 def test_layout_write_shape(spark):
     """VERDICT r12 item 1, the write side: the exact-ntile rank must be
-    computed by a RANGE exchange + per-partition windows (partitioned by
-    _pid), never a no-partition window; the written tables must have one
-    f=K directory per file id; and the REAL parquet footers must carry
+    computed by a RANGE exchange, never a window (a no-partition window
+    is the single-task shape); the written tables must have one f=K
+    directory per file id; and the REAL parquet footers must carry
     the per-file min/max the audit reports (footer == data stats)."""
     import glob
 
@@ -1989,29 +1989,17 @@ def test_layout_write_shape(spark):
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         "l_orderkey", "l_linenumber"
     )
-    bucketed, n = parallel_ntile(
-        spark, li, ["l_orderkey", "l_linenumber"], 8
-    )
-    # the exchange stage (pre-checkpoint): a RANGE repartition, the
-    # production layout-write shuffle
-    from eventstreamer_spark.operators.layout import _range_staged
-
-    stage_plan = physical_plan(_range_staged(li, ["l_orderkey", "l_linenumber"]))
-    assert "rangepartitioning" in stage_plan.lower()
-    # the rank stage: every window is partitioned by _pid — a
-    # no-partition window would be the r12 single-task shape
-    import re
-
-    plan = physical_plan(bucketed)
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-    assert specs, plan
-    for spec in specs:
-        assert "_pid" in spec, plan
+    bucketed = parallel_ntile(li, ["l_orderkey", "l_linenumber"], 8)
+    # the rank's exchange: a RANGE repartition, the production
+    # layout-write shuffle — and no window at all
+    plan = physical_plan(bucketed).lower()
+    assert "rangepartitioning" in plan
+    assert "windowspecdefinition" not in plan
     # exact ntile: bucket b gets rank range sizes within 1 of each other
     sizes = {r.f: r.cnt for r in bucketed.groupBy("f").count().withColumnRenamed("count", "cnt").collect()}
     assert set(sizes) == set(range(8))
     assert max(sizes.values()) - min(sizes.values()) <= 1
-    assert sum(sizes.values()) == n
+    assert sum(sizes.values()) == li.count()
 
     t = layout_tables(spark, SF_DIR)
     for name in ("linear", "zorder"):
@@ -2054,7 +2042,7 @@ def test_layout_executed_pruning(spark):
     )
 
     t = layout_tables(spark, SF_DIR)
-    total = t["n"]
+    total = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     read_tot = {"zorder": 0, "linear": 0}
     for _box, xlo, xhi, ylo, yhi in ZORDER_BOXES:
         match_counts = {}
@@ -2271,37 +2259,145 @@ def test_rank_npart_adaptive(spark):
     assert rank_npart(big) == RANK_NPART
 
 
+def _rank_mismatches(df, key, order, k):
+    """Rows where parallel_rank + ntile_expr disagree with the
+    single-partition row_number() / ntile(k) they replace, or where
+    ``_n`` is not the row count; also asserts the ranked frame carries
+    every input row unchanged."""
+    from pyspark.sql import Window
+
+    from eventstreamer_spark.operators.ranks import ntile_expr, parallel_rank
+
+    ranked = parallel_rank(df, order)
+    assert ranked.select(*df.columns).exceptAll(df).count() == 0
+    assert df.exceptAll(ranked.select(*df.columns)).count() == 0
+    w = Window.orderBy(*order)
+    expected = df.select(
+        key,
+        F.row_number().over(w).cast("long").alias("exp_rank"),
+        F.ntile(k).over(w).cast("long").alias("exp_bucket"),
+    )
+    got = ranked.withColumn("bucket", ntile_expr("_rank", k).cast("long"))
+    return (
+        got.join(expected, key, "full_outer")
+        .filter(
+            ~F.col("_rank").eqNullSafe(F.col("exp_rank"))
+            | ~F.col("bucket").eqNullSafe(F.col("exp_bucket"))
+            | (F.col("_n") != F.lit(df.count()))
+        )
+        .count()
+    )
+
+
 def test_parallel_rank_exact(spark):
     """ranks.parallel_rank must equal the single-partition
     row_number() it replaces, and ranks.ntile_expr must equal SQL
     ntile(k) — including the non-divisible first-m-buckets-larger
     split — so the migrated queries' oracles stay unchanged."""
-    from pyspark.sql import Window
-
-    from eventstreamer_spark.operators.ranks import ntile_expr, parallel_rank
-
     c = spark.read.parquet(f"{SF_DIR}/customer.parquet").select(
         "c_custkey", "c_acctbal"
     )
     order = [F.col("c_acctbal").desc(), F.col("c_custkey")]
-    ranked, n = parallel_rank(spark, c, order)
-    w = Window.orderBy(*order)
-    expected = c.select(
-        "c_custkey",
-        F.row_number().over(w).cast("long").alias("exp_rank"),
-        F.ntile(7).over(w).cast("long").alias("exp_bucket"),
-    )
-    got = ranked.withColumn("bucket", ntile_expr("_rank", n, 7).cast("long"))
-    diff = (
-        got.join(expected, "c_custkey")
-        .filter(
-            (F.col("_rank") != F.col("exp_rank"))
-            | (F.col("bucket") != F.col("exp_bucket"))
-        )
-        .count()
-    )
-    assert diff == 0
-    assert got.count() == n
+    assert c.count() % 7 != 0
+    assert _rank_mismatches(c, "c_custkey", order, 7) == 0
+
+
+def test_parallel_rank_edge_cases(spark):
+    """The rank's edges, with ANSI arithmetic on: an empty input (no
+    rows, no error), fewer rows than buckets (n DIV k = 0, so the
+    ntile CASE must never divide by it), n divisible by k, and string
+    and array columns outside the order riding through the range
+    exchange unchanged."""
+    schema = "id BIGINT, v INT, s STRING, a ARRAY<INT>"
+    rows = [(i, i % 5, f"s{i}", list(range(i % 3))) for i in range(12)]
+    order = [F.col("v").desc(), F.col("id")]
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        for data, k in (
+            ([], 3),  # empty input
+            (rows[:3], 7),  # n < k
+            (rows, 4),  # n divisible by k
+            (rows[:11], 4),  # n mod k = 3
+        ):
+            df = spark.createDataFrame(data, schema)
+            assert _rank_mismatches(df, "id", order, k) == 0, (len(data), k)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+RANK_REPORTS = (
+    "decile_value_share",
+    "gini_value_concentration",
+    "ntile_customer_balance",
+    "length_bucket_batching",
+    "selection_method_agreement",
+)
+# selection_method_agreement checkpoints its stacked scoring upstream
+# before the rank; AQE runs that plan's shuffle stages when the
+# checkpoint is defined: 11 construct jobs on a warm session, the same
+# as checkpointing the upstream alone. The rank adds none.
+_SELECTION_UPSTREAM_JOBS = 11
+
+
+def _range_exchanges(plan: str) -> tuple[int, int]:
+    """(evaluated, reused) range exchanges in a final AQE plan."""
+    import re
+
+    final = plan.split("== Initial Plan ==")[0]
+    evaluated = re.findall(r"^[\s:+|-]*Exchange rangepartitioning", final, re.M)
+    reused = re.findall(r"ReusedExchange \[[^\]]*\], Exchange rangepartitioning", final)
+    return len(evaluated), len(reused)
+
+
+def test_rank_is_one_lazy_plan(spark):
+    """A global rank runs no job while its query is built, and its
+    plan evaluates ONE range exchange: the offsets side reads it as a
+    ReusedExchange, so both sides see the same range boundaries. Each
+    of the six callers is collected twice and the second run read (the
+    first resolves the session's scan handles, as a bench warm-up
+    pass does)."""
+    import __spark_entry__  # noqa: F401  (registers every query)
+    from eventstreamer_spark import obs
+    from eventstreamer_spark.operators.layout import parallel_ntile
+    from eventstreamer_spark.registry import REGISTRY
+    from eventstreamer_spark.sources.tables import load_table
+
+    def ntile_lineitem(spark, sf_dir):
+        li = load_table(spark, sf_dir, "lineitem")
+        order = ["l_orderkey", "l_linenumber"]
+        return parallel_ntile(li.select(*order), order, 8).groupBy("f").count()
+
+    callers = {name: REGISTRY[name].fn for name in RANK_REPORTS}
+    callers["parallel_ntile"] = ntile_lineitem
+    for name, fn in callers.items():
+        for _ in range(2):
+            rec = obs.run_query(
+                spark, name, fn, SF_DIR, action=lambda df: (df.collect(), physical_plan(df))
+            )
+        assert rec.error is None, (name, rec.error)
+        bound = _SELECTION_UPSTREAM_JOBS if name == "selection_method_agreement" else 0
+        assert rec.construct_jobs <= bound, (name, rec.construct_jobs)
+        rows, plan = rec.result
+        assert rows, name
+        evaluated, reused = _range_exchanges(plan)
+        assert evaluated == 1 and reused >= 1, (name, plan)
+
+
+def test_configure_turns_exchange_reuse_on(spark):
+    """The rank reads one range exchange only through exchange reuse,
+    so a driver session submitted with it off gets it back on from
+    configure() before any query runs."""
+    from eventstreamer_spark.session import configure
+
+    key = "spark.sql.exchange.reuse"
+    assert spark.conf.get(key) == "true"
+    spark.conf.set(key, "false")
+    try:
+        configure(spark)
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.set(key, "true")
 
 
 def test_global_rank_windows_partitioned(spark):
@@ -2309,21 +2405,17 @@ def test_global_rank_windows_partitioned(spark):
     must contain NO no-partition ranking window — every
     windowspecdefinition's first argument is a partition key (a
     sort-order first argument == the Exchange SinglePartition shape).
-    The reports are lazy, so their plans show the windows."""
+    The reports are lazy, so their plans show the rank's range
+    exchange and any window."""
     import re
 
+    import __spark_entry__  # noqa: F401  (registers every query)
     from eventstreamer_spark.registry import REGISTRY
 
-    for name in (
-        "decile_value_share",
-        "gini_value_concentration",
-        "ntile_customer_balance",
-        "length_bucket_batching",
-        "selection_method_agreement",
-    ):
+    for name in RANK_REPORTS:
         plan = physical_plan(REGISTRY[name].fn(spark, SF_DIR))
+        assert "Exchange rangepartitioning" in plan, (name, plan)
         specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-        assert specs, (name, plan)
         for spec in specs:
             first = spec.split(",")[0]
             assert " ASC" not in first and " DESC" not in first, (name, spec)

@@ -100,10 +100,9 @@ def test_checkpoints_only_through_memo():
 
 def test_streams_start_only_in_the_runner():
     """``.writeStream`` appears in the engine only inside
-    ``streaming.pipeline.run_stream`` (the one gate-stream runner) and
-    in ``sources/connectors.py`` (the production sinks), and no engine
-    module outside ``session.py`` calls ``configure(`` — the driver
-    contract configures the session before every query."""
+    ``streaming.pipeline.run_stream`` (the one gate-stream runner), and
+    no engine module outside ``session.py`` calls ``configure(`` — the
+    driver contract configures the session before every query."""
     found = []
     for path in sorted(ENGINE.rglob("*.py")):
         tree = ast.parse(path.read_text(), filename=str(path))
@@ -117,7 +116,6 @@ def test_streams_start_only_in_the_runner():
             if (
                 isinstance(node, ast.Attribute)
                 and node.attr == "writeStream"
-                and path != ENGINE / "sources" / "connectors.py"
                 and not (path == ENGINE / "streaming" / "pipeline.py" and id(node) in inside)
             ):
                 found.append(f"{where}: .writeStream")
