@@ -7,6 +7,12 @@ boundary then hashes differently across engines. The fix (shared by
 every oracle-checked float mean in the repo): round each VALUE to
 integer micro-units first, sum the identical int64s (exact,
 order-free), and divide once at the end.
+
+Every rounding the Spark side does to match DuckDB goes through the
+half-up helpers below: ``floor(x * 10^k + 0.5) / 10^k``, because
+``F.round``'s ties do not match DuckDB's. Operators call them with
+their own arithmetic and never spell ``F.floor(... + 0.5)`` themselves
+(tests/test_tooling.py pins it).
 """
 
 from __future__ import annotations
@@ -36,6 +42,24 @@ RATIO6_DUCK = (
 SUMK_DUCK = "sum(CAST(round({v} * {s}, 0) AS BIGINT)) / {s}.0"
 
 
+def half_up_units(x) -> F.Column:
+    """``x`` rounded half-up to whole units: ``floor(x + 0.5)``."""
+    return F.floor(x + F.lit(0.5))
+
+
+def half_up(x, scale: int) -> F.Column:
+    """``x``, already in 1/scale units, rounded half-up and returned in
+    whole units: ``floor(x + 0.5) / scale``."""
+    return half_up_units(x) / F.lit(float(scale))
+
+
+def half_up_ratio(num, den, scale: int) -> F.Column:
+    """``num / den`` rounded half-up to 1/scale:
+    ``floor(num * scale / den + 0.5) / scale``. A NULL ``den`` (for
+    instance ``nullif(den, 0)``) gives NULL."""
+    return half_up(num * F.lit(float(scale)) / den, scale)
+
+
 def scaled_sum(v, scale: int) -> F.Column:
     """Sum of ``v`` in integer 1/scale units (each value rounded), as int64."""
     return F.sum(F.round(v * F.lit(float(scale)), 0).cast("long"))
@@ -43,7 +67,7 @@ def scaled_sum(v, scale: int) -> F.Column:
 
 def scaled_mean(total, n, scale: int) -> F.Column:
     """MEANK_DUCK's finalization of a ``scaled_sum`` over ``n`` rows."""
-    return F.floor(total * F.lit(1.0) / n + F.lit(0.5)) / F.lit(float(scale))
+    return half_up(total * F.lit(1.0) / n, scale)
 
 
 def sumk_spark(v, scale: int) -> F.Column:

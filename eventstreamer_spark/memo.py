@@ -188,7 +188,14 @@ def free_local_checkpoint(df: Any) -> None:
 def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     """``df.localCheckpoint(eager)``, registered with the innermost
     active owner. The one place the engine makes a local checkpoint;
-    chains end in ``.transform(checkpoint)``."""
+    chains end in ``.transform(checkpoint)``.
+
+    ``eager=False`` is not lazy under AQE: the checkpoint's RDD is
+    built from the adaptive plan, which runs every shuffle stage
+    upstream of it when the checkpoint is defined, so those jobs land
+    in the caller's construct phase. Only the final stage waits for
+    the first action; a plan with no exchange runs nothing until then
+    (tests/test_obs.py pins both)."""
     ck = df.localCheckpoint(eager=eager)
     if _OWNERS:
         _OWNERS[-1].append(ck)

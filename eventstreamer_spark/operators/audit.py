@@ -15,12 +15,11 @@ tables) always broadcast — shapes pinned in tests/test_plans.py.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
+from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.operators.ranks import parallel_rank
 from eventstreamer_spark.registry import query
@@ -419,21 +418,13 @@ def q_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_cands", F.lit(0)).cast("long").alias("n_candidate_pairs"),
             F.coalesce("n_true", F.lit(0)).cast("long").alias("n_true_pairs"),
             F.when(F.coalesce("n_cands", F.lit(0)) == 0, F.lit(0.0))
-            .otherwise(
-                F.floor(
-                    F.col("n_true") * F.lit(1000000.0) / F.col("n_cands") + F.lit(0.5)
-                )
-                / 1000000.0
-            )
+            .otherwise(N.half_up_ratio(F.col("n_true"), F.col("n_cands"), 1000000))
             .alias("precision"),
             F.when(F.col("n_truth") == 0, F.lit(0.0))
             .otherwise(
-                F.floor(
-                    F.coalesce("n_true", F.lit(0)) * F.lit(1000000.0)
-                    / F.col("n_truth")
-                    + F.lit(0.5)
+                N.half_up_ratio(
+                    F.coalesce("n_true", F.lit(0)), F.col("n_truth"), 1000000
                 )
-                / 1000000.0
             )
             .alias("recall"),
         )
@@ -561,14 +552,12 @@ def q_srp_angle_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("implied_e6").cast("double") / F.lit(1000000.0)).alias(
                 "implied_cos"
             ),
-            (
-                F.floor(F.col("_sc") * F.lit(1.0) / F.col("n_pairs") + F.lit(0.5))
-                / 1000000.0
-            ).alias("avg_exact_cos"),
-            (
-                F.floor(F.col("_se") * F.lit(1.0) / F.col("n_pairs") + F.lit(0.5))
-                / 1000000.0
-            ).alias("mean_abs_err"),
+            N.scaled_mean(F.col("_sc"), F.col("n_pairs"), 1000000).alias(
+                "avg_exact_cos"
+            ),
+            N.scaled_mean(F.col("_se"), F.col("n_pairs"), 1000000).alias(
+                "mean_abs_err"
+            ),
         )
     )
 
@@ -1027,22 +1016,13 @@ def q_selection_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         "method_b",
         "n",
         "sum_d2",
-        (
-            F.floor(
-                (
-                    F.col("n") * (F.col("n") * F.col("n") - F.lit(1).cast("long"))
-                    - F.lit(6).cast("long") * F.col("sum_d2")
-                )
-                * F.lit(1000000.0)
-                / nn
-                + F.lit(0.5)
-            )
-            / F.lit(1000000.0)
+        N.half_up_ratio(
+            F.col("n") * (F.col("n") * F.col("n") - F.lit(1).cast("long"))
+            - F.lit(6).cast("long") * F.col("sum_d2"),
+            nn,
+            1000000,
         ).alias("spearman_rho"),
-        (
-            F.floor(F.col("ovl") * F.lit(1000000.0) / F.col("k") + F.lit(0.5))
-            / F.lit(1000000.0)
-        ).alias("topq_overlap"),
+        N.half_up_ratio(F.col("ovl"), F.col("k"), 1000000).alias("topq_overlap"),
     )
 
 
@@ -1167,12 +1147,8 @@ def _cms_report(tokcnt: DataFrame, cells: DataFrame) -> DataFrame:
         F.col("cnt").alias("exact_cnt"),
         "cms_est",
         (F.col("cms_est") - F.col("cnt")).alias("overestimate"),
-        (
-            F.floor(
-                (F.col("cms_est") - F.col("cnt")) * F.lit(1000000.0) / F.col("cnt")
-                + F.lit(0.5)
-            )
-            / F.lit(1000000.0)
+        N.half_up_ratio(
+            F.col("cms_est") - F.col("cnt"), F.col("cnt"), 1000000
         ).alias("rel_err"),
     )
 
@@ -1906,11 +1882,9 @@ def ivf_pq_topk(
     ``parts`` (from pq_search_parts) to share one PQ build across
     consumers (the recall audit scores this and the full scan from
     the same artifacts)."""
-    import math
-
     from eventstreamer_spark.operators.similarity import (
         _score_centroids,
-        ivf_centroids_for,
+        sqrt_k_centroids,
     )
 
     e, qlut, codes = (
@@ -1926,9 +1900,7 @@ def ivf_pq_topk(
     )
     # adaptive ⌈√n⌉ cells (memoized, shared with ivf_adaptive_topk and
     # SemDeDup) — see the seed-choice note above _IVFPQ_ORACLE
-    k = int(math.ceil(math.sqrt(e.count())))
-    seeded = e.withColumn("label", F.col("vec_id") % F.lit(k))
-    cent = ivf_centroids_for(spark, sf_dir, e=seeded, embq=embq, variant=f"sqrt-k{k}")
+    _, _, cent = sqrt_k_centroids(spark, sf_dir, e, embq)
     scored = checkpoint(_score_centroids(embq, cent, max_rank=_IVF_NPROBE))
     assigned = scored.filter(F.col("rn") == 1).select("vec_id", "c_label")
     probes = scored.filter(
@@ -2113,11 +2085,9 @@ def ivfadc_residual_topk(
     grid gathers once at the deepest level and cuts per level (a
     vector lives in exactly one cell, so the tag is well-defined per
     (query, neighbor) pair)."""
-    import math
-
     from eventstreamer_spark.operators.similarity import (
         _score_centroids,
-        ivf_centroids_for,
+        sqrt_k_centroids,
     )
 
     e = load_table_parallel(spark, sf_dir, "embeddings")
@@ -2126,11 +2096,7 @@ def ivfadc_residual_topk(
         .select("vec_id", "uq")
         .transform(checkpoint)
     )
-    kcells = int(math.ceil(math.sqrt(e.count())))
-    seeded = e.withColumn("label", F.col("vec_id") % F.lit(kcells))
-    cent = ivf_centroids_for(
-        spark, sf_dir, e=seeded, embq=embq, variant=f"sqrt-k{kcells}"
-    )
+    _, _, cent = sqrt_k_centroids(spark, sf_dir, e, embq)
     scored = checkpoint(_score_centroids(embq, cent, max_rank=nprobe))
     assigned = scored.filter(F.col("rn") == 1).select("vec_id", "c_label")
     probes = scored.filter(
@@ -2656,15 +2622,14 @@ def q_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain build shared with graded_retrieval_eval, level-cut per row
     (VERDICT r11 item 1). Audit-tier by contract: production
     health-checks sample fixed probes (ann_recall_fixed_probes)."""
-    from eventstreamer_spark.operators.similarity import brute_truth_memo
+    from eventstreamer_spark.operators.similarity import (
+        brute_truth_memo,
+        recall_report,
+    )
 
     parts = pq_parts_memo(spark, sf_dir)
     e, qlut, codes = parts
     brute = brute_truth_memo(spark, sf_dir)
-    total = brute.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum((F.col("rank") == 1).cast("long")).alias("total_at_1"),
-    )
     adc = _adc_rank_topk(
         F.broadcast(qlut)
         .join(codes, F.col("query_id") != F.col("vec_id"))
@@ -2698,40 +2663,15 @@ def q_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank = _pq_exact_rerank(short2, fullv)
     rerank4 = _pq_exact_rerank(level_cut(sp, RERANK_M), fullv)
 
-    def method_hits(name: str, df: DataFrame) -> DataFrame:
-        return (
-            df.select("query_id", "neighbor_id")
-            .join(brute, ["query_id", "neighbor_id"])
-            .agg(
-                F.count(F.lit(1)).alias("hits"),
-                F.coalesce(
-                    F.sum((F.col("rank") == 1).cast("long")), F.lit(0)
-                ).alias("hits_at_1"),
-            )
-            .select(F.lit(name).alias("method"), "hits", "hits_at_1")
-        )
-
-    rows = (
-        method_hits("pq_adc", adc)
-        .unionByName(method_hits("ivf_pq", ivfpq))
-        .unionByName(method_hits("ivfadc_res", ivfadc))
-        .unionByName(method_hits("pq_rerank", rerank))
-        .unionByName(method_hits("pq_rerank_np4", rerank4))
-    )
-
-    def ratio6(num: str, den: str):
-        return F.floor(
-            F.col(num) * F.lit(1000000.0) / F.col(den) + F.lit(0.5)
-        ) / F.lit(1000000.0)
-
-    return rows.crossJoin(total).select(
-        "method",
-        "hits",
-        F.col("total").alias("brute_total"),
-        ratio6("hits", "total").alias("recall_at_k"),
-        "hits_at_1",
-        "total_at_1",
-        ratio6("hits_at_1", "total_at_1").alias("recall_at_1"),
+    return recall_report(
+        brute,
+        [
+            ("pq_adc", adc),
+            ("ivf_pq", ivfpq),
+            ("ivfadc_res", ivfadc),
+            ("pq_rerank", rerank),
+            ("pq_rerank_np4", rerank4),
+        ],
     )
 
 
@@ -2872,10 +2812,11 @@ def q_opq_permute_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine(original, reconstruction) fidelity from the SAME two-pass
     trainer.
 
-    Scale shape: the corpus explodes ONCE into integer components
-    (lazy checkpoint; three consumers — the dispersion keys and both
-    layout trains); the 64-row allocation tables broadcast; each
-    layout's train is pq_build's shape (gathered subspace arrays,
+    Scale shape: the corpus explodes ONCE into integer components (an
+    eager=False checkpoint, whose upstream shuffle stages run when it
+    is defined — memo.checkpoint; three consumers — the dispersion keys
+    and both layout trains); the 64-row allocation tables broadcast;
+    each layout's train is pq_build's shape (gathered subspace arrays,
     broadcast codebooks, row-local argmin folds, map-side-combined
     1024-key refits). Ranking 64 dims is a 64-row single-partition
     window — bounded by EMB_DIM, not data. Exactness: dispersion keys
@@ -3069,23 +3010,15 @@ def q_kmv_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = F.when(
         F.col("n_kept") < KMV_K, F.col("n_kept").cast("double")
     ).otherwise(
-        F.floor(
-            F.lit(KMV_K - 1.0) * F.lit(_KMV_DENOM) / F.col("hk") * 100 + F.lit(0.5)
-        )
-        / 100.0
+        N.half_up(F.lit(KMV_K - 1.0) * F.lit(_KMV_DENOM) / F.col("hk") * 100, 100)
     )
     return kth.crossJoin(F.broadcast(ex)).select(
         F.lit(KMV_K).cast("long").alias("k_minvals"),
         "exact_distinct",
         est.alias("kmv_estimate"),
-        (
-            F.floor(
-                F.abs(est - F.col("exact_distinct"))
-                * 1000000
-                / F.col("exact_distinct")
-                + F.lit(0.5)
-            )
-            / 1000000.0
+        N.half_up(
+            F.abs(est - F.col("exact_distinct")) * 1000000 / F.col("exact_distinct"),
+            1000000,
         ).alias("rel_err"),
     )
 
@@ -3205,8 +3138,8 @@ def q_population_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin",
         "n_ref",
         "n_cur",
-        (F.floor(F.col("p_ref") * 1000000 + F.lit(0.5)) / 1000000.0).alias("share_ref"),
-        (F.floor(F.col("p_cur") * 1000000 + F.lit(0.5)) / 1000000.0).alias("share_cur"),
+        N.half_up(F.col("p_ref") * 1000000, 1000000).alias("share_ref"),
+        N.half_up(F.col("p_cur") * 1000000, 1000000).alias("share_cur"),
         (
             F.round(
                 (F.col("p_cur") - F.col("p_ref"))
@@ -3304,7 +3237,7 @@ def q_embedding_anisotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = per.select(
         "n",
-        F.floor(F.col("s") * F.lit(1.0) / F.col("n") + F.lit(0.5))
+        N.half_up_units(F.col("s") * F.lit(1.0) / F.col("n"))
         .cast("long")
         .alias("mean6"),
         F.expr("(q + n DIV 2) DIV n").alias("msq12"),
@@ -3324,18 +3257,10 @@ def q_embedding_anisotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_vectors",
         (F.col("mean_sq_norm12") / F.lit(1000000000000.0)).alias("mean_sq_norm"),
         (F.col("mean_vec_sq12") / F.lit(1000000000000.0)).alias("mean_vec_sq_norm"),
-        (
-            F.floor(
-                F.col("mean_vec_sq12") * F.lit(1000000.0) / F.col("mean_sq_norm12")
-                + F.lit(0.5)
-            )
-            / 1000000.0
+        N.half_up_ratio(
+            F.col("mean_vec_sq12"), F.col("mean_sq_norm12"), 1000000
         ).alias("anisotropy"),
-        (
-            F.floor(
-                F.col("var_top12") * F.lit(1000000.0) / F.col("var_tot12")
-                + F.lit(0.5)
-            )
-            / 1000000.0
-        ).alias("top_dim_var_share"),
+        N.half_up_ratio(F.col("var_top12"), F.col("var_tot12"), 1000000).alias(
+            "top_dim_var_share"
+        ),
     )

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
+from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.operators.dedup import ngram_jaccard_pairs
 from eventstreamer_spark.operators.text import q_text_stats_quality
@@ -193,7 +194,7 @@ def q_domain_cap_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     def favg(value, cond):
         s = F.sum(F.when(cond, value))
         c = F.nullif(F.sum(cond.cast("long")), F.lit(0).cast("long"))
-        return F.floor(s * F.lit(1000000.0) / c + F.lit(0.5)) / F.lit(1000000.0)
+        return N.half_up_ratio(s, c, 1000000)
 
     return ranked.groupBy("source").agg(
         F.any_value(F.col("n_docs")).alias("n_docs"),
@@ -530,9 +531,6 @@ def q_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("w6").cast("long").alias("w_total"),
     )
 
-    def r6(col):
-        return F.floor(col + F.lit(0.5)) / F.lit(1000000.0)
-
     # NULL-propagating divisors (nullif), NOT a bare F.when guard:
     # under ANSI mode codegen evaluates both branches eagerly, so a
     # source whose survivor count hits 0 (possible on replicated
@@ -546,14 +544,9 @@ def q_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_capped",
         "n_semdedup",
         "n_final",
-        r6(F.col("w6") * F.lit(1000000.0) / w_tot_nz).alias("alpha_share"),
-        r6(
-            F.col("w6")
-            * F.lit(1.0)
-            / w_tot_nz
-            * F.col("n_total")
-            * F.lit(1000000.0)
-            / n_fin_nz
+        N.half_up_ratio(F.col("w6"), w_tot_nz, 1000000).alias("alpha_share"),
+        N.half_up_ratio(
+            F.col("w6") * F.lit(1.0) / w_tot_nz * F.col("n_total"), n_fin_nz, 1000000
         ).alias("effective_epochs"),
     )
 
@@ -996,9 +989,6 @@ def q_selection_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("w6").cast("long").alias("w_total"),
     )
 
-    def r6(col):
-        return F.floor(col + F.lit(0.5)) / F.lit(1000000.0)
-
     w_tot_nz = F.nullif(F.col("w_total"), F.lit(0).cast("long"))
     n_fin_nz = F.nullif(F.col("n_final"), F.lit(0).cast("long"))
     return tmix.crossJoin(F.broadcast(tot)).select(
@@ -1006,14 +996,9 @@ def q_selection_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         "n_dsir",
         "n_final",
-        r6(F.col("w6") * F.lit(1000000.0) / w_tot_nz).alias("alpha_share"),
-        r6(
-            F.col("w6")
-            * F.lit(1.0)
-            / w_tot_nz
-            * F.col("n_total")
-            * F.lit(1000000.0)
-            / n_fin_nz
+        N.half_up_ratio(F.col("w6"), w_tot_nz, 1000000).alias("alpha_share"),
+        N.half_up_ratio(
+            F.col("w6") * F.lit(1.0) / w_tot_nz * F.col("n_total"), n_fin_nz, 1000000
         ).alias("effective_epochs"),
     )
 
@@ -1210,7 +1195,7 @@ def q_curriculum_stage_assignment(spark: SparkSession, sf_dir: str) -> DataFrame
             "source",
             "n_docs",
             "n_tokens",
-            F.floor(F.col("sq") * F.lit(100000.0) / F.col("n_docs") + F.lit(0.5))
+            N.half_up_units(F.col("sq") * F.lit(100000.0) / F.col("n_docs"))
             .cast("long")
             .alias("meanq_e6"),
         )
@@ -1230,8 +1215,7 @@ def q_curriculum_stage_assignment(spark: SparkSession, sf_dir: str) -> DataFrame
         F.expr(
             f"CAST(LEAST(((cum - n_tokens) * {n}) DIV total, {n - 1}) + 1 AS BIGINT)"
         ).alias("stage"),
-        (
-            F.floor(F.col("cum") * F.lit(1000000.0) / F.col("total") + F.lit(0.5))
-            / 1000000.0
-        ).alias("cum_token_share"),
+        N.half_up_ratio(F.col("cum"), F.col("total"), 1000000).alias(
+            "cum_token_share"
+        ),
     )

@@ -27,15 +27,14 @@ reproduce every signature bit-for-bit.
 
 from __future__ import annotations
 
-import atexit
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
+from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.registry import query
-from eventstreamer_spark.scratch import session_dir, tempdir
+from eventstreamer_spark.scratch import session_dir, session_table, tempdir
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
 
 # ---------------------------------------------------------------------------
@@ -181,12 +180,8 @@ def q_dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "n_dup_docs",
             "dup_tokens",
-            (
-                F.floor(
-                    F.col("dup_tokens") * F.lit(1000000.0) / F.col("total_tokens")
-                    + F.lit(0.5)
-                )
-                / 1000000.0
+            N.half_up_ratio(
+                F.col("dup_tokens"), F.col("total_tokens"), 1000000
             ).alias("dup_token_share"),
         )
     )
@@ -857,10 +852,7 @@ def embedding_prefiltered_pairs(
         .distinct()
     )
     u = e.select("vec_id", "uq")
-    cos5 = (
-        F.floor(H.qcosine_expr("uq_a", "uq_b") * F.lit(100000.0) + F.lit(0.5))
-        / F.lit(100000.0)
-    )
+    cos5 = N.half_up(H.qcosine_expr("uq_a", "uq_b") * F.lit(100000.0), 100000)
     return (
         cand.join(
             u.select(F.col("vec_id").alias("vec_a"), F.col("uq").alias("uq_a")),
@@ -1743,29 +1735,6 @@ def q_ingest_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # physical strategy.
 
 _BUCKETED_INDEX_BUCKETS = 16
-_BUCKETED_INDEX_TABLES: set[str] = set()
-
-
-@atexit.register
-def _cleanup_bucketed_tables() -> None:
-    # table data lives in session dirs (external tables), reclaimed by
-    # scratch's exit hook. DROP the catalog entries too (best-effort):
-    # with a persistent metastore (a dev derby metastore_db/) a later
-    # session would otherwise resolve the table to an already-deleted
-    # path.
-    try:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        if spark is not None:
-            for tbl in _BUCKETED_INDEX_TABLES:
-                try:
-                    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                except Exception:
-                    pass
-    except Exception:
-        pass
-    _BUCKETED_INDEX_TABLES.clear()
 
 
 @query("bucketed_band_index_join", oracle=_INCR_ORACLE)
@@ -1812,7 +1781,7 @@ def q_bucketed_band_index_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("overwrite")
         .saveAsTable(table)
     )
-    _BUCKETED_INDEX_TABLES.add(table)
+    session_table(table)
     cand = bucketed_band_candidates(spark, sf_dir, table)
     return ingest_decisions(cand)
 
@@ -2103,13 +2072,11 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_exact_dup", F.lit(0)).cast("long").alias("n_exact_dup"),
             F.coalesce("n_near_dup", F.lit(0)).cast("long").alias("n_near_dup"),
             F.coalesce(
-                F.floor(
-                    (F.col("n_exact_dup") + F.col("n_near_dup"))
-                    * F.lit(1000000.0)
-                    / F.nullif(F.col("n_paras"), F.lit(0).cast("long"))
-                    + F.lit(0.5)
-                )
-                / F.lit(1000000.0),
+                N.half_up_ratio(
+                    F.col("n_exact_dup") + F.col("n_near_dup"),
+                    F.nullif(F.col("n_paras"), F.lit(0).cast("long")),
+                    1000000,
+                ),
                 F.lit(0.0),
             ).alias("dup_share"),
         )
@@ -2495,11 +2462,8 @@ def q_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tokens_v1",
             "tokens_v2",
             "token_delta",
-            (
-                F.floor(
-                    F.col("n_docs") * F.lit(1000000.0) / F.col("n_total") + F.lit(0.5)
-                )
-                / 1000000.0
-            ).alias("doc_share"),
+            N.half_up_ratio(F.col("n_docs"), F.col("n_total"), 1000000).alias(
+                "doc_share"
+            ),
         )
     )

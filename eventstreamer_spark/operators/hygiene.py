@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
+from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.sources.tables import load_table, load_table_parallel
 
@@ -266,10 +267,9 @@ def q_boilerplate_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.col("n_shingles").cast("long").alias("n_shingles"),
         F.col("n_boiler").cast("long").alias("n_boiler"),
-        (
-            F.floor(F.col("n_boiler") * F.lit(1000000.0) / F.col("n_shingles") + F.lit(0.5))
-            / F.lit(1000000.0)
-        ).alias("boiler_frac"),
+        N.half_up_ratio(F.col("n_boiler"), F.col("n_shingles"), 1000000).alias(
+            "boiler_frac"
+        ),
         (F.col("n_boiler") * BOILER_FLAG_DEN >= F.col("n_shingles") * BOILER_FLAG_NUM)
         .cast("int")
         .alias("flagged"),
@@ -423,9 +423,7 @@ def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_label",
     )
     train = assign.filter(~F.expr(SEM_BENCH_FILTER))
-    cos5 = F.floor(H.qcosine_expr("uq", "b_uq") * 100000 + F.lit(0.5)) / F.lit(
-        100000.0
-    )
+    cos5 = N.half_up(H.qcosine_expr("uq", "b_uq") * 100000, 100000)
     spairs = train.join(F.broadcast(bench), "c_label").select(
         "vec_id", "bench_id", cos5.alias("cosine")
     )

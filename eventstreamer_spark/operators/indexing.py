@@ -681,9 +681,8 @@ def bigram_avg_nll(d: DataFrame) -> DataFrame:
     )
     return scored.groupBy("doc_id").agg(
         F.sum("n_occ").alias("n_bigrams"),
-        F.floor(
+        N.half_up_units(
             F.sum(F.col("n_occ") * F.col("nll_e6")) * F.lit(1.0) / F.sum("n_occ")
-            + F.lit(0.5)
         )
         .cast("long")
         .alias("avg_nll_e6"),
@@ -989,13 +988,10 @@ def q_domain_shift_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return scored.groupBy("train_source", "eval_source").agg(
         F.sum("n_occ").cast("long").alias("n_bigrams"),
-        (
-            F.floor(
-                F.sum(F.col("n_occ").cast("double") * F.col("nll_e6").cast("double"))
-                / F.sum("n_occ")
-                + F.lit(0.5)
-            )
-            / 1000000.0
+        N.half_up(
+            F.sum(F.col("n_occ").cast("double") * F.col("nll_e6").cast("double"))
+            / F.sum("n_occ"),
+            1000000,
         ).alias("mean_nll"),
     )
 
@@ -1377,12 +1373,14 @@ def q_domain_excess_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     old plan re-ran tokenize+explode for the bigram, global-vocab and
     per-source-vocab branches): a single posexplode-shaped projection
     emits every token exactly once as `prefix` with a NULLABLE
-    next_token (null on each doc's last token), lazily checkpointed at
-    the exploded grain. The bigram aggregate is the not-null subset;
-    BOTH vocab tables derive from the same rows — `sv` = per-source
-    distinct prefix count, `gv` = global distinct over the same
-    distinct (source, word) side table — so the three corpus passes
-    collapse into one lineage. The ONE (source, prefix, next)
+    next_token (null on each doc's last token), checkpointed at the
+    exploded grain (eager=False: its upstream shuffle stages run when it
+    is defined, only its final stage at first use — memo.checkpoint).
+    The bigram aggregate is the not-null subset; BOTH vocab tables
+    derive from the same rows — `sv` = per-source distinct prefix
+    count, `gv` = global distinct over the same distinct (source,
+    word) side table — so the three corpus passes collapse into one
+    lineage. The ONE (source, prefix, next)
     aggregate still feeds everything downstream — the global model
     sums out the source key, the self model reuses the per-source
     rows, scoring is two equi-joins back onto the distinct-pair table
@@ -1444,13 +1442,10 @@ def q_domain_excess_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
             nll("ca_s", "vsz_s", "n_occ").alias("nll_s_e6"),
         )
     )
-    wm = lambda c: (
-        F.floor(
-            F.sum(F.col("n_occ").cast("double") * F.col(c).cast("double"))
-            / F.sum("n_occ")
-            + F.lit(0.5)
-        ).cast("long")
-    )
+    wm = lambda c: N.half_up_units(
+        F.sum(F.col("n_occ").cast("double") * F.col(c).cast("double"))
+        / F.sum("n_occ")
+    ).cast("long")
     per = scored.groupBy("source").agg(
         F.sum("n_occ").cast("long").alias("n_bigrams"),
         wm("nll_g_e6").alias("mg_e6"),
@@ -1475,12 +1470,8 @@ def q_domain_excess_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ex_e6") / F.lit(1000000.0)).alias("excess_nll"),
         F.when(
             F.col("tex") == 0,
-            F.floor(F.lit(1000000.0) / F.col("k") + F.lit(0.5)) / 1000000.0,
-        )
-        .otherwise(
-            F.floor(F.col("ex_e6") * F.lit(1000000.0) / F.col("tex") + F.lit(0.5))
-            / 1000000.0
-        )
+            N.half_up(F.lit(1000000.0) / F.col("k"), 1000000),
+        ).otherwise(N.half_up_ratio(F.col("ex_e6"), F.col("tex"), 1000000))
         .alias("mixture_weight"),
     )
 
@@ -1896,11 +1887,6 @@ def q_rrf_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = brute.agg(F.count(F.lit(1)).cast("long").alias("brute_total"))
 
-    def ratio6(num: str, den: str):
-        return F.floor(
-            F.col(num) * F.lit(1000000.0) / F.col(den) + F.lit(0.5)
-        ) / F.lit(1000000.0)
-
     per = (
         # both the truth list (q×k) and the K=60 baseline (q×k) are
         # bounded eval-grain tables — broadcast; the checkpointed RDD
@@ -1923,9 +1909,13 @@ def q_rrf_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rrf_k").cast("long").alias("rrf_k"),
         "n_fused",
         "n_consensus",
-        ratio6("n_consensus", "n_fused").alias("consensus_share"),
+        N.half_up_ratio(F.col("n_consensus"), F.col("n_fused"), 1000000).alias(
+            "consensus_share"
+        ),
         "n_moved_vs_k60",
         "hits",
         "brute_total",
-        ratio6("hits", "brute_total").alias("recall_at_k"),
+        N.half_up_ratio(F.col("hits"), F.col("brute_total"), 1000000).alias(
+            "recall_at_k"
+        ),
     )

@@ -38,6 +38,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.operators.ranks import parallel_rank
 from eventstreamer_spark.registry import query
@@ -327,14 +328,8 @@ def q_zorder_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_boxes = len(ZORDER_BOXES)
 
     def share(col: str):
-        return (
-            F.floor(
-                F.coalesce(col, F.lit(0))
-                * F.lit(1000000.0)
-                / (F.col("n_files") * F.lit(n_boxes))
-                + F.lit(0.5)
-            )
-            / 1000000.0
+        return N.half_up_ratio(
+            F.coalesce(col, F.lit(0)), F.col("n_files") * F.lit(n_boxes), 1000000
         )
 
     report = (
@@ -555,14 +550,8 @@ def q_bloom_file_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "files_scanned",
         "true_files",
         (F.col("files_scanned") - F.col("true_files")).alias("false_positives"),
-        (
-            F.floor(
-                F.col("files_scanned")
-                * F.lit(1000000.0)
-                / (F.col("n_files") * F.lit(BLOOM_LOOKUPS))
-                + F.lit(0.5)
-            )
-            / 1000000.0
+        N.half_up_ratio(
+            F.col("files_scanned"), F.col("n_files") * F.lit(BLOOM_LOOKUPS), 1000000
         ).alias("scan_share"),
     )
     # Eager 3-row checkpoint (ADVICE r13): see q_zorder_pruning_audit —
@@ -717,12 +706,8 @@ def q_compaction_bin_packing_audit(spark: SparkSession, sf_dir: str) -> DataFram
                 F.sum("file_rows").cast("long").alias("total_rows"),
                 F.min("file_rows").cast("long").alias("min_file_rows"),
                 F.max("file_rows").cast("long").alias("max_file_rows"),
-                (
-                    F.floor(
-                        F.sum("file_rows") * F.lit(1000000.0) / F.count(F.lit(1))
-                        + F.lit(0.5)
-                    )
-                    / 1000000.0
+                N.half_up_ratio(
+                    F.sum("file_rows"), F.count(F.lit(1)), 1000000
                 ).alias("avg_file_rows"),
                 F.sum(
                     F.when(F.col("file_rows") * 2 < F.col("c"), 1).otherwise(0)
@@ -907,21 +892,11 @@ def q_partition_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "partitions_read",
             "rows_read",
             "rows_matching",
-            (
-                F.floor(
-                    F.col("partitions_read")
-                    * F.lit(1000000.0)
-                    / F.col("n_partitions")
-                    + F.lit(0.5)
-                )
-                / 1000000.0
+            N.half_up_ratio(
+                F.col("partitions_read"), F.col("n_partitions"), 1000000
             ).alias("partition_share"),
-            (
-                F.floor(
-                    F.col("rows_read") * F.lit(1000000.0) / F.col("rows_matching")
-                    + F.lit(0.5)
-                )
-                / 1000000.0
+            N.half_up_ratio(
+                F.col("rows_read"), F.col("rows_matching"), 1000000
             ).alias("read_amplification"),
         )
     )
@@ -1025,14 +1000,10 @@ def q_analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("v").cast("long").alias("ndv"),
         F.min("v").alias("min_value"),
         F.max("v").alias("max_value"),
-        (
-            F.floor(
-                F.sum(F.length("v") * F.col("cnt"))
-                * F.lit(1000000.0)
-                / F.sum(F.when(F.col("v").isNotNull(), F.col("cnt")))
-                + F.lit(0.5)
-            )
-            / 1000000.0
+        N.half_up_ratio(
+            F.sum(F.length("v") * F.col("cnt")),
+            F.sum(F.when(F.col("v").isNotNull(), F.col("cnt"))),
+            1000000,
         ).alias("avg_width"),
     )
 

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
+from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.scratch import drip_stream
@@ -559,12 +560,11 @@ def q_classifier_calibration_audit(spark: SparkSession, sf_dir: str) -> DataFram
         "bin",
         "n_docs",
         "total",
-        (F.floor(F.col("ss").cast("double") / F.col("n_docs") + F.lit(0.5)) / 1000000.0).alias(
+        N.half_up(F.col("ss").cast("double") / F.col("n_docs"), 1000000).alias(
             "mean_pred"
         ),
-        (
-            F.floor(F.col("sy").cast("double") * 1000000 / F.col("n_docs") + F.lit(0.5))
-            / 1000000.0
+        N.half_up(
+            F.col("sy").cast("double") * 1000000 / F.col("n_docs"), 1000000
         ).alias("frac_pos"),
     )
     return r.select(
@@ -573,15 +573,12 @@ def q_classifier_calibration_audit(spark: SparkSession, sf_dir: str) -> DataFram
         "mean_pred",
         "frac_pos",
         F.abs(F.col("mean_pred") - F.col("frac_pos")).alias("abs_gap"),
-        (
-            F.floor(
-                F.abs(F.col("mean_pred") - F.col("frac_pos"))
-                * F.col("n_docs")
-                * 1000000
-                / F.col("total")
-                + F.lit(0.5)
-            )
-            / 1000000.0
+        N.half_up(
+            F.abs(F.col("mean_pred") - F.col("frac_pos"))
+            * F.col("n_docs")
+            * 1000000
+            / F.col("total"),
+            1000000,
         ).alias("weighted_gap"),
     )
 
@@ -698,9 +695,8 @@ def q_isotonic_calibration_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     return binagg.join(iso, "bin").select(
         "bin",
         F.col("sn").alias("n_docs"),
-        (
-            F.floor(F.col("sy").cast("double") * 1000000 / F.col("sn") + F.lit(0.5))
-            / 1000000.0
-        ).alias("frac_pos"),
-        (F.floor(F.col("c") * 1000000 + F.lit(0.5)) / 1000000.0).alias("calibrated"),
+        N.half_up(F.col("sy").cast("double") * 1000000 / F.col("sn"), 1000000).alias(
+            "frac_pos"
+        ),
+        N.half_up(F.col("c") * 1000000, 1000000).alias("calibrated"),
     )

@@ -735,10 +735,7 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prev_type",
         "next_type",
         F.col("n").cast("long").alias("n"),
-        (
-            F.floor(F.col("n") * F.lit(1000000.0) / F.col("row_n") + F.lit(0.5))
-            / F.lit(1000000.0)
-        ).alias("p_next"),
+        N.half_up_ratio(F.col("n"), F.col("row_n"), 1000000).alias("p_next"),
     )
 
 
@@ -835,10 +832,7 @@ def q_funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stage_idx",
         "stage",
         F.col("n_users").cast("long").alias("n_users"),
-        (
-            F.floor(F.col("n_users") * F.lit(1000000.0) / F.col("n1") + F.lit(0.5))
-            / F.lit(1000000.0)
-        ).alias("conversion"),
+        N.half_up_ratio(F.col("n_users"), F.col("n1"), 1000000).alias("conversion"),
     )
 
 
@@ -957,11 +951,8 @@ def q_activity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_cells"),
             F.min("n_events").cast("long").alias("min_events"),
             F.max("n_events").cast("long").alias("max_events"),
-            (
-                F.floor(
-                    F.count(F.lit(1)) * F.lit(1000000.0) / F.min("n_cells_total") + F.lit(0.5)
-                )
-                / F.lit(1000000.0)
+            N.half_up_ratio(
+                F.count(F.lit(1)), F.min("n_cells_total"), 1000000
             ).alias("cell_share"),
         )
     )
@@ -1079,14 +1070,8 @@ def q_data_quality_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rule",
         "n_checked",
         "n_violations",
-        (
-            F.floor(
-                (F.col("n_checked") - F.col("n_violations"))
-                * F.lit(1000000.0)
-                / F.col("n_checked")
-                + F.lit(0.5)
-            )
-            / 1000000.0
+        N.half_up_ratio(
+            F.col("n_checked") - F.col("n_violations"), F.col("n_checked"), 1000000
         ).alias("pass_share"),
     )
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
+from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.memo import checkpoint
 from eventstreamer_spark.operators.ranks import parallel_rank
 from eventstreamer_spark.registry import query
@@ -77,12 +78,9 @@ def q_dataset_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("split", "lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            # integer-scaled mean, floor(x+0.5) half-up: identical
-            # double math in both engines (see memory: round() ties)
-            (
-                F.floor(F.sum("n_tokens") * F.lit(10000.0) / F.count(F.lit(1)) + F.lit(0.5))
-                / F.lit(10000.0)
-            ).alias("avg_tokens"),
+            N.half_up_ratio(F.sum("n_tokens"), F.count(F.lit(1)), 10000).alias(
+                "avg_tokens"
+            ),
         )
     )
 
@@ -259,9 +257,6 @@ def q_packing_efficiency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "long"
     )
 
-    def share6(num, den):
-        return F.floor(num * F.lit(1000000.0) / den + F.lit(0.5)) / F.lit(1000000.0)
-
     return pos.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("shard_tokens"),
@@ -269,11 +264,15 @@ def q_packing_efficiency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (chunks * CONTEXT_TOKENS - F.sum("n_tokens")).cast("long").alias(
             "tail_waste_tokens"
         ),
-        share6(
-            chunks * CONTEXT_TOKENS - F.sum("n_tokens"), chunks * CONTEXT_TOKENS
+        N.half_up_ratio(
+            chunks * CONTEXT_TOKENS - F.sum("n_tokens"),
+            chunks * CONTEXT_TOKENS,
+            1000000,
         ).alias("waste_share"),
         F.sum(straddle).cast("long").alias("n_straddle_docs"),
-        share6(F.sum(straddle), F.count(F.lit(1))).alias("straddle_share"),
+        N.half_up_ratio(F.sum(straddle), F.count(F.lit(1)), 1000000).alias(
+            "straddle_share"
+        ),
     )
 
 
@@ -330,17 +329,13 @@ def q_source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "n_docs",
         "n_tokens",
-        (
-            F.floor(F.col("n_tokens") * F.lit(1000000.0) / F.col("total_tokens") + F.lit(0.5))
-            / F.lit(1000000.0)
-        ).alias("token_share"),
-        (
-            F.floor(
-                (F.col("total_tokens") * F.lit(1000000.0) / F.col("n_groups"))
-                / F.col("n_tokens")
-                + F.lit(0.5)
-            )
-            / F.lit(1000000.0)
+        N.half_up_ratio(F.col("n_tokens"), F.col("total_tokens"), 1000000).alias(
+            "token_share"
+        ),
+        N.half_up(
+            F.col("total_tokens") * F.lit(1000000.0) / F.col("n_groups")
+            / F.col("n_tokens"),
+            1000000,
         ).alias("uniform_weight"),
     )
 
@@ -523,17 +518,17 @@ def q_mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame
         F.sum("w6").cast("long").alias("w_total"),
     )
 
-    def r6(col):
-        return F.floor(col + F.lit(0.5)) / F.lit(1000000.0)
-
     return t.crossJoin(F.broadcast(tot)).select(
         "source",
         "n_docs",
-        r6(F.col("n_docs") * F.lit(1000000.0) / F.col("n_total")).alias("natural_share"),
-        r6(F.col("w6") * F.lit(1000000.0) / F.col("w_total")).alias("alpha_share"),
-        r6(
-            F.col("w6") * F.lit(1.0) / F.col("w_total") * F.col("n_total")
-            * F.lit(1000000.0) / F.col("n_docs")
+        N.half_up_ratio(F.col("n_docs"), F.col("n_total"), 1000000).alias(
+            "natural_share"
+        ),
+        N.half_up_ratio(F.col("w6"), F.col("w_total"), 1000000).alias("alpha_share"),
+        N.half_up_ratio(
+            F.col("w6") * F.lit(1.0) / F.col("w_total") * F.col("n_total"),
+            F.col("n_docs"),
+            1000000,
         ).alias("effective_epochs"),
     )
 
@@ -658,20 +653,17 @@ def q_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("w6").cast("long").alias("w_total"),
     )
 
-    def r6(col):
-        return F.floor(col + F.lit(0.5)) / F.lit(1000000.0)
-
     target = F.expr(f"CAST(({TOKEN_BUDGET} * w6) div w_total AS BIGINT)")
     return tmix.crossJoin(F.broadcast(tot)).select(
         "source",
         "n_docs",
         "n_tokens",
-        r6(F.col("n_tokens") * F.lit(1000000.0) / F.col("tok_total")).alias(
+        N.half_up_ratio(F.col("n_tokens"), F.col("tok_total"), 1000000).alias(
             "token_share"
         ),
-        r6(F.col("w6") * F.lit(1000000.0) / F.col("w_total")).alias("alpha_share"),
+        N.half_up_ratio(F.col("w6"), F.col("w_total"), 1000000).alias("alpha_share"),
         target.alias("target_tokens"),
-        r6(target * F.lit(1000000.0) / F.col("n_tokens")).alias("effective_epochs"),
+        N.half_up_ratio(target, F.col("n_tokens"), 1000000).alias("effective_epochs"),
     )
 
 
@@ -846,22 +838,18 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     window partition is ever corpus-sized. Exactness: integer-dot
     cosines rounded half-up to 5, integer rank/threshold
     arithmetic.""".format(frac=CLUSTER_SAMPLE_FRAC)
-    import math
-
     from eventstreamer_spark.operators.similarity import (
         _score_centroids,
-        ivf_centroids_for,
+        sqrt_k_centroids,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    k = int(math.ceil(math.sqrt(e.count())))
-    seeded = e.withColumn("label", F.col("vec_id") % F.lit(k))
     embq = (
         H.with_quantized_unit(e, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq")
         .transform(checkpoint)
     )
-    cent = ivf_centroids_for(spark, sf_dir, e=seeded, embq=embq, variant=f"sqrt-k{k}")
+    _, _, cent = sqrt_k_centroids(spark, sf_dir, e, embq)
     asg = _score_centroids(embq, cent).select("vec_id", "c_label", "cosine")
     w = Window.partitionBy("c_label")
     ranked = asg.withColumn(
@@ -975,14 +963,11 @@ def q_shard_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_docs").cast("long").alias("n_docs"),
         F.min("toks").cast("long").alias("min_shard_tokens"),
         F.max("toks").cast("long").alias("max_shard_tokens"),
-        F.floor(mean + F.lit(0.5)).cast("long").alias("mean_shard_tokens"),
-        (
-            F.floor(F.max("toks").cast("double") * cnt * 1000000 / stoks + F.lit(0.5))
-            / 1000000.0
+        N.half_up_units(mean).cast("long").alias("mean_shard_tokens"),
+        N.half_up(
+            F.max("toks").cast("double") * cnt * 1000000 / stoks, 1000000
         ).alias("straggler_ratio"),
-        (
-            F.floor(F.sqrt(var) * cnt * 1000000 / stoks + F.lit(0.5)) / 1000000.0
-        ).alias("cv"),
+        N.half_up(F.sqrt(var) * cnt * 1000000 / stoks, 1000000).alias("cv"),
     )
 
 
@@ -1097,14 +1082,8 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_batches"),
         F.sum("toks").cast("long").alias("total_tokens"),
         (F.sum("padded_toks") - F.sum("toks")).cast("long").alias("pad_tokens"),
-        (
-            F.floor(
-                (F.sum("padded_toks") - F.sum("toks"))
-                * F.lit(1000000.0)
-                / F.sum("padded_toks")
-                + F.lit(0.5)
-            )
-            / 1000000.0
+        N.half_up_ratio(
+            F.sum("padded_toks") - F.sum("toks"), F.sum("padded_toks"), 1000000
         ).alias("pad_share"),
     ).select(
         F.col("k").cast("long").alias("n_buckets"),

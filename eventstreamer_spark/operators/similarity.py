@@ -20,10 +20,13 @@ Two tiers, as a real 100 TB pipeline would have:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eventstreamer_spark.functions import hashing as H
+from eventstreamer_spark.functions import numeric as N
 from eventstreamer_spark.memo import artifact, checkpoint
 from eventstreamer_spark.registry import query
 from eventstreamer_spark.scratch import drip_stream
@@ -209,18 +212,6 @@ _MEAN_SCALED_DUCK = (
     "floor(sum(CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT)) * 1.0"
     " / count(*) + 0.5) / 1000000.0"
 )
-
-
-def _mean_scaled_col():
-    return (
-        F.floor(
-            F.sum(F.round(F.col("v").cast("double") * 1000000, 0).cast("long"))
-            * F.lit(1.0)
-            / F.count(F.lit(1))
-            + F.lit(0.5)
-        )
-        / F.lit(1000000.0)
-    ).alias("c")
 
 
 def _assemble_centroids(comp: DataFrame) -> DataFrame:
@@ -410,7 +401,7 @@ def _lloyd_mean_partials(itbl: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-# the exact v6 = round(x·1e6) integer components _mean_scaled_col sums,
+# the exact v6 = round(x·1e6) integer components the seed centroid mean sums,
 # gathered as an array so the Lloyd partials pass reads them row-locally
 _V6_ARR_S = (
     "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))"
@@ -436,7 +427,7 @@ def ivf_centroids_iterated(
     inner-join semantics in both engines)."""
     expl = e.select("vec_id", "label", F.posexplode("embedding").alias("pos", "v"))
     comp0 = expl.groupBy(F.col("label").alias("c_label"), F.col("pos")).agg(
-        _mean_scaled_col()
+        N.mean6_spark(F.col("v").cast("double")).alias("c")
     )
     cent = _assemble_centroids(comp0)
     if iters == 0:
@@ -456,12 +447,7 @@ def ivf_centroids_iterated(
         .join(e.select("vec_id", F.expr(_V6_ARR_S).alias("v6")), "vec_id")
         .transform(checkpoint)
     )
-    mean_c = (
-        F.floor(
-            F.sum("psum") * F.lit(1.0) / F.sum("pcnt") + F.lit(0.5)
-        )
-        / F.lit(1000000.0)
-    ).alias("c")
+    mean_c = N.scaled_mean(F.sum("psum"), F.sum("pcnt"), 1000000).alias("c")
     for _ in range(iters):
         comp = _lloyd_mean_partials(itbl, cent).groupBy("c_label", "pos").agg(mean_c)
         cent = _assemble_centroids(comp)
@@ -498,6 +484,35 @@ def ivf_centroids_for(
 
     rows, schema = artifact(spark, sf_dir, f"centroids:{variant}:{iters}", build)
     return spark.createDataFrame(rows, schema)
+
+
+def sqrt_k(counted: DataFrame) -> int:
+    """The adaptive IVF cell count ⌈√n⌉ for the n rows of ``counted``:
+    one driver job, which also materializes ``counted`` when it is an
+    eager=False checkpoint."""
+    return int(math.ceil(math.sqrt(counted.count())))
+
+
+def mod_k_seeded(e: DataFrame, k: int) -> DataFrame:
+    """``e`` with the adaptive build's seed cell ``label = vec_id % k``."""
+    return e.withColumn("label", F.col("vec_id") % F.lit(k))
+
+
+def sqrt_k_centroids(
+    spark: SparkSession,
+    sf_dir: str,
+    e: DataFrame,
+    embq: DataFrame,
+    counted: DataFrame | None = None,
+) -> tuple[int, DataFrame, DataFrame]:
+    """The adaptive ⌈√n⌉ IVF build every consumer shares: k =
+    ``sqrt_k(counted)`` (``e`` by default), cells seeded by
+    ``mod_k_seeded(e, k)`` and Lloyd-iterated from ``embq`` as the one
+    ``sqrt-k{k}`` centroid artifact. Returns (k, seeded e, centroids)."""
+    k = sqrt_k(e if counted is None else counted)
+    seeded = mod_k_seeded(e, k)
+    cent = ivf_centroids_for(spark, sf_dir, e=seeded, embq=embq, variant=f"sqrt-k{k}")
+    return k, seeded, cent
 
 
 def _ivf_centroids_duck(
@@ -592,15 +607,11 @@ def q_ivf_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_label").cast("int").alias("assigned_label"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        # integer-scaled mean with floor(x+0.5) half-up
-        (
-            F.floor(
-                F.sum(F.round(F.col("cosine") * 100000, 0).cast("long"))
-                * F.lit(10.0)
-                / F.count(F.lit(1))
-                + F.lit(0.5)
-            )
-            / F.lit(1000000.0)
+        N.half_up(
+            F.sum(F.round(F.col("cosine") * 100000, 0).cast("long"))
+            * F.lit(10.0)
+            / F.count(F.lit(1)),
+            1000000,
         ).alias("avg_cosine"),
     )
 
@@ -872,30 +883,25 @@ def q_graded_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq = per.select(
         "method",
         "query_id",
-        F.floor(
-            F.col("dcg_e6") * F.lit(1000000.0) / F.lit(_NDCG_IDCG_E6) + F.lit(0.5)
-        )
+        N.half_up_units(F.col("dcg_e6") * F.lit(1000000.0) / F.lit(_NDCG_IDCG_E6))
         .cast("long")
         .alias("ndcg_e6"),
         F.when(F.col("first_rel").isNull(), F.lit(0).cast("long"))
         .otherwise(
-            F.floor(F.lit(1000000.0) / F.col("first_rel") + F.lit(0.5)).cast("long")
+            N.half_up_units(F.lit(1000000.0) / F.col("first_rel")).cast("long")
         )
         .alias("rr_e6"),
     )
     nq = brute.agg(F.countDistinct("query_id").cast("long").alias("n"))
 
-    def mean6(col: str):
-        return F.floor(F.sum(col) * F.lit(1.0) / F.col("n") + F.lit(0.5)) / F.lit(
-            1000000.0
-        )
-
     return (
         pq.crossJoin(F.broadcast(nq))
         .groupBy("method", F.col("n").alias("n_queries"))
         .agg(
-            mean6("ndcg_e6").alias("mean_ndcg_at_k"),
-            mean6("rr_e6").alias("mean_mrr"),
+            N.scaled_mean(F.sum("ndcg_e6"), F.col("n"), 1000000).alias(
+                "mean_ndcg_at_k"
+            ),
+            N.scaled_mean(F.sum("rr_e6"), F.col("n"), 1000000).alias("mean_mrr"),
         )
     )
 
@@ -934,19 +940,13 @@ def q_ivf_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The driver-side count() that sizes k is a metadata-cheap action
     (the same count every auto-sizing index build performs) and the
     SQL twin computes the identical ⌈√n⌉ from the identical int."""
-    import math
-
     e = load_table(spark, sf_dir, "embeddings")
-    k = int(math.ceil(math.sqrt(e.count())))
-    seeded = e.withColumn("label", F.col("vec_id") % F.lit(k))
     embq = (
         H.with_quantized_unit(e, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq")
         .transform(checkpoint)
     )
-    cent = ivf_centroids_for(
-        spark, sf_dir, e=seeded, embq=embq, variant=f"sqrt-k{k}"
-    )
+    _, seeded, cent = sqrt_k_centroids(spark, sf_dir, e, embq)
     return ivf_topk(seeded, embq, cent=cent)
 
 
@@ -1029,8 +1029,6 @@ def q_sampled_centroid_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded-to-5 integer-domain kernel; means are floor-6 of integer
     sums; agreement is an integer compare — the oracle replays both
     chains via the prefix-parameterized centroid CTE generator."""
-    import math
-
     e = load_table(spark, sf_dir, "embeddings")
     # quantize WITHOUT the zero-norm drop so the checkpointed count
     # equals the raw count the oracle's ceil(sqrt(count(*))) uses; the
@@ -1045,13 +1043,11 @@ def q_sampled_centroid_training(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "uq")
         .transform(checkpoint)
     )
-    k = int(math.ceil(math.sqrt(embq_all.count())))
     embq = embq_all.filter(F.expr("uq[0] IS NOT NULL"))
-    seeded = e.withColumn("label", F.col("vec_id") % F.lit(k))
-    cent_f = ivf_centroids_for(spark, sf_dir, e=seeded, embq=embq, variant=f"sqrt-k{k}")
+    k, _, cent_f = sqrt_k_centroids(spark, sf_dir, e, embq, counted=embq_all)
     train = e.filter(F.expr(_SAMPLED_TRAIN_PRED))
     embq_s = embq.filter(F.expr(_SAMPLED_TRAIN_PRED))
-    seeded_s = train.withColumn("label", F.col("vec_id") % F.lit(k))
+    seeded_s = mod_k_seeded(train, k)
     cent_s = ivf_centroids_iterated(seeded_s, embq=embq_s)
     cos5 = F.expr("CAST(round(cosine * 100000, 0) AS BIGINT)")
     bf = _score_centroids(embq, cent_f).select(
@@ -1065,9 +1061,6 @@ def q_sampled_centroid_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = embq_all.filter(F.expr(_SAMPLED_TRAIN_PRED)).agg(
         F.count(F.lit(1)).cast("long").alias("n_train")
     )
-
-    def f6(col):
-        return F.floor(col + F.lit(0.5)) / F.lit(1000000.0)
 
     return (
         bf.join(bs, "vec_id")
@@ -1088,11 +1081,13 @@ def q_sampled_centroid_training(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cells_full",
             "cells_sampled",
             "n_agree",
-            f6(F.col("n_agree") * F.lit(1000000.0) / F.col("n_vectors")).alias(
+            N.half_up_ratio(F.col("n_agree"), F.col("n_vectors"), 1000000).alias(
                 "agree_share"
             ),
-            f6(F.col("_sf") * F.lit(10.0) / F.col("n_vectors")).alias("mean_cos_full"),
-            f6(F.col("_ss") * F.lit(10.0) / F.col("n_vectors")).alias(
+            N.half_up(F.col("_sf") * F.lit(10.0) / F.col("n_vectors"), 1000000).alias(
+                "mean_cos_full"
+            ),
+            N.half_up(F.col("_ss") * F.lit(10.0) / F.col("n_vectors"), 1000000).alias(
                 "mean_cos_sampled"
             ),
         )
@@ -1136,6 +1131,54 @@ FROM (
 """
 
 
+def recall_report(truth: DataFrame, methods: list[tuple]) -> DataFrame:
+    """Recall@k and recall@1 of each method's top-k against the exact
+    top-k ``truth`` (query_id, neighbor_id, rank), one row per method
+    in ``methods`` order.
+
+    ``methods`` holds ``(name, topk)`` or ``(name, topk, tags)`` items:
+    ``topk`` has query_id and neighbor_id, ``tags`` maps extra report
+    columns (placed after ``method``) to their per-method values.
+    Columns: method, *tags, hits, brute_total, recall_at_k, hits_at_1,
+    total_at_1, recall_at_1, the recalls rounded half-up to 6
+    decimals."""
+    total = truth.agg(
+        F.count(F.lit(1)).alias("total"),
+        F.sum((F.col("rank") == 1).cast("long")).alias("total_at_1"),
+    )
+    rows = None
+    for name, topk, *tags in methods:
+        tag_cols = [c.alias(t) for t, c in dict(*tags).items()]
+        part = (
+            topk.select("query_id", "neighbor_id")
+            .join(truth, ["query_id", "neighbor_id"])
+            .agg(
+                F.count(F.lit(1)).alias("hits"),
+                F.coalesce(F.sum((F.col("rank") == 1).cast("long")), F.lit(0)).alias(
+                    "hits_at_1"
+                ),
+            )
+            .select(
+                F.lit(name).alias("method"),
+                *tag_cols,
+                "hits",
+                "hits_at_1",
+            )
+        )
+        rows = part if rows is None else rows.unionByName(part)
+    return rows.crossJoin(total).select(
+        *rows.columns[:-2],  # method and the tags
+        "hits",
+        F.col("total").alias("brute_total"),
+        N.half_up_ratio(F.col("hits"), F.col("total"), 1000000).alias("recall_at_k"),
+        "hits_at_1",
+        "total_at_1",
+        N.half_up_ratio(F.col("hits_at_1"), F.col("total_at_1"), 1000000).alias(
+            "recall_at_1"
+        ),
+    )
+
+
 @query("ann_recall_at_k", oracle=_RECALL_ORACLE)
 def q_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the two approximate ANN paths against the exact
@@ -1176,51 +1219,21 @@ def q_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact truth comes from the consumer-side session artifact
     # (r14 optimization — built from the IDENTICAL prepared expression;
     # the owner, ann_bruteforce_topk, still pays its own build)
-    brute = brute_truth_memo(spark, sf_dir)
-    total = brute.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum((F.col("rank") == 1).cast("long")).alias("total_at_1"),
-    )
-
-    def method_hits(name: str, df: DataFrame) -> DataFrame:
-        return (
-            df.select("query_id", "neighbor_id")
-            .join(brute, ["query_id", "neighbor_id"])
-            .agg(
-                F.count(F.lit(1)).alias("hits"),
-                F.coalesce(F.sum((F.col("rank") == 1).cast("long")), F.lit(0)).alias(
-                    "hits_at_1"
-                ),
-            )
-            .select(F.lit(name).alias("method"), "hits", "hits_at_1")
-        )
-
-    rows = method_hits("srp_lsh", lsh_topk(prepared)).unionByName(
-        method_hits(
-            "ivf",
-            ivf_topk(
-                raw,
-                prepared.select("vec_id", "uq"),
-                cent=ivf_centroids_for(
-                    spark, sf_dir, e=raw, embq=prepared.select("vec_id", "uq")
+    return recall_report(
+        brute_truth_memo(spark, sf_dir),
+        [
+            ("srp_lsh", lsh_topk(prepared)),
+            (
+                "ivf",
+                ivf_topk(
+                    raw,
+                    prepared.select("vec_id", "uq"),
+                    cent=ivf_centroids_for(
+                        spark, sf_dir, e=raw, embq=prepared.select("vec_id", "uq")
+                    ),
                 ),
             ),
-        )
-    )
-
-    def ratio6(num: str, den: str):
-        return F.floor(F.col(num) * F.lit(1000000.0) / F.col(den) + F.lit(0.5)) / F.lit(
-            1000000.0
-        )
-
-    return rows.crossJoin(total).select(
-        "method",
-        F.col("hits").alias("hits"),
-        F.col("total").alias("brute_total"),
-        ratio6("hits", "total").alias("recall_at_k"),
-        F.col("hits_at_1").alias("hits_at_1"),
-        F.col("total_at_1").alias("total_at_1"),
-        ratio6("hits_at_1", "total_at_1").alias("recall_at_1"),
+        ],
     )
 
 
@@ -1352,36 +1365,7 @@ def q_ann_recall_fixed_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(H.qcosine_expr("q_uq", "uq"), 5).alias("cosine"),
         )
     )
-    total = brute.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum((F.col("rank") == 1).cast("long")).alias("total_at_1"),
-    )
-    hits = (
-        lsh.select("query_id", "neighbor_id")
-        .join(brute, ["query_id", "neighbor_id"])
-        .agg(
-            F.count(F.lit(1)).alias("hits"),
-            F.coalesce(F.sum((F.col("rank") == 1).cast("long")), F.lit(0)).alias(
-                "hits_at_1"
-            ),
-        )
-        .select(F.lit("srp_lsh").alias("method"), "hits", "hits_at_1")
-    )
-
-    def ratio6(num: str, den: str):
-        return F.floor(F.col(num) * F.lit(1000000.0) / F.col(den) + F.lit(0.5)) / F.lit(
-            1000000.0
-        )
-
-    return hits.crossJoin(total).select(
-        "method",
-        F.col("hits").alias("hits"),
-        F.col("total").alias("brute_total"),
-        ratio6("hits", "total").alias("recall_at_k"),
-        F.col("hits_at_1").alias("hits_at_1"),
-        F.col("total_at_1").alias("total_at_1"),
-        ratio6("hits_at_1", "total_at_1").alias("recall_at_1"),
-    )
+    return recall_report(brute, [("srp_lsh", lsh)])
 
 
 # ---------------------------------------------------------------------------
@@ -1469,19 +1453,13 @@ def semdedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     adaptive-⌈√n⌉ centroid (session-memoized centroid table shared
     with ivf_adaptive_topk) — the clustering front half of SemDeDup,
     reused by corpus_build_pipeline."""
-    import math
-
     e = load_table(spark, sf_dir, "embeddings")
-    k = int(math.ceil(math.sqrt(e.count())))
-    seeded = e.withColumn("label", F.col("vec_id") % F.lit(k))
     embq = (
         H.with_quantized_unit(e, "embedding", "uq", drop_zero_norm=True)
         .select("vec_id", "uq")
         .transform(checkpoint)
     )
-    cent = ivf_centroids_for(
-        spark, sf_dir, e=seeded, embq=embq, variant=f"sqrt-k{k}"
-    )
+    _, _, cent = sqrt_k_centroids(spark, sf_dir, e, embq)
     return _score_centroids(embq, cent).select("vec_id", "uq", "c_label")
 
 
@@ -1841,48 +1819,16 @@ def q_funnel_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id", "rank")
         .transform(checkpoint)
     )
-    total = brute.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum((F.col("rank") == 1).cast("long")).alias("total_at_1"),
-    )
-
-    def method_hits(name: str, pd_: int, df: DataFrame) -> DataFrame:
-        return (
-            df.select("query_id", "neighbor_id")
-            .join(brute, ["query_id", "neighbor_id"])
-            .agg(
-                F.count(F.lit(1)).alias("hits"),
-                F.coalesce(
-                    F.sum((F.col("rank") == 1).cast("long")), F.lit(0)
-                ).alias("hits_at_1"),
+    return recall_report(
+        brute,
+        [
+            (
+                f"funnel_p{pd_}",
+                funnel_topk(prepared, pd_),
+                {"prefix_dims": F.lit(pd_).cast("int")},
             )
-            .select(
-                F.lit(name).alias("method"),
-                F.lit(pd_).cast("int").alias("prefix_dims"),
-                "hits",
-                "hits_at_1",
-            )
-        )
-
-    rows = None
-    for pd_ in FUNNEL_RECALL_PREFIXES:
-        part = method_hits(f"funnel_p{pd_}", pd_, funnel_topk(prepared, pd_))
-        rows = part if rows is None else rows.unionByName(part)
-
-    def ratio6(num: str, den: str):
-        return F.floor(
-            F.col(num) * F.lit(1000000.0) / F.col(den) + F.lit(0.5)
-        ) / F.lit(1000000.0)
-
-    return rows.crossJoin(total).select(
-        "method",
-        "prefix_dims",
-        "hits",
-        F.col("total").alias("brute_total"),
-        ratio6("hits", "total").alias("recall_at_k"),
-        "hits_at_1",
-        "total_at_1",
-        ratio6("hits_at_1", "total_at_1").alias("recall_at_1"),
+            for pd_ in FUNNEL_RECALL_PREFIXES
+        ],
     )
 
 
@@ -2238,18 +2184,17 @@ def _staleness_parts(
     base slice and the equal-k cell count. Quantizes WITHOUT the
     zero-norm drop so the checkpointed row count equals the raw table
     count the oracle's ceil(sqrt(count(*))) uses; the count()
-    materializes the lazy checkpoint AND sizes k in the same action.
+    materializes the eager=False checkpoint (no exchange upstream, so
+    nothing ran when it was defined) AND sizes k in the same action.
     The post-checkpoint uq[0] filter mirrors drop_zero_norm=True for
     the numpy kernels downstream."""
-    import math
-
     e = load_table(spark, sf_dir, "embeddings")
     embq_all = (
         H.with_quantized_unit(e, "embedding", "uq")
         .select("vec_id", "uq")
         .transform(checkpoint)
     )
-    kf = int(math.ceil(math.sqrt(embq_all.count())))  # one k for both variants
+    kf = sqrt_k(embq_all)  # one k for both variants
     embq_full = embq_all.filter(F.expr("uq[0] IS NOT NULL"))
     embq_base = embq_full.filter(F.expr(_STALE_BASE_PRED))
     return e, embq_full, embq_base, kf
@@ -2335,13 +2280,13 @@ def q_ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         f_stale = pool.submit(
             _built_centroids,
             spark,
-            base.withColumn("label", F.col("vec_id") % F.lit(kb)),
+            mod_k_seeded(base, kb),
             embq_base,
         )
         f_fresh = pool.submit(
             _built_centroids,
             spark,
-            e.withColumn("label", F.col("vec_id") % F.lit(kf)),
+            mod_k_seeded(e, kf),
             embq_full,
         )
         cent_stale, n_cells_stale = f_stale.result()
@@ -2383,14 +2328,8 @@ def q_ivf_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_cells",
             F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
             "n_truth",
-            (
-                F.floor(
-                    F.coalesce(F.col("n_hit"), F.lit(0))
-                    * F.lit(1000000.0)
-                    / F.col("n_truth")
-                    + F.lit(0.5)
-                )
-                / 1000000.0
+            N.half_up_ratio(
+                F.coalesce(F.col("n_hit"), F.lit(0)), F.col("n_truth"), 1000000
             ).alias("recall_at_k"),
         )
     )
@@ -2474,7 +2413,7 @@ def q_index_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = e.filter(F.expr(_STALE_BASE_PRED))
 
     cent_stale, n_cells_stale = _built_centroids(
-        spark, base.withColumn("label", F.col("vec_id") % F.lit(kf)), embq_base
+        spark, mod_k_seeded(base, kf), embq_base
     )
     truth = (
         brute_topk(embq_full)
@@ -2491,7 +2430,7 @@ def q_index_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fired = bef_hit * 1000000 < REFRESH_RECALL_MIN_E6 * n_truth  # stage 2: GATE
     if fired:  # stage 3+4: RETRAIN, REASSIGN, RE-VERIFY
         cent_fresh, n_cells_fresh = _built_centroids(
-            spark, e.withColumn("label", F.col("vec_id") % F.lit(kf)), embq_full
+            spark, mod_k_seeded(e, kf), embq_full
         )
         aft_cells, aft_hit = n_cells_fresh, hits_of(cent_fresh)
     else:  # no-op branch: the maintained index stands
@@ -2508,10 +2447,9 @@ def q_index_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_cells",
         "n_hit",
         "n_truth",
-        (
-            F.floor(F.col("n_hit") * F.lit(1000000.0) / F.col("n_truth") + F.lit(0.5))
-            / 1000000.0
-        ).alias("recall_at_k"),
+        N.half_up_ratio(F.col("n_hit"), F.col("n_truth"), 1000000).alias(
+            "recall_at_k"
+        ),
         "refreshed",
     )
 
@@ -2613,8 +2551,6 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (a broadcast 4-row level join), never additional corpus
     passes. Exact ground truth is the audit-tier O(q·n) contract
     shared by every recall report (x10-capped in the harness)."""
-    import math
-
     e = load_table(spark, sf_dir, "embeddings")
     # k sizes from the count() that also materializes the quantization
     # checkpoint (all-rows quantize == the oracle's raw count; the
@@ -2624,7 +2560,6 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "uq")
         .transform(checkpoint)
     )
-    kf = int(math.ceil(math.sqrt(embq_all.count())))
     embq = embq_all.filter(F.expr("uq[0] IS NOT NULL"))
     # the adaptive ⌈√n⌉ build this sweep prices is the SAME memoized
     # sqrt-k variant ivf_adaptive_topk/SemDeDup/the sampled-training
@@ -2632,13 +2567,7 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact truth is the consumer-facing session artifact — the
     # sweep is a TUNING TABLE (eval tier), not a training owner, so it
     # consumes both memos (r14 optimization; rrf_k_sweep precedent).
-    cent = ivf_centroids_for(
-        spark,
-        sf_dir,
-        e=e.withColumn("label", F.col("vec_id") % F.lit(kf)),
-        embq=embq,
-        variant=f"sqrt-k{kf}",
-    )
+    _, _, cent = sqrt_k_centroids(spark, sf_dir, e, embq, counted=embq_all)
     scored = checkpoint(_score_centroids(embq, cent, max_rank=max(_SWEEP_LEVELS)))
     asg = scored.filter(F.col("rn") == 1).select("vec_id", "uq", "c_label")
     prb = scored.filter(
@@ -2688,14 +2617,8 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_candidates",
             F.coalesce("n_hit", F.lit(0).cast("long")).alias("n_hit"),
             "n_truth",
-            (
-                F.floor(
-                    F.coalesce("n_hit", F.lit(0).cast("long"))
-                    * F.lit(1000000.0)
-                    / F.col("n_truth")
-                    + F.lit(0.5)
-                )
-                / 1000000.0
+            N.half_up_ratio(
+                F.coalesce("n_hit", F.lit(0).cast("long")), F.col("n_truth"), 1000000
             ).alias("recall_at_k"),
         )
     )

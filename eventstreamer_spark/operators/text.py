@@ -283,10 +283,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         bpe.alias("n_bpe_tokens"),
         ws.alias("n_ws_tokens"),
-        # integer-scaled ratio with floor(x+0.5) half-up (tie-safe)
-        (F.floor(bpe * F.lit(10000.0) / ws + F.lit(0.5)) / F.lit(10000.0)).alias(
-            "tokens_per_word"
-        ),
+        N.half_up_ratio(bpe, ws, 10000).alias("tokens_per_word"),
     )
 
 
@@ -344,10 +341,7 @@ def q_repetition_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_tokens").alias("n_tokens"),
         F.col("token").alias("top_token"),
         F.col("cnt").alias("top_tf"),
-        (
-            F.floor(F.col("cnt") * F.lit(1000000.0) / F.col("n_tokens") + F.lit(0.5))
-            / F.lit(1000000.0)
-        ).alias("rep_ratio"),
+        N.half_up_ratio(F.col("cnt"), F.col("n_tokens"), 1000000).alias("rep_ratio"),
         (F.col("cnt") * 1000000 >= F.col("n_tokens") * 100000).cast("int").alias(
             "repetitive"
         ),
@@ -427,10 +421,9 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             "term",
             F.col("tf").cast("long").alias("tf"),
             F.col("df").cast("long").alias("df"),
-            (
-                F.floor(F.col("tf") * F.col("n") * F.lit(1000000.0) / F.col("df") + F.lit(0.5))
-                / F.lit(1000000.0)
-            ).alias("score"),
+            N.half_up_ratio(F.col("tf") * F.col("n"), F.col("df"), 1000000).alias(
+                "score"
+            ),
             "rank",
         )
     )
@@ -817,21 +810,13 @@ def q_bpe_apply_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("freq").alias("n_word_occurrences"),
         F.sum(F.col("freq") * F.col("n_chars")).alias("total_chars"),
         F.sum(F.col("freq") * F.col("n_syms")).alias("total_symbols"),
-        (
-            F.floor(
-                F.sum(F.col("freq") * F.col("n_syms")) * F.lit(1000000.0)
-                / F.sum("freq")
-                + F.lit(0.5)
-            )
-            / F.lit(1000000.0)
+        N.half_up_ratio(
+            F.sum(F.col("freq") * F.col("n_syms")), F.sum("freq"), 1000000
         ).alias("avg_symbols_per_occurrence"),
-        (
-            F.floor(
-                F.sum(F.col("freq") * F.col("n_chars")) * F.lit(1000000.0)
-                / F.sum(F.col("freq") * F.col("n_syms"))
-                + F.lit(0.5)
-            )
-            / F.lit(1000000.0)
+        N.half_up_ratio(
+            F.sum(F.col("freq") * F.col("n_chars")),
+            F.sum(F.col("freq") * F.col("n_syms")),
+            1000000,
         ).alias("chars_per_symbol"),
         F.sum((F.col("n_syms") == 1).cast("long")).alias("n_types_fully_merged"),
     )
@@ -915,21 +900,13 @@ def q_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_word_types"),
         F.sum("freq").cast("long").alias("n_word_occurrences"),
         F.sum(F.col("freq") * F.col("n_syms")).cast("long").alias("total_symbols"),
-        (
-            F.floor(
-                F.sum(F.col("freq") * F.col("n_syms")) * F.lit(1000000.0)
-                / F.sum("freq")
-                + F.lit(0.5)
-            )
-            / F.lit(1000000.0)
+        N.half_up_ratio(
+            F.sum(F.col("freq") * F.col("n_syms")), F.sum("freq"), 1000000
         ).alias("fertility"),
-        (
-            F.floor(
-                F.sum(F.col("freq") * F.col("n_chars")) * F.lit(1000000.0)
-                / F.sum(F.col("freq") * F.col("n_syms"))
-                + F.lit(0.5)
-            )
-            / F.lit(1000000.0)
+        N.half_up_ratio(
+            F.sum(F.col("freq") * F.col("n_chars")),
+            F.sum(F.col("freq") * F.col("n_syms")),
+            1000000,
         ).alias("chars_per_symbol"),
     )
 

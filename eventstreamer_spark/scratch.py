@@ -10,7 +10,9 @@ of them), is named ``es_*``, and has one of three lifetimes:
   audit tables, the CBO catalog tables, round-trip format copies, the
   upsert gate's final table). Kept until interpreter exit, when the
   module's single ``atexit`` hook removes every session root it handed
-  out. Artifact-store entries may free their own dir earlier.
+  out. Artifact-store entries may free their own dir earlier. A catalog
+  table whose data lives in a session dir is registered with
+  ``session_table(name)``; the same hook DROPs it first.
 - ``drip_stream(spark, df, bucket_col, n)`` — the file-drip replay, the
   deterministic stand-in for the reference's Event Hub trigger (O1):
   a table staged as one parquet file per bucket and read back with
@@ -30,6 +32,7 @@ from collections.abc import Iterator
 from pyspark.sql import Column, DataFrame, SparkSession
 
 _SESSION_ROOTS: set[str] = set()
+_SESSION_TABLES: set[str] = set()
 _BUCKET = "_drip_bucket"
 _MTIME_BASE = 1_600_000_000
 
@@ -56,8 +59,24 @@ def session_dir(spark: SparkSession, name: str) -> str:
     return path
 
 
+def session_table(name: str) -> str:
+    """Register catalog table ``name`` (data under a ``session_dir``) to
+    be dropped at interpreter exit; returns ``name``."""
+    _SESSION_TABLES.add(name)
+    return name
+
+
 @atexit.register
-def _remove_session_roots() -> None:
+def _remove_session_scratch() -> None:
+    # DROP the catalog entries (best-effort) before their data goes: with
+    # a persistent metastore a later session would otherwise resolve a
+    # table to an already-deleted path
+    with contextlib.suppress(Exception):
+        spark = SparkSession.getActiveSession()
+        for table in _SESSION_TABLES:
+            with contextlib.suppress(Exception):
+                spark.sql(f"DROP TABLE IF EXISTS {table}")
+    _SESSION_TABLES.clear()
     for root in _SESSION_ROOTS:
         shutil.rmtree(root, ignore_errors=True)
     _SESSION_ROOTS.clear()

@@ -62,6 +62,30 @@ def test_run_query_frees_its_checkpoints(spark):
     assert not memo.checkpoint_alive(made[0]) and memo._OWNERS == []
 
 
+def test_lazy_checkpoint_runs_upstream_shuffles(spark):
+    """memo.checkpoint(df, eager=False) is not lazy under AQE: over a
+    hash aggregate the shuffle stage runs while the query is built,
+    so the run records construct jobs; a plan with no exchange runs
+    nothing until the action."""
+    from pyspark.sql import functions as F
+
+    from eventstreamer_spark import memo
+
+    def agg(s, _):
+        return memo.checkpoint(s.range(1000).groupBy(F.col("id") % 7).count())
+
+    count = lambda df: df.count()  # noqa: E731
+    rec = obs.run_query(spark, "lazy_ckpt_agg", agg, SF_DIR, action=count)
+    assert rec.error is None and rec.result == 7
+    assert rec.construct_jobs >= 1
+    narrow = obs.run_query(
+        spark, "lazy_ckpt_narrow", lambda s, _: memo.checkpoint(s.range(1000)),
+        SF_DIR, action=count,
+    )
+    assert narrow.error is None and narrow.result == 1000
+    assert narrow.construct_jobs == 0
+
+
 def test_run_query_owns_driver_thread_checkpoints(spark):
     """Driver threads started inside a run (ivf_staleness_audit trains
     two Lloyd builds on two) register with the run's owner: with more

@@ -1133,3 +1133,53 @@ def test_owners_pay_consumers_hit(spark):
         memo.HITS.clear()
         REGISTRY[consumer].fn(spark, SF_DIR)
         assert memo.HITS[name] >= 1, f"consumer {consumer} rebuilt {name}"
+
+
+# ---------------------------------------------------------------------------
+# half-up rounding (functions/numeric.py) vs DuckDB's floor(x + 0.5) / s
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("scale", [10**2, 10**4, 10**5, 10**6])
+def test_half_up_matches_duckdb(spark, scale):
+    """Every half-up form equals DuckDB's ``floor(x + 0.5) / s`` on
+    exact .5 ties (num * s / den = m + 0.5), negative values (ties go
+    up: -m - 0.5 -> -m) and non-ties; a ``nullif``-zero denominator
+    gives NULL, not a DIVIDE_BY_ZERO error, under ANSI."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from eventstreamer_spark.functions import numeric as N
+
+    pairs = [(s * (2 * m + 1), 2 * scale) for m in (0, 1, 12344) for s in (1, -1)]
+    pairs += [(1, 3), (-2, 3), (7, 9), (0, 5), (123456789, 1000), (5, 0)]
+    rows = [(n, d, n * scale / d if d else 0.0) for n, d in pairs]
+    duck = duckdb.connect()
+    duck.execute("CREATE TABLE t (num BIGINT, den BIGINT, x DOUBLE)")
+    duck.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    want = duck.execute(
+        f"""SELECT floor(x + 0.5), floor(x + 0.5) / {scale}.0,
+                   floor(num * {scale}.0 / nullif(den, 0) + 0.5) / {scale}.0
+            FROM t ORDER BY num, den"""
+    ).fetchall()
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = (
+            spark.createDataFrame(rows, "num long, den long, x double")
+            .orderBy("num", "den")
+            .select(
+                N.half_up_units(F.col("x")),
+                N.half_up(F.col("x"), scale),
+                N.half_up_ratio(
+                    F.col("num"), F.nullif(F.col("den"), F.lit(0).cast("long")), scale
+                ),
+            )
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+    assert [tuple(r) for r in got] == [(int(u), h, r) for u, h, r in want]
+    ties = [r for (n, d, _), r in zip(sorted(rows), got) if d == 2 * scale]
+    assert [t[0] for t in ties] == [-12344, -1, 0, 1, 2, 12345]
+    assert got[[n for n, _, _ in sorted(rows)].index(5)][2] is None

@@ -48,6 +48,24 @@ def test_drip_stream_skips_empty_buckets(spark):
     assert batches == [list(range(0, 12, 2)), list(range(1, 12, 2))]
 
 
+def test_exit_hook_drops_registered_tables(spark, monkeypatch, tmp_path):
+    """A catalog table registered with scratch.session_table is dropped
+    by scratch's one exit hook (the session roots it also removes are
+    swapped out here, so the hook touches nothing of this session)."""
+    from eventstreamer_spark import scratch
+
+    monkeypatch.setattr(scratch, "_SESSION_ROOTS", set())
+    monkeypatch.setattr(scratch, "_SESSION_TABLES", set())
+    name = scratch.session_table("es_exit_hook_probe")
+    spark.range(3).write.option("path", str(tmp_path / "t")).mode(
+        "overwrite"
+    ).saveAsTable(name)
+    assert spark.catalog.tableExists(name)
+    scratch._remove_session_scratch()
+    assert not spark.catalog.tableExists(name)
+    assert not scratch._SESSION_TABLES
+
+
 # Every query that writes engine scratch space outside its own block:
 # session dirs (layout, compaction, partition, CBO catalog, upsert
 # target, bucketed index, round-trip copy) and a drip replay.

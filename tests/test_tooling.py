@@ -1,9 +1,9 @@
 """The dev scripts stay wired to the engine: every ``eventstreamer_spark``
 name that ``bench.py`` and ``scripts/*.py`` import, or read off an
 imported engine module, must resolve. The engine itself makes and
-frees local checkpoints only through ``memo``, and starts gate streams
-only through ``streaming.pipeline.run_stream``. No Spark session is
-started."""
+frees local checkpoints only through ``memo``, starts gate streams
+only through ``streaming.pipeline.run_stream``, and rounds half-up only
+through ``functions.numeric``. No Spark session is started."""
 
 from __future__ import annotations
 
@@ -95,6 +95,45 @@ def test_checkpoints_only_through_memo():
             )
             if name in ("localCheckpoint", "free_local_checkpoint"):
                 found.append(f"{path.relative_to(ROOT)}:{node.lineno}: {name}")
+    assert not found, found
+
+
+def _is_half(node: ast.AST) -> bool:
+    """``0.5`` or ``<F>.lit(0.5)``."""
+    if isinstance(node, ast.Call) and len(node.args) == 1:
+        func = node.func
+        if getattr(func, "attr", getattr(func, "id", None)) == "lit":
+            node = node.args[0]
+    return isinstance(node, ast.Constant) and node.value == 0.5
+
+
+def test_half_up_rounding_only_in_numeric():
+    """No engine module outside functions/numeric.py spells the Spark
+    half-up rounding ``F.floor(<x> + 0.5)``: every site calls the
+    ``numeric.half_up*`` helpers. numpy/math floors inside Python
+    kernels are not Spark columns and stay."""
+    found = []
+    for path in sorted(ENGINE.rglob("*.py")):
+        if path == ENGINE / "functions" / "numeric.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not (isinstance(node, ast.Call) and node.args):
+                continue
+            func, arg = node.func, node.args[0]
+            owner = getattr(func, "value", None)
+            spark_floor = (
+                isinstance(func, ast.Attribute)
+                and func.attr == "floor"
+                and getattr(owner, "id", None) not in ("np", "numpy", "math")
+            ) or (isinstance(func, ast.Name) and func.id == "floor")
+            if (
+                spark_floor
+                and isinstance(arg, ast.BinOp)
+                and isinstance(arg.op, ast.Add)
+                and (_is_half(arg.left) or _is_half(arg.right))
+            ):
+                where = f"{path.relative_to(ROOT)}:{node.lineno}"
+                found.append(f"{where}: {ast.unparse(node)[:80]}")
     assert not found, found
 
 
